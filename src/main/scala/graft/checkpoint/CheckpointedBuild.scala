@@ -1,12 +1,19 @@
 package graft.checkpoint
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.extract.Extract
-import graft.index.{Bm25, BuiltIndex, PostingBlocks}
+import graft.index.{Bm25, BuiltIndex, IndexBuilder, IndexStats, LongDoubleMap,
+  PostingBlock, PostingBlocks}
 
 /** One manifest row per committed build unit: the per-partition lineage +
   * build metrics the north rule requires (analog of the reference's
@@ -49,6 +56,24 @@ case class ManifestRow(
   * function of its input slice, an interrupted+resumed build produces
   * content-identical index tables to an uninterrupted one (asserted in
   * CheckpointSpec).
+  *
+  * Bookkeeping runs no Spark job, so a resume launches jobs only for the
+  * units it recomputes, plus one narrow scan of the input for its docId
+  * bounds and slice fingerprints (two on a first build, or when the
+  * input's docId range moved):
+  *   - the manifest is read ONCE per build, on the driver, into a map
+  *     keyed by (stage, part); the config check, the slice triage and the
+  *     row counts of later stages all answer from it, and every commit or
+  *     invalidation updates it along with the files;
+  *   - each manifest row is a one-row parquet file written on the driver
+  *     ([[DriverParquet]]) to a hidden temp name, then renamed into its
+  *     cleared `manifest/<stage>_<part>/` directory — the order per unit
+  *     stays data commit, manifest row, `_GRAFT_COMMITTED` marker;
+  *   - every internal table read back gets a pinned schema derived from
+  *     its writer's plan (or a declared one), so no read infers a schema
+  *     from file footers;
+  *   - the returned index is preset with its stats and blocks metadata,
+  *     read on the driver when an earlier run committed them.
   */
 object CheckpointedBuild {
 
@@ -56,45 +81,129 @@ object CheckpointedBuild {
 
   def isCommitted(dir: String): Boolean = Files.exists(Paths.get(dir, Marker))
 
+  /** Schema manifest rows are written with (Spark's writer derives the
+    * same parquet schema from the case class). The driver-side reader
+    * projects onto it by name, a missing field reading as null.
+    */
+  private val ManifestRowSchema: StructType = Encoders.product[ManifestRow].schema
+
+  /** Pinned Spark read schema of the manifest: every field nullable, so
+    * rows written before the fingerprint column existed read it as null.
+    */
+  private[graft] val ManifestSchema: StructType = nullable(ManifestRowSchema)
+
+  private val StatsSchema: StructType = Encoders.product[IndexStats].schema
+  private val BlocksMetaSchema = StructType(Seq(
+    StructField("num_buckets", IntegerType), StructField("block_bits", IntegerType),
+    StructField("impact_codec", StringType)))
+
+  private def nullable(s: StructType): StructType =
+    StructType(s.fields.map(_.copy(nullable = true)))
+
   private def rmrf(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new HPath(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(p, true)
     ()
   }
 
-  /** Remove every manifest unit of `stage` (multi-unit stages commit one
-    * row per part: tf_p, postings_p). Unit names are matched EXACTLY as
-    * `<stage>_<digits>` (ADVICE r6): a startsWith prefix would also claim
-    * nested stage names — invalidating "terms" used to delete every
-    * `terms_part_*` manifest row even though the terms_part DATA is
-    * intentionally kept across a bm25-config change, silently dropping
-    * the partials' lineage records.
+  /** Entries of a local directory (empty if it does not exist); the
+    * directory stream is closed before returning.
     */
-  private def rmManifestPrefix(spark: SparkSession, outDir: String,
-      stage: String): Unit = {
-    val mdir = Paths.get(s"$outDir/manifest")
-    val unitRe = (java.util.regex.Pattern.quote(stage) + "_\\d+").r
-    if (Files.isDirectory(mdir)) {
-      val it = Files.list(mdir).iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (unitRe.matches(e.getFileName.toString))
-          rmrf(spark, e.toString)
+  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toVector finally s.close()
+    }
+
+  /** The manifest of one build call: loaded once into a driver-side map
+    * keyed by (stage, part) and kept in step with the files by every
+    * [[put]] and removal, so no later lookup touches the disk.
+    */
+  private final class ManifestLog(spark: SparkSession, outDir: String) {
+    private val dir = Paths.get(outDir, "manifest")
+    private val rows = mutable.Map[(String, Int), ManifestRow]()
+    listDir(dir)
+      .filter(d => Files.isDirectory(d) && !DriverParquet.hidden(d.getFileName.toString))
+      .flatMap(d => DriverParquet.read(d, ManifestRowSchema))
+      .foreach { r =>
+        val m = ManifestRow(r.getString(0), r.getInt(1), r.getLong(2),
+          r.getLong(3), r.getString(4), r.getLong(5),
+          Option(r.getString(6)).getOrElse(""))
+        rows((m.stage, m.part)) = m
       }
+
+    def get(stage: String, part: Int): Option[ManifestRow] = rows.get((stage, part))
+
+    /** Summed row counts of a stage's units. */
+    def rowsOf(stage: String): Long =
+      rows.valuesIterator.filter(_.stage == stage).map(_.rows).sum
+
+    /** Write `m` as its unit's one-row file: a hidden temp file (ignored
+      * by every reader) is renamed in only after the unit's directory is
+      * cleared, so a crash leaves the old row, no row, or the new row.
+      */
+    def put(m: ManifestRow): Unit = {
+      val unit = dir.resolve(s"${m.stage}_${m.part}")
+      val tmp = dir.resolve(s".${m.stage}_${m.part}-${UUID.randomUUID()}.tmp")
+      Files.createDirectories(dir)
+      DriverParquet.write(spark, tmp, ManifestRowSchema, Seq(Row.fromTuple(m)))
+      rmrf(spark, unit.toString)
+      Files.createDirectories(unit)
+      Files.move(tmp, unit.resolve("part-00000.parquet"), StandardCopyOption.ATOMIC_MOVE)
+      rows((m.stage, m.part)) = m
+    }
+
+    def remove(stage: String, part: Int): Unit = {
+      rmrf(spark, dir.resolve(s"${stage}_$part").toString)
+      rows -= ((stage, part))
+    }
+
+    /** Remove every unit of `stage` (multi-unit stages commit one row per
+      * part: tf_p, postings_p). Unit names are matched EXACTLY as
+      * `<stage>_<digits>` (ADVICE r6): a startsWith prefix would also
+      * claim nested stage names — invalidating "terms" used to delete
+      * every `terms_part_*` manifest row even though the terms_part DATA
+      * is intentionally kept across a bm25-config change, silently
+      * dropping the partials' lineage records.
+      */
+    def removeStage(stage: String): Unit = {
+      val unitRe = (java.util.regex.Pattern.quote(stage) + "_\\d+").r
+      listDir(dir).filter(e => unitRe.matches(e.getFileName.toString))
+        .foreach(e => rmrf(spark, e.toString))
+      rows.filterInPlace { case ((st, _), _) => st != stage }
     }
   }
 
-  private def commit(spark: SparkSession, outDir: String, dir: String,
-      m: ManifestRow): Unit = {
-    import spark.implicits._
-    Seq(m).toDS().write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/manifest/${m.stage}_${m.part}")
+  private def commit(log: ManifestLog, dir: String, m: ManifestRow): Unit = {
+    log.put(m)
     Files.createFile(Paths.get(dir, Marker))
   }
 
+  /** Every manifest row under `outDir`, read with the pinned schema. */
   def manifest(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(s"$outDir/manifest/*")
+    spark.read.schema(ManifestSchema).parquet(s"$outDir/manifest/*")
+
+  /** The committed stats row, read on the driver. */
+  private def readStats(outDir: String): IndexStats = {
+    val r = DriverParquet.read(Paths.get(outDir, "stats"), StatsSchema)
+      .headOption.getOrElse(throw new IllegalStateException(s"no stats row in $outDir"))
+    IndexStats(r.getLong(0), r.getLong(1), r.getDouble(2),
+      r.getLong(3), r.getLong(4))
+  }
+
+  /** (num_buckets, block_bits) and impact codec of committed blocks, read
+    * on the driver; None for a legacy (pre-bucketed) layout with no
+    * blocks_meta, as [[BuiltIndex.blocksMeta]] reads it.
+    */
+  private def readBlocksMeta(outDir: String): (Option[(Int, Int)], String) =
+    DriverParquet.read(Paths.get(outDir, "blocks_meta"), BlocksMetaSchema)
+      .headOption match {
+      case Some(r) =>
+        (Some((r.getInt(0), r.getInt(1))), Option(r.getString(2)).getOrElse("f64"))
+      case None => (None, "f64")
+    }
 
   /** Resumable build. `pagesRaw` must have (doc_id, url, html) or
     * (doc_id, url, text); when html is present the extraction front end
@@ -107,6 +216,11 @@ object CheckpointedBuild {
       onUnitCommitted: (String, Int) => Unit = (_, _) => ()): BuiltIndex = {
     import spark.implicits._
     Files.createDirectories(Paths.get(outDir))
+    val log = new ManifestLog(spark, outDir)
+    // read-backs of internal tables carry the writer's schema: a footer
+    // inference costs a Spark job per read
+    def read(path: String, schema: StructType): DataFrame =
+      spark.read.schema(nullable(schema)).parquet(path)
 
     val hasHtml = pagesRaw.columns.contains("html")
     val pages =
@@ -115,13 +229,11 @@ object CheckpointedBuild {
           .where(col("text").isNotNull)
           .select("doc_id", "url", "text")
       else pagesRaw.select("doc_id", "url", "text")
+    val tfSchema = IndexBuilder.termFrequencies(pages).schema
+    val docsRawSchema = pages.select("doc_id", "url").schema
 
     // ---- stage 1: per-slice extract+tokenize+tf (+ per-slice doc rows)
-    val bounds = pagesRaw.agg(min("doc_id"), max("doc_id")).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val width = math.max(1L, (hi - lo + slices) / slices)
-    def sliceRange(p: Int): (Long, Long) =
-      (lo + p * width, if (p == slices - 1) hi + 1 else lo + (p + 1) * width)
+    def widthOf(lo: Long, hi: Long): Long = math.max(1L, (hi - lo + slices) / slices)
 
     // cheap per-slice input fingerprint over the RAW columns (no
     // extraction): order-independent SUM (mod 2^64) of per-row hashes —
@@ -130,32 +242,55 @@ object CheckpointedBuild {
     // (swapping content between two doc_ids must change the fingerprint),
     // and the combiner is a sum, not xor (a pair of identical rows xor to
     // zero and would cancel; sums only collide if hash values themselves
-    // collide additively). Decimal(38,0) accumulates exactly to ~1e19
-    // rows/slice; the driver folds it to 64 bits.
+    // collide additively). Wrapping 64-bit addition IS the sum mod 2^64.
     val fpColumn =
       if (hasHtml) xxhash64(col("doc_id"), col("url"), col("html"))
       else xxhash64(col("doc_id"), col("url"), col("text"))
-    // ALL slice fingerprints in ONE aggregation pass: `doc_id DIV width`
-    // is exactly the slice assignment of sliceRange (the last slice's
-    // extension to hi+1 changes no assignment — no doc_id exceeds hi), so
-    // a single groupBy computes every per-slice sum. The previous
-    // per-slice filtered scans were only cheap when parquet min/max
-    // pruning on doc_id happened to align with the input file layout; on
-    // an unordered input they were `slices` full passes. Computed lazily
-    // once per build call (input is assumed stable for the build's
-    // duration — the same assumption the per-slice scans made between
-    // triage and commit).
-    lazy val sliceFps: Map[Int, String] = {
-      val m = BigInt(2).pow(64)
-      pagesRaw
-        .groupBy(expr(s"CAST((doc_id - ($lo)) DIV $width AS INT)").as("p"))
-        .agg(sum(fpColumn.cast("decimal(38,0)")).as("s"))
-        .collect()
-        .map { r =>
-          val v = (BigInt(r.getDecimal(1).toBigInteger).mod(m) + m).mod(m)
-          r.getInt(0) -> v.toString(16)
-        }.toMap
+    // ONE narrow pass over the input yields its docId bounds and, given
+    // the slicing they imply, every slice's fingerprint: `(doc_id - lo) /
+    // width` is exactly the slice assignment of sliceRange (the last
+    // slice's extension to hi+1 changes no assignment — no doc_id
+    // exceeds hi). The slicing is guessed from the committed tf
+    // lineages; a resume over an input with the same docId range — the
+    // common case — needs this one job, any other build a second pass
+    // with the bounds the first one found. (Input is assumed stable for
+    // the build's duration.)
+    def scanInput(guess: Option[(Long, Long)]): (Long, Long, Map[Int, String]) = {
+      val (gLo, gWidth) = guess.fold((0L, 0L)) { case (l, h) => (l, widthOf(l, h)) }
+      val n = slices
+      val parts = pagesRaw.select(col("doc_id"), fpColumn).as[(Long, Long)]
+        .mapPartitions { rows =>
+          var (mn, mx) = (Long.MaxValue, Long.MinValue)
+          val sums = new Array[Long](n)
+          val counts = new Array[Long](n)
+          rows.foreach { case (id, h) =>
+            mn = math.min(mn, id); mx = math.max(mx, id)
+            val p = if (gWidth > 0 && id >= gLo) (id - gLo) / gWidth else n
+            if (p < n) { sums(p.toInt) += h; counts(p.toInt) += 1 }
+          }
+          Iterator((mn, mx, sums, counts))
+        }.collect()
+      val mn = parts.map(_._1).foldLeft(Long.MaxValue)(math.min)
+      val mx = parts.map(_._2).foldLeft(Long.MinValue)(math.max)
+      require(mn <= mx, "no input rows")
+      val fps = (0 until n).filter(p => parts.exists(_._4(p) > 0))
+        .map(p => p -> java.lang.Long.toHexString(parts.map(_._3(p)).sum)).toMap
+      (mn, mx, fps)
     }
+    val lineageRange = """doc_id:\[(-?\d+),(-?\d+)\)""".r
+    val committedRanges = (0 until slices).flatMap(p => log.get("tf", p)).map(_.lineage)
+      .collect { case lineageRange(a, b) => (a.toLong, b.toLong - 1) }
+    val guess =
+      if (committedRanges.isEmpty) None
+      else Some((committedRanges.map(_._1).min, committedRanges.map(_._2).max))
+    val (lo, hi, sliceFps) = {
+      val first = scanInput(guess)
+      if (guess.contains((first._1, first._2))) first
+      else scanInput(Some((first._1, first._2)))
+    }
+    val width = widthOf(lo, hi)
+    def sliceRange(p: Int): (Long, Long) =
+      (lo + p * width, if (p == slices - 1) hi + 1 else lo + (p + 1) * width)
     def sliceFingerprint(p: Int): String = sliceFps.getOrElse(p, "empty")
 
     // ---- config fingerprint (reference: config.rs:266-296): a resume
@@ -174,27 +309,18 @@ object CheckpointedBuild {
       "tfSchema" -> "3")
     val configStr = config.map { case (k, v) => s"$k=$v" }.mkString(";")
     val priorConfig: Map[String, String] =
-      try {
-        spark.read.parquet(s"$outDir/manifest/config_0").head()
-          .getAs[String]("lineage").split(';')
-          .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
-          .toMap
-      } catch { case _: Throwable => Map.empty }
+      log.get("config", 0).map(_.lineage.split(';')
+        .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
+        .toMap).getOrElse(Map.empty)
     // A dir with committed units but NO config manifest predates config
     // fingerprinting entirely — its units were built under an UNKNOWN
     // config (e.g. the v1 tf schema), and resuming them under the current
     // one can silently mix schemas (doc_len null -> na.fill(0) -> wrong
     // impacts). Treat "missing config" as "everything changed".
     val committedWithoutConfig = priorConfig.isEmpty && {
-      val tfDir = Paths.get(outDir, "tf")
-      val tfCommits = Files.isDirectory(tfDir) && {
-        val it = Files.list(tfDir).iterator()
-        var found = false
-        while (!found && it.hasNext) found = isCommitted(it.next().toString)
-        found
-      }
-      tfCommits || Seq("docs", "terms", "postings", "blocks", "stats")
-        .exists(st => isCommitted(s"$outDir/$st"))
+      listDir(Paths.get(outDir, "tf")).exists(d => isCommitted(d.toString)) ||
+        Seq("docs", "terms", "postings", "blocks", "stats")
+          .exists(st => isCommitted(s"$outDir/$st"))
     }
     if (committedWithoutConfig ||
         (priorConfig.nonEmpty && priorConfig != config.toMap)) {
@@ -214,7 +340,7 @@ object CheckpointedBuild {
       victims.foreach {
         case "tf" =>
           rmrf(spark, s"$outDir/tf"); rmrf(spark, s"$outDir/docs_raw")
-          rmManifestPrefix(spark, outDir, "tf")
+          log.removeStage("tf")
         case st =>
           rmrf(spark, s"$outDir/$st")
           if (st == "blocks") rmrf(spark, s"$outDir/blocks_meta")
@@ -222,17 +348,13 @@ object CheckpointedBuild {
             rmrf(spark, s"$outDir/terms_rev")
             rmrf(spark, s"$outDir/terms_ngrams")
           }
-          rmManifestPrefix(spark, outDir, st)
+          log.removeStage(st)
       }
-      Seq(ManifestRow("config_reconcile", 0, victims.size, 0,
+      log.put(ManifestRow("config_reconcile", 0, victims.size, 0,
         s"changed=${changed.mkString(",")} invalidated=${victims.mkString(",")}",
-        System.currentTimeMillis())).toDS()
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/manifest/config_reconcile_0")
+        System.currentTimeMillis()))
     }
-    Seq(ManifestRow("config", 0, 0, 0, configStr, System.currentTimeMillis()))
-      .toDS().write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/manifest/config_0")
+    log.put(ManifestRow("config", 0, 0, 0, configStr, System.currentTimeMillis()))
 
     // ---- reconcile (resume with possibly-changed input): triage each
     // persisted slice Valid / Stale / Removed like the reference's
@@ -244,14 +366,9 @@ object CheckpointedBuild {
     if (preCommitted.nonEmpty) {
       val t0 = System.nanoTime()
       val triage = preCommitted.map { p =>
-        val (storedFp, storedLin) =
-          try {
-            val r = spark.read.parquet(s"$outDir/manifest/tf_$p").head()
-            val names = r.schema.fieldNames
-            (if (names.contains("fingerprint"))
-               r.getAs[String]("fingerprint") else "",
-             r.getAs[String]("lineage"))
-          } catch { case _: Throwable => ("", "") }
+        // a missing row, or one written before fingerprints, is stale
+        val (storedFp, storedLin) = log.get("tf", p)
+          .map(m => (m.fingerprint, m.lineage)).getOrElse(("", ""))
         val (sLo, sHi) = sliceRange(p)
         val cur = sliceFingerprint(p)
         val status =
@@ -261,11 +378,11 @@ object CheckpointedBuild {
         if (status != "valid") {
           rmrf(spark, s"$outDir/tf/slice=$p")
           rmrf(spark, s"$outDir/docs_raw/slice=$p")
-          rmrf(spark, s"$outDir/manifest/tf_$p")
+          log.remove("tf", p)
           // the slice's dictionary partial derives from it 1:1 — other
           // slices' partials stay valid (the per-slice win of stage 3a)
           rmrf(spark, s"$outDir/terms_part/slice=$p")
-          rmrf(spark, s"$outDir/manifest/terms_part_$p")
+          log.remove("terms_part", p)
         }
         status
       }
@@ -279,13 +396,12 @@ object CheckpointedBuild {
             "blocks_enc", "blocks", "blocks_meta", "stats")
           .foreach(st => rmrf(spark, s"$outDir/$st"))
         Seq("docs", "terms", "postings", "blocks_enc", "blocks", "stats")
-          .foreach(st => rmManifestPrefix(spark, outDir, st))
+          .foreach(log.removeStage)
       }
-      Seq(ManifestRow("reconcile", 0, triage.count(_ == "valid"),
+      log.put(ManifestRow("reconcile", 0, triage.count(_ == "valid"),
         (System.nanoTime() - t0) / 1000000,
         s"valid=${triage.count(_ == "valid")} stale=$stale removed=$removed",
-        System.currentTimeMillis())).toDS()
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/manifest/reconcile_0")
+        System.currentTimeMillis()))
     }
 
     for (p <- 0 until slices) {
@@ -298,7 +414,7 @@ object CheckpointedBuild {
           .where(col("doc_id") >= sLo && col("doc_id") < sHi)
           .where(Extract.safe(col("text")))
         // doc-local tf histogram — zero-shuffle (see IndexBuilder.termFrequencies)
-        val tf = graft.index.IndexBuilder.termFrequencies(slice)
+        val tf = IndexBuilder.termFrequencies(slice)
         // row counts ride along as Observation metrics — a post-write
         // .count() would re-read the whole unit (wasteful at corpus scale)
         val obs = org.apache.spark.sql.Observation()
@@ -308,36 +424,48 @@ object CheckpointedBuild {
         val docsDir = s"$outDir/docs_raw/slice=$p"
         slice.select("doc_id", "url").write.mode(SaveMode.Overwrite).parquet(docsDir)
         val n = obs.get("n").asInstanceOf[Long]
-        commit(spark, outDir, dir, ManifestRow("tf", p, n,
+        commit(log, dir, ManifestRow("tf", p, n,
           (System.nanoTime() - t0) / 1000000,
           s"doc_id:[$sLo,$sHi)", System.currentTimeMillis(), fp))
         onUnitCommitted("tf", p)
       }
     }
 
-    val tfR = spark.read.parquet(s"$outDir/tf/slice=*")
-    val docsRaw = spark.read.parquet(s"$outDir/docs_raw/slice=*")
+    val tfR = read(s"$outDir/tf/slice=*", tfSchema)
+    val docsRaw = read(s"$outDir/docs_raw/slice=*", docsRawSchema)
 
-    // ---- stage 2: docs dimension
-    if (!isCommitted(s"$outDir/docs")) {
-      val t0 = System.nanoTime()
-      val obs = org.apache.spark.sql.Observation()
-      val docLens = tfR.groupBy("doc_id").agg(first("doc_len").as("doc_len"))
-      docsRaw.join(docLens, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("doc_len"))
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
-      commit(spark, outDir, s"$outDir/docs", ManifestRow("docs", 0,
-        obs.get("n").asInstanceOf[Long],
-        (System.nanoTime() - t0) / 1000000, "tf/slice=*", System.currentTimeMillis()))
-      onUnitCommitted("docs", 0)
-    }
-    val docsR = spark.read.parquet(s"$outDir/docs")
-
-    val statsRow = docsR.agg(count(lit(1)), sum("doc_len")).head()
-    val numDocs = statsRow.getLong(0)
-    val totalTokens = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-    val avgdl = if (numDocs == 0) 0.0 else totalTokens.toDouble / numDocs.toDouble
+    // ---- stage 2: docs dimension. (num_docs, total_tokens) ride along
+    // as Observation metrics on its write.
+    val docs = docsRaw
+      .join(tfR.groupBy("doc_id").agg(first("doc_len").as("doc_len")),
+        Seq("doc_id"), "left")
+      .na.fill(0L, Seq("doc_len"))
+    val docsObserved: Option[(Long, Long)] =
+      if (isCommitted(s"$outDir/docs")) None
+      else {
+        val t0 = System.nanoTime()
+        val obs = org.apache.spark.sql.Observation()
+        docs.observe(obs, count(lit(1)).as("n"), sum("doc_len").as("tt"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
+        val n = obs.get("n").asInstanceOf[Long]
+        commit(log, s"$outDir/docs", ManifestRow("docs", 0, n,
+          (System.nanoTime() - t0) / 1000000, "tf/slice=*", System.currentTimeMillis()))
+        onUnitCommitted("docs", 0)
+        Some((n, obs.get("tt") match { case null => 0L; case x => x.asInstanceOf[Long] }))
+      }
+    // Corpus stats, only when a stage below needs them: from the docs
+    // write above, else from a stats row committed by an earlier run (no
+    // invalidation wipes docs and keeps stats), else one scan of docs.
+    lazy val committedStats: Option[IndexStats] =
+      if (isCommitted(s"$outDir/stats")) Some(readStats(outDir)) else None
+    lazy val (numDocs, totalTokens) = docsObserved
+      .orElse(committedStats.map(s => (s.num_docs, s.total_tokens)))
+      .getOrElse {
+        val r = read(s"$outDir/docs", docs.schema)
+          .agg(count(lit(1)), sum("doc_len")).head()
+        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      }
+    lazy val avgdl = if (numDocs == 0) 0.0 else totalTokens.toDouble / numDocs.toDouble
 
     // ---- stage 3: term dictionary — resumable PER SLICE (round 6,
     // VERDICT r5 #7: the global groupBy was the last all-or-nothing
@@ -360,6 +488,10 @@ object CheckpointedBuild {
     // >= 1 non-null string; the merge's min-of-mins vs max-of-maxs
     // comparison therefore sees every distinct spelling of an id, same
     // strength as the single-pass guard (IndexBuilder.writeDictionary).
+    def termsPart(tf: DataFrame): DataFrame =
+      tf.groupBy("term_id").agg(
+        count(lit(1)).as("df_part"),
+        min("term").as("term_mn"), max("term").as("term_mx"))
     if (!isCommitted(s"$outDir/terms")) {
       for (p <- 0 until slices) {
         val udir = s"$outDir/terms_part/slice=$p"
@@ -367,14 +499,11 @@ object CheckpointedBuild {
             Files.exists(Paths.get(s"$outDir/tf/slice=$p"))) {
           val t0 = System.nanoTime()
           val obs = org.apache.spark.sql.Observation()
-          spark.read.parquet(s"$outDir/tf/slice=$p")
-            .groupBy("term_id").agg(
-              count(lit(1)).as("df_part"),
-              min("term").as("term_mn"), max("term").as("term_mx"))
+          termsPart(read(s"$outDir/tf/slice=$p", tfSchema))
             .observe(obs, count(lit(1)).as("n"))
             .write.mode(SaveMode.Overwrite).option("compression", "zstd")
             .parquet(udir)
-          commit(spark, outDir, udir, ManifestRow("terms_part", p,
+          commit(log, udir, ManifestRow("terms_part", p,
             obs.get("n").asInstanceOf[Long],
             (System.nanoTime() - t0) / 1000000,
             s"tf/slice=$p", System.currentTimeMillis()))
@@ -383,7 +512,7 @@ object CheckpointedBuild {
       }
       val t0 = System.nanoTime()
       val obs = org.apache.spark.sql.Observation()
-      spark.read.parquet(s"$outDir/terms_part/slice=*")
+      read(s"$outDir/terms_part/slice=*", termsPart(tfR).schema)
         .groupBy("term_id").agg(
           sum("df_part").as("df"),
           min("term_mn").as("term"), max("term_mx").as("term_mx"))
@@ -400,8 +529,8 @@ object CheckpointedBuild {
       }
       require(badIds == 0L,
         "term_id (xxhash64) collision in dictionary — two terms share an id")
-      graft.index.IndexBuilder.writeDictionaryDims(spark, s"$outDir/terms")
-      commit(spark, outDir, s"$outDir/terms", ManifestRow("terms", 0,
+      IndexBuilder.writeDictionaryDims(spark, s"$outDir/terms")
+      commit(log, s"$outDir/terms", ManifestRow("terms", 0,
         obs.get("n").asInstanceOf[Long],
         (System.nanoTime() - t0) / 1000000, "terms_part/slice=*",
         System.currentTimeMillis()))
@@ -412,14 +541,14 @@ object CheckpointedBuild {
     if (isCommitted(s"$outDir/terms") &&
         Files.exists(Paths.get(s"$outDir/terms_part")))
       rmrf(spark, s"$outDir/terms_part")
-    val termsR = spark.read.parquet(s"$outDir/terms")
+    val termsR = read(s"$outDir/terms", IndexBuilder.TermsSchema)
     // dictionary row count WITHOUT a scan: the terms stage committed it
     // to the manifest (whether in this run or the one being resumed).
     // The collision guard ran inside writeDictionary when the table was
     // written — in this run or the resumed one (config-fingerprinted
     // builds only resume tables their own code wrote).
-    val numTerms = manifest(spark, outDir)
-      .where(col("stage") === "terms").head().getAs[Long]("rows")
+    val numTerms = log.get("terms", 0).map(_.rows).getOrElse(
+      throw new IllegalStateException(s"terms committed without a manifest row in $outDir"))
 
     // ---- stage 4: postings with impacts. Resumable PER tf-SLICE when
     // the dictionary broadcasts: each slice's postings are a pure
@@ -434,8 +563,14 @@ object CheckpointedBuild {
     // whole postings dir upstream — idf/avgdl are corpus-global, so no
     // per-slice staleness triage is sound here.)
     val dict = termsR.select("term_id", "idf")
-    val canSlicePostings =
-      numTerms <= graft.index.IndexBuilder.DictBroadcastMaxTerms
+    val canSlicePostings = numTerms <= IndexBuilder.DictBroadcastMaxTerms
+    // v3 tf slices carry the computed term_id already
+    def postingsOf(tf: DataFrame, dictSide: DataFrame): DataFrame =
+      tf.drop("term")
+        .join(dictSide, Seq("term_id"))
+        .select(col("term_id"), col("doc_id"),
+          Bm25.impactCol(col("tf").cast("double"),
+            col("doc_len").cast("double"), avgdl, col("idf")).as("impact"))
     if (!isCommitted(s"$outDir/postings")) { // flat-layout resume marker
       if (canSlicePostings) {
         for (p <- 0 until slices) {
@@ -444,17 +579,12 @@ object CheckpointedBuild {
               Files.exists(Paths.get(s"$outDir/tf/slice=$p"))) {
             val t0 = System.nanoTime()
             val obs = org.apache.spark.sql.Observation()
-            spark.read.parquet(s"$outDir/tf/slice=$p")
-              .drop("term")
-              .join(broadcast(dict), Seq("term_id"))
-              .select(col("term_id"), col("doc_id"),
-                Bm25.impactCol(col("tf").cast("double"),
-                  col("doc_len").cast("double"), avgdl, col("idf")).as("impact"))
+            postingsOf(read(s"$outDir/tf/slice=$p", tfSchema), broadcast(dict))
               .observe(obs, count(lit(1)).as("n"))
               .sortWithinPartitions("term_id", "doc_id")
               .write.mode(SaveMode.Overwrite).option("compression", "zstd")
               .parquet(pdir)
-            commit(spark, outDir, pdir, ManifestRow("postings", p,
+            commit(log, pdir, ManifestRow("postings", p,
               obs.get("n").asInstanceOf[Long],
               (System.nanoTime() - t0) / 1000000,
               s"tf/slice=$p+terms", System.currentTimeMillis()))
@@ -464,26 +594,18 @@ object CheckpointedBuild {
       } else {
         val t0 = System.nanoTime()
         val obs = org.apache.spark.sql.Observation()
-        tfR.drop("term") // v3 slices carry the computed term_id already
-          .join(dict, Seq("term_id"))
-          .select(col("term_id"), col("doc_id"),
-            Bm25.impactCol(col("tf").cast("double"),
-              col("doc_len").cast("double"), avgdl, col("idf")).as("impact"))
+        postingsOf(tfR, dict)
           .observe(obs, count(lit(1)).as("n"))
           .sortWithinPartitions("term_id", "doc_id")
           .write.mode(SaveMode.Overwrite).option("compression", "zstd")
           .parquet(s"$outDir/postings")
-        commit(spark, outDir, s"$outDir/postings", ManifestRow("postings", 0,
+        commit(log, s"$outDir/postings", ManifestRow("postings", 0,
           obs.get("n").asInstanceOf[Long],
           (System.nanoTime() - t0) / 1000000, "tf+docs+terms",
           System.currentTimeMillis()))
         onUnitCommitted("postings", 0)
       }
     }
-    // partition discovery covers both layouts (slice=p subdirs or flat);
-    // underscore-prefixed commit markers are ignored by the reader
-    val postingsR = spark.read.parquet(s"$outDir/postings")
-      .select("term_id", "doc_id", "impact")
 
     // ---- stage 5: compressed blocks (bucketed serving layout). When the
     // dictionary broadcasts, the expensive half — the (term_id, block_id)
@@ -501,9 +623,13 @@ object CheckpointedBuild {
     // predicate over the tf slices — parquet row-group min/max stats keep
     // each unit's scan near its own slice files. Past the broadcast
     // ceiling the stage stays one postings-driven unit.
+    val buckets = spark.sessionState.conf.numShufflePartitions
+    val (blocksMeta, codec) =
+      if (isCommitted(s"$outDir/blocks")) readBlocksMeta(outDir)
+      else (Some((buckets, blockBits)), "f64")
     if (!isCommitted(s"$outDir/blocks")) {
       if (canSlicePostings) {
-        val idfMap = new graft.index.LongDoubleMap(math.max(16, numTerms.toInt))
+        val idfMap = new LongDoubleMap(math.max(16, numTerms.toInt))
         termsR.select("term_id", "idf").collect()
           .foreach(r => idfMap.put(r.getLong(0), r.getDouble(1)))
         val bcIdf = spark.sparkContext.broadcast(idfMap)
@@ -527,7 +653,7 @@ object CheckpointedBuild {
               .observe(obs, count(lit(1)).as("n"))
               .write.mode(SaveMode.Overwrite).option("compression", "zstd")
               .parquet(udir)
-            commit(spark, outDir, udir, ManifestRow("blocks_enc", u,
+            commit(log, udir, ManifestRow("blocks_enc", u,
               obs.get("n").asInstanceOf[Long],
               (System.nanoTime() - t0) / 1000000,
               s"tf:doc_id:[$uLo,$uHi)+terms", System.currentTimeMillis()))
@@ -535,19 +661,23 @@ object CheckpointedBuild {
           }
         }
         val t0 = System.nanoTime()
-        val encoded = spark.read.parquet(s"$outDir/blocks_enc/unit=*")
-          .as[graft.index.PostingBlock]
+        val encoded = read(s"$outDir/blocks_enc/unit=*",
+          Encoders.product[PostingBlock].schema).as[PostingBlock]
         val nBlocks = PostingBlocks.writeBlocksEncoded(encoded, outDir,
-          spark.sessionState.conf.numShufflePartitions, blockBits)
-        commit(spark, outDir, s"$outDir/blocks", ManifestRow("blocks", 0,
+          buckets, blockBits)
+        commit(log, s"$outDir/blocks", ManifestRow("blocks", 0,
           nBlocks, (System.nanoTime() - t0) / 1000000,
           "blocks_enc/unit=*", System.currentTimeMillis()))
         onUnitCommitted("blocks", 0)
       } else {
         val t0 = System.nanoTime()
+        // partition discovery covers both layouts (slice=p subdirs or
+        // flat); underscore-prefixed commit markers are ignored by the reader
+        val postingsR = read(s"$outDir/postings", postingsOf(tfR, dict).schema)
+          .select("term_id", "doc_id", "impact")
         val nBlocks = PostingBlocks.writeBlocks(postingsR, outDir,
-          spark.sessionState.conf.numShufflePartitions, blockBits)
-        commit(spark, outDir, s"$outDir/blocks", ManifestRow("blocks", 0,
+          buckets, blockBits)
+        commit(log, s"$outDir/blocks", ManifestRow("blocks", 0,
           nBlocks,
           (System.nanoTime() - t0) / 1000000, "postings", System.currentTimeMillis()))
         onUnitCommitted("blocks", 0)
@@ -564,22 +694,26 @@ object CheckpointedBuild {
 
     // ---- stage 6: stats — term/posting counts come from the manifest
     // rows recorded at their stages' writes (a recount would re-read both
-    // tables; the manifest is authoritative on resume too)
-    if (!isCommitted(s"$outDir/stats")) {
+    // tables; the manifest is authoritative on resume too; multi-unit
+    // stages sum their unit rows)
+    val stats = committedStats.getOrElse {
       val t0 = System.nanoTime()
-      // multi-unit stages (per-slice postings) sum their unit rows
-      def manifestRows(stage: String): Long =
-        manifest(spark, outDir).where(col("stage") === stage)
-          .agg(sum("rows")).head().getLong(0)
-      Seq(graft.index.IndexStats(numDocs, totalTokens, avgdl,
-        manifestRows("terms"), manifestRows("postings")))
-        .toDS().write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats")
-      commit(spark, outDir, s"$outDir/stats", ManifestRow("stats", 0, 1,
+      val st = IndexStats(numDocs, totalTokens, avgdl,
+        log.rowsOf("terms"), log.rowsOf("postings"))
+      // one row, written on the driver like the manifest rows
+      rmrf(spark, s"$outDir/stats")
+      Files.createDirectories(Paths.get(outDir, "stats"))
+      DriverParquet.write(spark, Paths.get(outDir, "stats", "part-00000.parquet"),
+        StatsSchema, Seq(Row.fromTuple(st)))
+      commit(log, s"$outDir/stats", ManifestRow("stats", 0, 1,
         (System.nanoTime() - t0) / 1000000, "docs+terms+postings",
         System.currentTimeMillis()))
       onUnitCommitted("stats", 0)
+      st
     }
 
-    new BuiltIndex(spark, outDir)
+    // the index knows its stats and blocks metadata: its first query
+    // needs no job to read them back
+    new BuiltIndex(spark, outDir).preset(blocksMeta, stats, codec)
   }
 }

@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.extract.Extract
 import graft.tokenize.Tokenizer
@@ -87,7 +88,7 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
   @volatile private var presetBlocksMeta: Option[(Int, Int)] = null
   @volatile private var presetStats: IndexStats = null
   @volatile private var presetCodec: String = null
-  private[index] def preset(meta: Option[(Int, Int)], st: IndexStats,
+  private[graft] def preset(meta: Option[(Int, Int)], st: IndexStats,
       codec: String): this.type = {
     presetBlocksMeta = meta; presetStats = st; presetCodec = codec; this
   }
@@ -366,6 +367,14 @@ object IndexBuilder {
     n
   }
 
+  /** Schema of the `terms` table `(term, df, term_id, idf)` (both tf
+    * schemas produce it), pinned for read-backs so that no read of the
+    * dictionary infers it from file footers — a Spark job per read.
+    */
+  private[graft] val TermsSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType),
+    StructField("term_id", LongType), StructField("idf", DoubleType)))
+
   /** Derived dictionary dimensions — shared by the batch writer above and
     * the checkpointed per-slice terms stage (CheckpointedBuild stage 3b).
     */
@@ -378,7 +387,7 @@ object IndexBuilder {
     * BuiltIndex.termsRev) — one tiny job over the dictionary itself.
     */
   private[index] def writeTermsRev(spark: SparkSession, termsDir: String): Unit =
-    spark.read.parquet(termsDir)
+    spark.read.schema(TermsSchema).parquet(termsDir)
       .select(reverse(col("term")).as("term_rev"), col("term_id"))
       .sortWithinPartitions("term_rev")
       .write.mode("overwrite").parquet(s"${termsDir}_rev")
@@ -391,7 +400,7 @@ object IndexBuilder {
     * lookups previously paid a full containment scan of terms.
     */
   private[index] def writeTermsNgrams(spark: SparkSession, termsDir: String): Unit =
-    spark.read.parquet(termsDir)
+    spark.read.schema(TermsSchema).parquet(termsDir)
       .select(explode(expr(
         """array_distinct(CASE WHEN length(term) >= 3
           |THEN transform(sequence(1, length(term) - 2),
@@ -534,7 +543,7 @@ object IndexBuilder {
     // planning+commit of one write overlaps the execution of another
     // instead of serializing 4 actions end to end.
     val numTerms = writeDictionaryMain(spark, tfR, numDocs, s"$outDir/terms")
-    val termsR = spark.read.parquet(s"$outDir/terms")
+    val termsR = spark.read.schema(TermsSchema).parquet(s"$outDir/terms")
     val fDims = Seq(
       Future(writeTermsRev(spark, s"$outDir/terms")),
       Future(writeTermsNgrams(spark, s"$outDir/terms")))

@@ -193,18 +193,23 @@ object Symbols {
     * them verbatim. Names lowercase like every extractor here (search
     * semantics are case-insensitive, engine.rs:1795-1800).
     */
-  def extractCode(pages: DataFrame): DataFrame = {
+  def extractCode(pages: DataFrame): DataFrame = extractCodeArms(pages, CodeArms)
+
+  /** [[extractCode]] over an explicit arm list (the grammar seam tests use). */
+  private[graft] def extractCodeArms(pages: DataFrame,
+      codeArms: Seq[CodeArm]): DataFrame = {
     val ln = (col("ln0") + 1).cast("int")
     // shared guard predicates, evaluated ONCE per line (round 8): the
     // KwAnyRx / TypedMethodRx / SingletonRx regexes each gate several
     // arms — as inline guards they ran up to 3x per line and bloated the
-    // codegen tree; as projected columns each runs exactly once.
+    // codegen tree; as projected columns each runs exactly once. A guard
+    // regex outside this map falls back to the inline predicate.
     val guardCol: Map[String, Column] = Map(
       KwAnyRx -> col("_g_kw"), TypedMethodRx -> col("_g_tm"),
       SingletonRx -> col("_g_sg"))
     def armStruct(a: CodeArm): Column = {
       val name = lower(regexp_extract(col("ltxt"), a.rx, 1))
-      val guards = a.notRx.map(r => !guardCol(r))
+      val guards = a.notRx.map(r => !guardCol.getOrElse(r, col("ltxt").rlike(r)))
         .foldLeft(lit(true))(_ && _)
       if (!a.onPrevLine)
         struct(name.as("name"), lit(a.kind).as("kind"), ln.as("line"),
@@ -218,7 +223,7 @@ object Symbols {
           (name =!= "" && guards && col("_g_prev")).as("ok"))
       }
     }
-    val arms = CodeArms.map(armStruct)
+    val arms = codeArms.map(armStruct)
     // split on \r?\n, NOT \n (ADVICE r6): several arms are $-anchored,
     // and java.util.regex `$` (no MULTILINE) matches BEFORE a final \r
     // while RE2/DuckDB `$` does not — lines split on bare \n keep the

@@ -185,6 +185,26 @@ class SymbolsSpec extends AnyFunSuite {
       (21L, "main", "function", 12, 0, true)))
   }
 
+  test("extractCode: an arm guard with no projected column falls back to " +
+      "the inline predicate") {
+    val code = Seq((31L, Seq(
+      "def process_batch(x):",            // keyword line: the guard drops it
+      "static long compute_total(int a) {",
+      "int other_fn(char *s) {").mkString("\n")))
+      .toDF("doc_id", "text")
+    val rx = "^(?:[A-Za-z_][A-Za-z0-9_]*\\s+)+\\*?([A-Za-z_][A-Za-z0-9_]*)\\s*\\("
+    val mapped = Symbols.CodeArm(rx, "function", notRx = Seq(Symbols.kwAnyRx))
+    // the same predicate under a regex string the guard map does not hold
+    val unmapped = mapped.copy(notRx = Seq(s"(?:${Symbols.kwAnyRx})"))
+    def rows(arm: Symbols.CodeArm): Set[(Long, String, String, Int, Int, Boolean)] =
+      Symbols.extractCodeArms(code, Seq(arm))
+        .as[(Long, String, String, Int, Int, Boolean)].collect().toSet
+    val got = rows(unmapped)
+    assert(got == rows(mapped))
+    assert(got.map(_._2) == Set("compute_total", "other_fn"))
+    assert(rows(mapped.copy(notRx = Nil)).map(_._2).contains("process_batch"))
+  }
+
   test("extractCode round 7: CRLF content extracts exactly like LF (ADVICE r6)") {
     // the $-anchored C arms diverged on CRLF before the \r?\n split:
     // java.util.regex `$` matches before a trailing \r, RE2 does not —
