@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.extract.Extract
+import graft.index.BuiltIndex.nullable
 import graft.index.{Bm25, BuiltIndex, IndexBuilder, IndexStats, LongDoubleMap,
   PostingBlock, PostingBlocks}
 
@@ -96,9 +97,6 @@ object CheckpointedBuild {
   private val BlocksMetaSchema = StructType(Seq(
     StructField("num_buckets", IntegerType), StructField("block_bits", IntegerType),
     StructField("impact_codec", StringType)))
-
-  private def nullable(s: StructType): StructType =
-    StructType(s.fields.map(_.copy(nullable = true)))
 
   private def rmrf(spark: SparkSession, dir: String): Unit = {
     val p = new HPath(dir)
@@ -714,6 +712,6 @@ object CheckpointedBuild {
 
     // the index knows its stats and blocks metadata: its first query
     // needs no job to read them back
-    new BuiltIndex(spark, outDir).preset(blocksMeta, stats, codec)
+    new BuiltIndex(spark, outDir).preset(blocksMeta, stats, codec, docs.schema)
   }
 }

@@ -1,5 +1,6 @@
 package graft.index
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,9 +33,16 @@ case class IndexStats(
   * additionally BUCKETED by block_id (see [[blocks]]).
   */
 class BuiltIndex(val spark: SparkSession, val path: String) {
-  lazy val docs: DataFrame = spark.read.parquet(s"$path/docs")
-  lazy val terms: DataFrame = spark.read.parquet(s"$path/terms")
+  lazy val docs: DataFrame = read("docs", presetDocsSchema)
+  lazy val terms: DataFrame = read("terms", IndexBuilder.TermsSchema)
   lazy val postings: DataFrame = spark.read.parquet(s"$path/postings")
+
+  /** A table of this index, with `schema` when the builder preset the
+    * read schemas; otherwise inferred from the file footers (a Spark job).
+    */
+  private def read(table: String, schema: => StructType): DataFrame =
+    if (presetDocsSchema != null) spark.read.schema(schema).parquet(s"$path/$table")
+    else spark.read.parquet(s"$path/$table")
 
   /** Reversed-term dimension (term_rev, term_id), files sorted by
     * term_rev: suffix dictionary lookups (`%foo` from regex literal
@@ -46,7 +54,7 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
   lazy val termsRev: DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$path/terms_rev")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(s"$path/terms_rev")
+    if (fs.exists(p)) read("terms_rev", IndexBuilder.TermsRevSchema)
     else terms.select(
       org.apache.spark.sql.functions.reverse(
         org.apache.spark.sql.functions.col("term")).as("term_rev"),
@@ -62,7 +70,7 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
   lazy val termsNgrams: DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$path/terms_ngrams")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(s"$path/terms_ngrams")
+    if (fs.exists(p)) read("terms_ngrams", IndexBuilder.TermsNgramsSchema)
     else terms.select(
       org.apache.spark.sql.functions.explode(
         org.apache.spark.sql.functions.expr(
@@ -81,16 +89,20 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     */
   lazy val tfRows: DataFrame = spark.read.parquet(s"$path/tf")
 
-  /** Builder-side presets (round 8): a fresh build KNOWS its stats and
-    * blocks metadata — re-reading the just-written single-row tables cost
-    * 4 driver jobs per build. Loads from disk still lazy-read as before.
+  /** Builder-side presets (round 8): a fresh build KNOWS its stats,
+    * blocks metadata and the schemas it wrote — re-reading the
+    * just-written single-row tables cost 4 driver jobs per build, and
+    * inferring a table's schema from its footers costs one more per
+    * table. Loads from disk still lazy-read and infer as before.
     */
   @volatile private var presetBlocksMeta: Option[(Int, Int)] = null
   @volatile private var presetStats: IndexStats = null
   @volatile private var presetCodec: String = null
+  @volatile private var presetDocsSchema: StructType = null
   private[graft] def preset(meta: Option[(Int, Int)], st: IndexStats,
-      codec: String): this.type = {
-    presetBlocksMeta = meta; presetStats = st; presetCodec = codec; this
+      codec: String, docsSchema: StructType): this.type = {
+    presetBlocksMeta = meta; presetStats = st; presetCodec = codec
+    presetDocsSchema = BuiltIndex.nullable(docsSchema); this
   }
 
   /** (num_buckets, block_bits) recorded at build time; None for a legacy
@@ -156,23 +168,60 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     * materialize them — the serving-mode analog of the reference holding
     * its whole index in RAM (README.md:517 'pre-indexed in RAM'). Scale
     * note: blocks+terms are the compressed index (a small fraction of the
-    * corpus); at cluster scale this is the standard hot-tier cache, and
-    * anything that doesn't fit degrades gracefully to the parquet scan.
+    * corpus); at cluster scale this is the standard hot-tier cache.
+    *
+    * For a bucketed index the hot tier holds the `terms` and `docs`
+    * tables and one resident `HotPartition` per blocks bucket: its block
+    * rows indexed by term_id plus the urls of its docs, persisted
+    * MEMORY_AND_DISK with its lineage kept, so a lost executor recomputes
+    * it from the parquet files. With the partitions in memory,
+    * `Bm25Query.searchBlocks` (plain or url-glob filtered, and so
+    * `searchWithLines`) and the batchable chunks of `searchBlocksBatchEx`
+    * run as ONE Spark job each with no SQL planning. `searchNaive`,
+    * `searchBlocksFiltered` with an arbitrary doc set, single
+    * `searchBlocksBoosted` queries and short queries keep the Dataset
+    * path, which reads blocks from parquet. If some partition does not fit
+    * in memory, or is later evicted to disk, queries take the Dataset path
+    * too, since a spilled partition is read back whole per query. An
+    * unbucketed index caches the `blocks` table instead of the partitions.
+    * On the 2000-doc perfbench `serve` corpus the partitions, terms and
+    * docs take about 3.4 MB of executor memory, where caching the blocks
+    * table with terms and docs takes 4.0 MB.
     */
   def cacheHot(): this.type = {
-    blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    terms.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the three caches CONCURRENTLY (guide §2.6) — they are
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    if (blocksMeta.isEmpty) blocks.persist(level)
+    terms.persist(level)
+    docs.persist(level)
+    impactCodec // read once here; the hot path consults it per query
+    // materialize the caches CONCURRENTLY (guide §2.6) — they are
     // independent scans, and serially each paid its own planning+schedule
-    // round trip
+    // round trip; the hot partitions are one more leg
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = IndexBuilder.buildEc
-    Seq(Future(blocks.count()), Future(terms.count()), Future(docs.count()))
+    val blocksLeg = blocksMeta match {
+      case None => Future(blocks.count()); case Some(_) => Future.unit
+    }
+    val hotLeg = blocksMeta.filter(_ => hot.isEmpty).map { case (n, bits) =>
+      Future(graft.query.HotServing.tier(this, n, bits))
+    }
+    Seq(blocksLeg, Future(terms.count()), Future(docs.count()))
       .foreach(Await.result(_, Duration.Inf))
+    hotLeg.foreach(f => hot = Await.result(f, Duration.Inf))
     this
   }
+
+  @volatile private var hot: Option[graft.query.HotTier] = None
+
+  /** The resident per-bucket partitions, while [[cacheHot]] holds all of
+    * them in executor memory.
+    */
+  private[graft] def hotPartitions: Option[RDD[graft.query.HotPartition]] =
+    hot.filter(_.resident).map(_.rdd)
+
+  /** The hot tier [[cacheHot]] built, resident or not. */
+  private[graft] def hotTier: Option[graft.query.HotTier] = hot
 
   /** Optional driver-resident dictionary for serving mode: query analysis
     * becomes a map lookup instead of a Spark job (one of the 3-4 fixed
@@ -216,6 +265,10 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
 }
 
 object BuiltIndex {
+  /** `s` with every field nullable — what a parquet read-back reports. */
+  private[graft] def nullable(s: StructType): StructType =
+    StructType(s.fields.map(_.copy(nullable = true)))
+
   /** Default cap for the driver-resident dictionary (~1 GB on-heap at
     * ~200 bytes/entry — see [[BuiltIndex.cacheDictionary]]).
     */
@@ -374,6 +427,12 @@ object IndexBuilder {
   private[graft] val TermsSchema: StructType = StructType(Seq(
     StructField("term", StringType), StructField("df", LongType),
     StructField("term_id", LongType), StructField("idf", DoubleType)))
+
+  /** Schemas of the derived dictionary dimensions written below. */
+  private[graft] val TermsRevSchema: StructType = StructType(Seq(
+    StructField("term_rev", StringType), StructField("term_id", LongType)))
+  private[graft] val TermsNgramsSchema: StructType = StructType(Seq(
+    StructField("gram", StringType), StructField("term_id", LongType)))
 
   /** Derived dictionary dimensions — shared by the batch writer above and
     * the checkpointed per-slice terms stage (CheckpointedBuild stage 3b).
@@ -641,7 +700,7 @@ object IndexBuilder {
 
     new BuiltIndex(spark, outDir)
       .preset(Some((buckets, blockBits)), st,
-        if (quantizeImpacts) "q8" else "f64")
+        if (quantizeImpacts) "q8" else "f64", docsDim.schema)
   }
 
   /** S4 extraction front end: raw pages (url, warc_ts, html, ...) ->

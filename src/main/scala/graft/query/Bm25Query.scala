@@ -60,7 +60,9 @@ case class BlockRowF(term_id: Long, block_id: Long, n: Int,
   *   - [[searchNaive]]: join/groupBy over uncompressed posting rows — the
   *     declarative cross-check path (J1a in SURVEY.md §7.1);
   *   - [[searchBlocks]]: mapPartitions merge over compressed posting
-  *     blocks with block-max pruning — the production path.
+  *     blocks with block-max pruning — the production path. On a hot
+  *     index it runs the same merge kernel on resident partitions
+  *     ([[HotServing]]), one Spark job per query or batch chunk.
   */
 object Bm25Query {
 
@@ -730,26 +732,46 @@ object Bm25Query {
     */
   val MaxBroadcastFilterDocs: Long = 4000000L
 
+  /** Production top-k search, optionally restricted by url globs. On a
+    * hot index ([[BuiltIndex.cacheHot]]) a query is a batch of one on the
+    * resident partitions: one Spark job, globs and urls resolved inside
+    * it, and no adaptive OR bootstrap.
+    *
+    * @param adaptiveThreshold df-sum above which a disjunctive query first
+    *   seeds its top-k threshold from a bootstrap pass. It only tightens
+    *   pruning, so results do not depend on it. It has no effect on a hot
+    *   index, which never runs the bootstrap.
+    */
   def searchBlocks(index: BuiltIndex, query: String, k: Int,
       conjunctive: Boolean = true,
       include: Seq[String] = Nil, exclude: Seq[String] = Nil,
       adaptiveThreshold: Long = AdaptiveCandidateThreshold): Dataset[Hit] = {
     val kk = clampK(k)
-    if (include.isEmpty && exclude.isEmpty) {
-      if (isShortQuery(query)) return allDocsFallback(index, kk, Nil, Nil)
-      return scoredBlocks(index, query, kk, conjunctive, adaptiveThreshold) match {
-        case None => emptyHits(index.spark)
-        case Some(scored) => finish(index, scored, kk)
-      }
+    val spark = index.spark
+    import spark.implicits._
+    index.hotPartitions match {
+      case Some(hot) if !isShortQuery(query) =>
+        spark.createDataset(
+          plan(index, BatchQuery(query, conjunctive, include, exclude))
+            .map(p => HotServing.run(index, hot, Array(p), kk, null).head)
+            .getOrElse(Vector.empty))
+      case _ if include.isEmpty && exclude.isEmpty =>
+        if (isShortQuery(query)) allDocsFallback(index, kk, Nil, Nil)
+        else scoredBlocks(index, query, kk, conjunctive, adaptiveThreshold) match {
+          case None => emptyHits(spark)
+          case Some(scored) => finish(index, scored, kk)
+        }
+      case _ =>
+        // P5 filter on the PRODUCTION path (reference filters the
+        // candidate set, engine.rs:1464-1472): resolve the url globs
+        // against the docs dimension once, then push the doc set into
+        // the block merge.
+        val allowedDf = index.docs
+          .where(PathFilter.predicate(col("url"), include, exclude))
+          .select("doc_id")
+        searchBlocksFiltered(index, query, kk, conjunctive, allowedDf,
+          adaptiveThreshold)
     }
-    // P5 filter on the PRODUCTION path (reference filters the candidate
-    // set, engine.rs:1464-1472): resolve the url globs against the docs
-    // dimension once, then push the doc set into the block merge.
-    val allowedDf = index.docs
-      .where(PathFilter.predicate(col("url"), include, exclude))
-      .select("doc_id")
-    searchBlocksFiltered(index, query, kk, conjunctive, allowedDf,
-      adaptiveThreshold)
   }
 
   /** Block-path search restricted to an arbitrary allowed-doc set. The
@@ -869,6 +891,11 @@ object Bm25Query {
     * unresolvable conjunctive queries settle individually through their
     * single-query paths.
     *
+    * On a hot index each chunk runs on the resident partitions instead
+    * ([[HotServing]]): url globs resolve inside the job against each
+    * bucket's own docs (no filter collects, no broadcast ceiling), urls
+    * come back with the survivors, and the chunk is ONE job.
+    *
     * Returns one Vector[Hit] per input query, in input order.
     */
   def searchBlocksBatchEx(index: BuiltIndex, queries: Seq[BatchQuery],
@@ -906,9 +933,11 @@ object Bm25Query {
       }
 
     // distinct url-glob pairs -> broadcastable DocFilter (or None: that
-    // filter's queries settle individually on the dense/declarative path)
+    // filter's queries settle individually on the dense/declarative path).
+    // A hot index resolves globs inside its one job instead.
+    val hot = index.hotPartitions
     val globPairs = queries.map(q => (q.include, q.exclude)).distinct
-      .filter(p => p._1.nonEmpty || p._2.nonEmpty)
+      .filter(p => hot.isEmpty && (p._1.nonEmpty || p._2.nonEmpty))
     val filterOf: Map[(Seq[String], Seq[String]), Option[DocFilter]] =
       globPairs.map { case (inc, exc) =>
         val allowedDf = index.docs
@@ -919,14 +948,13 @@ object Bm25Query {
     val results = scala.collection.mutable.Map.empty[Int, Vector[Hit]]
     // batchable = resolvable + filter broadcastable (+ boost available if
     // requested); everything else settles through its single-query path
-    val plan = queries.zipWithIndex.flatMap { case (q, qi) =>
+    val planned = queries.zipWithIndex.flatMap { case (q, qi) =>
       val hasGlobs = q.include.nonEmpty || q.exclude.nonEmpty
-      val filt = if (hasGlobs) filterOf((q.include, q.exclude)) else None
       if (isShortQuery(q.query)) {
         results(qi) = allDocsFallback(index, kk, q.include, q.exclude)
           .collect().toVector
         None
-      } else if (hasGlobs && filt.isEmpty) {
+      } else if (hasGlobs && hot.isEmpty && filterOf((q.include, q.exclude)).isEmpty) {
         // filter too large for either broadcast side. A boosted query
         // must NOT drop its boost here: compose filter+boost on the
         // declarative path (exact, both joins distributed); un-boosted
@@ -948,18 +976,13 @@ object Bm25Query {
           else searchBlocksBoosted(index, q.query, kk, rank.get,
             q.conjunctive)).collect().toVector
         None
-      } else {
-        val a = analyze(index, q.query)
-        if (a.terms.isEmpty || (q.conjunctive && !a.allResolved)) {
-          results(qi) = Vector.empty
-          None
-        } else Some(BatchPlanned(qi, a.terms.map(_.term_id).toArray,
-          a.terms.size, q.conjunctive, filt,
-          q.boosted && boostArrays.nonEmpty))
+      } else plan(index, q.copy(boosted = q.boosted && boostArrays.nonEmpty)) match {
+        case None => results(qi) = Vector.empty; None
+        case Some(p) => Some((qi, p))
       }
     }
 
-    if (plan.nonEmpty) {
+    if (planned.nonEmpty) {
       val buckets = index.blocksMeta.map(_._1.toLong)
         .getOrElse(spark.sessionState.conf.numShufflePartitions.toLong)
       val chunkB = math.max(1L,
@@ -972,42 +995,47 @@ object Bm25Query {
       val bcFilterOf = filterOf.collect { case (kf, Some(f)) =>
         kf -> ((spark.sparkContext.broadcast(f.sorted), f.isAllow))
       }
-      val bcByQuery: Int => (org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean) =
-        qi => {
-          val q = queries(qi)
-          if (q.include.isEmpty && q.exclude.isEmpty) null
-          else bcFilterOf((q.include, q.exclude))
+      planned.grouped(chunkB).foreach { chunk =>
+        val analyzed = chunk.map(_._2).toArray
+        val hits = hot match {
+          case Some(h) => HotServing.run(index, h, analyzed, kk, bcBoost)
+          case None => runBatchChunk(index, analyzed, kk, bcBoost, bcFilterOf)
         }
-      plan.grouped(chunkB).foreach { chunk =>
-        runBatchChunk(index, chunk.toArray, kk, bcBoost, bcByQuery, results)
+        chunk.map(_._1).zip(hits).foreach { case (qi, v) => results(qi) = v }
       }
     }
     queries.indices.map(qi => results(qi)).toVector
   }
 
-  /** One batch-planned query (driver-side analysis result). */
-  private case class BatchPlanned(qi: Int, termIds: Array[Long],
-      nTerms: Int, conjunctive: Boolean, filter: Option[DocFilter],
-      boosted: Boolean)
+  /** Driver-side analysis of one query into its batch form; None when it
+    * has no resolved term or is conjunctive with a missing one (empty).
+    */
+  private def plan(index: BuiltIndex, q: BatchQuery): Option[BatchPlanned] = {
+    val a = analyze(index, q.query)
+    if (a.terms.isEmpty || (q.conjunctive && !a.allResolved)) None
+    else Some(BatchPlanned(a.terms.map(_.term_id).toArray, q.conjunctive,
+      q.include, q.exclude, q.boosted))
+  }
 
   /** Run one chunk of batch-planned queries as ONE Spark job over one
-    * pruned blocks scan; fills `results` per query. Candidate collect is
-    * bounded by buckets x chunk-size x k (see [[MaxBatchCollectRows]]).
+    * pruned blocks scan; returns each query's hits in chunk order.
+    * Candidate collect is bounded by buckets x chunk-size x k (see
+    * [[MaxBatchCollectRows]]).
     */
   private def runBatchChunk(index: BuiltIndex, chunk: Array[BatchPlanned],
-      kk: Int,
-      bcBoost: (org.apache.spark.broadcast.Broadcast[Array[Long]],
-        org.apache.spark.broadcast.Broadcast[Array[Double]], Double),
-      bcByQuery: Int => (org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean),
-      results: scala.collection.mutable.Map[Int, Vector[Hit]]): Unit = {
+      kk: Int, bcBoost: HotServing.Boost,
+      bcFilterOf: Map[(Seq[String], Seq[String]),
+        (org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)]
+      ): Array[Vector[Hit]] = {
     val spark = index.spark
     import spark.implicits._
     val unionIds = chunk.flatMap(_.termIds).distinct.toIndexedSeq
     val qIds = chunk.map(_.termIds)
-    val qN = chunk.map(_.nTerms)
     val qConj = chunk.map(_.conjunctive)
     val qBoosted = chunk.map(_.boosted)
-    val qFilterBc = chunk.map(p => bcByQuery(p.qi))
+    val qFilterBc = chunk.map(p =>
+      if (p.include.isEmpty && p.exclude.isEmpty) null
+      else bcFilterOf((p.include, p.exclude)))
     val q8 = index.impactCodec == "q8"
     val rows = index.blocks
       .where(col("term_id").isin(unionIds: _*))
@@ -1032,7 +1060,7 @@ object Bm25Query {
           processPartition(
             part.iterator.filter(r => tset.contains(r.term_id))
               .map(r => (r, fArr)),
-            qN(pi), kk, qConj(pi), Double.NegativeInfinity, q8,
+            qIds(pi).length, kk, qConj(pi), Double.NegativeInfinity, q8,
             fAllow, bIds, bVals, bMax)
             .map { case (d, s) => (pi, d, s) }
         }
@@ -1049,12 +1077,11 @@ object Bm25Query {
       if (allIds.isEmpty) Map.empty[Long, String]
       else index.docs.where(col("doc_id").isin(allIds.toIndexedSeq: _*))
         .select("doc_id", "url").as[(Long, String)].collect().toMap
-    chunk.indices.foreach { pi =>
-      val hits = topPer.getOrElse(pi, Vector.empty).zipWithIndex.map {
+    chunk.indices.map { pi =>
+      topPer.getOrElse(pi, Vector.empty).zipWithIndex.map {
         case ((d, s), i) => Hit(d, urls.getOrElse(d, ""), s, i + 1)
       }
-      results(chunk(pi).qi) = hits
-    }
+    }.toArray
   }
 
   /** Resolve an allowed-doc DataFrame into a broadcastable [[DocFilter]]

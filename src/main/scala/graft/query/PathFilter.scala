@@ -1,5 +1,7 @@
 package graft.query
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -84,11 +86,25 @@ object PathFilter {
   def predicateDelimited(url: Column, include: String, exclude: String): Column =
     predicate(url, parsePatterns(include), parsePatterns(exclude))
 
-  /** Driver-side twin for tests (same semantics as [[predicate]]). */
-  def matches(path: String, include: Seq[String], exclude: Seq[String]): Boolean = {
-    val p = path.replace('\\', '/')
-    val inc = include.isEmpty || include.exists(g => p.matches(globToRegex(g)))
-    val exc = exclude.nonEmpty && exclude.exists(g => p.matches(globToRegex(g)))
-    inc && !exc
+  /** Row-level twin of [[predicate]], compiled once: backslashes become
+    * '/' and each glob regex is tested with `Matcher.find`, as `rlike`
+    * does (so a url ending in a line terminator matches like it does in
+    * SQL). A null url passes only when there are no globs at all, as the
+    * predicate's null result drops the row.
+    */
+  def matcher(include: Seq[String], exclude: Seq[String]): String => Boolean = {
+    val inc = include.map(g => Pattern.compile(globToRegex(g)))
+    val exc = exclude.map(g => Pattern.compile(globToRegex(g)))
+    path =>
+      if (path == null) inc.isEmpty && exc.isEmpty
+      else {
+        val p = path.replace('\\', '/')
+        (inc.isEmpty || inc.exists(_.matcher(p).find())) &&
+          !exc.exists(_.matcher(p).find())
+      }
   }
+
+  /** A one-off [[matcher]] call. */
+  def matches(path: String, include: Seq[String], exclude: Seq[String]): Boolean =
+    matcher(include, exclude)(path)
 }

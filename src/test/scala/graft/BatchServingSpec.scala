@@ -35,6 +35,17 @@ class BatchServingSpec extends AnyFunSuite {
   private def hitsOf(v: Vector[graft.query.Hit]): Seq[(Long, Double, Int)] =
     v.map(h => (h.doc_id, h.score, h.rank))
 
+  /** The same directory without hot partitions: its single queries run
+    * the Dataset path, so hot batches (which share the hot runner with hot
+    * single queries) are still checked against an independent path.
+    */
+  private lazy val cold = IndexBuilder.load(spark, idx.path).cacheDictionary()
+
+  private def coldSingle(q: BatchQuery): Seq[(Long, Double, Int)] =
+    (if (q.boosted) Bm25Query.searchBlocksBoosted(cold, q.query, 10, rankDf, q.conjunctive)
+    else Bm25Query.searchBlocks(cold, q.query, 10, q.conjunctive, q.include, q.exclude))
+      .collect().map(h => (h.doc_id, h.score, h.rank)).toSeq
+
   test("mixed batch: plain/filtered/boosted each equal their single path") {
     val w = (i: Int) => PagesCorpus.vocab(i)
     val inc = Seq("https://site-00*.example/**")
@@ -122,6 +133,31 @@ class BatchServingSpec extends AnyFunSuite {
     assert(hitsOf(fb(0)) != hitsOf(fb(1)), "boost dropped in fallback")
   }
 
+  test("oversized-broadcast fallbacks on a cold index keep filter and boost") {
+    // the hot runner resolves globs inside its job, so on `idx` the
+    // un-boosted filtered query never reaches the oversized-filter branch;
+    // the cold index still does
+    val q = s"${PagesCorpus.vocab(2)} ${PagesCorpus.vocab(7)}"
+    val inc = Seq("https://site-01*.example/**")
+    val queries = Seq(
+      BatchQuery(q, include = inc, boosted = true),   // filtered+boosted
+      BatchQuery(q, include = inc),                   // filtered only
+      BatchQuery(q, boosted = true))                  // boosted only
+    val want = Bm25Query.searchBlocksBatchEx(cold, queries, 10, Some(rankDf))
+    val fb = Bm25Query.searchBlocksBatchEx(cold, queries, 10, Some(rankDf),
+      maxBroadcastDocs = 0L)
+    val hot = Bm25Query.searchBlocksBatchEx(idx, queries, 10, Some(rankDf))
+    queries.indices.foreach { i =>
+      assert(hitsOf(fb(i)) == hitsOf(want(i)), s"query $i")
+      assert(hitsOf(fb(i)) == hitsOf(hot(i)), s"query $i vs hot")
+    }
+    assert(hitsOf(fb(1)) == coldSingle(queries(1)))
+    assert(hitsOf(fb(2)) == coldSingle(queries(2)))
+    assert(fb(0).nonEmpty && fb(1).nonEmpty && fb(2).nonEmpty)
+    assert(hitsOf(fb(0)) != hitsOf(fb(2)), "filter dropped in fallback")
+    assert(hitsOf(fb(0)) != hitsOf(fb(1)), "boost dropped in fallback")
+  }
+
   test("lines batch chunking (tiny collect bound) == unchunked") {
     val w = (i: Int) => PagesCorpus.vocab(i)
     val queries = (0 until 5).map(i =>
@@ -158,5 +194,57 @@ class BatchServingSpec extends AnyFunSuite {
       assert(got == single.toVector, s"query $qi")
     }
     assert(batch(0).nonEmpty && batch(1).nonEmpty && batch(2).isEmpty)
+  }
+
+  test("hot and cold batches equal the cold index's single queries") {
+    val w = (i: Int) => PagesCorpus.vocab(i)
+    val queries = Seq(
+      BatchQuery(s"${w(2)} ${w(7)}"),
+      BatchQuery(s"${w(3)} ${w(9)}", conjunctive = false),
+      BatchQuery(s"${w(2)} ${w(7)}", include = Seq("https://site-00*.example/**")),
+      BatchQuery(w(4), exclude = Seq("https://site-01*.example/**")),
+      BatchQuery(s"${w(2)} ${w(7)}", boosted = true),
+      BatchQuery("zzznothere"))
+    assert(idx.hotPartitions.nonEmpty && cold.hotPartitions.isEmpty)
+    val hot = Bm25Query.searchBlocksBatchEx(idx, queries, 10, Some(rankDf))
+    val coldBatch = Bm25Query.searchBlocksBatchEx(cold, queries, 10, Some(rankDf))
+    queries.zipWithIndex.foreach { case (q, i) =>
+      val want = coldSingle(q)
+      assert(hitsOf(hot(i)) == want, s"hot batch, query $i")
+      assert(hitsOf(coldBatch(i)) == want, s"cold batch, query $i")
+    }
+    assert(hot.take(5).forall(_.nonEmpty))
+  }
+
+  test("chunked hot batch == cold single queries") {
+    val w = (i: Int) => PagesCorpus.vocab(i)
+    val queries = (0 until 8).map(i =>
+      BatchQuery(s"${w(2 + i)} ${w(11 + i)}", conjunctive = i % 2 == 0,
+        include = if (i % 3 == 0) Seq("https://site-0*.example/**") else Nil))
+    val chunked = Bm25Query.searchBlocksBatchEx(idx, queries, 10,
+      maxCollectRows = 1L)
+    queries.zipWithIndex.foreach { case (q, i) =>
+      assert(hitsOf(chunked(i)) == coldSingle(q), s"query $i")
+    }
+    assert(chunked.exists(_.nonEmpty))
+  }
+
+  test("hot batched lines == cold searchWithLines per query") {
+    val w = (i: Int) => PagesCorpus.vocab(i)
+    val queries = Seq(
+      BatchQuery(s"${w(2)} ${w(7)}"),
+      BatchQuery(s"${w(3)} ${w(9)}", conjunctive = false))
+    val batch = Bm25Query.searchWithLinesBatch(idx, pages, queries, 5)
+    queries.zipWithIndex.foreach { case (q, qi) =>
+      val single = Bm25Query.searchWithLines(cold, pages, q.query, 5,
+        q.conjunctive).collect()
+        .map(h => (h.doc_id, h.rank, h.line_number, h.match_start,
+          h.match_end, h.snippet, h.score)).sortBy(x => (x._2, x._3))
+      val got = batch(qi)
+        .map(h => (h.doc_id, h.rank, h.line_number, h.match_start,
+          h.match_end, h.snippet, h.score)).sortBy(x => (x._2, x._3))
+      assert(got == single.toVector, s"query $qi")
+      assert(got.nonEmpty, s"query $qi")
+    }
   }
 }

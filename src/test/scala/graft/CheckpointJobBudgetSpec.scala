@@ -1,12 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.UUID
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.CheckpointedBuild
@@ -23,35 +19,7 @@ class CheckpointJobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val n = 300L
 
-  /** The Spark jobs `f` starts, counted by a job group unique to this
-    * call, so jobs of suites running alongside are not counted.
-    */
-  private def jobsOf[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"job-budget-${UUID.randomUUID()}"
-    val fence = s"$group-fence"
-    val jobs = new AtomicInteger
-    val fenceSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`fence`) => fenceSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job budget")
-      val r = try f finally sc.clearJobGroup()
-      // the listener bus delivers events in order: once the fence job's
-      // start arrives, every job of `f` has been counted
-      sc.setJobGroup(fence, "job budget fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenceSeen.await(60, TimeUnit.SECONDS), "listener events did not arrive")
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf[A](f: => A): (A, Int) = SparkJobs.count(spark)(f)
 
   private def top(ix: graft.index.BuiltIndex, q: String): Seq[(Long, Double)] =
     Bm25Query.searchBlocks(ix, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq

@@ -58,6 +58,42 @@ class PathFilterSpec extends AnyFunSuite {
     assert(m("a\\b\\x.txt", Seq("a/b/*.txt")))
   }
 
+  test("matcher equals the Column predicate row by row") {
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val urls = Seq(
+      "https://a.example/x", "https://a.example/x\n", "https://a.example/x\r\n",
+      "https://a.example/y", "a\\b\\x.txt", "https:\\\\a.example\\x",
+      "x/a,b/f.rs", "x/a/f.rs", "x/w}v/f.rs", "x/wv/f.rs", "f.js", "f.ts",
+      "f.tsx", "d/f1.rs", "d/fx.rs", "d/[1].rs", null)
+    val globs: Seq[(Seq[String], Seq[String])] = Seq(
+      (Nil, Nil),
+      (Seq("https://a.example/x"), Nil),
+      (Seq("https://a.example/**"), Seq("**/y")),
+      (Nil, Seq("https://a.example/x")),
+      (Seq("a/b/*.txt"), Nil),
+      (Seq("a,b/*"), Nil),
+      (Seq("w}v/*"), Nil),
+      (Seq("*.{js,ts}"), Nil),
+      (Seq("*.{js,{ts,tsx}}"), Seq("f.ts")),
+      (Seq("f[0-9].rs", "[cd]/*.rs"), Nil),
+      (Seq("f[!0-9x].rs"), Nil))
+    val df = urls.map(Option(_)).toDF("url")
+    for ((inc, exc) <- globs) {
+      val keep = PathFilter.matcher(inc, exc)
+      val rows = df.select(col("url"), PathFilter.predicate(col("url"), inc, exc))
+        .collect()
+      assert(rows.length == urls.length)
+      rows.foreach { r =>
+        val sql = !r.isNullAt(1) && r.getBoolean(1)
+        assert(keep(r.getString(0)) == sql, s"$inc / $exc on ${r.getString(0)}")
+      }
+    }
+    // the line-terminator case that String.matches got wrong
+    assert(m("https://a.example/x\n", Seq("https://a.example/x")))
+  }
+
   test("url filtering in search (column twin)") {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._

@@ -11,8 +11,10 @@ import graft.query.Bm25Query
   * /root/reference/src/bin/fast_code_search_validator.rs:692-810): build
   * over the cached corpus, pin hot tables + driver dictionary, then run a
   * labeled query mix and report p50/p95/p99 + QPS PER CLASS (needle /
-  * head / conjunctive / disjunctive / filtered / regex / lines), so a
-  * serving regression localizes to the query family.
+  * head / conjunctive / disjunctive / filtered / glob / regex / lines),
+  * so a serving regression localizes to the query family. Each class
+  * also reports its Spark jobs per query (counted by job group), the
+  * floor the hot serving path is built to hold at one.
   *
   * Usage: Test/runMain graft.QueryBench [nDocs] [rounds]   (200000, 3)
   */
@@ -64,6 +66,11 @@ object QueryBench {
           s"${PagesCorpus.vocab(5 + i)} ${PagesCorpus.vocab(60 + i)}",
           10, conjunctive = true, allow).collect(); ()
       })) ++
+      (0 until 3).map(i => "glob" -> (() => {
+        Bm25Query.searchBlocks(idx,
+          s"${PagesCorpus.vocab(5 + i)} ${PagesCorpus.vocab(60 + i)}",
+          10, include = Seq("https://site-01*.example/**")).collect(); ()
+      })) ++
       (0 until 3).map(i => "regex" -> (() => {
         graft.query.RegexQuery.search(idx, pages,
           s"${PagesCorpus.vocab(8 + i)}\\s+\\w+", 100).collect(); ()
@@ -73,8 +80,11 @@ object QueryBench {
           PagesCorpus.vocab(30 + i), 10).collect(); ()
       }))
 
-    def onePass(): Seq[(String, Double)] = workload.map { case (cls, f) =>
-      val t0 = System.nanoTime(); f(); cls -> (System.nanoTime() - t0) / 1e6
+    def onePass(): Seq[(String, Double, Int)] = workload.map { case (cls, f) =>
+      val (ms, jobs) = SparkJobs.count(spark) {
+        val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e6
+      }
+      (cls, ms, jobs)
     }
     onePass() // warm (plans, caches, codegen)
     val lat = (0 until rounds).flatMap(_ => onePass())
@@ -92,6 +102,7 @@ object QueryBench {
       val v = xs.map(_._2)
       println(f"[loadtest:$cls] n=${v.size} p50=${pct(v, 0.5)}%.0fms " +
         f"p95=${pct(v, 0.95)}%.0fms p99=${pct(v, 0.99)}%.0fms " +
+        f"jobs/query=${xs.map(_._3).sum.toDouble / v.size}%.1f " +
         f"qps=${v.size / (v.sum / 1000.0)}%.1f")
     }
 
