@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.corpus.PagesCorpus
 import graft.index.IndexBuilder
-import graft.query.Bm25Query
+import graft.query.{BatchQuery, Bm25Query}
 
 /** End-to-end CLI: generate (or reuse) a pages corpus, build the inverted
   * index, serve BM25 top-k queries. The Spark analog of the reference's
@@ -78,14 +78,14 @@ object SearchCli {
       // ',' OR ';' separate queries (sbt -batch eats ';' as its own
       // command separator, so ',' is the reachable spelling there)
       val queries = rest.mkString(" ").split("[;,]").map(_.trim)
-        .filter(_.nonEmpty).toSeq.map(q => (q, conj))
+        .filter(_.nonEmpty).toSeq.map(q => BatchQuery(q, conj))
       val t0 = System.nanoTime()
-      val res = Bm25Query.searchBlocksBatch(idx, queries, k.toInt)
+      val res = Bm25Query.searchBlocksBatchEx(idx, queries, k.toInt)
       val ms = (System.nanoTime() - t0) / 1e6
       println(f"[batch] queries=${queries.size} mode=$mode k=$k " +
         f"wall=${ms}%.0fms amortized=${ms / queries.size}%.1fms/query")
-      queries.zip(res).foreach { case ((q, _), hits) =>
-        println(s"  q='$q' hits=${hits.length}" + (if (hits.nonEmpty)
+      queries.zip(res).foreach { case (q, hits) =>
+        println(s"  q='${q.query}' hits=${hits.length}" + (if (hits.nonEmpty)
           f" top=(${hits.head.doc_id},${hits.head.score}%.4f)" else ""))
       }
     // line-level results (reference result record: path, line, span,

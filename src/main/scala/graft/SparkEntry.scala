@@ -11,7 +11,7 @@ import graft.deps.Deps
 import graft.extract.Extract
 import graft.index.{BuiltIndex, IndexBuilder}
 import graft.ops.{Dedup, Multimodal, Similarity, TextStats}
-import graft.query.Bm25Query
+import graft.query.{BatchQuery, Bm25Query}
 import graft.symbols.Symbols
 
 /** Driver contract — one `queries` entry per implemented operator
@@ -253,8 +253,9 @@ object SparkEntry {
     // pruned blocks scan — per-query results must equal the single-query
     // path (and therefore the oracle) exactly
     "k1_bm25_batch" -> ((s, dir) => {
-      val res = Bm25Query.searchBlocksBatch(indexFor(s, dir),
-        Seq(("spark merge window", true), ("vector stream", false)), 20)
+      val res = Bm25Query.searchBlocksBatchEx(indexFor(s, dir),
+        Seq(BatchQuery("spark merge window"),
+          BatchQuery("vector stream", conjunctive = false)), 20)
       import s.implicits._
       res.zipWithIndex.flatMap { case (hits, qi) =>
         hits.map(h => (qi.toLong, h.doc_id, h.score))
@@ -267,7 +268,6 @@ object SparkEntry {
     // batch kernel — per-query results must equal the single-query paths
     // (and therefore the oracle) exactly
     "k1_bm25_batch_mixed" -> ((s, dir) => {
-      import graft.query.BatchQuery
       val idx = indexFor(s, dir)
       val rank = Deps.staticRank(gateEdges(s, dir))
       val res = Bm25Query.searchBlocksBatchEx(idx, Seq(

@@ -174,15 +174,16 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     * tables and one resident `HotPartition` per blocks bucket: its block
     * rows indexed by term_id plus the urls of its docs, persisted
     * MEMORY_AND_DISK with its lineage kept, so a lost executor recomputes
-    * it from the parquet files. With the partitions in memory,
-    * `Bm25Query.searchBlocks` (plain or url-glob filtered, and so
-    * `searchWithLines`) and the batchable chunks of `searchBlocksBatchEx`
-    * run as ONE Spark job each with no SQL planning. `searchNaive`,
-    * `searchBlocksFiltered` with an arbitrary doc set, single
-    * `searchBlocksBoosted` queries and short queries keep the Dataset
-    * path, which reads blocks from parquet. If some partition does not fit
-    * in memory, or is later evicted to disk, queries take the Dataset path
-    * too, since a spilled partition is read back whole per query. An
+    * it from the parquet files. With the partitions in memory, every
+    * batchable chunk of `Bm25Query.searchBlocksBatchEx` — and so
+    * `searchBlocks` (plain or url-glob filtered), `searchBlocksBoosted`
+    * and `searchWithLines`, each a batch of one — runs as ONE Spark job
+    * with no SQL planning. `searchNaive`, `searchBlocksFiltered` with an
+    * arbitrary doc set, filters or rank sets past the broadcast ceiling
+    * and short queries keep the Dataset path, which reads blocks from
+    * parquet. If some partition does not fit in memory, or is later
+    * evicted to disk, queries take the Dataset path too, since a spilled
+    * partition is read back whole per query. An
     * unbucketed index caches the `blocks` table instead of the partitions.
     * On the 2000-doc perfbench `serve` corpus the partitions, terms and
     * docs take about 3.4 MB of executor memory, where caching the blocks

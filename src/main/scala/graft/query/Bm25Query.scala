@@ -2,10 +2,11 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.index.{Bm25, BuiltIndex, PostingCodec}
+import graft.index.{BuiltIndex, PostingCodec}
 import graft.tokenize.Tokenizer
 
 /** A resolved query term (driver-side analysis). */
@@ -58,11 +59,18 @@ case class BlockRowF(term_id: Long, block_id: Long, n: Int,
   *
   * Two physical paths, asserted identical in tests:
   *   - [[searchNaive]]: join/groupBy over uncompressed posting rows — the
-  *     declarative cross-check path (J1a in SURVEY.md §7.1);
-  *   - [[searchBlocks]]: mapPartitions merge over compressed posting
-  *     blocks with block-max pruning — the production path. On a hot
-  *     index it runs the same merge kernel on resident partitions
-  *     ([[HotServing]]), one Spark job per query or batch chunk.
+  *     declarative cross-check path (J1a in SURVEY.md §7.1) and the
+  *     all-matches mode ([[scoredNaive]], [[searchBoosted]]);
+  *   - the block path: the WAND merge kernel ([[processPartition]]) over
+  *     compressed posting blocks with block-max pruning — the production
+  *     path. Every block entry point ([[searchBlocks]],
+  *     [[searchBlocksBoosted]], [[searchBlocksFiltered]],
+  *     [[searchWithLines]]) is a batch of one through the planner of
+  *     [[searchBlocksBatchEx]], which runs each chunk as ONE Spark job:
+  *     on the resident partitions of a hot index ([[HotServing]]) or,
+  *     otherwise, as one Dataset job over a pruned blocks scan. Only a
+  *     doc filter past the broadcast ceiling takes its own path
+  *     ([[scoredBlocksSharded]]).
   */
 object Bm25Query {
 
@@ -92,9 +100,10 @@ object Bm25Query {
     Analyzed(resolved.sortBy(t => (t.df, t.term_id)), qTokens.size)
   }
 
-  private def emptyHits(spark: SparkSession): Dataset[Hit] = {
+  private def hitsDataset(index: BuiltIndex, hits: Seq[Hit]): Dataset[Hit] = {
+    val spark = index.spark
     import spark.implicits._
-    spark.emptyDataset[Hit]
+    spark.createDataset(hits)
   }
 
   /** Attach urls + ranks to a (doc_id, score) top-k result. k is small
@@ -110,7 +119,7 @@ object Bm25Query {
       .select("doc_id", "score")
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    if (top.isEmpty) return emptyHits(spark)
+    if (top.isEmpty) return hitsDataset(index, Nil)
     val urls = index.docs
       .where(col("doc_id").isin(top.map(_._1): _*))
       .select("doc_id", "url")
@@ -169,7 +178,7 @@ object Bm25Query {
     if (isShortQuery(query))
       allDocsFallback(index, clampK(k), include, exclude)
     else scoredNaive(index, query, conjunctive) match {
-      case None => emptyHits(index.spark)
+      case None => hitsDataset(index, Nil)
       case Some(scored) =>
         finish(index, restrict(index, scored, include, exclude), clampK(k))
     }
@@ -220,7 +229,7 @@ object Bm25Query {
       rank: DataFrame, conjunctive: Boolean = true,
       include: Seq[String] = Nil, exclude: Seq[String] = Nil): Dataset[Hit] =
     scoredNaive(index, query, conjunctive) match {
-      case None => emptyHits(index.spark)
+      case None => hitsDataset(index, Nil)
       case Some(scored) =>
         val boosted = scored
           .join(rank.select("doc_id", "static_rank"), Seq("doc_id"), "left")
@@ -231,49 +240,46 @@ object Bm25Query {
     }
 
   /** K3 on the PRODUCTION path (round 4): boosted search through the
-    * compressed blocks. The rank set `(doc_id, static_rank)` (distinct
-    * doc_ids, values >= 0; docs absent default 1.0 like the declarative
-    * path) collects and broadcasts as sorted arrays up to
-    * [[MaxBroadcastFilterDocs]] entries (~64 MB at 16 B/entry — the
-    * in-degree table is bounded by LINKED-TO docs, far fewer than docs);
-    * past the ceiling the query falls back to [[searchBoosted]] (exact,
-    * reads the uncompressed postings). Inside the merge every pruning
-    * bound scales by max(rank) and each candidate's final score is
-    * bm25 x rank(doc) — results equal searchBoosted bit-for-bit
-    * (Bm25EngineSpec/DepsSpec).
+    * compressed blocks, a batch of one through [[searchBlocksBatchEx]].
+    * The rank set `(doc_id, static_rank)` (distinct doc_ids, values >= 0;
+    * docs absent default 1.0 like the declarative path) collects and
+    * broadcasts as sorted arrays up to [[MaxBroadcastFilterDocs]] entries
+    * (~64 MB at 16 B/entry — the in-degree table is bounded by LINKED-TO
+    * docs, far fewer than docs); past the ceiling the query falls back to
+    * [[searchBoosted]] (exact, reads the uncompressed postings). Inside
+    * the merge every pruning bound scales by max(rank) and each
+    * candidate's final score is bm25 x rank(doc) — results equal
+    * searchBoosted bit-for-bit (Bm25EngineSpec/DepsSpec).
     */
   def searchBlocksBoosted(index: BuiltIndex, query: String, k: Int,
-      rank: DataFrame, conjunctive: Boolean = true,
-      maxBroadcastRanks: Long = MaxBroadcastFilterDocs): Dataset[Hit] = {
-    val spark = index.spark
+      rank: DataFrame, conjunctive: Boolean = true): Dataset[Hit] =
+    hitsDataset(index, searchBlocksBatchEx(index,
+      Seq(BatchQuery(query, conjunctive, boosted = true)), k, Some(rank)).head)
+
+  /** The rank set as sorted (doc_id, static_rank) arrays plus the largest
+    * rank (>= 1), or None past `maxDocs` entries. A duplicated doc_id
+    * fails loudly, like a negative rank: the merge's binarySearch would
+    * pick an arbitrary one of its boost values — silently wrong scores.
+    */
+  private def collectBoost(rank: DataFrame,
+      maxDocs: Long): Option[(Array[Long], Array[Double], Double)] = {
+    val spark = rank.sparkSession
     import spark.implicits._
-    val kk = clampK(k)
-    if (isShortQuery(query)) return allDocsFallback(index, kk, Nil, Nil)
-    val lim = math.min(maxBroadcastRanks + 1, Int.MaxValue.toLong - 1).toInt
+    val lim = math.min(maxDocs + 1, Int.MaxValue.toLong - 1).toInt
     val rows = rank
       .select(col("doc_id").cast("long"), col("static_rank").cast("double"))
       .limit(lim).as[(Long, Double)].collect()
-    if (rows.length > maxBroadcastRanks)
-      return searchBoosted(index, query, kk, rank, conjunctive)
+    if (rows.length > maxDocs) return None
     val sorted = rows.sortBy(_._1)
     val ids = sorted.map(_._1)
     val vals = sorted.map(_._2)
-    // uniqueness enforced loudly (like the >=0 check): a duplicated doc_id
-    // would make the merge's binarySearch pick an arbitrary one of the
-    // duplicate boost values — silently wrong scores
-    var di = 1
-    while (di < ids.length) {
-      require(ids(di) != ids(di - 1),
-        s"rank set has a duplicate doc_id ${ids(di)}")
-      di += 1
+    var i = 1
+    while (i < ids.length) {
+      require(ids(i) != ids(i - 1), s"rank set has a duplicate doc_id ${ids(i)}")
+      i += 1
     }
     require(vals.forall(_ >= 0.0), "static_rank must be non-negative")
-    val maxB = if (vals.isEmpty) 1.0 else math.max(1.0, vals.max)
-    scoredBlocks(index, query, kk, conjunctive,
-      boost = Some((ids, vals, maxB))) match {
-      case None => emptyHits(spark)
-      case Some(scored) => finish(index, scored, kk)
-    }
+    Some((ids, vals, if (vals.isEmpty) 1.0 else math.max(1.0, vals.max)))
   }
 
   /** Per-match line materialization over the FINAL top-k docs only (late
@@ -288,24 +294,13 @@ object Bm25Query {
   val MaxMatchesPerDoc = 100
   val SnippetWindow = 200
 
+  /** A batch of one through [[searchWithLinesBatch]]. */
   def searchWithLines(index: BuiltIndex, pagesText: DataFrame, query: String,
-      k: Int, conjunctive: Boolean = true,
-      blocks: Boolean = true): Dataset[LineHit] = {
+      k: Int, conjunctive: Boolean = true): Dataset[LineHit] = {
     val spark = index.spark
     import spark.implicits._
-    val hits =
-      if (blocks) searchBlocks(index, query, k, conjunctive)
-      else searchNaive(index, query, k, conjunctive)
-    val top = hits.collect()
-    if (top.isEmpty) return spark.emptyDataset[LineHit]
-    val terms = Tokenizer.tokenize(query).distinct
-    if (terms.isEmpty) {
-      // short-query fallback hits: synthesize a line-0 record per doc,
-      // like the reference's filename-match results (engine.rs:2100s)
-      return spark.createDataset(top.map(h =>
-        LineHit(h.doc_id, h.url, h.score, h.rank, 0, 0, 0, "")).toIndexedSeq)
-    }
-    lineRecords(index, pagesText, top.toIndexedSeq, terms).as[LineHit]
+    spark.createDataset(searchWithLinesBatch(index, pagesText,
+      Seq(BatchQuery(query, conjunctive)), k).head)
   }
 
   /** Per-match line records for an already-final top-k hit set (the shared
@@ -356,16 +351,6 @@ object Bm25Query {
   // Block path: compressed postings + block-max pruning (production)
   // ------------------------------------------------------------------
 
-  /** Adaptive-mode trigger: estimated candidate count (sum of query-term
-    * document frequencies — known from the dictionary, no extra scan)
-    * above which a disjunctive query pays one tiny pre-pass to bootstrap
-    * the WAND threshold. The reference's analog plan switch is candidates
-    * > 5000 -> fast metadata rank of the top 2000 (engine.rs:1249-1310,
-    * 1213-1217) — lossy there; our switch keeps EXACTNESS: the bootstrap
-    * threshold is a sound lower bound on the final k-th score.
-    */
-  val AdaptiveCandidateThreshold = 5000L
-
   /** Doc-filter pushed into the block merge: a SORTED doc_id set shipped
     * to the merge tasks, `isAllow` selecting allow-list vs deny-list
     * semantics. Docs failing the filter are dropped BEFORE they can enter
@@ -373,88 +358,6 @@ object Bm25Query {
     * stays exact.
     */
   private[graft] case class DocFilter(sorted: Array[Long], isAllow: Boolean)
-
-  /** (doc_id, score) of per-partition survivors (superset of global top-k),
-    * or None on short-circuit.
-    */
-  def scoredBlocks(index: BuiltIndex, query: String, k: Int,
-      conjunctive: Boolean,
-      adaptiveThreshold: Long = AdaptiveCandidateThreshold,
-      docFilter: Option[DocFilter] = None,
-      boost: Option[(Array[Long], Array[Double], Double)] = None): Option[DataFrame] = {
-    val spark = index.spark
-    import spark.implicits._
-    val a = analyze(index, query)
-    if (a.terms.isEmpty || (conjunctive && !a.allResolved)) return None
-    val kk = clampK(k)
-    val qids = a.terms.map(_.term_id)
-    val nTerms = a.terms.size
-
-    // Disjunctive head-term queries decode every block of every term in
-    // round 1 because each partition's heap threshold starts empty. The
-    // bootstrap: per docId-range group, L(g) = max_t block_max(t, g) is a
-    // LOWER bound on the group's best doc score (some doc attains that
-    // impact, union scoring only adds); distinct groups are disjoint doc
-    // ranges, so the k-th largest L over groups lower-bounds the global
-    // k-th best score, and any group with upper bound Σ block_max < that
-    // is skipped before decode. Sound only for OR mode: under conjunctive
-    // semantics the block-max doc may lack the other required terms — and
-    // only UNFILTERED: with a doc filter the block-max doc may be filtered
-    // out, so L(g) would overestimate the attainable filtered score.
-    // ... and only UNBOOSTED: the bootstrap's per-group lower bound L(g)
-    // assumes the block-max doc scores at least L(g), but its boost may
-    // be < maxBoost, so a boosted threshold seeded from it could prune a
-    // true top-k doc
-    val initThreshold: Double =
-      if (!conjunctive && docFilter.isEmpty && boost.isEmpty &&
-          a.terms.map(_.df).sum > adaptiveThreshold) {
-        val lows = index.blocks
-          .where(col("term_id").isin(qids: _*))
-          .groupBy("block_id").agg(max("block_max").as("l"))
-          .orderBy(col("l").desc).limit(kk)
-          .select("l").as[Double].collect()
-        if (lows.length < kk) Double.NegativeInfinity else lows.last
-      } else Double.NegativeInfinity
-
-    val rows = index.blocks
-      .where(col("term_id").isin(qids: _*))
-      .select("term_id", "block_id", "n", "docs_enc", "impacts_enc", "block_max")
-      .as[BlockRow]
-    // All terms' blocks of one docId range must be in one task, then the
-    // merge applies partition-local block-max thresholds (conservative =>
-    // exact top-k: the global top-k is a subset of the union of local
-    // top-k sets). With a bucketed index the scan itself delivers that
-    // co-location (one task per block_id bucket — zero Exchange, only a
-    // local sort of the pruned rows); a legacy layout pays a per-query
-    // repartition shuffle.
-    val coLocated =
-      if (index.blocksBucketed) rows
-      else rows.repartition(col("block_id"))
-    val q8 = index.impactCodec == "q8"
-    // ship the filter set ONCE per executor (torrent broadcast), not once
-    // per task in the closure
-    val bcFilter = docFilter
-      .map(f => (spark.sparkContext.broadcast(f.sorted), f.isAllow))
-      .orNull
-    val bcBoost = boost
-      .map(b => (spark.sparkContext.broadcast(b._1),
-        spark.sparkContext.broadcast(b._2), b._3))
-      .orNull
-    val candidates = coLocated
-      .sortWithinPartitions(col("block_id"), col("term_id"))
-      .mapPartitions { it =>
-        val (fArr, fAllow) =
-          if (bcFilter == null) (null: Array[Long], true)
-          else (bcFilter._1.value, bcFilter._2)
-        val (bIds, bVals, bMax) =
-          if (bcBoost == null) (null: Array[Long], null: Array[Double], 1.0)
-          else (bcBoost._1.value, bcBoost._2.value, bcBoost._3)
-        processPartition(it.map(r => (r, fArr)), nTerms, kk, conjunctive,
-          initThreshold, q8, fAllow, bIds, bVals, bMax)
-      }(org.apache.spark.sql.Encoders.product[(Long, Double)])
-      .toDF("doc_id", "score")
-    Some(candidates)
-  }
 
   /** Test-friendly unfiltered entry (WandMergeSpec drives the kernel
     * directly).
@@ -725,133 +628,62 @@ object Bm25Query {
   /** Max doc_ids shipped to the merge as a broadcast filter set (sorted
     * longs: 8 bytes/doc, so the default is a ~32 MB broadcast — executor
     * plural-MBs, the standard broadcast-join budget). When BOTH the allow
-    * set and its complement exceed this, the query falls back to the
-    * declarative path (exact, pays a shuffle) — the remaining scale story
-    * there is a per-block_id bitmap co-partitioned with the bucketed
-    * blocks, which this ceiling makes a non-goal until a workload hits it.
+    * set and its complement exceed this, the query takes the co-located
+    * filter shards of [[scoredBlocksSharded]] (or, on the legacy
+    * unbucketed layout, the declarative path) — exact, pays a shuffle.
     */
   val MaxBroadcastFilterDocs: Long = 4000000L
 
-  /** Production top-k search, optionally restricted by url globs. On a
-    * hot index ([[BuiltIndex.cacheHot]]) a query is a batch of one on the
-    * resident partitions: one Spark job, globs and urls resolved inside
-    * it, and no adaptive OR bootstrap.
-    *
-    * @param adaptiveThreshold df-sum above which a disjunctive query first
-    *   seeds its top-k threshold from a bootstrap pass. It only tightens
-    *   pruning, so results do not depend on it. It has no effect on a hot
-    *   index, which never runs the bootstrap.
+  /** Production top-k search, optionally restricted by url globs: a batch
+    * of one through [[searchBlocksBatchEx]]. On a hot index
+    * ([[BuiltIndex.cacheHot]]) that is one Spark job on the resident
+    * partitions, globs and urls resolved inside it.
     */
   def searchBlocks(index: BuiltIndex, query: String, k: Int,
       conjunctive: Boolean = true,
-      include: Seq[String] = Nil, exclude: Seq[String] = Nil,
-      adaptiveThreshold: Long = AdaptiveCandidateThreshold): Dataset[Hit] = {
-    val kk = clampK(k)
-    val spark = index.spark
-    import spark.implicits._
-    index.hotPartitions match {
-      case Some(hot) if !isShortQuery(query) =>
-        spark.createDataset(
-          plan(index, BatchQuery(query, conjunctive, include, exclude))
-            .map(p => HotServing.run(index, hot, Array(p), kk, null).head)
-            .getOrElse(Vector.empty))
-      case _ if include.isEmpty && exclude.isEmpty =>
-        if (isShortQuery(query)) allDocsFallback(index, kk, Nil, Nil)
-        else scoredBlocks(index, query, kk, conjunctive, adaptiveThreshold) match {
-          case None => emptyHits(spark)
-          case Some(scored) => finish(index, scored, kk)
-        }
-      case _ =>
-        // P5 filter on the PRODUCTION path (reference filters the
-        // candidate set, engine.rs:1464-1472): resolve the url globs
-        // against the docs dimension once, then push the doc set into
-        // the block merge.
-        val allowedDf = index.docs
-          .where(PathFilter.predicate(col("url"), include, exclude))
-          .select("doc_id")
-        searchBlocksFiltered(index, query, kk, conjunctive, allowedDf,
-          adaptiveThreshold)
-    }
-  }
+      include: Seq[String] = Nil, exclude: Seq[String] = Nil): Dataset[Hit] =
+    hitsDataset(index, searchBlocksBatchEx(index,
+      Seq(BatchQuery(query, conjunctive, include, exclude)), k).head)
 
   /** Block-path search restricted to an arbitrary allowed-doc set. The
     * filter applies BEFORE top-k pruning (docs outside the set never enter
     * a partition heap or move its threshold), so results are the exact
     * top-k of the allowed subset. The set ships as a broadcast of whichever
-    * side is smaller — the allow list or its complement; if both exceed
-    * [[MaxBroadcastFilterDocs]] the query takes the declarative path.
+    * side is smaller — the allow list or its complement — and the query
+    * runs as a batch of one on the Dataset runner (a hot index's partitions
+    * resolve only url globs); if both sides exceed `maxBroadcastDocs` the
+    * query takes [[scoredBlocksSharded]].
     */
   def searchBlocksFiltered(index: BuiltIndex, query: String, k: Int,
       conjunctive: Boolean, allowedDocs: DataFrame,
-      adaptiveThreshold: Long = AdaptiveCandidateThreshold,
       maxBroadcastDocs: Long = MaxBroadcastFilterDocs): Dataset[Hit] = {
-    val spark = index.spark
-    import spark.implicits._
     val kk = clampK(k)
     if (isShortQuery(query))
       return allDocsFallback(index, kk, Nil, Nil, allowedDocs)
-    // ONE job resolves the mode in the common case: collect up to cap+1
-    // distinct ids — under the cap that IS the full allow set (no
-    // separate count() pass; distinct also makes a duplicate-bearing
-    // input count against the broadcast budget only once); an over-cap
-    // allow set ships its complement as a deny list if THAT fits
-    // (resolveDocFilter — shared with the batch planner)
-    val allowedIds = allowedDocs.select(col("doc_id").cast("long")).distinct()
-    val filter = resolveDocFilter(index, allowedDocs, maxBroadcastDocs)
-    if (filter.exists(f => f.isAllow && f.sorted.isEmpty))
-      return emptyHits(spark)
-    filter match {
+    resolveDocFilter(index, allowedDocs, maxBroadcastDocs) match {
       case Some(f) =>
-        scoredBlocks(index, query, kk, conjunctive, adaptiveThreshold,
-          Some(f)) match {
-          case None => emptyHits(spark)
-          case Some(scored) => finish(index, scored, kk)
-        }
-      case None if index.blocksBucketed =>
-        // DENSE filter (neither side broadcasts): per-block filter shards
-        // co-located with the bucketed blocks — stays on the block path
-        val (scoredOpt, cleanup) =
-          scoredBlocksSharded(index, query, kk, conjunctive, allowedIds)
-        try scoredOpt match {
-          case None => emptyHits(spark)
-          case Some(scored) => finish(index, scored, kk)
-        } finally cleanup()
-      case None =>
-        // legacy (unbucketed) blocks layout: exact declarative fallback
-        scoredNaive(index, query, conjunctive) match {
-          case None => emptyHits(spark)
-          case Some(scored) => finish(index, restrictDf(scored, allowedIds.toDF("doc_id")), kk)
-        }
+        val planned = plan(index, BatchQuery(query, conjunctive), Some(f)).toSeq
+        hitsDataset(index, runPlanned(index, None, planned, kk, None).flatten)
+      case None => filteredUnbroadcast(index, query, kk, conjunctive, allowedDocs)
     }
   }
 
-  /** Batched serving: answer MANY queries in ONE Spark job over ONE
-    * pruned blocks scan — the amortization story for the per-query
-    * scheduling floor (a single interactive query pays 3-4 fixed driver
-    * jobs ~100ms each; a B-query batch pays them once, so amortized
-    * latency approaches scan time / B). The reference's validator drives
-    * its load test exactly this way — a mixed workload against one hot
-    * engine (fast_code_search_validator.rs:692-810).
-    *
-    * Mechanics: all queries analyze on the driver (dictionary); the scan
-    * pushes In(union of all term_ids); each partition buffers its pruned,
-    * (block_id, term_id)-sorted rows ONCE and replays them through the
-    * SAME single-query merge kernel per query (per-query heaps,
-    * per-query conjunctive/union mode) — results are bit-identical to
-    * [[searchBlocks]] per query by construction, asserted in
-    * Bm25EngineSpec. Per-partition buffering holds only the pruned rows
-    * of the batch's query terms (the same rows a one-query scan of the
-    * busiest term would hold). The adaptive OR-bootstrap is skipped
-    * (its extra pre-pass per query would defeat the amortization; the
-    * heap threshold still prunes). Short queries take their all-docs
-    * fallback individually; unresolvable conjunctive queries are empty.
-    *
-    * Returns one Vector[Hit] per input query, in input order.
+  /** Exact filtered top-k for a doc set too large for either broadcast
+    * side: co-located filter shards on a bucketed index, the declarative
+    * path on the legacy unbucketed layout.
     */
-  def searchBlocksBatch(index: BuiltIndex,
-      queries: Seq[(String, Boolean)], k: Int): Seq[Vector[Hit]] =
-    searchBlocksBatchEx(index,
-      queries.map { case (q, conj) => BatchQuery(q, conj) }, k)
+  private def filteredUnbroadcast(index: BuiltIndex, query: String, kk: Int,
+      conjunctive: Boolean, allowedDocs: DataFrame): Dataset[Hit] = {
+    val allowedIds = allowedDocs.select(col("doc_id").cast("long")).distinct()
+    if (index.blocksBucketed) {
+      val (scoredOpt, cleanup) =
+        scoredBlocksSharded(index, query, kk, conjunctive, allowedIds)
+      try scoredOpt.map(finish(index, _, kk)).getOrElse(hitsDataset(index, Nil))
+      finally cleanup()
+    } else scoredNaive(index, query, conjunctive)
+      .map(s => finish(index, restrictDf(s, allowedIds), kk))
+      .getOrElse(hitsDataset(index, Nil))
+  }
 
   /** Driver-collect ceiling for ONE batched job: each job's candidate
     * collect is bounded by buckets x B x k rows (every partition returns
@@ -866,30 +698,25 @@ object Bm25Query {
   /** Batched serving, full query classes (round 5): each [[BatchQuery]]
     * carries its own mode, url-glob filter and boost opt-in; one Spark
     * job per chunk answers every batchable query over ONE pruned blocks
-    * scan — the amortization story for the per-query scheduling floor
-    * (a single interactive query pays 3-4 fixed driver jobs ~100ms each).
+    * scan — the amortization story for the per-query scheduling floor.
     * The reference's validator drives its load test exactly this way — a
     * mixed workload against one hot engine
-    * (fast_code_search_validator.rs:692-810).
+    * (fast_code_search_validator.rs:692-810). Every single-query block
+    * entry point is a batch of one through this planner.
     *
     * Mechanics: all queries analyze on the driver (dictionary); distinct
     * (include, exclude) glob pairs resolve ONCE each against the docs
-    * dimension and broadcast as sorted filter arrays (allow or deny,
-    * whichever side fits [[MaxBroadcastFilterDocs]]); the shared rank
-    * set collects once with the same checks as [[searchBlocksBoosted]].
-    * Each partition buffers its pruned, (block_id, term_id)-sorted rows
-    * ONCE per chunk — the buffer holds one bucket's rows for the union
-    * of the CHUNK's query terms, the same rows a one-query scan of the
-    * busiest term would hold — and replays them through the SAME
-    * single-query merge kernel per query (per-query heaps, mode, filter,
-    * boost) — results are bit-identical to [[searchBlocks]] /
-    * [[searchBlocksFiltered]] / [[searchBlocksBoosted]] per query by
-    * construction, asserted in BatchServingSpec. The adaptive
-    * OR-bootstrap is skipped (its extra pre-pass per query would defeat
-    * the amortization; the heap threshold still prunes). Queries whose
-    * filter exceeds both broadcast sides, short queries, and
-    * unresolvable conjunctive queries settle individually through their
-    * single-query paths.
+    * dimension into sorted filter arrays (allow or deny, whichever side
+    * fits `maxBroadcastDocs`); the shared rank set collects once
+    * ([[collectBoost]]). Each partition buffers its pruned,
+    * (block_id, term_id)-sorted rows ONCE per chunk — the buffer holds
+    * one bucket's rows for the union of the CHUNK's query terms, the same
+    * rows a one-query scan of the busiest term would hold — and replays
+    * them through the SAME merge kernel per query (per-query heaps, mode,
+    * filter, boost), so a query's hits do not depend on its batch
+    * (asserted in BatchServingSpec). Queries whose filter or rank set
+    * exceeds both broadcast sides, short queries, and unresolvable
+    * conjunctive queries settle individually.
     *
     * On a hot index each chunk runs on the resident partitions instead
     * ([[HotServing]]): url globs resolve inside the job against each
@@ -902,149 +729,120 @@ object Bm25Query {
       k: Int, rank: Option[DataFrame] = None,
       maxCollectRows: Long = MaxBatchCollectRows,
       maxBroadcastDocs: Long = MaxBroadcastFilterDocs): Seq[Vector[Hit]] = {
-    val spark = index.spark
-    import spark.implicits._
     val kk = clampK(k)
     require(!queries.exists(_.boosted) || rank.nonEmpty,
       "batch contains boosted queries but no rank DataFrame was supplied")
-
-    // shared boost set: same collect + checks as searchBlocksBoosted;
-    // past the ceiling boosted queries settle individually
-    val boostArrays: Option[(Array[Long], Array[Double], Double)] =
-      if (!queries.exists(_.boosted)) None
-      else rank.flatMap { r =>
-        val lim = math.min(maxBroadcastDocs + 1, Int.MaxValue.toLong - 1).toInt
-        val rows = r.select(col("doc_id").cast("long"),
-          col("static_rank").cast("double")).limit(lim).as[(Long, Double)].collect()
-        if (rows.length > maxBroadcastDocs) None
-        else {
-          val sorted = rows.sortBy(_._1)
-          val ids = sorted.map(_._1)
-          var i = 1
-          while (i < ids.length) {
-            require(ids(i) != ids(i - 1),
-              s"rank set has a duplicate doc_id ${ids(i)}")
-            i += 1
-          }
-          val vals = sorted.map(_._2)
-          require(vals.forall(_ >= 0.0), "static_rank must be non-negative")
-          Some((ids, vals, if (vals.isEmpty) 1.0 else math.max(1.0, vals.max)))
-        }
-      }
-
-    // distinct url-glob pairs -> broadcastable DocFilter (or None: that
-    // filter's queries settle individually on the dense/declarative path).
-    // A hot index resolves globs inside its one job instead.
+    lazy val boost = collectBoost(rank.get, maxBroadcastDocs)
+    // distinct url-glob pairs resolve once each; a hot index resolves
+    // globs inside its one job instead
     val hot = index.hotPartitions
-    val globPairs = queries.map(q => (q.include, q.exclude)).distinct
-      .filter(p => hot.isEmpty && (p._1.nonEmpty || p._2.nonEmpty))
-    val filterOf: Map[(Seq[String], Seq[String]), Option[DocFilter]] =
-      globPairs.map { case (inc, exc) =>
-        val allowedDf = index.docs
-          .where(PathFilter.predicate(col("url"), inc, exc)).select("doc_id")
-        (inc, exc) -> resolveDocFilter(index, allowedDf, maxBroadcastDocs)
-      }.toMap
-
-    val results = scala.collection.mutable.Map.empty[Int, Vector[Hit]]
-    // batchable = resolvable + filter broadcastable (+ boost available if
-    // requested); everything else settles through its single-query path
+    val filterOf = mutable.Map.empty[(Seq[String], Seq[String]), Option[DocFilter]]
+    val results = mutable.Map.empty[Int, Vector[Hit]]
     val planned = queries.zipWithIndex.flatMap { case (q, qi) =>
-      val hasGlobs = q.include.nonEmpty || q.exclude.nonEmpty
-      if (isShortQuery(q.query)) {
-        results(qi) = allDocsFallback(index, kk, q.include, q.exclude)
-          .collect().toVector
-        None
-      } else if (hasGlobs && hot.isEmpty && filterOf((q.include, q.exclude)).isEmpty) {
-        // filter too large for either broadcast side. A boosted query
-        // must NOT drop its boost here: compose filter+boost on the
-        // declarative path (exact, both joins distributed); un-boosted
-        // queries keep the dense-shard block path.
-        results(qi) =
-          (if (q.boosted) searchBoosted(index, q.query, kk, rank.get,
-            q.conjunctive, q.include, q.exclude)
-          else searchBlocksFiltered(index, q.query, kk, q.conjunctive,
-            index.docs.where(PathFilter.predicate(col("url"), q.include, q.exclude))
-              .select("doc_id"))).collect().toVector
-        None
-      } else if (q.boosted && rank.nonEmpty && boostArrays.isEmpty) {
-        // rank set too large to broadcast. A glob-bearing query must NOT
-        // drop its filter here (searchBlocksBoosted has no glob args):
-        // compose filter+boost declaratively instead.
-        results(qi) =
-          (if (hasGlobs) searchBoosted(index, q.query, kk, rank.get,
-            q.conjunctive, q.include, q.exclude)
-          else searchBlocksBoosted(index, q.query, kk, rank.get,
-            q.conjunctive)).collect().toVector
-        None
-      } else plan(index, q.copy(boosted = q.boosted && boostArrays.nonEmpty)) match {
+      def settle(hits: Dataset[Hit]): Option[(Int, BatchPlanned)] = {
+        results(qi) = hits.collect().toVector; None
+      }
+      val globbed = hot.isEmpty && (q.include.nonEmpty || q.exclude.nonEmpty)
+      lazy val allowedDocs = index.docs
+        .where(PathFilter.predicate(col("url"), q.include, q.exclude)).select("doc_id")
+      lazy val filter = filterOf.getOrElseUpdate((q.include, q.exclude),
+        resolveDocFilter(index, allowedDocs, maxBroadcastDocs))
+      if (isShortQuery(q.query))
+        settle(allDocsFallback(index, kk, q.include, q.exclude))
+      else if ((globbed && filter.isEmpty) || (q.boosted && boost.isEmpty)) {
+        // a filter or rank set too large to broadcast: compose both
+        // declaratively for a boosted query (exact, both joins
+        // distributed); an un-boosted one keeps the filter shards
+        if (q.boosted) settle(searchBoosted(index, q.query, kk, rank.get,
+          q.conjunctive, q.include, q.exclude))
+        else settle(filteredUnbroadcast(index, q.query, kk, q.conjunctive, allowedDocs))
+      } else plan(index, q, if (globbed) filter else None) match {
         case None => results(qi) = Vector.empty; None
         case Some(p) => Some((qi, p))
       }
     }
+    val hits = runPlanned(index, hot, planned.map(_._2),
+      kk, if (planned.exists(_._2.boosted)) boost else None, maxCollectRows)
+    planned.map(_._1).zip(hits).foreach { case (qi, v) => results(qi) = v }
+    queries.indices.map(results)
+  }
 
-    if (planned.nonEmpty) {
-      val buckets = index.blocksMeta.map(_._1.toLong)
-        .getOrElse(spark.sessionState.conf.numShufflePartitions.toLong)
-      val chunkB = math.max(1L,
-        maxCollectRows / math.max(1L, kk.toLong * buckets)).toInt
-      val bcBoost = boostArrays.map(b =>
-        (spark.sparkContext.broadcast(b._1),
-          spark.sparkContext.broadcast(b._2), b._3)).orNull
-      // one broadcast per DISTINCT filter array (shared across the
-      // chunk's queries and across chunks)
-      val bcFilterOf = filterOf.collect { case (kf, Some(f)) =>
-        kf -> ((spark.sparkContext.broadcast(f.sorted), f.isAllow))
-      }
-      planned.grouped(chunkB).foreach { chunk =>
-        val analyzed = chunk.map(_._2).toArray
-        val hits = hot match {
-          case Some(h) => HotServing.run(index, h, analyzed, kk, bcBoost)
-          case None => runBatchChunk(index, analyzed, kk, bcBoost, bcFilterOf)
-        }
-        chunk.map(_._1).zip(hits).foreach { case (qi, v) => results(qi) = v }
-      }
+  /** Driver-side analysis of one query into its batch form, with its
+    * resolved doc filter if any; None when its result is empty: no
+    * resolved term, a conjunctive query missing a term, or an empty allow
+    * set.
+    */
+  private def plan(index: BuiltIndex, q: BatchQuery,
+      filter: Option[DocFilter]): Option[BatchPlanned] =
+    if (filter.exists(f => f.isAllow && f.sorted.isEmpty)) None
+    else {
+      val a = analyze(index, q.query)
+      if (a.terms.isEmpty || (q.conjunctive && !a.allResolved)) None
+      else Some(BatchPlanned(a.terms.map(_.term_id).toArray, q.conjunctive,
+        q.include, q.exclude, q.boosted, filter))
     }
-    queries.indices.map(qi => results(qi)).toVector
+
+  /** Each planned query's top-k hits, in order: chunks of at most
+    * `maxCollectRows / (k x buckets)` queries, each ONE Spark job — on the
+    * `hot` partitions if given (its queries carry no resolved filter),
+    * otherwise [[runBatchChunk]].
+    */
+  private def runPlanned(index: BuiltIndex, hot: Option[RDD[HotPartition]],
+      planned: Seq[BatchPlanned], kk: Int,
+      boost: Option[(Array[Long], Array[Double], Double)],
+      maxCollectRows: Long = MaxBatchCollectRows): Seq[Vector[Hit]] = {
+    if (planned.isEmpty) return Nil
+    val sc = index.spark.sparkContext
+    val buckets = index.blocksMeta.map(_._1.toLong)
+      .getOrElse(index.spark.sessionState.conf.numShufflePartitions.toLong)
+    val chunkB = math.max(1L,
+      maxCollectRows / math.max(1L, kk.toLong * buckets)).toInt
+    val bcBoost = boost.map(b =>
+      (sc.broadcast(b._1), sc.broadcast(b._2), b._3)).orNull
+    planned.grouped(chunkB).flatMap { chunk =>
+      hot match {
+        case Some(h) => HotServing.run(index, h, chunk.toArray, kk, bcBoost)
+        case None => runBatchChunk(index, chunk.toArray, kk, bcBoost)
+      }
+    }.toVector
   }
 
-  /** Driver-side analysis of one query into its batch form; None when it
-    * has no resolved term or is conjunctive with a missing one (empty).
+  /** The survivors (chunk position, doc_id, score) of one chunk of
+    * batch-planned queries: ONE pruned blocks scan, each bucket's rows
+    * buffered once and replayed through the merge kernel per query. Each
+    * distinct doc filter is broadcast once per chunk (a [[DocFilter]]
+    * compares its array by reference, so queries of one glob pair share
+    * it).
     */
-  private def plan(index: BuiltIndex, q: BatchQuery): Option[BatchPlanned] = {
-    val a = analyze(index, q.query)
-    if (a.terms.isEmpty || (q.conjunctive && !a.allResolved)) None
-    else Some(BatchPlanned(a.terms.map(_.term_id).toArray, q.conjunctive,
-      q.include, q.exclude, q.boosted))
-  }
-
-  /** Run one chunk of batch-planned queries as ONE Spark job over one
-    * pruned blocks scan; returns each query's hits in chunk order.
-    * Candidate collect is bounded by buckets x chunk-size x k (see
-    * [[MaxBatchCollectRows]]).
-    */
-  private def runBatchChunk(index: BuiltIndex, chunk: Array[BatchPlanned],
-      kk: Int, bcBoost: HotServing.Boost,
-      bcFilterOf: Map[(Seq[String], Seq[String]),
-        (org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)]
-      ): Array[Vector[Hit]] = {
+  private[graft] def batchCandidates(index: BuiltIndex, chunk: Array[BatchPlanned],
+      kk: Int, bcBoost: HotServing.Boost): Dataset[(Int, Long, Double)] = {
     val spark = index.spark
     import spark.implicits._
     val unionIds = chunk.flatMap(_.termIds).distinct.toIndexedSeq
     val qIds = chunk.map(_.termIds)
     val qConj = chunk.map(_.conjunctive)
     val qBoosted = chunk.map(_.boosted)
-    val qFilterBc = chunk.map(p =>
-      if (p.include.isEmpty && p.exclude.isEmpty) null
-      else bcFilterOf((p.include, p.exclude)))
+    val shipped = mutable.Map.empty[DocFilter,
+      org.apache.spark.broadcast.Broadcast[Array[Long]]]
+    val qFilterBc = chunk.map(_.filter.map(f =>
+      (shipped.getOrElseUpdate(f, spark.sparkContext.broadcast(f.sorted)),
+        f.isAllow)).orNull)
     val q8 = index.impactCodec == "q8"
     val rows = index.blocks
       .where(col("term_id").isin(unionIds: _*))
       .select("term_id", "block_id", "n", "docs_enc", "impacts_enc",
         "block_max")
       .as[BlockRow]
+    // All terms' blocks of one docId range must be in one task, then the
+    // merge applies partition-local block-max thresholds (conservative =>
+    // exact top-k: the global top-k is a subset of the union of local
+    // top-k sets). With a bucketed index the scan itself delivers that
+    // co-location (one task per block_id bucket — zero Exchange, only a
+    // local sort of the pruned rows); a legacy layout pays a per-query
+    // repartition shuffle.
     val coLocated =
       if (index.blocksBucketed) rows else rows.repartition(col("block_id"))
-    val candidates = coLocated
+    coLocated
       .sortWithinPartitions(col("block_id"), col("term_id"))
       .mapPartitions { it =>
         val part = it.toArray // pruned rows of this bucket, sorted
@@ -1065,7 +863,18 @@ object Bm25Query {
             .map { case (d, s) => (pi, d, s) }
         }
       }(org.apache.spark.sql.Encoders.product[(Int, Long, Double)])
-      .collect()
+  }
+
+  /** Run one chunk of batch-planned queries as ONE Spark job over one
+    * pruned blocks scan; returns each query's hits in chunk order.
+    * Candidate collect is bounded by buckets x chunk-size x k (see
+    * [[MaxBatchCollectRows]]).
+    */
+  private def runBatchChunk(index: BuiltIndex, chunk: Array[BatchPlanned],
+      kk: Int, bcBoost: HotServing.Boost): Array[Vector[Hit]] = {
+    val spark = index.spark
+    import spark.implicits._
+    val candidates = batchCandidates(index, chunk, kk, bcBoost).collect()
     // per-query top-k with the frozen tie-break, then ONE pruned url
     // lookup for every query's winners together
     val topPer = candidates.groupBy(_._1).map { case (pi, arr) =>
@@ -1139,6 +948,8 @@ object Bm25Query {
       val terms = Tokenizer.tokenize(q.query).distinct
       if (top.isEmpty) { out(qi) = Vector.empty; None }
       else if (terms.isEmpty) {
+        // short-query fallback hits: a line-0 record per doc, like the
+        // reference's filename-match results (engine.rs:2100s)
         out(qi) = top.map(h =>
           LineHit(h.doc_id, h.url, h.score, h.rank, 0, 0, 0, ""))
         None

@@ -14,11 +14,14 @@ import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 import graft.index.BuiltIndex
 
 /** One driver-analyzed query of a batch: its resolved term ids, mode, url
-  * globs and whether it takes the batch's boost.
+  * globs, whether it takes the batch's boost, and the doc filter its globs
+  * or doc set resolved to on the driver. Only the Dataset runner
+  * ([[Bm25Query.batchCandidates]]) reads `filter`: hot partitions resolve
+  * globs themselves and are never handed a resolved filter.
   */
-private[query] case class BatchPlanned(termIds: Array[Long],
+private[graft] case class BatchPlanned(termIds: Array[Long],
     conjunctive: Boolean, include: Seq[String], exclude: Seq[String],
-    boosted: Boolean)
+    boosted: Boolean, filter: Option[Bm25Query.DocFilter])
 
 /** Serving over the resident partitions of a hot index (see
   * [[BuiltIndex.cacheHot]]): a chunk of analyzed queries is answered by
@@ -33,8 +36,7 @@ private[query] case class BatchPlanned(termIds: Array[Long],
   *
   * Exact: a block bucket holds every block of its docId ranges and the
   * urls of exactly those docs, so the local allow array is the global
-  * one restricted to the bucket. The adaptive OR bootstrap is not run
-  * (it only tightens pruning), as on the batch path.
+  * one restricted to the bucket.
   */
 private[graft] object HotServing {
 

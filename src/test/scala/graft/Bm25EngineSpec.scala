@@ -8,7 +8,7 @@ import graft.corpus.PagesCorpus
 import graft.extract.Extract
 import graft.index.IndexBuilder
 import graft.oracle.Bm25Oracle
-import graft.query.Bm25Query
+import graft.query.{BatchQuery, Bm25Query}
 
 /** Rank-identity + exact-score gate: distributed engine (both physical
   * paths) vs the single-node oracle on the fixed query workload
@@ -69,21 +69,6 @@ class Bm25EngineSpec extends AnyFunSuite {
       val got = Bm25Query.searchBlocks(index, q, 20, conj).collect().toVector
       assert(got.map(_.doc_id) == want.map(_.doc_id),
         s"docIDs differ: q='$q' conj=$conj\n got=$got\nwant=$want")
-      got.zip(want).foreach { case (g, w) =>
-        assert(g.score == w.score, s"score differs: q='$q' doc=${g.doc_id}")
-      }
-    }
-  }
-
-  test("adaptive OR-mode threshold bootstrap stays exact vs oracle") {
-    // force the pre-pass (threshold 0) on disjunctive queries, including
-    // the head-term cases where pruning actually bites
-    for (q <- queries) {
-      val want = oracle.search(q, 20, conjunctive = false)
-      val got = Bm25Query.searchBlocks(index, q, 20, conjunctive = false,
-        adaptiveThreshold = 0L).collect().toVector
-      assert(got.map(_.doc_id) == want.map(_.doc_id),
-        s"docIDs differ under adaptive bootstrap: q='$q'\n got=$got\nwant=$want")
       got.zip(want).foreach { case (g, w) =>
         assert(g.score == w.score, s"score differs: q='$q' doc=${g.doc_id}")
       }
@@ -177,9 +162,9 @@ class Bm25EngineSpec extends AnyFunSuite {
   }
 
   test("batched serving: one job answers the whole workload bit-identically") {
-    val batch = queries.flatMap(q => Seq((q, true), (q, false)))
-    val got = Bm25Query.searchBlocksBatch(index, batch, 20)
-    batch.zip(got).foreach { case ((q, conj), hits) =>
+    val batch = queries.flatMap(q => Seq(BatchQuery(q), BatchQuery(q, false)))
+    val got = Bm25Query.searchBlocksBatchEx(index, batch, 20)
+    batch.zip(got).foreach { case (BatchQuery(q, conj, _, _, _), hits) =>
       val want = Bm25Query.searchBlocks(index, q, 20, conj).collect().toVector
       assert(hits.map(h => (h.doc_id, h.score, h.rank, h.url)) ==
         want.map(h => (h.doc_id, h.score, h.rank, h.url)),

@@ -66,6 +66,11 @@ class HotServingSpec extends AnyFunSuite {
       BatchQuery("zzznothere"),
       BatchQuery("ab"))
 
+  /** A static rank over a third of the docs. */
+  private def rankOf(ix: BuiltIndex) = ix.docs.where(col("doc_id") % 3 === 0)
+    .select(col("doc_id"),
+      (lit(1.0) + (col("doc_id") % 7).cast("double") * 0.25).as("static_rank"))
+
   private def single(ix: BuiltIndex, q: BatchQuery): Seq[Hit] =
     Bm25Query.searchBlocks(ix, q.query, 10, q.conjunctive, q.include, q.exclude)
       .collect().toSeq
@@ -74,9 +79,6 @@ class HotServingSpec extends AnyFunSuite {
     test(s"$codec: hot single queries equal the Dataset path bit for bit") {
       val (hot, cold) = opened(codec)
       assert(hot.hotPartitions.nonEmpty && cold.hotPartitions.isEmpty)
-      // the head query takes the adaptive OR bootstrap on the cold side
-      val dfSum = Bm25Query.analyze(cold, headOr.query).terms.map(_.df).sum
-      assert(dfSum > Bm25Query.AdaptiveCandidateThreshold, s"df sum $dfSum")
       queries.foreach { q =>
         assert(bits(single(hot, q)) == bits(single(cold, q)), q.toString)
       }
@@ -104,9 +106,7 @@ class HotServingSpec extends AnyFunSuite {
 
     test(s"$codec: chunked hot batches with boosts equal the Dataset path") {
       val (hot, cold) = opened(codec)
-      val rank = cold.docs.where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"),
-          (lit(1.0) + (col("doc_id") % 7).cast("double") * 0.25).as("static_rank"))
+      val rank = rankOf(cold)
       val batch = queries ++ Seq(
         BatchQuery(s"${w(2)} ${w(7)}", boosted = true),
         BatchQuery(s"${w(6)} ${w(11)}", conjunctive = false, boosted = true),
@@ -118,7 +118,7 @@ class HotServingSpec extends AnyFunSuite {
       val want = Bm25Query.searchBlocksBatchEx(cold, batch, 10, Some(rank),
         maxCollectRows = bound)
       batch.indices.foreach(i => assert(bits(got(i)) == bits(want(i)), batch(i).toString))
-      // boosted singles stay on the Dataset path: an independent check
+      // a cold boosted single runs the Dataset runner: an independent check
       val boosted = Bm25Query.searchBlocksBoosted(cold, batch(queries.size).query, 10, rank)
       assert(bits(got(queries.size)) == bits(boosted.collect().toSeq))
       assert(got(queries.size).nonEmpty && bits(got(queries.size)) !=
@@ -164,8 +164,15 @@ class HotServingSpec extends AnyFunSuite {
       SparkJobs.count(spark)(Bm25Query.searchBlocksBatchEx(ix, batch, 10))._2)
     jobs(hot) // warm: the first hot run ships its closure classes
     val h = jobs(hot)
-    info(s"jobs (plain, glob, 32-query batch): hot $h, Dataset path ${jobs(cold)}")
+    val c = jobs(cold)
+    info(s"jobs (plain, glob, 32-query batch): hot $h, Dataset path $c")
     assert(h == Seq(1, 1, 1))
+    // the Dataset path: candidates + urls, plus two jobs per glob pair's
+    // filter collect; a boosted query adds two for the rank set
+    assert(c == Seq(2, 4, 8))
+    val (_, boosted) = SparkJobs.count(spark)(Bm25Query.searchBlocksBoosted(
+      cold, s"${w(2)} ${w(7)}", 10, rankOf(cold)).collect())
+    assert(boosted == 4)
   }
 
   test("a hot index with a partition out of memory serves on the Dataset path") {

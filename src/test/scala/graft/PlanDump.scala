@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.PagesCorpus
 import graft.index.IndexBuilder
-import graft.query.Bm25Query
+import graft.query.{BatchPlanned, Bm25Query}
 import graft.tokenize.Tokenizer
 
 /** Regenerates the raw plan dumps behind PLANS.md (plan-audit tool). */
@@ -35,9 +35,9 @@ object PlanDump {
         graft.index.Bm25.termId(PagesCorpus.vocab(7)))
       idx.blocks.where(col("term_id").isin(qids: _*)).explain("formatted")
       println("### PLAN 4: FULL block-WAND query (bucketed scan -> local sort -> merge; zero Exchange)")
-      Bm25Query.scoredBlocks(idx,
-        s"${PagesCorpus.vocab(3)} ${PagesCorpus.vocab(7)}", 10, conjunctive = true)
-        .get.explain("formatted")
+      def planned(filter: Option[Bm25Query.DocFilter]) =
+        Array(BatchPlanned(qids.toArray, conjunctive = true, Nil, Nil, boosted = false, filter))
+      Bm25Query.batchCandidates(idx, planned(None), 10, null).explain("formatted")
       println("### PLAN 5: terms dictionary lookup (pushed In(term), sorted row groups)")
       idx.terms.where(col("term").isin(PagesCorpus.vocab(3), PagesCorpus.vocab(7)))
         .explain("formatted")
@@ -54,10 +54,9 @@ object PlanDump {
       println("### PLAN 8: filtered block-WAND (doc filter BROADCAST into the merge; zero Exchange, no naive fallback)")
       val allow = idx.docs.where(col("doc_id") % 3 === 0).select("doc_id")
       val arr = allow.collect().map(_.getLong(0)); java.util.Arrays.sort(arr)
-      Bm25Query.scoredBlocks(idx,
-        s"${PagesCorpus.vocab(3)} ${PagesCorpus.vocab(7)}", 10, conjunctive = true,
-        docFilter = Some(Bm25Query.DocFilter(arr, isAllow = true)))
-        .get.explain("formatted")
+      Bm25Query.batchCandidates(idx,
+        planned(Some(Bm25Query.DocFilter(arr, isAllow = true))), 10, null)
+        .explain("formatted")
       println("### PLAN 9: symbols search via artifact (containment on the names DIMENSION, pushed In(name) on the fact table)")
       val symDir = java.nio.file.Files.createTempDirectory("graft-plans-sym").toString
       graft.symbols.Symbols.build(pages, symDir)

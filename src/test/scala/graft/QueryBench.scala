@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.corpus.PagesCorpus
 import graft.index.IndexBuilder
-import graft.query.Bm25Query
+import graft.query.{BatchQuery, Bm25Query}
 
 /** Mixed-workload serving load test — the analog of the reference
   * validator's `--load-test` (per-query-class QPS and latency percentiles,
@@ -109,17 +109,17 @@ object QueryBench {
     // Batched serving: the SAME BM25 workload (needle/head/conj/disj,
     // 30 queries) through ONE Spark job — the scheduling-floor
     // amortization number next to the per-query latencies above.
-    val batch: Seq[(String, Boolean)] =
-      (0 until 10).map(i => (PagesCorpus.needleTerm(i), true)) ++
-      (0 until 5).map(i => (PagesCorpus.vocab(i), true)) ++
+    val batch: Seq[BatchQuery] =
+      (0 until 10).map(i => BatchQuery(PagesCorpus.needleTerm(i))) ++
+      (0 until 5).map(i => BatchQuery(PagesCorpus.vocab(i))) ++
       (0 until 10).map(i =>
-        (s"${PagesCorpus.vocab(3 + i)} ${PagesCorpus.vocab(40 + 7 * i)}", true)) ++
-      (0 until 5).map(i =>
-        (s"${PagesCorpus.vocab(20 + i)} ${PagesCorpus.vocab(100 + i)}", false))
-    Bm25Query.searchBlocksBatch(idx, batch, 10) // warm
+        BatchQuery(s"${PagesCorpus.vocab(3 + i)} ${PagesCorpus.vocab(40 + 7 * i)}")) ++
+      (0 until 5).map(i => BatchQuery(
+        s"${PagesCorpus.vocab(20 + i)} ${PagesCorpus.vocab(100 + i)}", conjunctive = false))
+    Bm25Query.searchBlocksBatchEx(idx, batch, 10) // warm
     val bt = (0 until rounds).map { _ =>
       val t0 = System.nanoTime()
-      Bm25Query.searchBlocksBatch(idx, batch, 10)
+      Bm25Query.searchBlocksBatchEx(idx, batch, 10)
       (System.nanoTime() - t0) / 1e6
     }
     val bBest = bt.min
@@ -131,7 +131,6 @@ object QueryBench {
     // now ride the same one-job kernel (searchBlocksBatchEx), so the
     // amortization story covers every block-path class, not just plain
     // AND/OR. Rank/filters resolve once per batch.
-    import graft.query.BatchQuery
     import org.apache.spark.sql.functions.lit
     val rank = idx.docs.where(col("doc_id") % 5 === 0)
       .select(col("doc_id"),
