@@ -1,43 +1,91 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{Executors, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Scale-adaptive parallelism spread for narrow CPU-heavy operators
-  * (guide §2.2/§6, round 8).
-  *
-  * A small corpus stored as one parquet file plans as ONE scan task
-  * (`spark.sql.files.maxPartitionBytes` = 128 MB, and a single row group
-  * cannot split), so per-row regex/hash/tokenize work runs on one core
-  * of a 32-core session — the extraction-heavy operators were measured
-  * spending most of their wall time inside that single task. When the
-  * input is estimated SMALLER than one scan split (logical-plan
-  * statistics — file sizes for parquet scans; no physical planning, no
-  * job), a round-robin repartition (a sub-MB Exchange here) unlocks
-  * every core; any input big enough to plan multiple scan tasks — every
-  * real corpus at scale — passes through untouched, so no shuffle is
-  * ever added to a large scan. An UNKNOWN size estimates huge and is
-  * likewise untouched (the safe direction). Use on row-wise operators
-  * only: their output is partition-invariant, so results are unchanged
-  * by construction.
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Concurrency and parallelism helpers shared by every operator: legs of
+  * independent Spark actions on one pool, and the scan spread of small
+  * inputs.
   */
 object Par {
 
-  /** Small daemon pool for overlapping INDEPENDENT Spark actions of one
-    * logical operation (guide §2.6) — artifact writes, driver collects of
-    * unrelated dimensions. Concurrency never changes results: callers
-    * only parallelize actions with no data dependency.
+  /** One cached daemon pool for every leg: it grows while legs wait on
+    * legs, so nesting never deadlocks it. Its threads do not inherit the
+    * creating thread's Spark local properties (an inherited job group
+    * would stick to the thread); each leg sets its submitter's instead.
+    * Concurrency never changes results: callers only overlap actions with
+    * no data dependency.
     */
-  lazy val ec: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4,
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"graft-par-${n.getAndIncrement()}")
-            t.setDaemon(true); t
-          }
-        }))
+  private lazy val pool = ExecutionContext.fromExecutorService(
+    Executors.newCachedThreadPool(new ThreadFactory {
+      private val n = new AtomicInteger(0)
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(null, r, s"graft-par-${n.getAndIncrement()}", 0L, false)
+        t.setDaemon(true); t
+      }
+    }))
 
+  /** Local properties a leg takes from its submitter, so its jobs count in
+    * the submitter's job group and carry its description, and those it
+    * clears: each of its actions is a new SQL execution, not part of one
+    * running on the submitter.
+    */
+  private val Inherited = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel")
+  private val Cleared = Seq("spark.sql.execution.id", "spark.sql.execution.root.id")
+
+  /** Start `f` as a leg of an operation: an independent Spark action (an
+    * artifact write, a driver collect of an unrelated dimension, a build
+    * stage) on the pool.
+    */
+  def leg[A](spark: SparkSession)(f: => A): Future[A] = {
+    val sc = spark.sparkContext
+    val props = Inherited.map(k => k -> sc.getLocalProperty(k)) ++ Cleared.map(_ -> null)
+    Future {
+      val saved = props.map { case (k, _) => k -> sc.getLocalProperty(k) }
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try f finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }(pool)
+  }
+
+  /** Wait for every leg and return their results in order; the first
+    * failure in leg order is rethrown once every leg has finished.
+    */
+  def await[A](legs: Seq[Future[A]]): Seq[A] = {
+    legs.foreach(Await.ready(_, Duration.Inf))
+    legs.map(Await.result(_, Duration.Inf))
+  }
+
+  /** The result of one leg, once it has finished; its failure is rethrown. */
+  def join[A](leg: Future[A]): A = Await.result(leg, Duration.Inf)
+
+  /** Run `fs` as concurrent legs and wait for all of them ([[await]]). */
+  def all[A](spark: SparkSession)(fs: (() => A)*): Seq[A] =
+    await(fs.map(f => leg(spark)(f())))
+
+  /** Scale-adaptive parallelism spread for narrow CPU-heavy operators
+    * (guide §2.2/§6, round 8).
+    *
+    * A small corpus stored as one parquet file plans as ONE scan task
+    * (`spark.sql.files.maxPartitionBytes` = 128 MB, and a single row group
+    * cannot split), so per-row regex/hash/tokenize work runs on one core
+    * of a 32-core session — the extraction-heavy operators were measured
+    * spending most of their wall time inside that single task. When the
+    * input is estimated SMALLER than one scan split (logical-plan
+    * statistics — file sizes for parquet scans; no physical planning, no
+    * job), a round-robin repartition (a sub-MB Exchange here) unlocks
+    * every core; any input big enough to plan multiple scan tasks — every
+    * real corpus at scale — passes through untouched, so no shuffle is
+    * ever added to a large scan. An UNKNOWN size estimates huge and is
+    * likewise untouched (the safe direction). Use on row-wise operators
+    * only: their output is partition-invariant, so results are unchanged
+    * by construction.
+    */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism

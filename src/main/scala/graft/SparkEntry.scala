@@ -46,12 +46,7 @@ object SparkEntry {
       // warm-ups are independent (counts vs a dictionary collect) and
       // overlap (guide §2.6)
       val built = IndexBuilder.build(s, pages, out)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = Par.ec
-      val fHot = Future(built.cacheHot())
-      val fDict = Future(built.cacheDictionary())
-      Await.result(fHot, Duration.Inf); Await.result(fDict, Duration.Inf)
+      Par.all(s)(() => built.cacheHot(), () => built.cacheDictionary())
       built
     })
 
@@ -460,20 +455,17 @@ object SparkEntry {
       import s.implicits._
       // IVF centroids and PQ codebooks are independent driver collects —
       // overlap them (guide §2.6); results are the same two literals
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = Par.ec
-      val fCents = Future {
+      val fCents = Par.leg(s) {
         Similarity.centroids(e, "vec_id", "embedding", 8, dim = q.length)
           .as[(Long, Seq[Double])].collect().toSeq
           .map { case (c, v) => (c.toInt, v) }.sortBy(_._1)
       }
-      val fCbs = Future {
+      val fCbs = Par.leg(s) {
         Similarity.pqCodebooks(e, "vec_id", "embedding", PqSub, PqCodes,
           dim = q.length)
       }
-      val cents = Await.result(fCents, Duration.Inf)
-      val cbs = Await.result(fCbs, Duration.Inf)
+      val cents = Par.join(fCents)
+      val cbs = Par.join(fCbs)
       val assigned = Similarity.pqEncode(
         Similarity.ivfAssign(e, "vec_id", "embedding", cents), "embedding", cbs)
       Similarity.ivfPqTopK(assigned, "vec_id", "embedding", cents, cbs, q,

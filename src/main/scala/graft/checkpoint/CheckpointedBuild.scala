@@ -1,80 +1,35 @@
 package graft.checkpoint
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.UUID
+import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.extract.Extract
 import graft.index.BuiltIndex.nullable
-import graft.index.{Bm25, BuiltIndex, IndexBuilder, IndexStats, LongDoubleMap,
-  PostingBlock, PostingBlocks}
+import graft.index.{Bm25, BuiltIndex, IndexBuilder, PostingBlocks}
 
-/** One manifest row per committed build unit: the per-partition lineage +
-  * build metrics the north rule requires (analog of the reference's
-  * IndexingProgress, /root/reference/src/search/engine.rs:2779-2812, and
-  * its mid-build checkpoints, background_indexer.rs:648-694).
-  */
-case class ManifestRow(
-    stage: String,
-    part: Int,
-    rows: Long,
-    wall_ms: Long,
-    lineage: String,
-    committed_at: Long,
-    fingerprint: String = "")
-
-/** Resumable index build with per-unit commit markers.
+/** Resumable index build: the [[BuildSpine]] front end with one tf unit
+  * per docId-range slice of the input, at `tf/slice=p/` with the slice's
+  * `(doc_id, url)` rows at `docs_raw/slice=p/` (slicing by docId range
+  * aligns with input file ranges, so each unit re-scans only its files).
+  * Per-unit stages keep `slice=p` (`unit=u` for blocks_enc) units; see
+  * the README's index layout.
   *
-  * Unit layout under `outDir`:
-  *   tf/slice=p/          — stage 1, one unit per docId-range slice of the
-  *                          input (the expensive extract+tokenize+tf pass;
-  *                          slicing by docId range aligns with input file
-  *                          ranges, so each unit re-scans only its files)
-  *   postings/slice=p/    — stage 4, one unit per tf slice when the
-  *                          dictionary broadcasts (round 4; one flat unit
-  *                          past the broadcast ceiling)
-  *   blocks_enc/unit=u/   — stage 5a (round 5), encoded posting blocks of
-  *                          one 2^blockBits-ALIGNED docId range (shuffle +
-  *                          encode, the expensive half — resumable per
-  *                          unit); stage 5b assembles the bucketed blocks/
-  *                          table from them with no shuffle or re-encode
-  *   docs/ terms/(+terms_rev) blocks/ stats/ — one unit each
-  *   terms_part/slice=p — per-slice dictionary partials (round 6; GC'd
-  *     once terms commits, like blocks_enc/unit=u)
-  *   manifest/<stage>_<part>/ — one-row parquet per committed unit
+  * A unit directory containing `_GRAFT_COMMITTED` is skipped on resume.
+  * The reference analog: `already_indexed_files` skip-set + checkpoint
+  * save (background_indexer.rs:596-607,648-694). Since every unit is a
+  * pure function of its input slice, an interrupted+resumed build
+  * produces content-identical index tables to an uninterrupted one
+  * (asserted in CheckpointSpec).
   *
-  * A unit directory containing `_GRAFT_COMMITTED` is skipped on resume
-  * (the marker is written strictly after the unit's parquet commit). The
-  * reference analog: `already_indexed_files` skip-set + checkpoint save
-  * (background_indexer.rs:596-607,648-694). Since every unit is a pure
-  * function of its input slice, an interrupted+resumed build produces
-  * content-identical index tables to an uninterrupted one (asserted in
-  * CheckpointSpec).
-  *
-  * Bookkeeping runs no Spark job, so a resume launches jobs only for the
-  * units it recomputes, plus one narrow scan of the input for its docId
-  * bounds and slice fingerprints (two on a first build, or when the
-  * input's docId range moved):
-  *   - the manifest is read ONCE per build, on the driver, into a map
-  *     keyed by (stage, part); the config check, the slice triage and the
-  *     row counts of later stages all answer from it, and every commit or
-  *     invalidation updates it along with the files;
-  *   - each manifest row is a one-row parquet file written on the driver
-  *     ([[DriverParquet]]) to a hidden temp name, then renamed into its
-  *     cleared `manifest/<stage>_<part>/` directory — the order per unit
-  *     stays data commit, manifest row, `_GRAFT_COMMITTED` marker;
-  *   - every internal table read back gets a pinned schema derived from
-  *     its writer's plan (or a declared one), so no read infers a schema
-  *     from file footers;
-  *   - the returned index is preset with its stats and blocks metadata,
-  *     read on the driver when an earlier run committed them.
+  * This front end keeps what only a sliced build does: the input scan for
+  * docId bounds and slice fingerprints (one narrow pass; two on a first
+  * build, or when the input's docId range moved), the config fingerprint,
+  * the slice triage and the tf units. Everything else runs no Spark job,
+  * so a resume launches jobs only for the units it recomputes.
   */
 object CheckpointedBuild {
 
@@ -82,126 +37,14 @@ object CheckpointedBuild {
 
   def isCommitted(dir: String): Boolean = Files.exists(Paths.get(dir, Marker))
 
-  /** Schema manifest rows are written with (Spark's writer derives the
-    * same parquet schema from the case class). The driver-side reader
-    * projects onto it by name, a missing field reading as null.
-    */
-  private val ManifestRowSchema: StructType = Encoders.product[ManifestRow].schema
-
   /** Pinned Spark read schema of the manifest: every field nullable, so
     * rows written before the fingerprint column existed read it as null.
     */
-  private[graft] val ManifestSchema: StructType = nullable(ManifestRowSchema)
-
-  private val StatsSchema: StructType = Encoders.product[IndexStats].schema
-  private val BlocksMetaSchema = StructType(Seq(
-    StructField("num_buckets", IntegerType), StructField("block_bits", IntegerType),
-    StructField("impact_codec", StringType)))
-
-  private def rmrf(spark: SparkSession, dir: String): Unit = {
-    val p = new HPath(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
-
-  /** Entries of a local directory (empty if it does not exist); the
-    * directory stream is closed before returning.
-    */
-  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toVector finally s.close()
-    }
-
-  /** The manifest of one build call: loaded once into a driver-side map
-    * keyed by (stage, part) and kept in step with the files by every
-    * [[put]] and removal, so no later lookup touches the disk.
-    */
-  private final class ManifestLog(spark: SparkSession, outDir: String) {
-    private val dir = Paths.get(outDir, "manifest")
-    private val rows = mutable.Map[(String, Int), ManifestRow]()
-    listDir(dir)
-      .filter(d => Files.isDirectory(d) && !DriverParquet.hidden(d.getFileName.toString))
-      .flatMap(d => DriverParquet.read(d, ManifestRowSchema))
-      .foreach { r =>
-        val m = ManifestRow(r.getString(0), r.getInt(1), r.getLong(2),
-          r.getLong(3), r.getString(4), r.getLong(5),
-          Option(r.getString(6)).getOrElse(""))
-        rows((m.stage, m.part)) = m
-      }
-
-    def get(stage: String, part: Int): Option[ManifestRow] = rows.get((stage, part))
-
-    /** Summed row counts of a stage's units. */
-    def rowsOf(stage: String): Long =
-      rows.valuesIterator.filter(_.stage == stage).map(_.rows).sum
-
-    /** Write `m` as its unit's one-row file: a hidden temp file (ignored
-      * by every reader) is renamed in only after the unit's directory is
-      * cleared, so a crash leaves the old row, no row, or the new row.
-      */
-    def put(m: ManifestRow): Unit = {
-      val unit = dir.resolve(s"${m.stage}_${m.part}")
-      val tmp = dir.resolve(s".${m.stage}_${m.part}-${UUID.randomUUID()}.tmp")
-      Files.createDirectories(dir)
-      DriverParquet.write(spark, tmp, ManifestRowSchema, Seq(Row.fromTuple(m)))
-      rmrf(spark, unit.toString)
-      Files.createDirectories(unit)
-      Files.move(tmp, unit.resolve("part-00000.parquet"), StandardCopyOption.ATOMIC_MOVE)
-      rows((m.stage, m.part)) = m
-    }
-
-    def remove(stage: String, part: Int): Unit = {
-      rmrf(spark, dir.resolve(s"${stage}_$part").toString)
-      rows -= ((stage, part))
-    }
-
-    /** Remove every unit of `stage` (multi-unit stages commit one row per
-      * part: tf_p, postings_p). Unit names are matched EXACTLY as
-      * `<stage>_<digits>` (ADVICE r6): a startsWith prefix would also
-      * claim nested stage names — invalidating "terms" used to delete
-      * every `terms_part_*` manifest row even though the terms_part DATA
-      * is intentionally kept across a bm25-config change, silently
-      * dropping the partials' lineage records.
-      */
-    def removeStage(stage: String): Unit = {
-      val unitRe = (java.util.regex.Pattern.quote(stage) + "_\\d+").r
-      listDir(dir).filter(e => unitRe.matches(e.getFileName.toString))
-        .foreach(e => rmrf(spark, e.toString))
-      rows.filterInPlace { case ((st, _), _) => st != stage }
-    }
-  }
-
-  private def commit(log: ManifestLog, dir: String, m: ManifestRow): Unit = {
-    log.put(m)
-    Files.createFile(Paths.get(dir, Marker))
-  }
+  private[graft] val ManifestSchema: StructType = nullable(ManifestLog.Schema)
 
   /** Every manifest row under `outDir`, read with the pinned schema. */
   def manifest(spark: SparkSession, outDir: String): DataFrame =
     spark.read.schema(ManifestSchema).parquet(s"$outDir/manifest/*")
-
-  /** The committed stats row, read on the driver. */
-  private def readStats(outDir: String): IndexStats = {
-    val r = DriverParquet.read(Paths.get(outDir, "stats"), StatsSchema)
-      .headOption.getOrElse(throw new IllegalStateException(s"no stats row in $outDir"))
-    IndexStats(r.getLong(0), r.getLong(1), r.getDouble(2),
-      r.getLong(3), r.getLong(4))
-  }
-
-  /** (num_buckets, block_bits) and impact codec of committed blocks, read
-    * on the driver; None for a legacy (pre-bucketed) layout with no
-    * blocks_meta, as [[BuiltIndex.blocksMeta]] reads it.
-    */
-  private def readBlocksMeta(outDir: String): (Option[(Int, Int)], String) =
-    DriverParquet.read(Paths.get(outDir, "blocks_meta"), BlocksMetaSchema)
-      .headOption match {
-      case Some(r) =>
-        (Some((r.getInt(0), r.getInt(1))), Option(r.getString(2)).getOrElse("f64"))
-      case None => (None, "f64")
-    }
 
   /** Resumable build. `pagesRaw` must have (doc_id, url, html) or
     * (doc_id, url, text); when html is present the extraction front end
@@ -213,8 +56,8 @@ object CheckpointedBuild {
       blockBits: Int = PostingBlocks.DefaultBlockBits,
       onUnitCommitted: (String, Int) => Unit = (_, _) => ()): BuiltIndex = {
     import spark.implicits._
-    Files.createDirectories(Paths.get(outDir))
-    val log = new ManifestLog(spark, outDir)
+    val spine = new BuildSpine(spark, outDir)
+    val log = spine.log
     // read-backs of internal tables carry the writer's schema: a footer
     // inference costs a Spark job per read
     def read(path: String, schema: StructType): DataFrame =
@@ -230,7 +73,7 @@ object CheckpointedBuild {
     val tfSchema = IndexBuilder.termFrequencies(pages).schema
     val docsRawSchema = pages.select("doc_id", "url").schema
 
-    // ---- stage 1: per-slice extract+tokenize+tf (+ per-slice doc rows)
+    // ---- docId-range slices and their input fingerprints
     def widthOf(lo: Long, hi: Long): Long = math.max(1L, (hi - lo + slices) / slices)
 
     // cheap per-slice input fingerprint over the RAW columns (no
@@ -293,9 +136,8 @@ object CheckpointedBuild {
 
     // ---- config fingerprint (reference: config.rs:266-296): a resume
     // whose build config differs from the one the committed units were
-    // produced under must invalidate exactly the stages that config
-    // component derives — a changed blockBits silently keeping the old
-    // committed blocks was round 2's known staleness hole.
+    // produced under must invalidate the stages that config component
+    // derives (a changed blockBits must not keep the committed blocks).
     val config = Seq(
       "tok" -> graft.tokenize.Tokenizer.Version.toString,
       "extract" -> Extract.Version.toString,
@@ -311,43 +153,23 @@ object CheckpointedBuild {
         .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
         .toMap).getOrElse(Map.empty)
     // A dir with committed units but NO config manifest predates config
-    // fingerprinting entirely — its units were built under an UNKNOWN
-    // config (e.g. the v1 tf schema), and resuming them under the current
-    // one can silently mix schemas (doc_len null -> na.fill(0) -> wrong
-    // impacts). Treat "missing config" as "everything changed".
-    val committedWithoutConfig = priorConfig.isEmpty && {
-      listDir(Paths.get(outDir, "tf")).exists(d => isCommitted(d.toString)) ||
-        Seq("docs", "terms", "postings", "blocks", "stats")
-          .exists(st => isCommitted(s"$outDir/$st"))
-    }
+    // fingerprinting (or holds a batch build) — its units were built
+    // under an UNKNOWN config (e.g. the v1 tf schema), and resuming them
+    // under the current one can silently mix schemas (doc_len null ->
+    // na.fill(0) -> wrong impacts). Treat "missing config" as "everything
+    // changed".
+    val committedWithoutConfig = priorConfig.isEmpty && log.nonEmpty
     if (committedWithoutConfig ||
         (priorConfig.nonEmpty && priorConfig != config.toMap)) {
-      def derivedStages(key: String): Seq[String] = key match {
-        case "blockBits" => Seq("blocks_enc", "blocks")
-        // terms_part holds only (df, term strings) — bm25 params touch
-        // idf/impacts, so the partials survive a bm25 change
-        case "bm25"      => Seq("terms", "postings", "blocks_enc", "blocks", "stats")
-        case _           => Seq("tf", "docs", "terms_part", "terms",
-          "postings", "blocks_enc", "blocks", "stats")
-      }
+      // the stage each config component first derives; the spine wipes it
+      // and everything downstream. terms_part holds only (df, term
+      // strings), so the partials survive a bm25 change.
+      val root = Map("blockBits" -> "blocks_enc", "bm25" -> "terms").withDefaultValue("tf")
       val changed =
         if (committedWithoutConfig) Seq("missing-config")
         else (config.map(_._1) ++ priorConfig.keys).distinct
           .filter(k => priorConfig.get(k) != config.toMap.get(k))
-      val victims = changed.flatMap(derivedStages).distinct
-      victims.foreach {
-        case "tf" =>
-          rmrf(spark, s"$outDir/tf"); rmrf(spark, s"$outDir/docs_raw")
-          log.removeStage("tf")
-        case st =>
-          rmrf(spark, s"$outDir/$st")
-          if (st == "blocks") rmrf(spark, s"$outDir/blocks_meta")
-          if (st == "terms") {
-            rmrf(spark, s"$outDir/terms_rev")
-            rmrf(spark, s"$outDir/terms_ngrams")
-          }
-          log.removeStage(st)
-      }
+      val victims = changed.flatMap(k => spine.invalidate(root(k))).distinct
       log.put(ManifestRow("config_reconcile", 0, victims.size, 0,
         s"changed=${changed.mkString(",")} invalidated=${victims.mkString(",")}",
         System.currentTimeMillis()))
@@ -356,9 +178,10 @@ object CheckpointedBuild {
 
     // ---- reconcile (resume with possibly-changed input): triage each
     // persisted slice Valid / Stale / Removed like the reference's
-    // batch_check_files (persistence.rs:275-309, engine.rs:2281-2382);
-    // stale/removed units (and everything derived from them) are wiped so
-    // the rebuild below re-drives exactly the invalid lineage.
+    // batch_check_files (persistence.rs:275-309, engine.rs:2281-2382); a
+    // stale or removed slice is invalidated with everything derived from
+    // it — its own dictionary partial, and every corpus-global stage — so
+    // the rebuild re-drives exactly the invalid lineage.
     val preCommitted = (0 until slices)
       .filter(p => isCommitted(s"$outDir/tf/slice=$p"))
     if (preCommitted.nonEmpty) {
@@ -373,345 +196,39 @@ object CheckpointedBuild {
           if (storedFp == cur && storedLin == s"doc_id:[$sLo,$sHi)") "valid"
           else if (cur == "empty") "removed"
           else "stale"
-        if (status != "valid") {
-          rmrf(spark, s"$outDir/tf/slice=$p")
-          rmrf(spark, s"$outDir/docs_raw/slice=$p")
-          log.remove("tf", p)
-          // the slice's dictionary partial derives from it 1:1 — other
-          // slices' partials stay valid (the per-slice win of stage 3a)
-          rmrf(spark, s"$outDir/terms_part/slice=$p")
-          log.remove("terms_part", p)
-        }
+        if (status != "valid") spine.invalidate("tf", Some(p))
         status
       }
-      val stale = triage.count(_ == "stale")
-      val removed = triage.count(_ == "removed")
-      if (stale + removed > 0) {
-        // downstream tables are pure functions of ALL slices — invalidate
-        // (blocks_enc units too: idf/avgdl are corpus-global, so no
-        // per-unit staleness triage is sound there)
-        Seq("docs", "terms", "terms_rev", "terms_ngrams", "postings",
-            "blocks_enc", "blocks", "blocks_meta", "stats")
-          .foreach(st => rmrf(spark, s"$outDir/$st"))
-        Seq("docs", "terms", "postings", "blocks_enc", "blocks", "stats")
-          .foreach(log.removeStage)
-      }
-      log.put(ManifestRow("reconcile", 0, triage.count(_ == "valid"),
-        (System.nanoTime() - t0) / 1000000,
-        s"valid=${triage.count(_ == "valid")} stale=$stale removed=$removed",
+      val n = (status: String) => triage.count(_ == status)
+      log.put(ManifestRow("reconcile", 0, n("valid"), (System.nanoTime() - t0) / 1000000,
+        s"valid=${n("valid")} stale=${n("stale")} removed=${n("removed")}",
         System.currentTimeMillis()))
     }
 
+    // ---- tf units: per-slice extract+tokenize+tf, plus the slice's doc
+    // rows. The extracted, safety-gated slice is cached for the two
+    // writes, so extraction runs once per slice.
     for (p <- 0 until slices) {
       val dir = s"$outDir/tf/slice=$p"
       if (!isCommitted(dir)) {
-        val t0 = System.nanoTime()
         val (sLo, sHi) = sliceRange(p)
-        val fp = sliceFingerprint(p)
         val slice = pages
           .where(col("doc_id") >= sLo && col("doc_id") < sHi)
           .where(Extract.safe(col("text")))
-        // doc-local tf histogram — zero-shuffle (see IndexBuilder.termFrequencies)
-        val tf = IndexBuilder.termFrequencies(slice)
-        // row counts ride along as Observation metrics — a post-write
-        // .count() would re-read the whole unit (wasteful at corpus scale)
-        val obs = org.apache.spark.sql.Observation()
-        tf.observe(obs, count(lit(1)).as("n"))
-          .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-          .parquet(dir)
-        val docsDir = s"$outDir/docs_raw/slice=$p"
-        slice.select("doc_id", "url").write.mode(SaveMode.Overwrite).parquet(docsDir)
-        val n = obs.get("n").asInstanceOf[Long]
-        commit(log, dir, ManifestRow("tf", p, n,
-          (System.nanoTime() - t0) / 1000000,
-          s"doc_id:[$sLo,$sHi)", System.currentTimeMillis(), fp))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try spine.commitTf(p, dir, IndexBuilder.termFrequencies(slice),
+            s"doc_id:[$sLo,$sHi)", sliceFingerprint(p)) {
+          slice.select("doc_id", "url").write.mode(SaveMode.Overwrite)
+            .parquet(s"$outDir/docs_raw/slice=$p")
+        } finally slice.unpersist(blocking = false)
         onUnitCommitted("tf", p)
       }
     }
 
-    val tfR = read(s"$outDir/tf/slice=*", tfSchema)
-    val docsRaw = read(s"$outDir/docs_raw/slice=*", docsRawSchema)
-
-    // ---- stage 2: docs dimension. (num_docs, total_tokens) ride along
-    // as Observation metrics on its write.
-    val docs = docsRaw
-      .join(tfR.groupBy("doc_id").agg(first("doc_len").as("doc_len")),
-        Seq("doc_id"), "left")
-      .na.fill(0L, Seq("doc_len"))
-    val docsObserved: Option[(Long, Long)] =
-      if (isCommitted(s"$outDir/docs")) None
-      else {
-        val t0 = System.nanoTime()
-        val obs = org.apache.spark.sql.Observation()
-        docs.observe(obs, count(lit(1)).as("n"), sum("doc_len").as("tt"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
-        val n = obs.get("n").asInstanceOf[Long]
-        commit(log, s"$outDir/docs", ManifestRow("docs", 0, n,
-          (System.nanoTime() - t0) / 1000000, "tf/slice=*", System.currentTimeMillis()))
-        onUnitCommitted("docs", 0)
-        Some((n, obs.get("tt") match { case null => 0L; case x => x.asInstanceOf[Long] }))
-      }
-    // Corpus stats, only when a stage below needs them: from the docs
-    // write above, else from a stats row committed by an earlier run (no
-    // invalidation wipes docs and keeps stats), else one scan of docs.
-    lazy val committedStats: Option[IndexStats] =
-      if (isCommitted(s"$outDir/stats")) Some(readStats(outDir)) else None
-    lazy val (numDocs, totalTokens) = docsObserved
-      .orElse(committedStats.map(s => (s.num_docs, s.total_tokens)))
-      .getOrElse {
-        val r = read(s"$outDir/docs", docs.schema)
-          .agg(count(lit(1)), sum("doc_len")).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-    lazy val avgdl = if (numDocs == 0) 0.0 else totalTokens.toDouble / numDocs.toDouble
-
-    // ---- stage 3: term dictionary — resumable PER SLICE (round 6,
-    // VERDICT r5 #7: the global groupBy was the last all-or-nothing
-    // stage). 3a: each tf slice commits its PARTIAL dictionary
-    // terms_part/slice=p = slice-local groupBy(term_id) -> (term_id,
-    // partial df, min/max term string) — a pure function of that slice,
-    // so a crash redoes only uncommitted slices and the input reconcile
-    // above can invalidate partials slice-by-slice. 3b: the merge sums
-    // partials into the global dictionary + idf and writes the derived
-    // terms_rev / terms_ngrams dimensions. The merge is NOT unit-split —
-    // deliberately: it shuffles DICTIONARY-sized data (orders of
-    // magnitude below tf), so at 100 TB it is minutes where stage 3a is
-    // hours. (The alternative terms/shard=pmod(term_id,S) layout would
-    // make the big groupBy itself unit-resumable, but each shard's scan
-    // re-reads the ENTIRE tf table — S full passes; the partial-agg
-    // split reads tf exactly once. Map-side combine, made durable.)
-    //
-    // Collision guard across slices: v3 tf emits a term's string at
-    // first sight PER PARTITION, so every slice containing the term has
-    // >= 1 non-null string; the merge's min-of-mins vs max-of-maxs
-    // comparison therefore sees every distinct spelling of an id, same
-    // strength as the single-pass guard (IndexBuilder.writeDictionary).
-    def termsPart(tf: DataFrame): DataFrame =
-      tf.groupBy("term_id").agg(
-        count(lit(1)).as("df_part"),
-        min("term").as("term_mn"), max("term").as("term_mx"))
-    if (!isCommitted(s"$outDir/terms")) {
-      for (p <- 0 until slices) {
-        val udir = s"$outDir/terms_part/slice=$p"
-        if (!isCommitted(udir) &&
-            Files.exists(Paths.get(s"$outDir/tf/slice=$p"))) {
-          val t0 = System.nanoTime()
-          val obs = org.apache.spark.sql.Observation()
-          termsPart(read(s"$outDir/tf/slice=$p", tfSchema))
-            .observe(obs, count(lit(1)).as("n"))
-            .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-            .parquet(udir)
-          commit(log, udir, ManifestRow("terms_part", p,
-            obs.get("n").asInstanceOf[Long],
-            (System.nanoTime() - t0) / 1000000,
-            s"tf/slice=$p", System.currentTimeMillis()))
-          onUnitCommitted("terms_part", p)
-        }
-      }
-      val t0 = System.nanoTime()
-      val obs = org.apache.spark.sql.Observation()
-      read(s"$outDir/terms_part/slice=*", termsPart(tfR).schema)
-        .groupBy("term_id").agg(
-          sum("df_part").as("df"),
-          min("term_mn").as("term"), max("term_mx").as("term_mx"))
-        .withColumn("idf", Bm25.idfCol(numDocs, col("df")))
-        .observe(obs, count(lit(1)).as("n"),
-          sum(when(col("term").isNull ||
-            col("term") =!= col("term_mx"), 1L).otherwise(0L)).as("bad"))
-        .select("term", "df", "term_id", "idf")
-        .sortWithinPartitions("term")
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/terms")
-      val badIds = obs.get("bad") match {
-        case null => 0L
-        case x => x.asInstanceOf[Long]
-      }
-      require(badIds == 0L,
-        "term_id (xxhash64) collision in dictionary — two terms share an id")
-      IndexBuilder.writeDictionaryDims(spark, s"$outDir/terms")
-      commit(log, s"$outDir/terms", ManifestRow("terms", 0,
-        obs.get("n").asInstanceOf[Long],
-        (System.nanoTime() - t0) / 1000000, "terms_part/slice=*",
-        System.currentTimeMillis()))
-      onUnitCommitted("terms", 0)
-    }
-    // partials are never read once the dictionary committed — GC (same
-    // rationale as blocks_enc below)
-    if (isCommitted(s"$outDir/terms") &&
-        Files.exists(Paths.get(s"$outDir/terms_part")))
-      rmrf(spark, s"$outDir/terms_part")
-    val termsR = read(s"$outDir/terms", IndexBuilder.TermsSchema)
-    // dictionary row count WITHOUT a scan: the terms stage committed it
-    // to the manifest (whether in this run or the one being resumed).
-    // The collision guard ran inside writeDictionary when the table was
-    // written — in this run or the resumed one (config-fingerprinted
-    // builds only resume tables their own code wrote).
-    val numTerms = log.get("terms", 0).map(_.rows).getOrElse(
-      throw new IllegalStateException(s"terms committed without a manifest row in $outDir"))
-
-    // ---- stage 4: postings with impacts. Resumable PER tf-SLICE when
-    // the dictionary broadcasts: each slice's postings are a pure
-    // function of (that tf slice, the committed dictionary, avgdl) —
-    // doc_len rides on the tf rows, term_id is precomputed, and the idf
-    // attach is a broadcast-hash join, so per-slice jobs stay
-    // shuffle-free. At corpus scale this stage is hours; a crash
-    // mid-way now redoes only the uncommitted slices (VERDICT r3
-    // finding #4). Past the broadcast ceiling the id-keyed shuffle join
-    // would re-shuffle the dictionary once per slice, so the stage
-    // stays ONE unit there. (Stale input or a config change wipes the
-    // whole postings dir upstream — idf/avgdl are corpus-global, so no
-    // per-slice staleness triage is sound here.)
-    val dict = termsR.select("term_id", "idf")
-    val canSlicePostings = numTerms <= IndexBuilder.DictBroadcastMaxTerms
-    // v3 tf slices carry the computed term_id already
-    def postingsOf(tf: DataFrame, dictSide: DataFrame): DataFrame =
-      tf.drop("term")
-        .join(dictSide, Seq("term_id"))
-        .select(col("term_id"), col("doc_id"),
-          Bm25.impactCol(col("tf").cast("double"),
-            col("doc_len").cast("double"), avgdl, col("idf")).as("impact"))
-    if (!isCommitted(s"$outDir/postings")) { // flat-layout resume marker
-      if (canSlicePostings) {
-        for (p <- 0 until slices) {
-          val pdir = s"$outDir/postings/slice=$p"
-          if (!isCommitted(pdir) &&
-              Files.exists(Paths.get(s"$outDir/tf/slice=$p"))) {
-            val t0 = System.nanoTime()
-            val obs = org.apache.spark.sql.Observation()
-            postingsOf(read(s"$outDir/tf/slice=$p", tfSchema), broadcast(dict))
-              .observe(obs, count(lit(1)).as("n"))
-              .sortWithinPartitions("term_id", "doc_id")
-              .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-              .parquet(pdir)
-            commit(log, pdir, ManifestRow("postings", p,
-              obs.get("n").asInstanceOf[Long],
-              (System.nanoTime() - t0) / 1000000,
-              s"tf/slice=$p+terms", System.currentTimeMillis()))
-            onUnitCommitted("postings", p)
-          }
-        }
-      } else {
-        val t0 = System.nanoTime()
-        val obs = org.apache.spark.sql.Observation()
-        postingsOf(tfR, dict)
-          .observe(obs, count(lit(1)).as("n"))
-          .sortWithinPartitions("term_id", "doc_id")
-          .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-          .parquet(s"$outDir/postings")
-        commit(log, s"$outDir/postings", ManifestRow("postings", 0,
-          obs.get("n").asInstanceOf[Long],
-          (System.nanoTime() - t0) / 1000000, "tf+docs+terms",
-          System.currentTimeMillis()))
-        onUnitCommitted("postings", 0)
-      }
-    }
-
-    // ---- stage 5: compressed blocks (bucketed serving layout). When the
-    // dictionary broadcasts, the expensive half — the (term_id, block_id)
-    // shuffle + streaming encode — is resumable PER UNIT: the doc_id space
-    // is cut into `slices` ranges ALIGNED to 2^blockBits, so every
-    // (term_id, block_id) group lies wholly inside one unit; each unit
-    // encodes independently from the tf rows of its range (impacts
-    // computed in-task from the broadcast idf dictionary — the same
-    // byte-cut encode as the batch build) and commits blocks_enc/unit=u.
-    // A final assembly pass moves the already-encoded rows into the
-    // bucketed serving table: linear I/O, no shuffle, no re-encode — a
-    // crash there redoes only the cheap copy. At corpus scale the encode
-    // half is hours and was all-or-nothing (reference analog ST4,
-    // background_indexer.rs:648-694). Unit reads carry a doc_id range
-    // predicate over the tf slices — parquet row-group min/max stats keep
-    // each unit's scan near its own slice files. Past the broadcast
-    // ceiling the stage stays one postings-driven unit.
-    val buckets = spark.sessionState.conf.numShufflePartitions
-    val (blocksMeta, codec) =
-      if (isCommitted(s"$outDir/blocks")) readBlocksMeta(outDir)
-      else (Some((buckets, blockBits)), "f64")
-    if (!isCommitted(s"$outDir/blocks")) {
-      if (canSlicePostings) {
-        val idfMap = new LongDoubleMap(math.max(16, numTerms.toInt))
-        termsR.select("term_id", "idf").collect()
-          .foreach(r => idfMap.put(r.getLong(0), r.getDouble(1)))
-        val bcIdf = spark.sparkContext.broadcast(idfMap)
-        val bw = 1L << blockBits
-        val alo = java.lang.Math.floorDiv(lo, bw) * bw
-        val rawW = math.max(1L, (hi - alo + slices) / slices)
-        val uWidth = ((rawW + bw - 1) / bw) * bw
-        def unitRange(u: Int): (Long, Long) =
-          (alo + u * uWidth,
-           if (u == slices - 1) hi + 1 else alo + (u + 1) * uWidth)
-        for (u <- 0 until slices) {
-          val udir = s"$outDir/blocks_enc/unit=$u"
-          val (uLo, uHi) = unitRange(u)
-          if (!isCommitted(udir) && uLo < uHi) {
-            val t0 = System.nanoTime()
-            val obs = org.apache.spark.sql.Observation()
-            PostingBlocks.encodeFromTf(
-              tfR.where(col("doc_id") >= uLo && col("doc_id") < uHi)
-                .select("term_id", "doc_id", "tf", "doc_len"),
-              avgdl, bcIdf, blockBits)
-              .observe(obs, count(lit(1)).as("n"))
-              .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-              .parquet(udir)
-            commit(log, udir, ManifestRow("blocks_enc", u,
-              obs.get("n").asInstanceOf[Long],
-              (System.nanoTime() - t0) / 1000000,
-              s"tf:doc_id:[$uLo,$uHi)+terms", System.currentTimeMillis()))
-            onUnitCommitted("blocks_enc", u)
-          }
-        }
-        val t0 = System.nanoTime()
-        val encoded = read(s"$outDir/blocks_enc/unit=*",
-          Encoders.product[PostingBlock].schema).as[PostingBlock]
-        val nBlocks = PostingBlocks.writeBlocksEncoded(encoded, outDir,
-          buckets, blockBits)
-        commit(log, s"$outDir/blocks", ManifestRow("blocks", 0,
-          nBlocks, (System.nanoTime() - t0) / 1000000,
-          "blocks_enc/unit=*", System.currentTimeMillis()))
-        onUnitCommitted("blocks", 0)
-      } else {
-        val t0 = System.nanoTime()
-        // partition discovery covers both layouts (slice=p subdirs or
-        // flat); underscore-prefixed commit markers are ignored by the reader
-        val postingsR = read(s"$outDir/postings", postingsOf(tfR, dict).schema)
-          .select("term_id", "doc_id", "impact")
-        val nBlocks = PostingBlocks.writeBlocks(postingsR, outDir,
-          buckets, blockBits)
-        commit(log, s"$outDir/blocks", ManifestRow("blocks", 0,
-          nBlocks,
-          (System.nanoTime() - t0) / 1000000, "postings", System.currentTimeMillis()))
-        onUnitCommitted("blocks", 0)
-      }
-    }
-    // blocks_enc intermediates are never read again once the blocks stage
-    // committed (resume skips the whole stage) — GC them, or a
-    // checkpointed index permanently carries ~2x its serving footprint.
-    // Unconditional: also reclaims indexes whose blocks committed in a
-    // previous run that predates this GC.
-    if (isCommitted(s"$outDir/blocks") &&
-        Files.exists(Paths.get(s"$outDir/blocks_enc")))
-      rmrf(spark, s"$outDir/blocks_enc")
-
-    // ---- stage 6: stats — term/posting counts come from the manifest
-    // rows recorded at their stages' writes (a recount would re-read both
-    // tables; the manifest is authoritative on resume too; multi-unit
-    // stages sum their unit rows)
-    val stats = committedStats.getOrElse {
-      val t0 = System.nanoTime()
-      val st = IndexStats(numDocs, totalTokens, avgdl,
-        log.rowsOf("terms"), log.rowsOf("postings"))
-      // one row, written on the driver like the manifest rows
-      rmrf(spark, s"$outDir/stats")
-      Files.createDirectories(Paths.get(outDir, "stats"))
-      DriverParquet.write(spark, Paths.get(outDir, "stats", "part-00000.parquet"),
-        StatsSchema, Seq(Row.fromTuple(st)))
-      commit(log, s"$outDir/stats", ManifestRow("stats", 0, 1,
-        (System.nanoTime() - t0) / 1000000, "docs+terms+postings",
-        System.currentTimeMillis()))
-      onUnitCommitted("stats", 0)
-      st
-    }
-
-    // the index knows its stats and blocks metadata: its first query
-    // needs no job to read them back
-    new BuiltIndex(spark, outDir).preset(blocksMeta, stats, codec, docs.schema)
+    val units = (0 until slices).map(p =>
+      TfUnit(p, s"tf/slice=$p", read(s"$outDir/tf/slice=$p", tfSchema)))
+    spine.run(TfInput(units, read(s"$outDir/tf/slice=*", tfSchema), "tf/slice=*", Some((lo, hi))),
+      read(s"$outDir/docs_raw/slice=*", docsRawSchema), blockBits,
+      onUnitCommitted = onUnitCommitted)
   }
 }

@@ -19,8 +19,8 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
   SparkToParquetSchemaConverter}
 import org.apache.spark.sql.types._
 
-/** Driver-side reads and writes of tiny parquet tables (checkpoint
-  * manifest rows, the one-row stats and blocks_meta tables) through
+/** Driver-side reads and writes of tiny parquet tables (build manifest
+  * rows, the one-row stats and blocks_meta tables) through
   * parquet-hadoop — no Spark job. A one-row `Seq(x).toDS().write` costs a
   * job, and a `spark.read...head()` one or two more; for bookkeeping rows
   * that is pure scheduling overhead.
@@ -41,6 +41,37 @@ import org.apache.spark.sql.types._
 private[graft] object DriverParquet {
 
   def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
+  /** Entries of a local directory (empty if it does not exist); the
+    * directory stream is closed before returning.
+    */
+  def list(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toVector finally s.close()
+    }
+
+  /** Delete a local file or directory tree; nothing if it does not exist. */
+  def remove(p: Path): Unit = {
+    if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) list(p).foreach(remove)
+    Files.deleteIfExists(p)
+  }
+
+  /** Replace the table at `dir` by the single row `row` (manifest rows,
+    * `stats`, `blocks_meta`): written under a hidden temp name, renamed in
+    * once `dir` is cleared, so a crash leaves the old, no or the new table.
+    */
+  def writeTable(spark: SparkSession, dir: Path, schema: StructType, row: Row): Unit = {
+    val tmp = dir.resolveSibling(s".${dir.getFileName}-${java.util.UUID.randomUUID()}.tmp")
+    Files.createDirectories(dir.getParent)
+    write(spark, tmp, schema, Seq(row))
+    remove(dir)
+    Files.createDirectories(dir)
+    Files.move(tmp, dir.resolve("part-00000.parquet"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    ()
+  }
 
   /** Write `rows` (matching `schema`) as ONE parquet file at `file`. */
   def write(spark: SparkSession, file: Path, schema: StructType,
@@ -73,16 +104,8 @@ private[graft] object DriverParquet {
     * as null. Empty when `dir` does not exist.
     */
   def read(dir: Path, schema: StructType): Seq[Row] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val files = Files.list(dir)
-      val visible =
-        try files.iterator().asScala
-          .filter(f => Files.isRegularFile(f) && !hidden(f.getFileName.toString))
-          .toVector.sortBy(_.getFileName.toString)
-        finally files.close()
-      visible.flatMap(readFile(_, schema))
-    }
+    list(dir).filter(f => Files.isRegularFile(f) && !hidden(f.getFileName.toString))
+      .sortBy(_.getFileName.toString).flatMap(readFile(_, schema))
 
   // explicit options: the reader's defaults build (and parse) a fresh
   // Hadoop Configuration per file

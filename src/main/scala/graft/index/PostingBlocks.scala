@@ -45,10 +45,7 @@ object PostingBlocks {
     * (term_id, block_id) — Tungsten UnsafeRow shuffle, no object
     * serialization — then a spillable local radix sort and a streaming
     * mapPartitions encode whose live state is ONE group's arrays (bounded
-    * by 2^blockBits docIds). This replaced a kryo-buffered Aggregator
-    * (round 1's GC-bound worst-scaling stage: ObjectHashAggregate
-    * deserialized/merged ArrayBuffer buffers through kryo on every spill
-    * and shuffle read).
+    * by 2^blockBits docIds).
     */
   def encode(postings: DataFrame,
       blockBits: Int = DefaultBlockBits,
@@ -66,43 +63,45 @@ object PostingBlocks {
       // the shuffle, the files and the hot cache
       .select(col("term_id"), col("doc_id"), col("impact"), col("block_id"))
       .as[PostingRowIn]
-      .mapPartitions(it => encodePartition(it, q8))
+      .mapPartitions(it =>
+        encodeGroups[PostingRowIn](it, blockBits, q8, _.term_id, _.doc_id, _.impact))
   }
 
-  /** Streaming group encoder over rows sorted by (term_id, block_id,
-    * doc_id). Strictly-increasing doc_ids within a group are enforced by
-    * the codec — a violation means a term_id hash collision merged two
-    * terms' postings, and the build fails loudly.
+  /** Streaming group encoder over rows sorted by (term_id, doc_id): one
+    * block per (term_id, doc_id >> bits) group, whose live state is that
+    * group's arrays. Strictly-increasing doc_ids within a group are
+    * enforced by the codec — a violation means a term_id hash collision
+    * merged two terms' postings, and the build fails loudly.
     */
-  private[index] def encodePartition(
-      it: Iterator[PostingRowIn],
-      q8: Boolean = false): Iterator[PostingBlock] =
+  private def encodeGroups[R <: AnyRef](it: Iterator[R], bits: Int, q8: Boolean,
+      term: R => Long, doc: R => Long, impact: R => Double): Iterator[PostingBlock] =
     new Iterator[PostingBlock] {
-      private var pending: PostingRowIn = if (it.hasNext) it.next() else null
+      private var pending: R = if (it.hasNext) it.next() else null.asInstanceOf[R]
       def hasNext: Boolean = pending != null
       def next(): PostingBlock = {
-        val term = pending.term_id
-        val block = pending.block_id
+        val t = term(pending)
+        val block = doc(pending) >> bits
         var cap = 64
         var docs = new Array[Long](cap)
         var imps = new Array[Double](cap)
         var n = 0
         var blockMax = Double.NegativeInfinity
         var r = pending
-        while (r != null && r.term_id == term && r.block_id == block) {
+        while (r != null && term(r) == t && (doc(r) >> bits) == block) {
           if (n == cap) {
             cap *= 2
             docs = java.util.Arrays.copyOf(docs, cap)
             imps = java.util.Arrays.copyOf(imps, cap)
           }
-          docs(n) = r.doc_id; imps(n) = r.impact
-          if (r.impact > blockMax) blockMax = r.impact
+          val imp = impact(r)
+          docs(n) = doc(r); imps(n) = imp
+          if (imp > blockMax) blockMax = imp
           n += 1
-          r = if (it.hasNext) it.next() else null
+          r = if (it.hasNext) it.next() else null.asInstanceOf[R]
         }
         pending = r
         val impArr = java.util.Arrays.copyOf(imps, n)
-        PostingBlock(term, block, n,
+        PostingBlock(t, block, n,
           PostingCodec.encodeDocIds(java.util.Arrays.copyOf(docs, n)),
           if (q8) PostingCodec.encodeImpactsQ8(impArr)
           else PostingCodec.encodeImpacts(impArr),
@@ -112,9 +111,9 @@ object PostingBlocks {
 
   /** Posting blocks straight from TF ROWS `(term_id, doc_id, tf,
     * doc_len)` with the BM25 impact computed inside the streaming encode
-    * from a broadcast `(term_id -> idf)` dictionary — the round-5 byte
-    * cut through the one build-dominant Exchange (VERDICT r4 next-step
-    * 1b). The [[encode]] path ships `impact DOUBLE` per posting: 8 bytes
+    * from a broadcast `(term_id -> idf)` dictionary, a byte cut through
+    * the build's one dominant Exchange. The [[encode]] path ships
+    * `impact DOUBLE` per posting: 8 bytes
     * of near-incompressible mantissa through the shuffle. Here the
     * shuffle ships `(tf INT, doc_len INT)` instead — small, highly
     * repetitive integers that the shuffle's lz4 squeezes to a fraction
@@ -147,99 +146,31 @@ object PostingBlocks {
       .repartition(col("term_id"), shiftright(col("doc_id"), bits))
       .sortWithinPartitions("term_id", "doc_id")
       .as[TfRowIn]
-      .mapPartitions(it => encodeTfPartition(it, bits, avgdl, idf.value, q8))
-  }
-
-  /** Streaming group encoder over tf rows sorted by (term_id, doc_id) —
-    * the [[encodePartition]] twin with the impact computed per posting
-    * from the broadcast idf map. Group key: (term_id, doc_id >> bits).
-    */
-  private[index] def encodeTfPartition(
-      it: Iterator[TfRowIn],
-      bits: Int,
-      avgdl: Double,
-      idf: LongDoubleMap,
-      q8: Boolean = false): Iterator[PostingBlock] =
-    new Iterator[PostingBlock] {
-      private var pending: TfRowIn = if (it.hasNext) it.next() else null
-      def hasNext: Boolean = pending != null
-      def next(): PostingBlock = {
-        val term = pending.term_id
-        val block = pending.doc_id >> bits
-        val termIdf = idf(term)
-        var cap = 64
-        var docs = new Array[Long](cap)
-        var imps = new Array[Double](cap)
-        var n = 0
-        var blockMax = Double.NegativeInfinity
-        var r = pending
-        while (r != null && r.term_id == term && (r.doc_id >> bits) == block) {
-          if (n == cap) {
-            cap *= 2
-            docs = java.util.Arrays.copyOf(docs, cap)
-            imps = java.util.Arrays.copyOf(imps, cap)
-          }
-          val imp = Bm25.impact(r.tf.toDouble, r.doc_len.toDouble, avgdl, termIdf)
-          docs(n) = r.doc_id; imps(n) = imp
-          if (imp > blockMax) blockMax = imp
-          n += 1
-          r = if (it.hasNext) it.next() else null
-        }
-        pending = r
-        val impArr = java.util.Arrays.copyOf(imps, n)
-        PostingBlock(term, block, n,
-          PostingCodec.encodeDocIds(java.util.Arrays.copyOf(docs, n)),
-          if (q8) PostingCodec.encodeImpactsQ8(impArr)
-          else PostingCodec.encodeImpacts(impArr),
-          blockMax)
+      .mapPartitions { it =>
+        val m = idf.value
+        encodeGroups[TfRowIn](it, bits, q8, _.term_id, _.doc_id,
+          r => Bm25.impact(r.tf.toDouble, r.doc_len.toDouble, avgdl, m(r.term_id)))
       }
-    }
+  }
 
   /** Write encoded blocks as a BUCKETED table (bucketBy block_id, files
     * sorted by (term_id, block_id)) registered in the session catalog with
-    * the data under `$outDir/blocks`.
+    * the data under `$outDir/blocks`; returns the block count.
     *
     * The bucketing is the serving-path contract: a query reads the blocks
     * of its terms (pushed In(term_id) filter; file sort keeps row-group
     * stats tight) with ONE TASK PER BUCKET, so every (term_id, block_id)
     * group of one docId range is complete inside a single task and the
-    * WAND merge runs with zero per-query Exchange — round 1 shipped a
-    * `repartition(block_id)` shuffle on every query, which at head-term
-    * scale moves the posting lists of the most common words in the corpus.
+    * WAND merge runs with zero per-query Exchange.
     *
-    * A bucket may hold multiple files (one per encode task that produced
-    * rows for it); correctness only needs bucket-level co-location because
-    * the query side re-sorts locally by (block_id, term_id).
-    */
-  def writeBlocks(postings: DataFrame, outDir: String, numBuckets: Int,
-      blockBits: Int = DefaultBlockBits,
-      quantizeImpacts: Boolean = false): Long =
-    writeBlocksEncoded(encode(postings, blockBits, quantizeImpacts),
-      outDir, numBuckets, blockBits, quantizeImpacts)
-
-  /** [[writeBlocks]] from tf rows via [[encodeFromTf]] (the byte-cut
-    * path; caller guarantees the dictionary fits the broadcast).
-    */
-  def writeBlocksFromTf(tfRows: DataFrame, avgdl: Double,
-      idf: org.apache.spark.broadcast.Broadcast[LongDoubleMap],
-      outDir: String, numBuckets: Int,
-      blockBits: Int = DefaultBlockBits,
-      quantizeImpacts: Boolean = false): Long =
-    writeBlocksEncoded(
-      encodeFromTf(tfRows, avgdl, idf, blockBits, quantizeImpacts),
-      outDir, numBuckets, blockBits, quantizeImpacts)
-
-  /** Bucketed-table writer for an already-encoded blocks Dataset (shared
-    * tail of the postings-driven, tf-driven and checkpoint-assembly
-    * paths). The write itself needs no shuffle: each task writes its
-    * groups into per-bucket files after a local sort by the bucket
-    * expression (a bucket may hold files from many tasks — the query
-    * side only needs bucket-level co-location).
+    * The write itself needs no shuffle: each task writes its groups into
+    * per-bucket files after a local sort by the bucket expression (a
+    * bucket may hold files from many tasks — correctness only needs
+    * bucket-level co-location, because the query side re-sorts locally
+    * by (block_id, term_id)).
     */
   def writeBlocksEncoded(blocks: Dataset[PostingBlock], outDir: String,
-      numBuckets: Int,
-      blockBits: Int = DefaultBlockBits,
-      quantizeImpacts: Boolean = false): Long = {
+      numBuckets: Int): Long = {
     val spark = blocks.sparkSession
     val table = BuiltIndex.blocksTableName(outDir)
     spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -257,10 +188,6 @@ object PostingBlocks {
       .option("path", s"$outDir/blocks")
       .mode(SaveMode.Overwrite)
       .saveAsTable(table)
-    import spark.implicits._
-    Seq((numBuckets, blockBits, if (quantizeImpacts) "q8" else "f64"))
-      .toDF("num_buckets", "block_bits", "impact_codec")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/blocks_meta")
     obs.get("n").asInstanceOf[Long]
   }
 }

@@ -2,6 +2,7 @@ package graft.query
 
 import scala.collection.mutable
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -799,12 +800,16 @@ object Bm25Query {
       maxCollectRows / math.max(1L, kk.toLong * buckets)).toInt
     val bcBoost = boost.map(b =>
       (sc.broadcast(b._1), sc.broadcast(b._2), b._3)).orNull
-    planned.grouped(chunkB).flatMap { chunk =>
+    // the boost is shipped once per call and destroyed once every chunk
+    // is collected: a long-running server would otherwise keep a copy of
+    // every rank set it served, on the driver and on every executor
+    try planned.grouped(chunkB).flatMap { chunk =>
       hot match {
         case Some(h) => HotServing.run(index, h, chunk.toArray, kk, bcBoost)
         case None => runBatchChunk(index, chunk.toArray, kk, bcBoost)
       }
     }.toVector
+    finally if (bcBoost != null) { bcBoost._1.destroy(); bcBoost._2.destroy() }
   }
 
   /** The survivors (chunk position, doc_id, score) of one chunk of
@@ -812,18 +817,19 @@ object Bm25Query {
     * buffered once and replayed through the merge kernel per query. Each
     * distinct doc filter is broadcast once per chunk (a [[DocFilter]]
     * compares its array by reference, so queries of one glob pair share
-    * it).
+    * it) and recorded in `shipped`, whose owner destroys them once the
+    * chunk is collected.
     */
   private[graft] def batchCandidates(index: BuiltIndex, chunk: Array[BatchPlanned],
-      kk: Int, bcBoost: HotServing.Boost): Dataset[(Int, Long, Double)] = {
+      kk: Int, bcBoost: HotServing.Boost,
+      shipped: mutable.Map[DocFilter, Broadcast[Array[Long]]] = mutable.Map.empty
+      ): Dataset[(Int, Long, Double)] = {
     val spark = index.spark
     import spark.implicits._
     val unionIds = chunk.flatMap(_.termIds).distinct.toIndexedSeq
     val qIds = chunk.map(_.termIds)
     val qConj = chunk.map(_.conjunctive)
     val qBoosted = chunk.map(_.boosted)
-    val shipped = mutable.Map.empty[DocFilter,
-      org.apache.spark.broadcast.Broadcast[Array[Long]]]
     val qFilterBc = chunk.map(_.filter.map(f =>
       (shipped.getOrElseUpdate(f, spark.sparkContext.broadcast(f.sorted)),
         f.isAllow)).orNull)
@@ -874,7 +880,10 @@ object Bm25Query {
       kk: Int, bcBoost: HotServing.Boost): Array[Vector[Hit]] = {
     val spark = index.spark
     import spark.implicits._
-    val candidates = batchCandidates(index, chunk, kk, bcBoost).collect()
+    val shipped = mutable.Map.empty[DocFilter, Broadcast[Array[Long]]]
+    val candidates =
+      try batchCandidates(index, chunk, kk, bcBoost, shipped).collect()
+      finally shipped.values.foreach(_.destroy())
     // per-query top-k with the frozen tie-break, then ONE pruned url
     // lookup for every query's winners together
     val topPer = candidates.groupBy(_._1).map { case (pi, arr) =>

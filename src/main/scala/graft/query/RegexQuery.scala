@@ -664,9 +664,6 @@ object RegexQuery {
       maxCollectRows: Long = Bm25Query.MaxBatchCollectRows): Seq[Vector[Hit]] = {
     val spark = index.spark
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Par.ec
     val kk = math.max(1, math.min(k, 1000))
     val out = scala.collection.mutable.Map.empty[Int, Vector[Hit]]
     def rxOf(p: String) = "(?is)" + p
@@ -686,9 +683,9 @@ object RegexQuery {
 
     // full-scan class launched NOW as a future (consumed further down):
     // it reads only the content table, independent of every other leg
-    val fFullscan: Future[Array[(Int, Long)]] =
-      if (fullscan.isEmpty) Future.successful(Array.empty)
-      else Future {
+    val fFullscan: scala.concurrent.Future[Array[(Int, Long)]] =
+      if (fullscan.isEmpty) scala.concurrent.Future.successful(Array.empty)
+      else graft.Par.leg(spark) {
         val tagged = fullscan.map(qi =>
           when(regexp_like(col("text"), lit(rxOf(patterns(qi)))), lit(qi)))
         val w = org.apache.spark.sql.expressions.Window
@@ -730,7 +727,7 @@ object RegexQuery {
       // already-over-cap query — a shortcut, not a semantic.)
       val exactTexts = accel.flatMap(_.branches).flatten
         .filter(_.bothBound).map(_.text).distinct
-      val fExact: Future[Map[String, Array[Long]]] = Future {
+      val fExact = graft.Par.leg[Map[String, Array[Long]]](spark) {
         if (exactTexts.isEmpty) Map.empty
         else index.terms.where(col("term").isin(exactTexts.toSeq: _*))
           .select("term", "term_id").as[(String, Long)].collect()
@@ -740,16 +737,16 @@ object RegexQuery {
         .filterNot(_.bothBound)
         .map(l => ((l.text, l.leftBound, l.rightBound), l)).toMap
       val fOpen = distinctOpen.map { case (key, l) =>
-        key -> Future {
+        key -> graft.Par.leg(spark) {
           termIdsForLiteral(index, l)
             .limit(MaxBatchLiteralTermIds + 1).as[Long].collect()
         }
       }
-      val exactIds = Await.result(fExact, Duration.Inf)
+      val exactIds = graft.Par.join(fExact)
       val openIds = scala.collection.mutable.Map.empty[(String, Boolean, Boolean), Array[Long]]
       val overCap = scala.collection.mutable.Set.empty[Int]
       val openResolved = fOpen.map { case (k, f) =>
-        k -> Await.result(f, Duration.Inf) }
+        k -> graft.Par.join(f) }
       accel.foreach { pl =>
         pl.branches.flatten.foreach { l =>
           if (!l.bothBound) {
@@ -868,7 +865,7 @@ object RegexQuery {
     // its content pass back-fills the cluster while the other classes'
     // driver round trips run
     if (fullscan.nonEmpty) {
-      val rows = Await.result(fFullscan, Duration.Inf)
+      val rows = graft.Par.join(fFullscan)
       val byQ = rows.groupBy(_._1)
       fullscan.foreach { qi =>
         out(qi) = byQ.getOrElse(qi, Array.empty[(Int, Long)]).map(_._2).sorted.take(kk)

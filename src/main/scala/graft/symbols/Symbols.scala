@@ -329,22 +329,16 @@ object Symbols {
     // then re-read the written parquet to derive the dimension, strictly
     // serially.
     val syms = symbols.localCheckpoint()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Par.ec
-    Seq(
-      Future {
-        syms
-          .sortWithinPartitions("name")
-          .write.mode("overwrite").option("compression", "zstd")
-          .parquet(s"$dir/symbols")
-      },
-      Future {
-        syms
-          .groupBy("name").agg(count(lit(1)).as("n"))
-          .sortWithinPartitions("name")
-          .write.mode("overwrite").parquet(s"$dir/symbol_names")
-      }).foreach(Await.result(_, Duration.Inf))
+    graft.Par.all(syms.sparkSession)(
+      () => syms
+        .sortWithinPartitions("name")
+        .write.mode("overwrite").option("compression", "zstd")
+        .parquet(s"$dir/symbols"),
+      () => syms
+        .groupBy("name").agg(count(lit(1)).as("n"))
+        .sortWithinPartitions("name")
+        .write.mode("overwrite").parquet(s"$dir/symbol_names"))
+    ()
   }
 
   /** Names a containment query may resolve to before the pushed-In plan

@@ -1,0 +1,180 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.DriverBroadcasts
+import org.apache.spark.sql.functions._
+
+import graft.checkpoint.{CheckpointedBuild, DriverParquet}
+import graft.corpus.PagesCorpus
+import graft.index.{BuiltIndex, IndexBuilder, IndexStats, LongDoubleMap}
+import graft.query.{BatchQuery, Bm25Query}
+
+/** Every build mode runs one stage runner: the batch build, a build from
+  * that build's tf rows and checkpointed builds at one and three slices
+  * write the same index and one manifest row per stage unit; the one-row
+  * tables are written and read on the driver; a build and cold queries
+  * leave no broadcast behind.
+  */
+class BuildSpineSpec extends AnyFunSuite {
+
+  private lazy val spark = TestSpark.spark
+  private lazy val raw = PagesCorpus.pages(spark, 300, parts = 4).toDF()
+
+  private def tmp(name: String): String =
+    Files.createTempDirectory(s"graft-spine-$name").toString
+
+  private def canon(dir: String, table: String, cols: String*): Seq[String] =
+    spark.read.parquet(s"$dir/$table").select(cols.map(col): _*)
+      .collect().map(_.toString).sorted.toSeq
+
+  private def blocksBytes(dir: String) =
+    spark.read.parquet(s"$dir/blocks").collect().map { r =>
+      (r.getAs[Long]("term_id"), r.getAs[Long]("block_id")) ->
+        ((r.getAs[Int]("n"), r.getAs[Array[Byte]]("docs_enc").toSeq,
+          r.getAs[Array[Byte]]("impacts_enc").toSeq, r.getAs[Double]("block_max")))
+    }.toMap
+
+  private def units(dir: String): Set[(String, Int)] =
+    CheckpointedBuild.manifest(spark, dir).collect()
+      .map(r => (r.getAs[String]("stage"), r.getAs[Int]("part"))).toSet
+
+  private def parquetSchema(dir: String): MessageType = {
+    val f = Files.list(Paths.get(dir))
+    val file = try f.iterator().asScala
+      .find(p => !DriverParquet.hidden(p.getFileName.toString)).get
+    finally f.close()
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(file.toUri), spark.sparkContext.hadoopConfiguration))
+    try r.getFooter.getFileMetaData.getSchema finally r.close()
+  }
+
+  private lazy val batchDir = {
+    val d = tmp("batch")
+    IndexBuilder.build(spark, IndexBuilder.extractPages(raw), d, blockBits = 6)
+    d
+  }
+
+  test("batch, from-tf and 1- and 3-slice checkpointed builds write the same index") {
+    val batch = IndexBuilder.load(spark, batchDir)
+    val fromTf = tmp("from-tf")
+    IndexBuilder.buildFromTf(spark, batch.tfRows, spark.read.parquet(s"$batchDir/docs"),
+      fromTf, blockBits = 6)
+    val ck1 = tmp("ck1")
+    CheckpointedBuild.build(spark, raw, ck1, slices = 1, blockBits = 6)
+    val ck3 = tmp("ck3")
+    CheckpointedBuild.build(spark, raw, ck3, slices = 3, blockBits = 6)
+
+    val want = blocksBytes(batchDir)
+    assert(want.nonEmpty)
+    Seq(fromTf, ck1, ck3).foreach { d =>
+      assert(canon(d, "docs", "doc_id", "url", "doc_len") ==
+        canon(batchDir, "docs", "doc_id", "url", "doc_len"), d)
+      assert(canon(d, "terms", "term_id", "term", "df", "idf") ==
+        canon(batchDir, "terms", "term_id", "term", "df", "idf"), d)
+      assert(canon(d, "postings", "term_id", "doc_id", "impact") ==
+        canon(batchDir, "postings", "term_id", "doc_id", "impact"), d)
+      assert(IndexBuilder.load(spark, d).stats == batch.stats, d)
+      assert(blocksBytes(d) == want, d)
+    }
+
+    // one manifest row per stage unit; with blockBits 6 the 300 docs of
+    // three slices encode as [0,128) [128,256) [256,300)
+    val spine = Set("docs", "terms_part", "terms", "postings", "blocks_enc", "blocks", "stats")
+      .map(_ -> 0)
+    assert(units(batchDir) == spine + ("tf" -> 0))
+    assert(units(fromTf) == spine)
+    assert(units(ck1) == spine ++ Set("tf", "config").map(_ -> 0))
+    assert(units(ck3) == spine + ("config" -> 0) ++
+      Seq("tf", "terms_part", "postings", "blocks_enc").flatMap(s => (0 until 3).map(s -> _)))
+  }
+
+  test("a batch index keeps its pages and today's table columns") {
+    val ix = IndexBuilder.load(spark, batchDir)
+    assert(spark.read.parquet(s"$batchDir/pages").columns.toSeq == Seq("doc_id", "url", "text"))
+    assert(ix.docs.columns.toSeq == Seq("doc_id", "url", "doc_len"))
+    assert(ix.terms.columns.toSeq == Seq("term", "df", "term_id", "idf"))
+    assert(ix.postings.columns.toSeq == Seq("term_id", "doc_id", "impact"))
+    assert(ix.blocks.columns.toSeq ==
+      Seq("term_id", "block_id", "n", "docs_enc", "impacts_enc", "block_max"))
+    assert(spark.read.parquet(s"$batchDir/stats").columns.toSeq ==
+      Seq("num_docs", "total_tokens", "avgdl", "num_terms", "num_postings"))
+    assert(!Files.exists(Paths.get(batchDir, "terms_part")))
+    assert(!Files.exists(Paths.get(batchDir, "blocks_enc")))
+  }
+
+  test("driver-written stats and blocks_meta have the parquet schema of Spark's writer") {
+    import spark.implicits._
+    val st = spark.read.parquet(s"$batchDir/stats").as[IndexStats].head()
+    val statsViaSpark = tmp("stats-spark")
+    Seq(st).toDS().write.mode("overwrite").parquet(statsViaSpark)
+    assert(parquetSchema(s"$batchDir/stats") == parquetSchema(statsViaSpark))
+    val meta = spark.read.parquet(s"$batchDir/blocks_meta")
+      .as[(Int, Int, String)].head()
+    val metaViaSpark = tmp("meta-spark")
+    Seq(meta).toDF("num_buckets", "block_bits", "impact_codec")
+      .coalesce(1).write.mode("overwrite").parquet(metaViaSpark)
+    assert(parquetSchema(s"$batchDir/blocks_meta") == parquetSchema(metaViaSpark))
+    assert(meta == ((8, 6, "f64")))
+  }
+
+  test("a missing blocks_meta loads as a legacy index; an unreadable one fails the load") {
+    val dir = tmp("meta")
+    IndexBuilder.build(spark, IndexBuilder.extractPages(raw), dir, blockBits = 6)
+    val q = s"${PagesCorpus.vocab(3)} ${PagesCorpus.vocab(7)}"
+    val want = Bm25Query.searchBlocks(IndexBuilder.load(spark, dir), q, 10).collect().toSeq
+    assert(want.nonEmpty)
+    val meta = Paths.get(dir, "blocks_meta")
+    val file = Files.list(meta).iterator().asScala
+      .find(p => !DriverParquet.hidden(p.getFileName.toString)).get
+    Files.write(file, "not parquet".getBytes("UTF-8"))
+    intercept[Exception](IndexBuilder.load(spark, dir).impactCodec)
+    intercept[Exception](IndexBuilder.load(spark, dir).blocksMeta)
+
+    DriverParquet.remove(meta)
+    val legacy = IndexBuilder.load(spark, dir)
+    assert(legacy.blocksMeta.isEmpty && legacy.impactCodec == "f64")
+    assert(!legacy.blocksBucketed)
+    // the legacy (unbucketed) read of the same f64 blocks serves the same hits
+    assert(Bm25Query.searchBlocks(legacy, q, 10).collect().toSeq == want)
+
+    // a path the driver-side reads cannot see is refused, not loaded as
+    // a legacy index
+    Seq("hdfs://namenode/idx", s"file:$dir").foreach { p =>
+      intercept[IllegalArgumentException](IndexBuilder.load(spark, p))
+    }
+  }
+
+  test("a build and cold boosted and filtered queries leave no broadcast behind") {
+    val ours: Any => Boolean = {
+      case _: LongDoubleMap | _: Array[Long] | _: Array[Double] => true
+      case _ => false
+    }
+    def settled(start: Int): Boolean = {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (DriverBroadcasts.count(ours) > start && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      DriverBroadcasts.count(ours) <= start
+    }
+    val start = DriverBroadcasts.count(ours)
+    val dir = tmp("broadcasts")
+    val ix = IndexBuilder.build(spark, IndexBuilder.extractPages(raw), dir, blockBits = 6)
+    assert(settled(start), "the build left its idf broadcast")
+    val rank = ix.docs.select(col("doc_id"),
+      (lit(1.0) + (col("doc_id") % 7).cast("double") * 0.25).as("static_rank"))
+    val w = PagesCorpus.vocab
+    (0 until 5).foreach { i =>
+      Bm25Query.searchBlocksBoosted(ix, s"${w(2 + i)} ${w(7)}", 10, rank).collect()
+      Bm25Query.searchBlocksBatchEx(ix, Seq(BatchQuery(s"${w(2 + i)} ${w(7)}",
+        include = Seq(s"https://site-0${i}*.example/**"))), 10)
+    }
+    assert(settled(start), "cold queries left their boost or filter broadcasts")
+  }
+}

@@ -1,6 +1,13 @@
 package graft
 import org.apache.spark.sql.functions._
-import graft.index.{Bm25, IndexBuilder, PostingBlocks}
+import graft.checkpoint.CheckpointedBuild
+import graft.index.IndexBuilder
+
+/** Per-stage build times: one batch build over the scaling corpus, then
+  * the wall time each stage unit recorded in the build's manifest.
+  * Stages overlap (see BuildSpine), so the per-stage times can sum past
+  * the build's wall time.
+  */
 object StageProf {
   def main(args: Array[String]): Unit = {
     val cores = if (args.nonEmpty) args(0).toInt else 8
@@ -16,51 +23,14 @@ object StageProf {
     val corpus = s"${System.getProperty("java.io.tmpdir")}/graft-scale-corpus-" +
       s"$n-${ScalingBench.WorkloadVersion}"
     val raw = spark.read.parquet(corpus)
-    def t[A](name: String)(f: => A): Unit = {
-      val t0 = System.nanoTime(); f
-      println(f"[sprof:$cores] $name ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    }
-    t("TOTAL") {
-      t("1 extract+safety+pages") {
-        IndexBuilder.extractPages(raw)
-          .where(graft.extract.Extract.safe(col("text")))
-          .write.mode("overwrite").parquet(s"$out/pages")
+    val t0 = System.nanoTime()
+    IndexBuilder.build(spark, IndexBuilder.extractPages(raw), out, numBuckets = 64)
+    println(f"[sprof:$cores] TOTAL ${(System.nanoTime() - t0) / 1e9}%.1fs")
+    CheckpointedBuild.manifest(spark, out)
+      .groupBy("stage").agg(sum("wall_ms").as("ms"), min("committed_at").as("at"))
+      .orderBy("at").collect().foreach { r =>
+        println(f"[sprof:$cores] ${r.getString(0)} ${r.getLong(1) / 1e3}%.1fs")
       }
-      val pagesR = spark.read.parquet(s"$out/pages")
-      t("2 tf flatMap+write") {
-        IndexBuilder.termFrequencies(pagesR).write.mode("overwrite")
-          .option("compression", "zstd").parquet(s"$out/tf")
-      }
-      val tfR = spark.read.parquet(s"$out/tf")
-      t("3 docs dim") {
-        val docLens = tfR.groupBy("doc_id").agg(first("doc_len").as("doc_len"))
-        pagesR.select("doc_id", "url").join(docLens, Seq("doc_id"), "left")
-          .na.fill(0L, Seq("doc_len")).sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(s"$out/docs")
-      }
-      t("4 terms dict") {
-        IndexBuilder.writeDictionary(spark, tfR, n, s"$out/terms")
-      }
-      val termsR = spark.read.parquet(s"$out/terms")
-      t("5 collision guard") {
-        val c = termsR.groupBy("term_id").agg(count(lit(1)).as("c"))
-          .where(col("c") > 1).limit(1).count()
-        require(c == 0)
-      }
-      t("6 postings join+write") {
-        tfR.drop("term") // v3 tf carries the computed term_id
-          .join(broadcast(termsR.select("term_id", "idf")), Seq("term_id"))
-          .select(col("term_id"), col("doc_id"),
-            Bm25.impactCol(col("tf").cast("double"),
-              col("doc_len").cast("double"), 527.0, col("idf")).as("impact"))
-          .sortWithinPartitions("term_id", "doc_id")
-          .write.mode("overwrite").option("compression", "zstd")
-          .parquet(s"$out/postings")
-      }
-      t("7 blocks encode+bucketed write") {
-        PostingBlocks.writeBlocks(spark.read.parquet(s"$out/postings"), out, 64)
-      }
-    }
     spark.stop()
     ScalingBench.deleteRecursively(out)
   }
