@@ -207,8 +207,8 @@ object SparkEntry {
       documents(s, dir).where(Extract.safe(col("text"))).select("doc_id")),
 
     "a1_postings" -> ((s, dir) => {
-      // tf lives in the tf intermediate only — the postings/blocks serving
-      // artifacts carry impacts, which subsume tf at fixed BM25 constants.
+      // tf lives in the tf intermediate only — the blocks serving
+      // artifact carries impacts, which subsume tf at fixed BM25 constants.
       // v3 tf rows carry term_id (the per-row string was cut from the
       // intermediate); the string comes back from the dictionary — so this
       // gate also proves the id<->string round-trip end to end.

@@ -37,9 +37,7 @@ case class ManifestRow(
 private[checkpoint] final class ManifestLog(spark: SparkSession, outDir: String) {
   private val dir = Paths.get(outDir, "manifest")
   private val rows = mutable.Map[(String, Int), ManifestRow]()
-  DriverParquet.list(dir)
-    .filter(d => Files.isDirectory(d) && !DriverParquet.hidden(d.getFileName.toString))
-    .flatMap(d => DriverParquet.read(d, ManifestLog.Schema))
+  ManifestLog.rowDirs(outDir).flatMap(d => DriverParquet.read(d, ManifestLog.Schema))
     .foreach { r =>
       rows((r.getString(0), r.getInt(1))) = ManifestRow(r.getString(0), r.getInt(1),
         r.getLong(2), r.getLong(3), r.getString(4), r.getLong(5),
@@ -48,10 +46,6 @@ private[checkpoint] final class ManifestLog(spark: SparkSession, outDir: String)
 
   def get(stage: String, part: Int): Option[ManifestRow] = synchronized(rows.get((stage, part)))
   def nonEmpty: Boolean = synchronized(rows.nonEmpty)
-
-  /** Summed row counts of a stage's units. */
-  def rowsOf(stage: String): Long =
-    synchronized(rows.valuesIterator.filter(_.stage == stage).map(_.rows).sum)
 
   def put(m: ManifestRow): Unit = {
     DriverParquet.writeTable(spark, dir.resolve(s"${m.stage}_${m.part}"),
@@ -76,6 +70,11 @@ private[checkpoint] final class ManifestLog(spark: SparkSession, outDir: String)
 private[checkpoint] object ManifestLog {
   /** Spark's writer derives the same parquet schema from the case class. */
   val Schema: StructType = Encoders.product[ManifestRow].schema
+
+  /** The row directories under `outDir/manifest`, temp files skipped. */
+  def rowDirs(outDir: String): Seq[java.nio.file.Path] =
+    DriverParquet.list(Paths.get(outDir, "manifest"))
+      .filter(d => Files.isDirectory(d) && !DriverParquet.hidden(d.getFileName.toString))
 }
 
 /** One unit of a build's tf rows `(term, term_id, doc_id, tf, doc_len)`;
@@ -98,16 +97,15 @@ final case class TfInput(units: Seq[TfUnit], all: DataFrame, name: String,
   * runs the declared graph below tf:
   *
   *   tf ─┬─ docs ──────────────┐
-  *       └─ terms_part ─ terms ┴─┬─ postings ─── stats (also reads docs, terms)
-  *                               └─ blocks_enc ─ blocks (also reads docs, terms)
+  *       └─ terms_part ─ terms ┴─ blocks_enc ─ blocks ─ stats (each also reads docs, terms)
   *
   * It owns commit (a unit's files, then its [[ManifestRow]], then its
   * `_GRAFT_COMMITTED` marker; committed units are skipped, so every build
   * writes a manifest and resumes), invalidation ([[invalidate]]), overlap
   * (each stage is a [[Par]] leg that starts once its inputs' legs have
-  * finished, so docs runs beside the dictionary partials, postings beside
-  * the blocks encode, and blocks and stats each as soon as their inputs
-  * commit, while the units of a stage run in part order) and the
+  * finished, so docs runs beside the dictionary partials, and the blocks
+  * encode, blocks and stats each as soon as their inputs commit, while
+  * the units of a stage run in part order) and the
   * transient terms_part and blocks_enc stages: committed like any other,
   * so a crash redoes one unit, and deleted once the stage reading them
   * committed. Bookkeeping runs no Spark job: manifest rows and the
@@ -122,6 +120,14 @@ private[graft] final class BuildSpine(spark: SparkSession,
   BuiltIndex.requireLocal(outDir)
   Files.createDirectories(Paths.get(outDir))
   private[checkpoint] val log = new ManifestLog(spark, outDir)
+
+  // an index from before blocks became the one posting layout: its
+  // postings copy goes and stats, which counted it, is recomputed
+  if (Files.exists(Paths.get(outDir, "postings"))) {
+    invalidate("stats")
+    log.remove("postings", None)
+    DriverParquet.remove(Paths.get(outDir, "postings"))
+  }
 
   private def stage(name: String): Stage = Graph.find(_.name == name).get
   private def dependents(name: String): Seq[Stage] = Graph.filter(_.inputs.contains(name))
@@ -184,8 +190,7 @@ private[graft] final class BuildSpine(spark: SparkSession,
     * `(doc_id, url)`, or `(doc_id, url, doc_len)` to keep given doc
     * lengths. Blocks go into `numBuckets` buckets (the session's shuffle
     * partitions if not positive); past `maxBroadcastTerms` terms the idf
-    * attach is an id-keyed shuffle join and postings and blocks_enc are
-    * one unit each.
+    * attach is an id-keyed shuffle join and blocks_enc is one unit.
     */
   def run(tf: TfInput, docRows: DataFrame,
       blockBits: Int = PostingBlocks.DefaultBlockBits,
@@ -258,16 +263,14 @@ private[graft] object BuildSpine {
     Stage("terms", Seq("terms_part", "docs"), Seq("terms", "terms_rev", "terms_ngrams"),
       units = c => Seq(c.global("terms", c.namesOf("terms_part", "slice", c.termsParts))),
       write = (c, u) => c.writeTerms(u)),
-    Stage("postings", Seq("tf", "docs", "terms"), Seq("postings"), perUnit = true,
-      units = _.postingsUnits, write = (c, u) => c.writePostings(u)),
     Stage("blocks_enc", Seq("tf", "docs", "terms"), Seq("blocks_enc"), key = "unit",
       transient = true,
       units = _.encodeUnits, write = (c, u) => c.writeEncoded(u)),
     Stage("blocks", Seq("blocks_enc", "docs", "terms"), Seq("blocks", "blocks_meta"),
       units = c => Seq(c.global("blocks", c.namesOf("blocks_enc", "unit", c.encodeUnits))),
       write = (c, _) => c.writeBlocks()),
-    Stage("stats", Seq("docs", "terms", "postings"), Seq("stats"),
-      units = c => Seq(c.global("stats", "docs+terms+postings")),
+    Stage("stats", Seq("docs", "terms", "blocks"), Seq("stats"),
+      units = c => Seq(c.global("stats", "docs+terms+blocks")),
       write = (c, u) => c.writeStats(u)))
 
   /** One run: its inputs, options and the values stages pass on. */
@@ -391,36 +394,17 @@ private[graft] object BuildSpine {
     private def numTerms: Long = spine.log.get("terms", 0).map(_.rows).getOrElse(
       throw new IllegalStateException(s"terms committed without a manifest row in $outDir"))
 
-    /** The dictionary ships as a broadcast: postings and blocks_enc are
-      * then per unit, with no shuffle up to the encode.
-      */
+    /** The dictionary ships as a broadcast: blocks_enc is then per unit. */
     def broadcastable: Boolean = numTerms <= maxBroadcastTerms
 
     private def dict =
       read(IndexBuilder.TermsSchema, Seq(s"$outDir/terms")).select("term_id", "idf")
 
-    // ---- postings: doc_len rides on the tf rows and term_id is
-    // precomputed, so the idf attach joins on the 8-byte id
-
-    def postingsUnits: Seq[Part] =
-      if (!broadcastable) Seq(global("postings", s"${tf.name}+terms"))
-      else tf.units.map(t => unit("postings", "slice", t.part, s"${t.name}+terms"))
-
-    private def postingsOf(rows: DataFrame): DataFrame =
-      rows.drop("term")
-        .join(if (broadcastable) broadcast(dict) else dict, Seq("term_id"))
-        .select(col("term_id"), col("doc_id"), Bm25.impactCol(col("tf").cast("double"),
-          col("doc_len").cast("double"), avgdl, col("idf")).as("impact"))
-
-    // sorted within files only: query pruning needs tight row-group stats
-    def writePostings(u: Part): Long = writeCounted(postingsOf(
-      if (broadcastable) tfOf(u) else tf.all).sortWithinPartitions("term_id", "doc_id"), u)
-
     // ---- blocks_enc: per 2^blockBits-ALIGNED docId range, so every
     // (term_id, block_id) group lies in one unit. The
     // impact is computed in the encode from the broadcast idf map, so the
     // shuffle ships (tf, doc_len) ints; past the broadcast ceiling one
-    // unit encodes the postings rows (impact doubles shuffled).
+    // unit encodes posting rows (impact doubles shuffled).
 
     private var idfShipped: Option[Broadcast[LongDoubleMap]] = None
 
@@ -449,8 +433,12 @@ private[graft] object BuildSpine {
     }
 
     private def encoded(range: Option[(Long, Long)]): DataFrame =
-      if (!broadcastable) PostingBlocks.encode(postingsOf(tf.all), blockBits, q8).toDF()
-      else {
+      if (!broadcastable) {
+        val postings = tf.all.join(dict, Seq("term_id")).select(col("term_id"), col("doc_id"),
+          Bm25.impactCol(col("tf").cast("double"), col("doc_len").cast("double"), avgdl,
+            col("idf")).as("impact"))
+        PostingBlocks.encode(postings, blockBits, q8).toDF()
+      } else {
         val rows = range.fold(tf.all) { case (lo, hi) =>
           tf.all.where(col("doc_id") >= lo && col("doc_id") < hi)
         }
@@ -463,21 +451,27 @@ private[graft] object BuildSpine {
     // ---- blocks: the bucketed serving table from the encoded units (no
     // shuffle, no re-encode), then its metadata
 
+    @volatile private var postingsObserved: Option[Long] = None
+
     def writeBlocks(): Long = {
       import spark.implicits._
-      val blocks = readCommitted(Encoders.product[PostingBlock].schema, encodeUnits)
-      val n = PostingBlocks.writeBlocksEncoded(blocks.as[PostingBlock], outDir, buckets)
+      val blocks = readCommitted(PostingBlocks.Schema, encodeUnits)
+      val (n, postings) = PostingBlocks.writeBlocksEncoded(blocks.as[PostingBlock], outDir, buckets)
+      postingsObserved = Some(postings)
       releaseIdf()
       DriverParquet.writeTable(spark, Paths.get(outDir, "blocks_meta"), BuiltIndex.BlocksMetaSchema,
         Row.fromTuple(BlocksMeta(buckets, blockBits, if (q8) "q8" else "f64")))
       n
     }
 
-    // ---- stats: term and posting counts are their stages' manifest rows
+    // posting count: observed in this run's blocks write, else scanned
+    private def numPostings: Long = postingsObserved.getOrElse {
+      val r = read(PostingBlocks.Schema, Seq(s"$outDir/blocks")).agg(sum("n")).head()
+      if (r.isNullAt(0)) 0L else r.getLong(0)
+    }
 
     def writeStats(u: Part): Long = {
-      val st = IndexStats(corpus._1, corpus._2, avgdl,
-        spine.log.rowsOf("terms"), spine.log.rowsOf("postings"))
+      val st = IndexStats(corpus._1, corpus._2, avgdl, numTerms, numPostings)
       DriverParquet.writeTable(spark, Paths.get(u.dir), BuiltIndex.StatsSchema, Row.fromTuple(st))
       1L
     }

@@ -44,7 +44,7 @@ object CheckpointedBuild {
 
   /** Every manifest row under `outDir`, read with the pinned schema. */
   def manifest(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.schema(ManifestSchema).parquet(s"$outDir/manifest/*")
+    spark.read.schema(ManifestSchema).parquet(ManifestLog.rowDirs(outDir).map(_.toString): _*)
 
   /** Resumable build. `pagesRaw` must have (doc_id, url, html) or
     * (doc_id, url, text); when html is present the extraction front end
@@ -58,10 +58,12 @@ object CheckpointedBuild {
     import spark.implicits._
     val spine = new BuildSpine(spark, outDir)
     val log = spine.log
-    // read-backs of internal tables carry the writer's schema: a footer
-    // inference costs a Spark job per read
-    def read(path: String, schema: StructType): DataFrame =
-      spark.read.schema(nullable(schema)).parquet(path)
+    // read-backs of internal tables carry the writer's schema (a footer
+    // inference costs a Spark job per read) and list their directories:
+    // a glob path logs Spark's metadata-probe WARN
+    def read(schema: StructType, paths: String*): DataFrame =
+      spark.read.schema(nullable(schema)).parquet(paths: _*)
+    def slicesOf(table: String): Seq[String] = (0 until slices).map(p => s"$outDir/$table/slice=$p")
 
     val hasHtml = pagesRaw.columns.contains("html")
     val pages =
@@ -226,9 +228,9 @@ object CheckpointedBuild {
     }
 
     val units = (0 until slices).map(p =>
-      TfUnit(p, s"tf/slice=$p", read(s"$outDir/tf/slice=$p", tfSchema)))
-    spine.run(TfInput(units, read(s"$outDir/tf/slice=*", tfSchema), "tf/slice=*", Some((lo, hi))),
-      read(s"$outDir/docs_raw/slice=*", docsRawSchema), blockBits,
+      TfUnit(p, s"tf/slice=$p", read(tfSchema, s"$outDir/tf/slice=$p")))
+    spine.run(TfInput(units, read(tfSchema, slicesOf("tf"): _*), "tf/slice=*", Some((lo, hi))),
+      read(docsRawSchema, slicesOf("docs_raw"): _*), blockBits,
       onUnitCommitted = onUnitCommitted)
   }
 }

@@ -24,14 +24,13 @@ case class IndexStats(
   *   {path}/docs      (doc_id, url, doc_len)           — per-doc metadata
   *   {path}/terms     (term_id, term, df, idf)         — term dictionary
   *   {path}/terms_rev (term_rev, term_id)              — suffix-lookup dim
-  *   {path}/postings  (term_id, doc_id, impact)        — uncompressed rows
   *   {path}/blocks    (term_id, block_id, n, docs_enc,
-  *                     impacts_enc, block_max)         — production artifact
+  *                     impacts_enc, block_max)         — the one posting layout
   *   {path}/blocks_meta single [[BlocksMeta]] row
   *   {path}/stats     single IndexStats row
   *   {path}/manifest  one row per committed build unit (BuildSpine)
   *
-  * postings/terms/docs are sorted within files (term_id / term / doc_id)
+  * blocks/terms/docs are sorted within files (term_id / term / doc_id)
   * so the query-side `IN (...)` filters prune parquet row groups via
   * min/max stats — the distributed analog of the reference's hash lookup
   * (/root/reference/src/index/trigram.rs:130-145) — and blocks are
@@ -41,7 +40,17 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
   BuiltIndex.requireLocal(path)
   lazy val docs: DataFrame = read("docs", IndexBuilder.DocsSchema)
   lazy val terms: DataFrame = read("terms", IndexBuilder.TermsSchema)
-  lazy val postings: DataFrame = spark.read.parquet(s"$path/postings")
+
+  /** `(term_id, doc_id, impact)` decoded from the block files, read as
+    * plain parquet: the decode needs no one-task-per-bucket scan. On a
+    * "q8" index the impacts are the quantized ones the block path scores.
+    */
+  lazy val postings: DataFrame = PostingBlocks.decode(blockFiles, impactCodec)
+
+  /** The encoded block rows behind [[postings]], for a reader that joins
+    * before it decodes.
+    */
+  private[graft] lazy val blockFiles: DataFrame = read("blocks", PostingBlocks.Schema)
 
   /** A table of this index, read with the schema its builder writes:
     * inferring it from the file footers would cost a Spark job per table.
@@ -307,9 +316,9 @@ object BuiltIndex {
   */
 object IndexBuilder {
 
-  /** Dictionary size up to which the postings stage ships (term_id, idf)
-    * as a broadcast-hash join — ~16B/entry plus overhead, so 2M terms is
-    * a ~100MB broadcast, inside the standard executor budget. Beyond it
+  /** Dictionary size up to which the blocks encode ships (term_id, idf)
+    * as a broadcast map — ~16B/entry plus overhead, so 2M terms is a
+    * ~100MB broadcast, inside the standard executor budget. Beyond it
     * the idf attach pays one shuffle keyed by the 8-byte term_id.
     */
   val DictBroadcastMaxTerms = 2000000L
@@ -321,7 +330,7 @@ object IndexBuilder {
     * in one narrow stage, allocation-lean (Tokenizer.termFrequencies).
     *
     * doc_len (the doc's kept-token count) rides along on every row, so
-    * the postings stage computes BM25 impacts without re-joining tf to the
+    * the blocks encode computes BM25 impacts without re-joining tf to the
     * docs dimension; parquet RLE makes the repeated column nearly free.
     * Every derived table only needs the 8-byte term_id, so the term
     * STRING is emitted ONCE PER PARTITION (first sight, tracked by an

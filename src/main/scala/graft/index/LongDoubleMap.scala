@@ -4,7 +4,7 @@ package graft.index
   * capacity, primitive arrays — no boxing). Broadcast to the blocks-encode
   * tasks as the (term_id -> idf) dictionary: ~16 bytes/entry at load
   * factor 0.5, so the 2M-term broadcast ceiling is a ~64 MB payload —
-  * the same budget class as the postings stage's broadcast-hash join.
+  * the same budget class as a broadcast-hash join of the dictionary.
   *
   * Build once (driver), read-only afterwards (executor tasks) — safe to
   * share across threads after the broadcast's deserialization barrier.

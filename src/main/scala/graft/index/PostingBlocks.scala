@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** One posting row routed into the block encoder (top-level so Catalyst's
   * generated deserializer can construct it).
@@ -39,6 +40,27 @@ object PostingBlocks {
   /** Default block width: 8192 docIds per block. */
   val DefaultBlockBits = 13
 
+  /** The parquet schema of the `blocks` table, pinned for read-backs. */
+  private[graft] val Schema: StructType = Encoders.product[PostingBlock].schema
+
+  /** Blocks -> one `(term_id, doc_id, impact)` row per posting; any
+    * column a caller joined onto the blocks rides along after `term_id`,
+    * so a join decodes only the blocks it keeps. The decode is a
+    * generator, so a term_id filter pushes below it into the scan; it is
+    * an outer one (every block has n >= 1) because Spark would infer a
+    * non-empty filter for an inner one and decode each block twice.
+    */
+  private[graft] def decode(blocks: DataFrame, codec: String): DataFrame = {
+    val impacts: (Array[Byte], Int) => Array[Double] =
+      if (codec == "q8") PostingCodec.decodeImpactsQ8 else PostingCodec.decodeImpacts
+    val keep = blocks.columns.filterNot(Schema.fieldNames.toSet - "term_id").map(col).toSeq
+    blocks.select(keep ++ Seq(
+        udf(PostingCodec.decodeDocIds _).apply(col("docs_enc"), col("n")).as("docs"),
+        udf(impacts).apply(col("impacts_enc"), col("n")).as("impacts")): _*)
+      .select(keep ++ Seq(posexplode_outer(col("docs")).as(Seq("i", "doc_id")), col("impacts")): _*)
+      .select(keep ++ Seq(col("doc_id"), col("impacts").getItem(col("i")).as("impact")): _*)
+  }
+
   /** Posting rows -> encoded blocks.
     *
     * Shuffle-once streaming design: hash-repartition on the exact group key
@@ -59,8 +81,8 @@ object PostingBlocks {
       .sortWithinPartitions("term_id", "block_id", "doc_id")
       // the serving artifact carries docIds + impacts only: tf is never
       // read at query time (impacts subsume it at fixed k1/b) and lives in
-      // the tf/postings tables for rebuilds — one byte/posting saved in
-      // the shuffle, the files and the hot cache
+      // the tf table for rebuilds — one byte/posting saved in the
+      // shuffle, the files and the hot cache
       .select(col("term_id"), col("doc_id"), col("impact"), col("block_id"))
       .as[PostingRowIn]
       .mapPartitions(it =>
@@ -121,10 +143,10 @@ object PostingBlocks {
     * encoder's bounded per-group arrays.
     *
     * BIT-EXACT by construction: [[Bm25.impact]] is the scalar twin of
-    * the [[Bm25.impactCol]] operand tree the postings stage uses (same
+    * the [[Bm25.impactCol]] operand tree of the [[encode]] path (same
     * operand order, same doubles; equivalence asserted block-for-block in
-    * PostingCodecSpec), and idf values come from the same dictionary
-    * table the postings join reads.
+    * PostingCodecSpec and DecodedPostingsSpec), and idf values come from
+    * the same dictionary table.
     *
     * The repartition hashes on (term_id, doc_id >> blockBits) expressions
     * — nothing extra is shipped for the salt — and within a term the
@@ -155,7 +177,7 @@ object PostingBlocks {
 
   /** Write encoded blocks as a BUCKETED table (bucketBy block_id, files
     * sorted by (term_id, block_id)) registered in the session catalog with
-    * the data under `$outDir/blocks`; returns the block count.
+    * the data under `$outDir/blocks`; returns the block and posting counts.
     *
     * The bucketing is the serving-path contract: a query reads the blocks
     * of its terms (pushed In(term_id) filter; file sort keeps row-group
@@ -170,14 +192,13 @@ object PostingBlocks {
     * by (block_id, term_id)).
     */
   def writeBlocksEncoded(blocks: Dataset[PostingBlock], outDir: String,
-      numBuckets: Int): Long = {
+      numBuckets: Int): (Long, Long) = {
     val spark = blocks.sparkSession
     val table = BuiltIndex.blocksTableName(outDir)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val obs = org.apache.spark.sql.Observation()
     blocks
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
+      .observe(obs, count(lit(1)).as("rows"), sum("n").as("postings"))
       .write.format("parquet")
       // zstd over the snappy default: the already-delta/varint-coded
       // binary payloads still shrink ~20-30%, and the serving scan is
@@ -188,6 +209,6 @@ object PostingBlocks {
       .option("path", s"$outDir/blocks")
       .mode(SaveMode.Overwrite)
       .saveAsTable(table)
-    obs.get("n").asInstanceOf[Long]
+    (obs.get("rows").asInstanceOf[Long], Option(obs.get("postings")).fold(0L)(_.asInstanceOf[Long]))
   }
 }

@@ -3,14 +3,14 @@ package graft.index
 import java.io.ByteArrayOutputStream
 
 /** Byte codecs for posting blocks: sorted docIds as delta + unsigned
-  * varint; tfs as varint; impacts as fixed 8-byte little-endian doubles
+  * varint; impacts as fixed 8-byte little-endian doubles
   * (kept exact so distributed scores equal the oracle bit-for-bit — a
   * production deployment would quantize impacts to 8 bits, trading the
   * exactness gate for ~8x impact compression; see README).
   *
   * The reference compresses posting sets as RoaringBitmaps
   * (/root/reference/src/index/trigram.rs:63-71, persistence at
-  * src/index/persistence.rs:88-94); we need (docId, tf, impact) triples
+  * src/index/persistence.rs:88-94); we need (docId, impact) pairs
   * rather than presence bits, hence delta+varint — the standard inverted-
   * index encoding.
   */
@@ -61,52 +61,17 @@ object PostingCodec {
     out
   }
 
-  def encodeTfs(tfs: Array[Int]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(tfs.length)
-    var i = 0
-    while (i < tfs.length) { writeVarLong(out, tfs(i).toLong); i += 1 }
-    out.toByteArray
-  }
-
-  def decodeTfs(bytes: Array[Byte], n: Int): Array[Int] = {
-    val out = new Array[Int](n)
-    var p = 0
-    var i = 0
-    while (i < n) {
-      var v = 0L; var shift = 0; var b = 0
-      do {
-        b = bytes(p) & 0xff; p += 1
-        v |= (b & 0x7fL) << shift
-        shift += 7
-      } while ((b & 0x80) != 0)
-      out(i) = v.toInt
-      i += 1
-    }
-    out
-  }
-
   def encodeImpacts(a: Array[Double]): Array[Byte] = {
     val out = new Array[Byte](a.length * 8)
     var i = 0
-    while (i < a.length) {
-      var bits = java.lang.Double.doubleToLongBits(a(i))
-      var j = 0
-      while (j < 8) { out(i * 8 + j) = (bits & 0xff).toByte; bits >>>= 8; j += 1 }
-      i += 1
-    }
+    while (i < a.length) { writeDoubleLE(out, i * 8, a(i)); i += 1 }
     out
   }
 
   def decodeImpacts(bytes: Array[Byte], n: Int): Array[Double] = {
     val out = new Array[Double](n)
     var i = 0
-    while (i < n) {
-      var bits = 0L
-      var j = 7
-      while (j >= 0) { bits = (bits << 8) | (bytes(i * 8 + j) & 0xffL); j -= 1 }
-      out(i) = java.lang.Double.longBitsToDouble(bits)
-      i += 1
-    }
+    while (i < n) { out(i) = readDoubleLE(bytes, i * 8); i += 1 }
     out
   }
 

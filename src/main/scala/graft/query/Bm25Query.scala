@@ -59,7 +59,7 @@ case class BlockRowF(term_id: Long, block_id: Long, n: Int,
   * top-k with the frozen tie-break (score DESC, doc_id ASC).
   *
   * Two physical paths, asserted identical in tests:
-  *   - [[searchNaive]]: join/groupBy over uncompressed posting rows — the
+  *   - [[searchNaive]]: join/groupBy over decoded posting rows — the
   *     declarative cross-check path (J1a in SURVEY.md §7.1) and the
   *     all-matches mode ([[scoredNaive]], [[searchBoosted]]);
   *   - the block path: the WAND merge kernel ([[processPartition]]) over
@@ -143,7 +143,7 @@ object Bm25Query {
     val a = analyze(index, query)
     if (a.terms.isEmpty || (conjunctive && !a.allResolved)) return None
     val qids = a.terms.map(_.term_id)
-    // term_id IN (...) prunes parquet row groups (postings sorted by term_id)
+    // term_id IN (...) prunes parquet row groups (blocks sorted by term_id)
     val pf = index.postings.where(col("term_id").isin(qids: _*))
     // Canonical summation order (ascending term_id) so distributed sums
     // are bit-identical to the oracle (SURVEY.md §7.4 score identity).
@@ -247,7 +247,7 @@ object Bm25Query {
     * broadcasts as sorted arrays up to [[MaxBroadcastFilterDocs]] entries
     * (~64 MB at 16 B/entry — the in-degree table is bounded by LINKED-TO
     * docs, far fewer than docs); past the ceiling the query falls back to
-    * [[searchBoosted]] (exact, reads the uncompressed postings). Inside
+    * [[searchBoosted]] (exact, over the decoded postings). Inside
     * the merge every pruning bound scales by max(rank) and each
     * candidate's final score is bm25 x rank(doc) — results equal
     * searchBoosted bit-for-bit (Bm25EngineSpec/DepsSpec).

@@ -3,7 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.index.BuiltIndex
+import graft.index.{BuiltIndex, PostingBlocks}
 import graft.tokenize.Tokenizer
 
 /** Regex search with index acceleration — the Spark re-expression of the
@@ -362,6 +362,9 @@ object RegexQuery {
   /** Candidate doc_ids for partially-bounded literals: each literal maps
     * to the dictionary terms it can live in (exact / prefix / suffix /
     * infix), then one postings pass keeps docs covering ALL literals.
+    * The pass joins the term ids onto the encoded blocks before it
+    * decodes them: the ids come from a join, so no `In(term_id)` reaches
+    * the scan, and decoding first would decode every block.
     *
     * Lookup shapes (the dictionary files are SORTED, so range predicates
     * prune parquet row groups — a bare LIKE pushes nothing and pays a
@@ -382,8 +385,8 @@ object RegexQuery {
     val reqTerms = lits.zipWithIndex.map { case (l, i) =>
       termIdsForLiteral(index, l).withColumn("req", lit(i))
     }.reduce(_ unionAll _)
-    index.postings
-      .join(reqTerms, Seq("term_id"))
+    PostingBlocks.decode(index.blockFiles.join(reqTerms, Seq("term_id")),
+        index.impactCodec)
       .groupBy("doc_id")
       .agg(countDistinct(col("req")).as("nreq"))
       .where(col("nreq") === lits.size)

@@ -135,7 +135,7 @@ object IncrementalIndex {
   }
 
   /** Compact the streamed state into a full SERVING index (terms,
-    * postings, compressed bucketed blocks, stats) at `outDir` — the
+    * compressed bucketed blocks, stats) at `outDir` — the
     * analog of the reference's periodic full save after watcher updates
     * (save_on_watcher_update, config.rs:150): the stream keeps the
     * latest-wins tf/docs deltas cheap to append; compaction turns them

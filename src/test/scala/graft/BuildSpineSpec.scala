@@ -35,6 +35,10 @@ class BuildSpineSpec extends AnyFunSuite {
     spark.read.parquet(s"$dir/$table").select(cols.map(col): _*)
       .collect().map(_.toString).sorted.toSeq
 
+  /** The postings decoded from the blocks of the index at `dir`. */
+  private def postingsOf(dir: String): Seq[String] =
+    IndexBuilder.load(spark, dir).postings.collect().map(_.toString).sorted.toSeq
+
   private def blocksBytes(dir: String) =
     spark.read.parquet(s"$dir/blocks").collect().map { r =>
       (r.getAs[Long]("term_id"), r.getAs[Long]("block_id")) ->
@@ -79,21 +83,22 @@ class BuildSpineSpec extends AnyFunSuite {
         canon(batchDir, "docs", "doc_id", "url", "doc_len"), d)
       assert(canon(d, "terms", "term_id", "term", "df", "idf") ==
         canon(batchDir, "terms", "term_id", "term", "df", "idf"), d)
-      assert(canon(d, "postings", "term_id", "doc_id", "impact") ==
-        canon(batchDir, "postings", "term_id", "doc_id", "impact"), d)
+      assert(postingsOf(d) == postingsOf(batchDir), d)
       assert(IndexBuilder.load(spark, d).stats == batch.stats, d)
       assert(blocksBytes(d) == want, d)
     }
 
     // one manifest row per stage unit; with blockBits 6 the 300 docs of
     // three slices encode as [0,128) [128,256) [256,300)
-    val spine = Set("docs", "terms_part", "terms", "postings", "blocks_enc", "blocks", "stats")
+    val spine = Set("docs", "terms_part", "terms", "blocks_enc", "blocks", "stats")
       .map(_ -> 0)
     assert(units(batchDir) == spine + ("tf" -> 0))
     assert(units(fromTf) == spine)
     assert(units(ck1) == spine ++ Set("tf", "config").map(_ -> 0))
     assert(units(ck3) == spine + ("config" -> 0) ++
-      Seq("tf", "terms_part", "postings", "blocks_enc").flatMap(s => (0 until 3).map(s -> _)))
+      Seq("tf", "terms_part", "blocks_enc").flatMap(s => (0 until 3).map(s -> _)))
+    // blocks are the one posting layout
+    Seq(batchDir, fromTf, ck1, ck3).foreach(d => assert(!Files.exists(Paths.get(d, "postings")), d))
   }
 
   test("a batch index keeps its pages and today's table columns") {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.checkpoint.CheckpointedBuild
 import graft.corpus.PagesCorpus
+import graft.index.BuiltIndex
 import graft.query.Bm25Query
 
 /** Kill-and-resume fixture (FIXTURES.md §4): interrupt the build after k
@@ -20,6 +21,10 @@ class CheckpointSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private case class Boom() extends RuntimeException("injected kill")
+
+  /** The index's postings, decoded from its blocks, in a canonical order. */
+  private def postingsOf(ix: BuiltIndex): Seq[String] =
+    ix.postings.collect().map(_.toString).sorted.toSeq
 
   test("kill after 3 tf slices, resume, index content-identical") {
     val dirA = Files.createTempDirectory("graft-ckpt-a").toString
@@ -67,8 +72,7 @@ class CheckpointSpec extends AnyFunSuite {
       canon(dirB, "docs", Seq("doc_id", "url", "doc_len")))
     assert(canon(dirA, "terms", Seq("term_id", "term", "df", "idf")) ==
       canon(dirB, "terms", Seq("term_id", "term", "df", "idf")))
-    assert(canon(dirA, "postings", Seq("term_id", "doc_id", "impact")) ==
-      canon(dirB, "postings", Seq("term_id", "doc_id", "impact")))
+    assert(postingsOf(idxA) == postingsOf(idxB))
     assert(canon(dirA, "blocks", Seq("term_id", "block_id", "n", "block_max")) ==
       canon(dirB, "blocks", Seq("term_id", "block_id", "n", "block_max")))
     assert(idxA.stats == idxB.stats)
@@ -119,8 +123,7 @@ class CheckpointSpec extends AnyFunSuite {
       canon(dirC, "docs", Seq("doc_id", "url", "doc_len")))
     assert(canon(dirA, "terms", Seq("term_id", "term", "df", "idf")) ==
       canon(dirC, "terms", Seq("term_id", "term", "df", "idf")))
-    assert(canon(dirA, "postings", Seq("term_id", "doc_id", "impact")) ==
-      canon(dirC, "postings", Seq("term_id", "doc_id", "impact")))
+    assert(postingsOf(idxA) == postingsOf(idxC))
     assert(idxA.stats == idxC.stats)
     // the mutated content is actually served
     val hits = Bm25Query.searchBlocks(idxA, "resumemutation", 10).collect()
@@ -145,13 +148,16 @@ class CheckpointSpec extends AnyFunSuite {
       .collect().map(r =>
         (r.getAs[String]("stage"), r.getAs[Int]("part")) ->
           r.getAs[Long]("committed_at")).toMap
-    // blocks rebuilt; tf/docs/terms/postings untouched
+    // blocks rebuilt, and stats, which counts their postings; tf/docs/terms
+    // untouched
     assert(after(("blocks", 0)) != before(("blocks", 0)),
       "blocks must be rebuilt under the new blockBits")
+    assert(after(("stats", 0)) != before(("stats", 0)), "stats reads blocks")
     (0 until 4).foreach(p => assert(after(("tf", p)) == before(("tf", p)),
       s"tf slice $p must not be recomputed on a blockBits-only change"))
-    Seq("docs", "terms", "postings", "stats").foreach(st =>
+    Seq("docs", "terms").foreach(st =>
       assert(after((st, 0)) == before((st, 0)), s"$st must not be recomputed"))
+    assert(idxA.stats == idxC.stats)
     // config_reconcile row records the invalidation
     val cr = CheckpointedBuild.manifest(spark, dirA)
       .where(col("stage") === "config_reconcile").collect()
@@ -190,7 +196,7 @@ class CheckpointSpec extends AnyFunSuite {
     assert(before.keySet == Set(0, 1))
     // simulate a bm25 parameter change: rewrite the persisted PRIOR
     // fingerprint (K1/B are compile-time constants) — the reconcile then
-    // invalidates terms/postings/blocks but must keep the partials, data
+    // invalidates terms/blocks/stats but must keep the partials, data
     // AND lineage rows
     val cfg = spark.read.parquet(s"$dir/manifest/config_0")
       .as[graft.checkpoint.ManifestRow].head()
@@ -213,51 +219,6 @@ class CheckpointSpec extends AnyFunSuite {
     val cr = CheckpointedBuild.manifest(spark, dir)
       .where(col("stage") === "config_reconcile").collect()
     assert(cr.length == 1 && cr.head.getAs[String]("lineage").contains("bm25"))
-  }
-
-  test("kill mid-postings: committed postings slices are not recomputed") {
-    val dirA = Files.createTempDirectory("graft-ckpt-post-a").toString
-    val dirB = Files.createTempDirectory("graft-ckpt-post-b").toString
-    val raw = PagesCorpus.pages(spark, n, parts = 4).toDF()
-    val idxB = CheckpointedBuild.build(spark, raw, dirB, slices = 6)
-
-    // die after the 3rd committed postings slice
-    var committed = 0
-    intercept[Boom] {
-      CheckpointedBuild.build(spark, raw, dirA, slices = 6,
-        onUnitCommitted = (stage, _) => {
-          if (stage == "postings") {
-            committed += 1; if (committed == 3) throw Boom()
-          }
-        })
-    }
-    assert((0 until 3).forall(p =>
-      CheckpointedBuild.isCommitted(s"$dirA/postings/slice=$p")))
-    assert((3 until 6).forall(p =>
-      !CheckpointedBuild.isCommitted(s"$dirA/postings/slice=$p")))
-    val before = CheckpointedBuild.manifest(spark, dirA)
-      .where(col("stage") === "postings")
-      .collect().map(r => r.getAs[Int]("part") -> r.getAs[Long]("committed_at")).toMap
-
-    val idxA = CheckpointedBuild.build(spark, raw, dirA, slices = 6)
-    val after = CheckpointedBuild.manifest(spark, dirA)
-      .where(col("stage") === "postings")
-      .collect().map(r => r.getAs[Int]("part") -> r.getAs[Long]("committed_at")).toMap
-    assert(after.size == 6)
-    (0 until 3).foreach(p =>
-      assert(after(p) == before(p), s"postings slice $p recomputed"))
-
-    def canon(path: String, table: String, cols: Seq[String]): Seq[String] =
-      spark.read.parquet(s"$path/$table").select(cols.map(col): _*)
-        .collect().map(_.toString).sorted.toSeq
-    assert(canon(dirA, "postings", Seq("term_id", "doc_id", "impact")) ==
-      canon(dirB, "postings", Seq("term_id", "doc_id", "impact")))
-    assert(canon(dirA, "blocks", Seq("term_id", "block_id", "n", "block_max")) ==
-      canon(dirB, "blocks", Seq("term_id", "block_id", "n", "block_max")))
-    assert(idxA.stats == idxB.stats)
-    val q = PagesCorpus.vocab(2)
-    assert(Bm25Query.searchBlocks(idxA, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq ==
-      Bm25Query.searchBlocks(idxB, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq)
   }
 
   test("kill mid-blocks: committed blocks_enc units are not recomputed") {
@@ -307,6 +268,7 @@ class CheckpointSpec extends AnyFunSuite {
             r.getAs[Double]("block_max")))
       }.toMap
     assert(blocksBytes(dirA) == blocksBytes(dirB))
+    assert(postingsOf(idxA) == postingsOf(idxB))
     assert(idxA.stats == idxB.stats)
     val q = PagesCorpus.vocab(2)
     assert(Bm25Query.searchBlocks(idxA, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq ==
@@ -405,7 +367,7 @@ class CheckpointSpec extends AnyFunSuite {
     val m = CheckpointedBuild.manifest(spark, dir).collect()
     val stages = m.map(_.getAs[String]("stage")).toSet
     assert(stages == Set("config", "tf", "docs", "terms_part", "terms",
-      "postings", "blocks_enc", "blocks", "stats"))
+      "blocks_enc", "blocks", "stats"))
     m.foreach { r =>
       assert(r.getAs[Long]("rows") >= 0)
       assert(r.getAs[String]("lineage").nonEmpty)

@@ -1,0 +1,60 @@
+package graft
+
+import java.nio.file.Files
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
+
+import graft.checkpoint.CheckpointedBuild
+import graft.corpus.PagesCorpus
+import graft.index.{Bm25, BuiltIndex, IndexBuilder}
+
+/** `BuiltIndex.postings` decodes the blocks in place. Its f64 impacts
+  * equal the BM25 SQL expression over tf, docs and terms bit for bit:
+  * the cross-check of the encode's scalar impact against the SQL
+  * expression. A term_id predicate on the view reaches the blocks scan.
+  */
+class DecodedPostingsSpec extends AnyFunSuite {
+
+  private lazy val spark = TestSpark.spark
+  private lazy val raw = PagesCorpus.pages(spark, 300, parts = 4).toDF()
+
+  private def tmp(name: String): String =
+    Files.createTempDirectory(s"graft-decoded-$name").toString
+
+  private lazy val batch =
+    IndexBuilder.build(spark, IndexBuilder.extractPages(raw), tmp("batch"), blockBits = 6)
+
+  /** (term_id, doc_id, impact bits) of every posting. */
+  private def bits(rows: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+    rows.select("term_id", "doc_id", "impact").collect().map(r =>
+      (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
+
+  private def sqlImpacts(ix: BuiltIndex) =
+    ix.tfRows.select("term_id", "doc_id", "tf")
+      .join(ix.docs.select("doc_id", "doc_len"), "doc_id")
+      .join(ix.terms.select("term_id", "idf"), "term_id")
+      .select(col("term_id"), col("doc_id"), Bm25.impactCol(col("tf").cast("double"),
+        col("doc_len").cast("double"), ix.stats.avgdl, col("idf")).as("impact"))
+
+  test("decoded f64 impacts equal Bm25.impactCol over tf, docs and terms, " +
+      "on a batch and a 3-slice checkpointed build") {
+    val ck3 = CheckpointedBuild.build(spark, raw, tmp("ck3"), slices = 3, blockBits = 6)
+    Seq(batch, ck3).foreach { ix =>
+      assert(ix.impactCodec == "f64")
+      val got = bits(ix.postings)
+      assert(got.nonEmpty)
+      assert(got == bits(sqlImpacts(ix)), ix.path)
+      assert(got.size.toLong == ix.stats.num_postings, ix.path)
+    }
+  }
+
+  test("a term_id predicate on the decoded view is pushed into the blocks scan") {
+    val ids = Seq(PagesCorpus.vocab(3), PagesCorpus.vocab(7)).map(Bm25.termId)
+    val q = batch.postings.where(col("term_id").isin(ids: _*))
+    val plan = q.queryExecution.executedPlan.toString
+    assert("""PushedFilters: \[[^\n]*In\(term_id, """.r.findFirstIn(plan).nonEmpty, plan)
+    assert(!plan.contains("Exchange"), plan)
+    assert(q.collect().map(_.getLong(0)).toSet == ids.toSet)
+  }
+}

@@ -41,8 +41,8 @@ object PlanDump {
       println("### PLAN 5: terms dictionary lookup (pushed In(term), sorted row groups)")
       idx.terms.where(col("term").isin(PagesCorpus.vocab(3), PagesCorpus.vocab(7)))
         .explain("formatted")
-      println("### PLAN 6: posting-block encode (one Tungsten shuffle + local sort + streaming mapPartitions)")
-      graft.index.PostingBlocks.encode(idx.postings).explain("formatted")
+      println("### PLAN 6: decoded posting reader (pushed In(term_id) on the plain blocks scan; the decode is a Generate, no Exchange)")
+      idx.postings.where(col("term_id").isin(qids: _*)).explain("formatted")
       println("### PLAN 7: line-serving content scan (pushed In(doc_id) — reads ONLY the top-k docs)")
       val pages = spark.read.parquet(s"$dir/pages")
       val topIds = Bm25Query.searchBlocks(idx, PagesCorpus.vocab(3), 5)
@@ -90,7 +90,7 @@ object PlanDump {
       graft.query.RegexQuery.termIdsForLiteral(idx,
         graft.query.RegexQuery.Lit("ecto", leftBound = false, rightBound = false))
         .explain("formatted")
-      println("### PLAN 15: batched-regex SHARED postings pass (ONE pushed In(term_id) scan for every ranked+accelerated query; broadcast query mapping; one agg = conjunctive merge + canonical ranked score fold; per-query row_number cap)")
+      println("### PLAN 15: batched-regex SHARED postings pass (ONE pushed In(term_id) blocks scan decoded in place for every ranked+accelerated query; broadcast query mapping; one agg = conjunctive merge + canonical ranked score fold; per-query row_number cap)")
       val bIds = Seq(PagesCorpus.vocab(3), PagesCorpus.vocab(7),
         PagesCorpus.vocab(11)).map(graft.index.Bm25.termId)
       graft.query.RegexQuery.batchCandidatesDf(idx,

@@ -30,12 +30,6 @@ class PostingCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("tf varint round-trip") {
-    val tfs = Array(1, 2, 127, 128, 300, 100000, Int.MaxValue)
-    assert(PostingCodec.decodeTfs(PostingCodec.encodeTfs(tfs), tfs.length)
-      .sameElements(tfs))
-  }
-
   test("impacts double round-trip is bit-exact") {
     val xs = Array(0.0, -0.0, 1.5, math.Pi, Double.MinPositiveValue,
       1.7976931348623157e308, math.log(2.2))

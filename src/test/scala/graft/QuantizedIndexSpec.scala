@@ -74,6 +74,17 @@ class QuantizedIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("searchNaive scores the quantized impacts: it equals searchBlocks bit for bit") {
+    def bits(hits: Array[graft.query.Hit]) =
+      hits.map(h => (h.doc_id, java.lang.Double.doubleToLongBits(h.score), h.rank)).toVector
+    for ((q, conj) <- queries) {
+      val blocks = bits(Bm25Query.searchBlocks(quant, q, 20, conj).collect())
+      assert(blocks.nonEmpty, s"q='$q'")
+      assert(bits(Bm25Query.searchNaive(quant, q, 20, conj).collect()) == blocks,
+        s"q='$q' conj=$conj")
+    }
+  }
+
   test("quantized scores dominate exact scores with bounded overshoot") {
     for ((q, conj) <- queries) {
       val e = Bm25Query.searchBlocks(exact, q, 20, conj).collect()
