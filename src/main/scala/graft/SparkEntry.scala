@@ -301,7 +301,8 @@ object SparkEntry {
     }),
 
     // same filtered query through the PRODUCTION block path: the allowed
-    // doc set is broadcast into the WAND merge (no naive fallback)
+    // doc set ships per blocks bucket into the WAND merge (no naive
+    // fallback)
     "p5_filtered_blocks" -> ((s, dir) => {
       val allowed = documents(s, dir).where(col("lang") === "en").select("doc_id")
       Bm25Query.searchBlocksFiltered(indexFor(s, dir), "data join", 10,
@@ -309,13 +310,12 @@ object SparkEntry {
         .select(col("doc_id"), round(col("score"), 4).as("score"))
     }),
 
-    // DENSE filter past the broadcast ceiling (maxBroadcastDocs=0 defeats
-    // both broadcasts): per-block filter shards bucket-joined with the
-    // blocks — the query stays on the block path (round 4)
+    // a DENSE filter on the same block path: the allowed set has no size
+    // ceiling, each bucket receives the allowed docs of its own blocks
     "p5_dense_filter_blocks" -> ((s, dir) => {
       val allowed = documents(s, dir).where(col("lang") === "en").select("doc_id")
       Bm25Query.searchBlocksFiltered(indexFor(s, dir), "spark merge", 10,
-        conjunctive = true, allowed, maxBroadcastDocs = 0L).toDF()
+        conjunctive = true, allowed).toDF()
         .select(col("doc_id"), round(col("score"), 4).as("score"))
     }),
 
@@ -533,7 +533,8 @@ object SparkEntry {
         .select(col("doc_id"), round(col("score"), 4).as("score"))),
 
     // same boosted query through the PRODUCTION block path (rank set
-    // broadcast into the WAND merge, bounds scaled by max rank)
+    // shipped per blocks bucket into the WAND merge, bounds scaled by the
+    // bucket's max rank)
     "k3_boosted_blocks" -> ((s, dir) =>
       Bm25Query.searchBlocksBoosted(indexFor(s, dir), "data join", 10,
         Deps.staticRank(gateEdges(s, dir))).toDF()

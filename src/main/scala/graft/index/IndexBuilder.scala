@@ -99,6 +99,20 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     */
   lazy val blocksMeta: Option[(Int, Int)] = meta._1
 
+  /** Block width of a legacy index, which records none, found from one
+    * block past block 0: the shift that maps its first doc id to its
+    * block id (one Spark job). When every posting lies in block 0, a
+    * shift of 63 maps every doc id there too.
+    */
+  private[graft] lazy val legacyBlockBits: Int =
+    blockFiles.where(col("block_id") > 0).select("block_id", "docs_enc").head(1)
+      .headOption.fold(63) { r =>
+        val block = r.getLong(0)
+        val doc = PostingCodec.decodeDocIds(r.getAs[Array[Byte]](1), 1)(0)
+        (0 until 63).find(s => (doc >> s) == block).getOrElse(throw
+          new IllegalStateException(s"block $block cannot hold doc $doc in $path"))
+      }
+
   /** Impact encoding of the blocks table: "f64" (bit-exact scores) or
     * "q8" (8-bit quantized, ~8x smaller impact payloads).
     */
@@ -149,12 +163,13 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     * MEMORY_AND_DISK with its lineage kept, so a lost executor recomputes
     * it from the parquet files. With the partitions in memory, every
     * batchable chunk of `Bm25Query.searchBlocksBatchEx` — and so
-    * `searchBlocks` (plain or url-glob filtered), `searchBlocksBoosted`
-    * and `searchWithLines`, each a batch of one — runs as ONE Spark job
-    * with no SQL planning. `searchNaive`, `searchBlocksFiltered` with an
-    * arbitrary doc set, filters or rank sets past the broadcast ceiling
-    * and short queries keep the Dataset path, which reads blocks from
-    * parquet. If some partition does not fit in memory, or is later
+    * `searchBlocks` (plain or url-glob filtered), `searchBlocksBoosted`,
+    * `searchBlocksFiltered` and `searchWithLines`, each a batch of one —
+    * runs as ONE Spark job with no SQL planning; a doc set or rank set
+    * joins it as a side input partitioned like the buckets, whose shuffle
+    * is a stage of that job. `searchNaive` and short queries keep the
+    * Dataset path, which reads blocks from parquet. If some partition
+    * does not fit in memory, or is later
     * evicted to disk, queries take the Dataset path too, since a spilled
     * partition is read back whole per query. An
     * unbucketed index caches the `blocks` table instead of the partitions.

@@ -2,7 +2,7 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -41,14 +41,6 @@ case class BatchQuery(
 case class BlockRow(term_id: Long, block_id: Long, n: Int,
     docs_enc: Array[Byte], impacts_enc: Array[Byte], block_max: Double)
 
-/** Block row joined with its co-located dense-filter shard (the sorted
-  * allowed-doc array of its docId range) — the dense-filter path's merge
-  * input (see Bm25Query.scoredBlocksSharded).
-  */
-case class BlockRowF(term_id: Long, block_id: Long, n: Int,
-    docs_enc: Array[Byte], impacts_enc: Array[Byte], block_max: Double,
-    allowed: Array[Long])
-
 /** BM25 top-k query engine over a [[BuiltIndex]].
   *
   * Query lifecycle mirrors the reference (SURVEY.md §3.1): tokenize + term
@@ -69,9 +61,9 @@ case class BlockRowF(term_id: Long, block_id: Long, n: Int,
   *     [[searchWithLines]]) is a batch of one through the planner of
   *     [[searchBlocksBatchEx]], which runs each chunk as ONE Spark job:
   *     on the resident partitions of a hot index ([[HotServing]]) or,
-  *     otherwise, as one Dataset job over a pruned blocks scan. Only a
-  *     doc filter past the broadcast ceiling takes its own path
-  *     ([[scoredBlocksSharded]]).
+  *     otherwise, as one job over a pruned blocks scan. Doc filters and
+  *     the rank set reach either as a [[SideInput]] partitioned like the
+  *     blocks buckets, whatever their size.
   */
 object Bm25Query {
 
@@ -165,13 +157,9 @@ object Bm25Query {
   private def restrict(index: BuiltIndex, scored: DataFrame,
       include: Seq[String], exclude: Seq[String]): DataFrame =
     if (include.isEmpty && exclude.isEmpty) scored
-    else restrictDf(scored,
+    else scored.join(
       index.docs.where(PathFilter.predicate(col("url"), include, exclude))
-        .select("doc_id"))
-
-  /** Same restriction from an arbitrary allowed-doc set (doc_id column). */
-  private def restrictDf(scored: DataFrame, allowedDocs: DataFrame): DataFrame =
-    scored.join(allowedDocs.select("doc_id"), Seq("doc_id"), "left_semi")
+        .select("doc_id"), Seq("doc_id"), "left_semi")
 
   def searchNaive(index: BuiltIndex, query: String, k: Int,
       conjunctive: Boolean = true,
@@ -221,10 +209,8 @@ object Bm25Query {
     * (engine.rs:2003-2007): final = bm25 * static_rank, docs absent from
     * `rank(doc_id, static_rank)` default to 1.0. Optional url globs
     * restrict the candidate set BEFORE the top-k (same semantics as the
-    * filtered paths) — this is the exact composed filtered+boosted
-    * fallback for rank/filter sets too large to broadcast: no collect of
-    * either side, both the boost join and the glob semi-join stay
-    * distributed.
+    * filtered paths). The declarative reference the block path's boosted
+    * and filtered results are checked against.
     */
   def searchBoosted(index: BuiltIndex, query: String, k: Int,
       rank: DataFrame, conjunctive: Boolean = true,
@@ -242,46 +228,18 @@ object Bm25Query {
 
   /** K3 on the PRODUCTION path (round 4): boosted search through the
     * compressed blocks, a batch of one through [[searchBlocksBatchEx]].
-    * The rank set `(doc_id, static_rank)` (distinct doc_ids, values >= 0;
-    * docs absent default 1.0 like the declarative path) collects and
-    * broadcasts as sorted arrays up to [[MaxBroadcastFilterDocs]] entries
-    * (~64 MB at 16 B/entry — the in-degree table is bounded by LINKED-TO
-    * docs, far fewer than docs); past the ceiling the query falls back to
-    * [[searchBoosted]] (exact, over the decoded postings). Inside
-    * the merge every pruning bound scales by max(rank) and each
-    * candidate's final score is bm25 x rank(doc) — results equal
-    * searchBoosted bit-for-bit (Bm25EngineSpec/DepsSpec).
+    * The rank set `(doc_id, static_rank)` (distinct doc_ids, values >= 0,
+    * checked in every bucket; docs absent default 1.0 like the
+    * declarative path) ships as a [[SideInput]]: each bucket gets the
+    * ranks of its own docs, of any total size. Inside the merge every
+    * pruning bound scales by the bucket's max(rank) and each candidate's
+    * final score is bm25 x rank(doc) — results equal searchBoosted
+    * bit-for-bit (Bm25EngineSpec/DepsSpec).
     */
   def searchBlocksBoosted(index: BuiltIndex, query: String, k: Int,
       rank: DataFrame, conjunctive: Boolean = true): Dataset[Hit] =
     hitsDataset(index, searchBlocksBatchEx(index,
       Seq(BatchQuery(query, conjunctive, boosted = true)), k, Some(rank)).head)
-
-  /** The rank set as sorted (doc_id, static_rank) arrays plus the largest
-    * rank (>= 1), or None past `maxDocs` entries. A duplicated doc_id
-    * fails loudly, like a negative rank: the merge's binarySearch would
-    * pick an arbitrary one of its boost values — silently wrong scores.
-    */
-  private def collectBoost(rank: DataFrame,
-      maxDocs: Long): Option[(Array[Long], Array[Double], Double)] = {
-    val spark = rank.sparkSession
-    import spark.implicits._
-    val lim = math.min(maxDocs + 1, Int.MaxValue.toLong - 1).toInt
-    val rows = rank
-      .select(col("doc_id").cast("long"), col("static_rank").cast("double"))
-      .limit(lim).as[(Long, Double)].collect()
-    if (rows.length > maxDocs) return None
-    val sorted = rows.sortBy(_._1)
-    val ids = sorted.map(_._1)
-    val vals = sorted.map(_._2)
-    var i = 1
-    while (i < ids.length) {
-      require(ids(i) != ids(i - 1), s"rank set has a duplicate doc_id ${ids(i)}")
-      i += 1
-    }
-    require(vals.forall(_ >= 0.0), "static_rank must be non-negative")
-    Some((ids, vals, if (vals.isEmpty) 1.0 else math.max(1.0, vals.max)))
-  }
 
   /** Per-match line materialization over the FINAL top-k docs only (late
     * materialization, the reference's fast-mode shape: rank first, read
@@ -352,45 +310,25 @@ object Bm25Query {
   // Block path: compressed postings + block-max pruning (production)
   // ------------------------------------------------------------------
 
-  /** Doc-filter pushed into the block merge: a SORTED doc_id set shipped
-    * to the merge tasks, `isAllow` selecting allow-list vs deny-list
-    * semantics. Docs failing the filter are dropped BEFORE they can enter
-    * a per-partition heap or move its threshold — so the filtered top-k
-    * stays exact.
+  /** Merge one bucket's block groups for one query. Rows arrive sorted
+    * by (block_id, term_id). `allow`, when not null, is the sorted array
+    * of the docs the query may return among this bucket's docs: a
+    * filtered-out doc never reaches the heap, so heap thresholds are
+    * thresholds over the FILTERED doc set (exact).
     */
-  private[graft] case class DocFilter(sorted: Array[Long], isAllow: Boolean)
-
-  /** Test-friendly unfiltered entry (WandMergeSpec drives the kernel
-    * directly).
-    */
-  private[graft] def processPartition(it: Iterator[BlockRow], nTerms: Int,
-      k: Int, conjunctive: Boolean): Iterator[(Long, Double)] =
-    processPartition(it.map(r => (r, null: Array[Long])), nTerms, k,
-      conjunctive, Double.NegativeInfinity, q8 = false)
-
-  /** Merge one partition's block groups. Rows arrive sorted by
-    * (block_id, term_id) and PAIRED with their group's doc-filter array
-    * (null = unfiltered; identical within a block group — either one
-    * broadcast set for the whole query, or the block's co-located filter
-    * shard on the dense path). A filtered-out doc never reaches a heap,
-    * so heap thresholds are thresholds over the FILTERED doc set (exact).
-    */
-  private[graft] def processPartition(it: Iterator[(BlockRow, Array[Long])],
+  private[graft] def processPartition(it: Iterator[BlockRow],
       nTerms: Int, k: Int,
       conjunctive: Boolean,
-      initThreshold: Double,
-      q8: Boolean,
-      filterIsAllow: Boolean = true,
+      q8: Boolean = false,
+      allow: Array[Long] = null,
       boostIds: Array[Long] = null,
       boostVals: Array[Double] = null,
       maxBoost: Double = 1.0): Iterator[(Long, Double)] = {
     @inline def decodeImp(bytes: Array[Byte], n: Int): Array[Double] =
       if (q8) PostingCodec.decodeImpactsQ8(bytes, n)
       else PostingCodec.decodeImpacts(bytes, n)
-    var curFilter: Array[Long] = null
     @inline def allowed(doc: Long): Boolean =
-      curFilter == null ||
-      (java.util.Arrays.binarySearch(curFilter, doc) >= 0) == filterIsAllow
+      allow == null || java.util.Arrays.binarySearch(allow, doc) >= 0
     // K3 static-rank boost pushed into the merge: final = bm25 * rank(doc)
     // (docs absent from the rank set default 1.0, like the declarative
     // path); every pruning bound scales by maxBoost (>= any per-doc rank),
@@ -425,12 +363,11 @@ object Bm25Query {
       val present = group.size
       if (conjunctive && present < nTerms) { group.clear(); return }
       // block-max WAND prune: upper bound of any doc in this range,
-      // checked against the bootstrap threshold (strict: docs below it
-      // cannot enter the exact top-k) and the live heap threshold
+      // checked against the live heap threshold (strict: docs below it
+      // cannot enter the exact top-k)
       var upper = 0.0
       var gi = 0
       while (gi < group.size) { upper += group(gi).block_max; gi += 1 }
-      if (upper * maxBoost < initThreshold) { group.clear(); return }
       if (heap.size == k && upper * maxBoost < threshold) { group.clear(); return }
       // decode; rows are term_id-ascending => per-doc sums accumulate in
       // canonical term order (bit-identical to the oracle)
@@ -524,9 +461,7 @@ object Bm25Query {
         // threshold — skip them without decoding. Impacts decode lazily,
         // only when one of a list's docs is actually evaluated; a doc is
         // skipped only when its bound is STRICTLY below the threshold,
-        // so tie-breaks (and therefore results) stay bit-exact. The
-        // threshold also folds in the disjunctive bootstrap lower bound
-        // (a doc strictly below it cannot be in the final top-k).
+        // so tie-breaks (and therefore results) stay bit-exact.
         val docArr = new Array[Array[Long]](present)
         gi = 0
         while (gi < present) {
@@ -560,8 +495,7 @@ object Bm25Query {
           }
           if (na == 0) running = false
           else {
-            val hth = threshold
-            val th = if (initThreshold > hth) initThreshold else hth
+            val th = threshold
             var ub = 0.0
             var p = 0
             while (p < na && ub * maxBoost < th) {
@@ -612,10 +546,8 @@ object Bm25Query {
       private var out: Iterator[(Long, Double)] = null
       private def run(): Unit = {
         while (it.hasNext) {
-          val (r, f) = it.next()
-          if (r.block_id != curBlock) {
-            flush(); curBlock = r.block_id; curFilter = f
-          }
+          val r = it.next()
+          if (r.block_id != curBlock) { flush(); curBlock = r.block_id }
           group += r
         }
         flush()
@@ -625,15 +557,6 @@ object Bm25Query {
       def next(): (Long, Double) = { if (out == null) run(); out.next() }
     }
   }
-
-  /** Max doc_ids shipped to the merge as a broadcast filter set (sorted
-    * longs: 8 bytes/doc, so the default is a ~32 MB broadcast — executor
-    * plural-MBs, the standard broadcast-join budget). When BOTH the allow
-    * set and its complement exceed this, the query takes the co-located
-    * filter shards of [[scoredBlocksSharded]] (or, on the legacy
-    * unbucketed layout, the declarative path) — exact, pays a shuffle.
-    */
-  val MaxBroadcastFilterDocs: Long = 4000000L
 
   /** Production top-k search, optionally restricted by url globs: a batch
     * of one through [[searchBlocksBatchEx]]. On a hot index
@@ -649,41 +572,17 @@ object Bm25Query {
   /** Block-path search restricted to an arbitrary allowed-doc set. The
     * filter applies BEFORE top-k pruning (docs outside the set never enter
     * a partition heap or move its threshold), so results are the exact
-    * top-k of the allowed subset. The set ships as a broadcast of whichever
-    * side is smaller — the allow list or its complement — and the query
-    * runs as a batch of one on the Dataset runner (a hot index's partitions
-    * resolve only url globs); if both sides exceed `maxBroadcastDocs` the
-    * query takes [[scoredBlocksSharded]].
+    * top-k of the allowed subset. The set ships as a [[SideInput]], each
+    * bucket receiving the allowed docs of its own docId ranges, so it has
+    * no size ceiling; the query runs as a batch of one, on the resident
+    * partitions of a hot index.
     */
   def searchBlocksFiltered(index: BuiltIndex, query: String, k: Int,
-      conjunctive: Boolean, allowedDocs: DataFrame,
-      maxBroadcastDocs: Long = MaxBroadcastFilterDocs): Dataset[Hit] = {
-    val kk = clampK(k)
-    if (isShortQuery(query))
-      return allDocsFallback(index, kk, Nil, Nil, allowedDocs)
-    resolveDocFilter(index, allowedDocs, maxBroadcastDocs) match {
-      case Some(f) =>
-        val planned = plan(index, BatchQuery(query, conjunctive), Some(f)).toSeq
-        hitsDataset(index, runPlanned(index, None, planned, kk, None).flatten)
-      case None => filteredUnbroadcast(index, query, kk, conjunctive, allowedDocs)
-    }
-  }
-
-  /** Exact filtered top-k for a doc set too large for either broadcast
-    * side: co-located filter shards on a bucketed index, the declarative
-    * path on the legacy unbucketed layout.
-    */
-  private def filteredUnbroadcast(index: BuiltIndex, query: String, kk: Int,
       conjunctive: Boolean, allowedDocs: DataFrame): Dataset[Hit] = {
-    val allowedIds = allowedDocs.select(col("doc_id").cast("long")).distinct()
-    if (index.blocksBucketed) {
-      val (scoredOpt, cleanup) =
-        scoredBlocksSharded(index, query, kk, conjunctive, allowedIds)
-      try scoredOpt.map(finish(index, _, kk)).getOrElse(hitsDataset(index, Nil))
-      finally cleanup()
-    } else scoredNaive(index, query, conjunctive)
-      .map(s => finish(index, restrictDf(s, allowedIds), kk))
-      .getOrElse(hitsDataset(index, Nil))
+    val kk = clampK(k)
+    if (isShortQuery(query)) allDocsFallback(index, kk, Nil, Nil, allowedDocs)
+    else hitsDataset(index, serve(index, Seq(BatchQuery(query, conjunctive)), kk,
+      None, Some(allowedDocs), MaxBatchCollectRows).head)
   }
 
   /** Driver-collect ceiling for ONE batched job: each job's candidate
@@ -705,137 +604,109 @@ object Bm25Query {
     * (fast_code_search_validator.rs:692-810). Every single-query block
     * entry point is a batch of one through this planner.
     *
-    * Mechanics: all queries analyze on the driver (dictionary); distinct
-    * (include, exclude) glob pairs resolve ONCE each against the docs
-    * dimension into sorted filter arrays (allow or deny, whichever side
-    * fits `maxBroadcastDocs`); the shared rank set collects once
-    * ([[collectBoost]]). Each partition buffers its pruned,
-    * (block_id, term_id)-sorted rows ONCE per chunk — the buffer holds
-    * one bucket's rows for the union of the CHUNK's query terms, the same
-    * rows a one-query scan of the busiest term would hold — and replays
-    * them through the SAME merge kernel per query (per-query heaps, mode,
-    * filter, boost), so a query's hits do not depend on its batch
-    * (asserted in BatchServingSpec). Queries whose filter or rank set
-    * exceeds both broadcast sides, short queries, and unresolvable
-    * conjunctive queries settle individually.
+    * Mechanics: all queries analyze on the driver (dictionary). Doc
+    * filters (each distinct url-glob pair of a cold index) and the shared
+    * rank set ship as ONE [[SideInput]] per call, partitioned like the
+    * blocks buckets and zipped with them: its shuffle is a map stage of
+    * the first chunk's job, which later chunks reuse. Each bucket buffers
+    * its pruned, (block_id, term_id)-sorted rows ONCE per chunk — the
+    * buffer holds one bucket's rows for the union of the CHUNK's query
+    * terms, the same rows a one-query scan of the busiest term would hold
+    * — and replays them through the SAME merge kernel per query
+    * (per-query heaps, mode, filter, boost), so a query's hits do not
+    * depend on its batch (asserted in BatchServingSpec). Short queries
+    * and unresolvable conjunctive queries settle individually. A chunk
+    * with no filter and no boosted query runs the blocks scan alone.
     *
     * On a hot index each chunk runs on the resident partitions instead
     * ([[HotServing]]): url globs resolve inside the job against each
-    * bucket's own docs (no filter collects, no broadcast ceiling), urls
-    * come back with the survivors, and the chunk is ONE job.
+    * bucket's own docs, urls come back with the survivors, and the chunk
+    * is ONE job, side input included.
     *
     * Returns one Vector[Hit] per input query, in input order.
     */
   def searchBlocksBatchEx(index: BuiltIndex, queries: Seq[BatchQuery],
       k: Int, rank: Option[DataFrame] = None,
-      maxCollectRows: Long = MaxBatchCollectRows,
-      maxBroadcastDocs: Long = MaxBroadcastFilterDocs): Seq[Vector[Hit]] = {
-    val kk = clampK(k)
+      maxCollectRows: Long = MaxBatchCollectRows): Seq[Vector[Hit]] =
+    serve(index, queries, clampK(k), rank, None, maxCollectRows)
+
+  /** [[searchBlocksBatchEx]] with every query restricted to `docSet`
+    * when given.
+    */
+  private def serve(index: BuiltIndex, queries: Seq[BatchQuery], kk: Int,
+      rank: Option[DataFrame], docSet: Option[DataFrame],
+      maxCollectRows: Long): Seq[Vector[Hit]] = {
     require(!queries.exists(_.boosted) || rank.nonEmpty,
       "batch contains boosted queries but no rank DataFrame was supplied")
-    lazy val boost = collectBoost(rank.get, maxBroadcastDocs)
-    // distinct url-glob pairs resolve once each; a hot index resolves
-    // globs inside its one job instead
     val hot = index.hotPartitions
-    val filterOf = mutable.Map.empty[(Seq[String], Seq[String]), Option[DocFilter]]
     val results = mutable.Map.empty[Int, Vector[Hit]]
     val planned = queries.zipWithIndex.flatMap { case (q, qi) =>
-      def settle(hits: Dataset[Hit]): Option[(Int, BatchPlanned)] = {
-        results(qi) = hits.collect().toVector; None
-      }
-      val globbed = hot.isEmpty && (q.include.nonEmpty || q.exclude.nonEmpty)
-      lazy val allowedDocs = index.docs
-        .where(PathFilter.predicate(col("url"), q.include, q.exclude)).select("doc_id")
-      lazy val filter = filterOf.getOrElseUpdate((q.include, q.exclude),
-        resolveDocFilter(index, allowedDocs, maxBroadcastDocs))
-      if (isShortQuery(q.query))
-        settle(allDocsFallback(index, kk, q.include, q.exclude))
-      else if ((globbed && filter.isEmpty) || (q.boosted && boost.isEmpty)) {
-        // a filter or rank set too large to broadcast: compose both
-        // declaratively for a boosted query (exact, both joins
-        // distributed); an un-boosted one keeps the filter shards
-        if (q.boosted) settle(searchBoosted(index, q.query, kk, rank.get,
-          q.conjunctive, q.include, q.exclude))
-        else settle(filteredUnbroadcast(index, q.query, kk, q.conjunctive, allowedDocs))
-      } else plan(index, q, if (globbed) filter else None) match {
+      if (isShortQuery(q.query)) {
+        results(qi) = allDocsFallback(index, kk, q.include, q.exclude).collect().toVector
+        None
+      } else plan(index, q) match {
         case None => results(qi) = Vector.empty; None
         case Some(p) => Some((qi, p))
       }
     }
-    val hits = runPlanned(index, hot, planned.map(_._2),
-      kk, if (planned.exists(_._2.boosted)) boost else None, maxCollectRows)
-    planned.map(_._1).zip(hits).foreach { case (qi, v) => results(qi) = v }
+    // the doc filters to ship: the call's doc set, or each distinct
+    // url-glob pair of a cold index (a hot bucket resolves globs against
+    // its own urls)
+    val globs =
+      if (hot.nonEmpty || docSet.nonEmpty) Vector.empty
+      else planned.map(p => (p._2.include, p._2.exclude))
+        .filter(g => g._1.nonEmpty || g._2.nonEmpty).distinct.toVector
+    val filters = docSet.toVector ++ globs.map { case (inc, exc) =>
+      index.docs.where(PathFilter.predicate(col("url"), inc, exc)).select("doc_id")
+    }
+    val boosted = planned.exists(_._2.boosted)
+    val side =
+      if (filters.isEmpty && !boosted) None
+      else Some(SideInput(filters, rank.filter(_ => boosted), buckets(index),
+        index.blocksMeta.fold(index.legacyBlockBits)(_._2)))
+    val chunkB = math.max(1L,
+      maxCollectRows / math.max(1L, kk.toLong * buckets(index))).toInt
+    planned.grouped(chunkB).foreach { chunk =>
+      val qs = chunk.map { case (_, p) =>
+        p.copy(filter = if (docSet.nonEmpty) 0 else globs.indexOf((p.include, p.exclude)))
+      }.toArray
+      val hits = hot match {
+        case Some(h) => HotServing.run(index, h, qs, kk, side)
+        case None => runBatchChunk(index, qs, kk, side)
+      }
+      chunk.map(_._1).zip(hits).foreach { case (qi, v) => results(qi) = v }
+    }
     queries.indices.map(results)
   }
 
-  /** Driver-side analysis of one query into its batch form, with its
-    * resolved doc filter if any; None when its result is empty: no
-    * resolved term, a conjunctive query missing a term, or an empty allow
-    * set.
+  /** The number of partitions the block path scores: the blocks buckets,
+    * or the session's shuffle partitions that a legacy index is
+    * repartitioned into by the same hash. A side input places its docs
+    * by the block width of `blocks_meta`, or of a legacy index's blocks
+    * ([[BuiltIndex.legacyBlockBits]]).
     */
-  private def plan(index: BuiltIndex, q: BatchQuery,
-      filter: Option[DocFilter]): Option[BatchPlanned] =
-    if (filter.exists(f => f.isAllow && f.sorted.isEmpty)) None
-    else {
-      val a = analyze(index, q.query)
-      if (a.terms.isEmpty || (q.conjunctive && !a.allResolved)) None
-      else Some(BatchPlanned(a.terms.map(_.term_id).toArray, q.conjunctive,
-        q.include, q.exclude, q.boosted, filter))
-    }
+  private def buckets(index: BuiltIndex): Int = index.blocksMeta
+    .fold(index.spark.sessionState.conf.numShufflePartitions)(_._1)
 
-  /** Each planned query's top-k hits, in order: chunks of at most
-    * `maxCollectRows / (k x buckets)` queries, each ONE Spark job — on the
-    * `hot` partitions if given (its queries carry no resolved filter),
-    * otherwise [[runBatchChunk]].
+  /** Driver-side analysis of one query into its batch form; None when its
+    * result is empty: no resolved term or a conjunctive query missing a
+    * term.
     */
-  private def runPlanned(index: BuiltIndex, hot: Option[RDD[HotPartition]],
-      planned: Seq[BatchPlanned], kk: Int,
-      boost: Option[(Array[Long], Array[Double], Double)],
-      maxCollectRows: Long = MaxBatchCollectRows): Seq[Vector[Hit]] = {
-    if (planned.isEmpty) return Nil
-    val sc = index.spark.sparkContext
-    val buckets = index.blocksMeta.map(_._1.toLong)
-      .getOrElse(index.spark.sessionState.conf.numShufflePartitions.toLong)
-    val chunkB = math.max(1L,
-      maxCollectRows / math.max(1L, kk.toLong * buckets)).toInt
-    val bcBoost = boost.map(b =>
-      (sc.broadcast(b._1), sc.broadcast(b._2), b._3)).orNull
-    // the boost is shipped once per call and destroyed once every chunk
-    // is collected: a long-running server would otherwise keep a copy of
-    // every rank set it served, on the driver and on every executor
-    try planned.grouped(chunkB).flatMap { chunk =>
-      hot match {
-        case Some(h) => HotServing.run(index, h, chunk.toArray, kk, bcBoost)
-        case None => runBatchChunk(index, chunk.toArray, kk, bcBoost)
-      }
-    }.toVector
-    finally if (bcBoost != null) { bcBoost._1.destroy(); bcBoost._2.destroy() }
+  private def plan(index: BuiltIndex, q: BatchQuery): Option[BatchPlanned] = {
+    val a = analyze(index, q.query)
+    if (a.terms.isEmpty || (q.conjunctive && !a.allResolved)) None
+    else Some(BatchPlanned(a.terms.map(_.term_id).toArray, q.conjunctive,
+      q.include, q.exclude, q.boosted))
   }
 
-  /** The survivors (chunk position, doc_id, score) of one chunk of
-    * batch-planned queries: ONE pruned blocks scan, each bucket's rows
-    * buffered once and replayed through the merge kernel per query. Each
-    * distinct doc filter is broadcast once per chunk (a [[DocFilter]]
-    * compares its array by reference, so queries of one glob pair share
-    * it) and recorded in `shipped`, whose owner destroys them once the
-    * chunk is collected.
+  /** The pruned block rows of a chunk's query terms, one partition per
+    * blocks bucket, sorted by (block_id, term_id) within it.
     */
-  private[graft] def batchCandidates(index: BuiltIndex, chunk: Array[BatchPlanned],
-      kk: Int, bcBoost: HotServing.Boost,
-      shipped: mutable.Map[DocFilter, Broadcast[Array[Long]]] = mutable.Map.empty
-      ): Dataset[(Int, Long, Double)] = {
+  private def chunkRows(index: BuiltIndex, chunk: Array[BatchPlanned]): Dataset[BlockRow] = {
     val spark = index.spark
     import spark.implicits._
-    val unionIds = chunk.flatMap(_.termIds).distinct.toIndexedSeq
-    val qIds = chunk.map(_.termIds)
-    val qConj = chunk.map(_.conjunctive)
-    val qBoosted = chunk.map(_.boosted)
-    val qFilterBc = chunk.map(_.filter.map(f =>
-      (shipped.getOrElseUpdate(f, spark.sparkContext.broadcast(f.sorted)),
-        f.isAllow)).orNull)
-    val q8 = index.impactCodec == "q8"
     val rows = index.blocks
-      .where(col("term_id").isin(unionIds: _*))
+      .where(col("term_id").isin(chunk.flatMap(_.termIds).distinct.toIndexedSeq: _*))
       .select("term_id", "block_id", "n", "docs_enc", "impacts_enc",
         "block_max")
       .as[BlockRow]
@@ -845,31 +716,68 @@ object Bm25Query {
     // top-k sets). With a bucketed index the scan itself delivers that
     // co-location (one task per block_id bucket — zero Exchange, only a
     // local sort of the pruned rows); a legacy layout pays a per-query
-    // repartition shuffle.
+    // repartition shuffle by the bucket hash (Murmur3 pmod, as bucketBy).
     val coLocated =
-      if (index.blocksBucketed) rows else rows.repartition(col("block_id"))
-    coLocated
-      .sortWithinPartitions(col("block_id"), col("term_id"))
-      .mapPartitions { it =>
-        val part = it.toArray // pruned rows of this bucket, sorted
-        (0 until qIds.length).iterator.flatMap { pi =>
-          val tset = qIds(pi).toSet
-          val fb = qFilterBc(pi)
-          val fArr = if (fb == null) null else fb._1.value
-          val fAllow = if (fb == null) true else fb._2
-          val (bIds, bVals, bMax) =
-            if (!qBoosted(pi) || bcBoost == null)
-              (null: Array[Long], null: Array[Double], 1.0)
-            else (bcBoost._1.value, bcBoost._2.value, bcBoost._3)
-          processPartition(
-            part.iterator.filter(r => tset.contains(r.term_id))
-              .map(r => (r, fArr)),
-            qIds(pi).length, kk, qConj(pi), Double.NegativeInfinity, q8,
-            fAllow, bIds, bVals, bMax)
-            .map { case (d, s) => (pi, d, s) }
-        }
-      }(org.apache.spark.sql.Encoders.product[(Int, Long, Double)])
+      if (index.blocksBucketed) rows
+      else rows.repartition(buckets(index), col("block_id"))
+    coLocated.sortWithinPartitions(col("block_id"), col("term_id"))
   }
+
+  /** The survivors (chunk position, doc_id, score) of one chunk of
+    * batch-planned queries with no side input: ONE pruned blocks scan,
+    * each bucket's rows buffered once and replayed through the merge
+    * kernel per query.
+    */
+  private[graft] def batchCandidates(index: BuiltIndex, chunk: Array[BatchPlanned],
+      kk: Int): Dataset[(Int, Long, Double)] = {
+    val q8 = index.impactCodec == "q8"
+    chunkRows(index, chunk).mapPartitions { it =>
+      scoreBucket(it.toArray, BucketSide.Empty, chunk, kk, q8)
+    }(org.apache.spark.sql.Encoders.product[(Int, Long, Double)])
+  }
+
+  /** [[batchCandidates]] with the call's side input zipped in: bucket p
+    * of the blocks scan meets partition p of the side input.
+    */
+  private[graft] def sideCandidates(index: BuiltIndex, chunk: Array[BatchPlanned],
+      kk: Int, side: SideInput): RDD[(Int, Long, Double)] = {
+    val q8 = index.impactCodec == "q8"
+    val nFilters = side.nFilters
+    val n = side.records.getNumPartitions
+    chunkRows(index, chunk).rdd.zipPartitions(side.records) { (it, r) =>
+      val part = it.toArray
+      val bucket = TaskContext.getPartitionId()
+      require(part.forall(b => HotPartition.bucketOf(b.block_id, n) == bucket),
+        s"blocks partition $bucket holds a block of another bucket")
+      scoreBucket(part, BucketSide(r, nFilters), chunk, kk, q8)
+    }
+  }
+
+  /** Survivors (chunk position, doc_id, score) of one bucket's rows,
+    * sorted by (block_id, term_id).
+    */
+  private def scoreBucket(part: Array[BlockRow], side: BucketSide,
+      chunk: Array[BatchPlanned], kk: Int, q8: Boolean): Iterator[(Int, Long, Double)] =
+    chunk.indices.iterator.flatMap { pi =>
+      val q = chunk(pi)
+      val allow = if (q.filter < 0) null else side.allow(q.filter)
+      if (allow != null && allow.isEmpty) Iterator.empty
+      else {
+        val tset = q.termIds.toSet
+        scoreQuery(part.iterator.filter(r => tset.contains(r.term_id)), q, kk, q8,
+          allow, side).map { case (d, s) => (pi, d, s) }
+      }
+    }
+
+  /** One query's survivors over its block rows of one bucket: the merge
+    * kernel with the query's mode, its allow array and, if it is
+    * boosted, the bucket's ranks.
+    */
+  private[query] def scoreQuery(rows: Iterator[BlockRow], q: BatchPlanned, k: Int,
+      q8: Boolean, allow: Array[Long], side: BucketSide): Iterator[(Long, Double)] =
+    if (q.boosted) processPartition(rows, q.termIds.length, k, q.conjunctive, q8,
+      allow, side.rankIds, side.rankVals, side.maxRank)
+    else processPartition(rows, q.termIds.length, k, q.conjunctive, q8, allow)
 
   /** Run one chunk of batch-planned queries as ONE Spark job over one
     * pruned blocks scan; returns each query's hits in chunk order.
@@ -877,13 +785,13 @@ object Bm25Query {
     * [[MaxBatchCollectRows]]).
     */
   private def runBatchChunk(index: BuiltIndex, chunk: Array[BatchPlanned],
-      kk: Int, bcBoost: HotServing.Boost): Array[Vector[Hit]] = {
+      kk: Int, side: Option[SideInput]): Array[Vector[Hit]] = {
     val spark = index.spark
     import spark.implicits._
-    val shipped = mutable.Map.empty[DocFilter, Broadcast[Array[Long]]]
-    val candidates =
-      try batchCandidates(index, chunk, kk, bcBoost, shipped).collect()
-      finally shipped.values.foreach(_.destroy())
+    val candidates = side match {
+      case None => batchCandidates(index, chunk, kk).collect()
+      case Some(s) => sideCandidates(index, chunk, kk, s).collect()
+    }
     // per-query top-k with the frozen tie-break, then ONE pruned url
     // lookup for every query's winners together
     val topPer = candidates.groupBy(_._1).map { case (pi, arr) =>
@@ -900,32 +808,6 @@ object Bm25Query {
         case ((d, s), i) => Hit(d, urls.getOrElse(d, ""), s, i + 1)
       }
     }.toArray
-  }
-
-  /** Resolve an allowed-doc DataFrame into a broadcastable [[DocFilter]]
-    * (allow side, else deny side, else None) — shared by the single
-    * filtered path and the batch planner. None with an EMPTY allow set is
-    * encoded as Some(empty allow filter).
-    */
-  private def resolveDocFilter(index: BuiltIndex, allowedDocs: DataFrame,
-      maxBroadcastDocs: Long): Option[DocFilter] = {
-    val spark = index.spark
-    import spark.implicits._
-    val lim = math.min(maxBroadcastDocs + 1, Int.MaxValue.toLong - 1).toInt
-    val allowedIds = allowedDocs.select(col("doc_id").cast("long")).distinct()
-    val sample = allowedIds.limit(lim).as[Long].collect()
-    if (sample.length <= maxBroadcastDocs) {
-      java.util.Arrays.sort(sample)
-      Some(DocFilter(sample, isAllow = true))
-    } else {
-      val comp = index.docs.select(col("doc_id"))
-        .join(allowedIds, Seq("doc_id"), "left_anti")
-        .limit(lim).as[Long].collect()
-      if (comp.length <= maxBroadcastDocs) {
-        java.util.Arrays.sort(comp)
-        Some(DocFilter(comp, isAllow = false))
-      } else None
-    }
   }
 
   /** Batched line-level serving: [[searchBlocksBatchEx]] for the hit
@@ -983,74 +865,5 @@ object Bm25Query {
     queries.indices.foreach(qi =>
       if (!out.contains(qi)) out(qi) = Vector.empty)
     queries.indices.map(qi => out(qi)).toVector
-  }
-
-  /** Dense-filter block scoring (VERDICT r3 #5 — removes the
-    * [[MaxBroadcastFilterDocs]] ceiling): the allow set is written as
-    * per-block_id SORTED-ARRAY shards bucketed EXACTLY like the blocks
-    * table (same bucket count, same key), then a bucketed sort-merge join
-    * co-locates each block's shard with its posting rows — zero Exchange
-    * on the blocks side; the merge applies the shard before any doc can
-    * enter a heap, so the filtered top-k stays exact.
-    *
-    * Costs one shuffle OF THE ALLOW SET (its groupBy into shards) — the
-    * floor for any exact dense filter — plus a temp bucketed table per
-    * query (dropped by the returned cleanup). The join is HINTED to
-    * sort-merge: a broadcast plan here would void the blocks scan's
-    * distribution requirement, letting Spark file-split a bucket and
-    * tear a (term_id, block_id) group across tasks — the documented
-    * silent-wrong-results hazard (BuiltIndex.blocks). Blocks of ranges
-    * with NO allowed docs drop out in the inner join before decode.
-    */
-  private[graft] def scoredBlocksSharded(index: BuiltIndex, query: String, k: Int,
-      conjunctive: Boolean,
-      allowedIds: DataFrame): (Option[DataFrame], () => Unit) = {
-    val spark = index.spark
-    import spark.implicits._
-    val a = analyze(index, query)
-    if (a.terms.isEmpty || (conjunctive && !a.allResolved))
-      return (None, () => ())
-    val kk = clampK(k)
-    val qids = a.terms.map(_.term_id)
-    val nTerms = a.terms.size
-    val (numBuckets, bits) = index.blocksMeta.get
-
-    val tmp = java.nio.file.Files.createTempDirectory("graft-shards").toString
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(tmp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val tbl = s"graft_shards_$h"
-    allowedIds.select(col("doc_id").cast("long"))
-      .withColumn("block_id", shiftright(col("doc_id"), bits))
-      .groupBy("block_id")
-      .agg(sort_array(collect_list(col("doc_id"))).as("allowed"))
-      .write.format("parquet")
-      .bucketBy(numBuckets, "block_id").sortBy("block_id")
-      .option("path", tmp)
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(tbl)
-    val cleanup: () => Unit = () => {
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
-    }
-
-    val q8 = index.impactCodec == "q8"
-    val candidates = index.blocks
-      .where(col("term_id").isin(qids: _*))
-      .select("term_id", "block_id", "n", "docs_enc", "impacts_enc", "block_max")
-      .join(spark.table(tbl).hint("merge"), Seq("block_id"))
-      .sortWithinPartitions(col("block_id"), col("term_id"))
-      .select(col("term_id"), col("block_id"), col("n"), col("docs_enc"),
-        col("impacts_enc"), col("block_max"), col("allowed"))
-      .as[BlockRowF]
-      .mapPartitions { it =>
-        processPartition(
-          it.map(r => (BlockRow(r.term_id, r.block_id, r.n, r.docs_enc,
-            r.impacts_enc, r.block_max), r.allowed)),
-          nTerms, kk, conjunctive, Double.NegativeInfinity, q8)
-      }(org.apache.spark.sql.Encoders.product[(Long, Double)])
-      .toDF("doc_id", "score")
-    (Some(candidates), cleanup)
   }
 }

@@ -4,8 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 
 import scala.collection.mutable
 
-import org.apache.spark.{Partitioner, TaskContext}
-import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
 import org.apache.spark.sql.functions.col
@@ -14,36 +13,33 @@ import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 import graft.index.BuiltIndex
 
 /** One driver-analyzed query of a batch: its resolved term ids, mode, url
-  * globs, whether it takes the batch's boost, and the doc filter its globs
-  * or doc set resolved to on the driver. Only the Dataset runner
-  * ([[Bm25Query.batchCandidates]]) reads `filter`: hot partitions resolve
-  * globs themselves and are never handed a resolved filter.
+  * globs, whether it takes the batch's rank set, and the index of the doc
+  * filter of the call's [[SideInput]] that restricts it (-1: none). Url
+  * globs are such a filter on a cold index; a hot bucket resolves them
+  * against its own urls instead.
   */
 private[graft] case class BatchPlanned(termIds: Array[Long],
     conjunctive: Boolean, include: Seq[String], exclude: Seq[String],
-    boosted: Boolean, filter: Option[Bm25Query.DocFilter])
+    boosted: Boolean, filter: Int = -1)
 
 /** Serving over the resident partitions of a hot index (see
   * [[BuiltIndex.cacheHot]]): a chunk of analyzed queries is answered by
-  * ONE `SparkContext.runJob`, with no Catalyst planning per query. Per
-  * bucket and query, a task gathers only that query's block rows in
+  * ONE Spark job, with no Catalyst planning per query. Per bucket and
+  * query, a task gathers only that query's block rows in
   * (block_id, term_id) order, turns its url globs into the sorted allow
   * array of the bucket's own docs, runs the same merge kernel as the
   * Dataset path ([[Bm25Query.processPartition]]) and returns the
   * survivors with their urls. The driver merges them with the frozen
   * tie-break (score desc, doc_id asc) — the batched per-partition top-k
-  * of the cache-efficient top-k aggregation pattern (VLDB 2023).
+  * of the cache-efficient top-k aggregation pattern (VLDB 2023). A doc
+  * set or rank set arrives as the call's [[SideInput]], zipped with the
+  * resident partitions: its shuffle is a map stage of the same job.
   *
   * Exact: a block bucket holds every block of its docId ranges and the
-  * urls of exactly those docs, so the local allow array is the global
-  * one restricted to the bucket.
+  * urls and side-input records of exactly those docs, so the local allow
+  * array is the global one restricted to the bucket.
   */
 private[graft] object HotServing {
-
-  /** Type of the boost a batch shares: sorted doc ids, their ranks and
-    * the largest rank (>= 1), each shipped once per executor.
-    */
-  type Boost = (Broadcast[Array[Long]], Broadcast[Array[Double]], Double)
 
   /** How long [[tier]] waits for the executors' reports of the blocks it
     * just cached to reach the driver's listener.
@@ -68,11 +64,7 @@ private[graft] object HotServing {
       s"hot partitions need the $numBuckets-bucket blocks scan, got " +
       s"${blocks.getNumPartitions} partitions")
     val docs = index.docs.select(col("doc_id"), col("url")).as[(Long, String)].rdd
-      .partitionBy(new Partitioner {
-        def numPartitions: Int = numBuckets
-        def getPartition(doc: Any): Int =
-          HotPartition.bucketOf(doc.asInstanceOf[Long] >> blockBits, numBuckets)
-      })
+      .partitionBy(new DocBucketPartitioner(numBuckets, blockBits))
     val rdd = blocks.zipPartitions(docs) { (b, d) =>
       Iterator.single(HotPartition(TaskContext.getPartitionId(), numBuckets, b, d))
     }.persist(StorageLevel.MEMORY_AND_DISK)
@@ -90,12 +82,19 @@ private[graft] object HotServing {
     }
   }
 
-  /** The top-k hits of each query of `chunk`, in chunk order. */
+  /** The top-k hits of each query of `chunk`, in chunk order: one job
+    * over the resident partitions, zipped with the side input if any.
+    */
   private[query] def run(index: BuiltIndex, hot: RDD[HotPartition],
-      chunk: Array[BatchPlanned], k: Int, boost: Boost): Array[Vector[Hit]] = {
+      chunk: Array[BatchPlanned], k: Int, side: Option[SideInput]): Array[Vector[Hit]] = {
     val q8 = index.impactCodec == "q8"
-    val survivors = index.spark.sparkContext.runJob(hot,
-      (it: Iterator[HotPartition]) => it.flatMap(score(_, chunk, k, q8, boost)).toArray)
+    val sc = index.spark.sparkContext
+    val survivors = side match {
+      case None => sc.runJob(hot, (it: Iterator[HotPartition]) =>
+        it.flatMap(score(_, BucketSide.Empty, chunk, k, q8)).toArray)
+      case Some(s) => sc.runJob(zipped(hot, s, chunk, k, q8),
+        (it: Iterator[(Int, Long, Double, String)]) => it.toArray)
+    }
     val byQuery = survivors.flatten.groupBy(_._1)
     chunk.indices.map { qi =>
       byQuery.getOrElse(qi, Array.empty[(Int, Long, Double, String)])
@@ -105,32 +104,41 @@ private[graft] object HotServing {
     }.toArray
   }
 
+  /** Survivors (query index, doc_id, score, url) of every bucket, each
+    * resident partition zipped with its slice of the side input.
+    */
+  private[graft] def zipped(hot: RDD[HotPartition], side: SideInput,
+      chunk: Array[BatchPlanned], k: Int, q8: Boolean): RDD[(Int, Long, Double, String)] = {
+    val nFilters = side.nFilters
+    hot.zipPartitions(side.records) { (h, r) =>
+      val bs = BucketSide(r, nFilters)
+      h.flatMap(score(_, bs, chunk, k, q8))
+    }
+  }
+
   /** Survivors (query index, doc_id, score, url) of one bucket. */
-  private def score(part: HotPartition, chunk: Array[BatchPlanned], k: Int,
-      q8: Boolean, boost: Boost): Iterator[(Int, Long, Double, String)] = {
-    val allowed = mutable.HashMap.empty[(Seq[String], Seq[String]), Array[Long]]
+  private def score(part: HotPartition, side: BucketSide, chunk: Array[BatchPlanned],
+      k: Int, q8: Boolean): Iterator[(Int, Long, Double, String)] = {
+    val globbed = mutable.HashMap.empty[(Seq[String], Seq[String]), Array[Long]]
     chunk.indices.iterator.flatMap { qi =>
       val q = chunk(qi)
       // ascending term_id: within a block group the kernel sums impacts
       // in that canonical order
       val ranges = q.termIds.sorted.map(part.rangeOf)
       val present = ranges.count { case (from, until) => until > from }
-      if (present == 0 || (q.conjunctive && present < ranges.length)) Iterator.empty
+      lazy val allow =
+        if (q.filter >= 0) side.allow(q.filter)
+        else if (q.include.isEmpty && q.exclude.isEmpty) null
+        else globbed.getOrElseUpdate((q.include, q.exclude),
+          part.docsWhere(PathFilter.matcher(q.include, q.exclude)))
+      if (present == 0 || (q.conjunctive && present < ranges.length) ||
+          (allow != null && allow.isEmpty)) Iterator.empty
       else {
         // a stable sort by block_id keeps term_id order within a block
         val rows = ranges.flatMap { case (from, until) =>
           part.rows.slice(from, until)
         }.sortBy(_.block_id)
-        val filter =
-          if (q.include.isEmpty && q.exclude.isEmpty) null
-          else allowed.getOrElseUpdate((q.include, q.exclude),
-            part.docsWhere(PathFilter.matcher(q.include, q.exclude)))
-        val b = if (q.boosted) boost else null
-        Bm25Query.processPartition(rows.iterator.map(r => (r, filter)),
-          q.termIds.length, k, q.conjunctive, Double.NegativeInfinity, q8,
-          boostIds = if (b == null) null else b._1.value,
-          boostVals = if (b == null) null else b._2.value,
-          maxBoost = if (b == null) 1.0 else b._3)
+        Bm25Query.scoreQuery(rows.iterator, q, k, q8, allow, side)
           .map { case (d, s) => (qi, d, s, part.url(d)) }
       }
     }

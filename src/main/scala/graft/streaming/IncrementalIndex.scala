@@ -88,18 +88,29 @@ object IncrementalIndex {
     * batch on every serving-path read).
     */
   private def needsHealing(spark: SparkSession, indexDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/stream_tf")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches = fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
+    val batches = batchDirs(spark, indexDir, "stream_tf")
     healCache.get(indexDir) match {
       case Some((n, verdict)) if n == batches.length => verdict
       case _ =>
         val verdict = batches.exists { b =>
-          !spark.read.parquet(b.toString).schema.fieldNames.contains("doc_len")
+          !spark.read.parquet(b).schema.fieldNames.contains("doc_len")
         }
         healCache.put(indexDir, (batches.length, verdict))
         verdict
     }
+  }
+
+  /** The `batch=<id>` directories of `indexDir/table`, listed on the
+    * driver. Reads take them as an explicit path list: a glob path makes
+    * Spark probe it for a streaming-sink metadata directory, which logs a
+    * `FileNotFoundException` at WARN on every read. Each batch's rows
+    * carry their `batch` column.
+    */
+  private def batchDirs(spark: SparkSession, indexDir: String, table: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(s"$indexDir/$table")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(p).filter(b => b.isDirectory && b.getPath.getName.startsWith("batch="))
+      .map(_.getPath.toString).sorted.toSeq
   }
 
   /** Merged current view of the streamed index: latest batch wins per
@@ -115,7 +126,7 @@ object IncrementalIndex {
     // all-v2 dir short-circuits past the window (no extra shuffle) — the
     // verdict comes from batch footer schemas, not a data scan.
     val tf = spark.read.option("mergeSchema", "true")
-      .parquet(s"$indexDir/stream_tf/batch=*")
+      .parquet(batchDirs(spark, indexDir, "stream_tf"): _*)
     val withLen =
       if (!tf.columns.contains("doc_len"))
         tf.withColumn("doc_len", sum("tf").over(
@@ -129,7 +140,7 @@ object IncrementalIndex {
   }
 
   def currentDocs(spark: SparkSession, indexDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$indexDir/stream_docs/batch=*")
+    val d = spark.read.parquet(batchDirs(spark, indexDir, "stream_docs"): _*)
     val latest = d.groupBy("doc_id").agg(max("batch").as("batch"))
     d.join(latest, Seq("doc_id", "batch")).select("doc_id", "url", "doc_len")
   }

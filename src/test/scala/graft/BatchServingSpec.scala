@@ -112,50 +112,86 @@ class BatchServingSpec extends AnyFunSuite {
     assert(one.exists(_.nonEmpty))
   }
 
-  test("oversized-broadcast fallbacks keep BOTH filter and boost (round 6)") {
+  /** A filtered+boosted, a filtered and a boosted query of one glob pair. */
+  private def filteredAndBoosted = {
     val q = s"${PagesCorpus.vocab(2)} ${PagesCorpus.vocab(7)}"
     val inc = Seq("https://site-01*.example/**")
-    val queries = Seq(
-      BatchQuery(q, include = inc, boosted = true),   // filtered+boosted
-      BatchQuery(q, include = inc),                   // filtered only
-      BatchQuery(q, boosted = true))                  // boosted only
-    val want = Bm25Query.searchBlocksBatchEx(idx, queries, 10, Some(rankDf))
-    // maxBroadcastDocs=0 forces EVERY filter/rank set past the broadcast
-    // ceiling -> all three queries settle through the fallback branches
-    val fb = Bm25Query.searchBlocksBatchEx(idx, queries, 10, Some(rankDf),
-      maxBroadcastDocs = 0L)
-    queries.indices.foreach(i =>
-      assert(hitsOf(fb(i)) == hitsOf(want(i)), s"query $i"))
-    assert(fb(0).nonEmpty && fb(1).nonEmpty && fb(2).nonEmpty)
-    // the filter actually bites under fallback (regression for the
-    // silently-dropped-glob bug) and so does the boost
-    assert(hitsOf(fb(0)) != hitsOf(fb(2)), "filter dropped in fallback")
-    assert(hitsOf(fb(0)) != hitsOf(fb(1)), "boost dropped in fallback")
+    Seq(BatchQuery(q, include = inc, boosted = true),
+      BatchQuery(q, include = inc),
+      BatchQuery(q, boosted = true))
   }
 
-  test("oversized-broadcast fallbacks on a cold index keep filter and boost") {
-    // the hot runner resolves globs inside its job, so on `idx` the
-    // un-boosted filtered query never reaches the oversized-filter branch;
-    // the cold index still does
-    val q = s"${PagesCorpus.vocab(2)} ${PagesCorpus.vocab(7)}"
-    val inc = Seq("https://site-01*.example/**")
-    val queries = Seq(
-      BatchQuery(q, include = inc, boosted = true),   // filtered+boosted
-      BatchQuery(q, include = inc),                   // filtered only
-      BatchQuery(q, boosted = true))                  // boosted only
-    val want = Bm25Query.searchBlocksBatchEx(cold, queries, 10, Some(rankDf))
-    val fb = Bm25Query.searchBlocksBatchEx(cold, queries, 10, Some(rankDf),
-      maxBroadcastDocs = 0L)
+  /** The declarative reference of a [[filteredAndBoosted]] query. */
+  private def declarative(ix: graft.index.BuiltIndex, q: BatchQuery) =
+    hitsOf((if (q.boosted) Bm25Query.searchBoosted(ix, q.query, 10, rankDf,
+      q.conjunctive, q.include, q.exclude)
+    else Bm25Query.searchNaive(ix, q.query, 10, q.conjunctive, q.include, q.exclude))
+      .collect().toVector)
+
+  test("filtered and boosted batch queries keep BOTH filter and boost") {
+    val queries = filteredAndBoosted
+    val got = Bm25Query.searchBlocksBatchEx(idx, queries, 10, Some(rankDf))
+    queries.indices.foreach(i =>
+      assert(hitsOf(got(i)) == declarative(idx, queries(i)), s"query $i"))
+    assert(got(0).nonEmpty && got(1).nonEmpty && got(2).nonEmpty)
+    // the filter and the boost each bite
+    assert(hitsOf(got(0)) != hitsOf(got(2)), "filter dropped")
+    assert(hitsOf(got(0)) != hitsOf(got(1)), "boost dropped")
+  }
+
+  test("cold index: filtered and boosted batches keep both, hot == cold") {
+    // the hot runner resolves globs inside its job; the cold index ships
+    // them as doc filters beside the rank set
+    val queries = filteredAndBoosted
+    val got = Bm25Query.searchBlocksBatchEx(cold, queries, 10, Some(rankDf))
     val hot = Bm25Query.searchBlocksBatchEx(idx, queries, 10, Some(rankDf))
     queries.indices.foreach { i =>
-      assert(hitsOf(fb(i)) == hitsOf(want(i)), s"query $i")
-      assert(hitsOf(fb(i)) == hitsOf(hot(i)), s"query $i vs hot")
+      assert(hitsOf(got(i)) == declarative(cold, queries(i)), s"query $i")
+      assert(hitsOf(got(i)) == hitsOf(hot(i)), s"query $i vs hot")
     }
-    assert(hitsOf(fb(1)) == coldSingle(queries(1)))
-    assert(hitsOf(fb(2)) == coldSingle(queries(2)))
-    assert(fb(0).nonEmpty && fb(1).nonEmpty && fb(2).nonEmpty)
-    assert(hitsOf(fb(0)) != hitsOf(fb(2)), "filter dropped in fallback")
-    assert(hitsOf(fb(0)) != hitsOf(fb(1)), "boost dropped in fallback")
+    assert(hitsOf(got(1)) == coldSingle(queries(1)))
+    assert(hitsOf(got(2)) == coldSingle(queries(2)))
+    assert(got(0).nonEmpty && got(1).nonEmpty && got(2).nonEmpty)
+    assert(hitsOf(got(0)) != hitsOf(got(2)), "filter dropped")
+    assert(hitsOf(got(0)) != hitsOf(got(1)), "boost dropped")
+  }
+
+  test("a rank set with a duplicate doc_id or a negative rank fails loudly, hot and cold") {
+    val q = s"${PagesCorpus.vocab(2)} ${PagesCorpus.vocab(7)}"
+    val d = rankDf.select("doc_id").head().getLong(0)
+    val duplicated = rankDf.union(rankDf.where(col("doc_id") === d))
+    val negative = rankDf.withColumn("static_rank",
+      when(col("doc_id") === d, lit(-1.0)).otherwise(col("static_rank")))
+    for ((ix, mode) <- Seq((idx, "hot"), (cold, "cold"));
+         (rank, message) <- Seq((duplicated, s"rank set has a duplicate doc_id $d"),
+           (negative, "static_rank must be non-negative"))) {
+      val e = intercept[Exception](
+        Bm25Query.searchBlocksBoosted(ix, q, 10, rank).collect())
+      assert(e.getMessage.contains(message), s"$mode: ${e.getMessage}")
+    }
+  }
+
+  test("a legacy index's filtered and boosted queries equal the declarative path") {
+    val dir = Files.createTempDirectory("graft-batch-legacy").toString
+    IndexBuilder.build(spark, pages, dir, blockBits = 6)
+    graft.checkpoint.DriverParquet.remove(java.nio.file.Paths.get(dir, "blocks_meta"))
+    val legacy = IndexBuilder.load(spark, dir).cacheDictionary()
+    assert(!legacy.blocksBucketed && legacy.legacyBlockBits == 6)
+    val queries = filteredAndBoosted
+    val got = Bm25Query.searchBlocksBatchEx(legacy, queries, 10, Some(rankDf))
+    queries.indices.foreach(i =>
+      assert(hitsOf(got(i)) == declarative(legacy, queries(i)), s"query $i"))
+    assert(got.forall(_.nonEmpty))
+    // an arbitrary doc set: the semi-join of the declarative scores
+    val q = queries.head.query
+    val allowed = legacy.docs.where(col("doc_id") % 3 =!= 0).select("doc_id")
+    val want = Bm25Query.scoredNaive(legacy, q, conjunctive = true).get
+      .join(allowed, Seq("doc_id"), "left_semi")
+      .orderBy(col("score").desc, col("doc_id").asc).limit(10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val filtered = Bm25Query.searchBlocksFiltered(legacy, q, 10, conjunctive = true, allowed)
+      .collect().map(h => (h.doc_id, h.score)).toSeq
+    assert(filtered == want && want.nonEmpty)
   }
 
   test("lines batch chunking (tiny collect bound) == unchunked") {

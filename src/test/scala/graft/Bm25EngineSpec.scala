@@ -120,42 +120,30 @@ class Bm25EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("filtered block path: allow / deny / declarative modes all exact") {
+  test("filtered block path: sparse and dense doc sets are exact") {
     import org.apache.spark.sql.functions.col
-    // sparse filter (1/3 of docs) exercises allow-mode; dense filter
-    // (2/3) with a mid ceiling forces deny-mode (complement broadcast);
-    // ceiling 1 defeats BOTH broadcasts -> the co-located shard path
-    // (round 4; the declarative fallback now only serves legacy layouts)
+    // a sparse (1/3 of docs) and a dense (2/3) allow set, each shipped
+    // whole to the buckets of its docs: no size ceiling, no fallback
     val sparse = index.docs.where(col("doc_id") % 3 === 0).select("doc_id")
     val dense = index.docs.where(col("doc_id") % 3 =!= 0).select("doc_id")
-    val sparseN = sparse.count(); val denseN = dense.count()
-    // deny ceiling: below the dense allow size, at/above its complement
-    val denyCeil = denseN - 1
-    assert(sparseN <= denyCeil, "fixture: complement must fit the ceiling")
-    val cases = Seq(
-      ("allow", sparse, Bm25Query.MaxBroadcastFilterDocs),
-      ("deny", dense, denyCeil),
-      ("sharded", sparse, 0L),
-      ("sharded-dense", dense, 0L))
-    // OR mode included deliberately: the bootstrap threshold must be
-    // disabled under a filter (its lower bound is unsound when the
-    // block-max doc can be filtered out)
+    // OR mode included deliberately: a filtered-out doc must never move
+    // a heap threshold
     for (q <- Seq(PagesCorpus.vocab(0),
                   s"${PagesCorpus.vocab(3)} ${PagesCorpus.vocab(7)}");
          conj <- Seq(true, false);
-         (mode, allowDf, ceil) <- cases) {
+         (mode, allowDf) <- Seq(("sparse", sparse), ("dense", dense))) {
       val allowSet = allowDf.collect().map(_.getLong(0)).toSet
       val want = oracle.search(q, 1000, conj)
         .filter(h => allowSet.contains(h.doc_id)).take(10)
-      val got = Bm25Query.searchBlocksFiltered(index, q, 10, conj, allowDf,
-        maxBroadcastDocs = ceil).collect().toVector
+      val got = Bm25Query.searchBlocksFiltered(index, q, 10, conj, allowDf)
+        .collect().toVector
       assert(got.map(_.doc_id) == want.map(_.doc_id),
         s"docIDs differ: q='$q' conj=$conj mode=$mode\n got=$got\nwant=$want")
       got.zip(want).foreach { case (g, w) =>
         assert(g.score == w.score, s"score differs: mode=$mode doc=${g.doc_id}")
       }
     }
-    // empty allow-set short-circuits
+    // an empty allow set admits no doc
     assert(Bm25Query.searchBlocksFiltered(index, PagesCorpus.vocab(0), 10,
       conjunctive = true,
       sparse.where(col("doc_id") < 0)).collect().isEmpty)

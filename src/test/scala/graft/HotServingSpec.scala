@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.SparkListenerBlockUpdated
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.{BlockUpdatedInfo, RDDBlockId, StorageLevel}
 
@@ -125,6 +126,37 @@ class HotServingSpec extends AnyFunSuite {
         bits(single(hot, BatchQuery(batch(queries.size).query))), "boost must bite")
     }
 
+    test(s"$codec: hot searchBlocksFiltered equals the Dataset path; a bucket without allowed docs returns none") {
+      val (hot, cold) = opened(codec)
+      val (n, shift) = hot.blocksMeta.get
+      val bucketOf = (doc: Column) => pmod(hash(shiftright(doc, shift)), lit(n))
+      val twoBuckets = cold.docs.where(bucketOf(col("doc_id")) < 2).select("doc_id")
+      val sets = Seq(
+        cold.docs.where(col("doc_id") % 3 === 0).select("doc_id"),
+        cold.docs.where(col("doc_id") % 3 =!= 0).select("doc_id"),
+        twoBuckets)
+      def filtered(ix: BuiltIndex, q: BatchQuery, allowed: DataFrame) =
+        Bm25Query.searchBlocksFiltered(ix, q.query, 10, q.conjunctive, allowed)
+          .collect().toSeq
+      val inTwo = twoBuckets.collect().map(_.getLong(0)).toSet
+      for (allowed <- sets; q <- queries.slice(4, 12)) {
+        val got = filtered(hot, q, allowed)
+        assert(bits(got) == bits(filtered(cold, q, allowed)), q.toString)
+        // the declarative reference: the allowed docs' naive scores
+        val want = Bm25Query.scoredNaive(cold, q.query, q.conjunctive).get
+          .join(allowed, Seq("doc_id"), "left_semi")
+          .orderBy(col("score").desc, col("doc_id").asc).limit(10)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(got.map(h => (h.doc_id, h.score)) == want, q.toString)
+        if (allowed eq twoBuckets) assert(got.forall(h => inTwo(h.doc_id)), q.toString)
+      }
+      // buckets 2-4 receive no allowed doc, yet hold hits of the
+      // unfiltered query: the filter must bite there
+      val q = queries(11)
+      assert(single(hot, q).exists(h => !inTwo(h.doc_id)))
+      assert(filtered(hot, q, twoBuckets).nonEmpty)
+    }
+
     test(s"$codec: hot partition p holds bucket p's blocks and exactly its docs") {
       val (hot, cold) = opened(codec)
       import spark.implicits._
@@ -167,12 +199,19 @@ class HotServingSpec extends AnyFunSuite {
     val c = jobs(cold)
     info(s"jobs (plain, glob, 32-query batch): hot $h, Dataset path $c")
     assert(h == Seq(1, 1, 1))
-    // the Dataset path: candidates + urls, plus two jobs per glob pair's
-    // filter collect; a boosted query adds two for the rank set
-    assert(c == Seq(2, 4, 8))
-    val (_, boosted) = SparkJobs.count(spark)(Bm25Query.searchBlocksBoosted(
-      cold, s"${w(2)} ${w(7)}", 10, rankOf(cold)).collect())
-    assert(boosted == 4)
+    // the Dataset path: candidates + urls; the glob pairs' doc filters
+    // are a map stage of the candidates job
+    assert(c == Seq(2, 2, 2))
+    val boosted = s"${w(2)} ${w(7)}"
+    def boostedJobs(ix: BuiltIndex) = SparkJobs.count(spark)(
+      Bm25Query.searchBlocksBoosted(ix, boosted, 10, rankOf(cold)).collect())._2
+    def filteredJobs(ix: BuiltIndex) = SparkJobs.count(spark)(
+      Bm25Query.searchBlocksFiltered(ix, boosted, 10, conjunctive = true,
+        cold.docs.where(col("doc_id") % 3 === 0).select("doc_id")).collect())._2
+    val counts = Seq(boostedJobs(hot), filteredJobs(hot), boostedJobs(cold), filteredJobs(cold))
+    info(s"jobs (boosted, doc-set filtered): hot ${counts.take(2)}, Dataset path ${counts.drop(2)}")
+    // the rank set and the doc set ship as a map stage of the same job
+    assert(counts == Seq(1, 1, 2, 2))
   }
 
   test("a hot index with a partition out of memory serves on the Dataset path") {

@@ -13,9 +13,10 @@ import org.apache.logging.log4j.core.config.Property
 
 import graft.checkpoint.CheckpointedBuild
 import graft.corpus.PagesCorpus
+import graft.streaming.IncrementalIndex
 
-/** A checkpointed build and its resume read their units through explicit
-  * path lists. A glob path makes Spark probe it for a streaming-sink
+/** A checkpointed build, its resume and a streamed index's compaction
+  * read their units through explicit path lists. A glob path makes Spark probe it for a streaming-sink
   * metadata directory, and the probe logs a `FileNotFoundException` at
   * WARN ("Assume no metadata directory") on every such read.
   */
@@ -57,5 +58,17 @@ class NoGlobReadSpec extends AnyFunSuite {
     // the probe is what a glob read of the same units logs
     val glob = probeWarnings(spark.read.parquet(s"$dir/docs_raw/slice=*").collect())
     assert(glob.nonEmpty)
+  }
+
+  test("streamed batches and their compaction log no metadata-probe WARN") {
+    val dir = Files.createTempDirectory("graft-noglob-stream").toString
+    val pages = PagesCorpus.pages(spark, 60L, parts = 2).select("doc_id", "url", "text")
+    val warned = probeWarnings {
+      IncrementalIndex.appendBatch(pages.where("doc_id < 40"), dir, 0L)
+      IncrementalIndex.appendBatch(pages.where("doc_id >= 30"), dir, 1L)
+      val ix = IncrementalIndex.compact(spark, dir, s"$dir/compacted")
+      assert(ix.stats.num_docs == IncrementalIndex.currentDocs(spark, dir).count())
+    }
+    assert(warned.isEmpty, warned.mkString("\n"))
   }
 }

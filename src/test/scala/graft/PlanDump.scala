@@ -35,9 +35,9 @@ object PlanDump {
         graft.index.Bm25.termId(PagesCorpus.vocab(7)))
       idx.blocks.where(col("term_id").isin(qids: _*)).explain("formatted")
       println("### PLAN 4: FULL block-WAND query (bucketed scan -> local sort -> merge; zero Exchange)")
-      def planned(filter: Option[Bm25Query.DocFilter]) =
-        Array(BatchPlanned(qids.toArray, conjunctive = true, Nil, Nil, boosted = false, filter))
-      Bm25Query.batchCandidates(idx, planned(None), 10, null).explain("formatted")
+      def planned(filter: Int, boosted: Boolean = false) =
+        Array(BatchPlanned(qids.toArray, conjunctive = true, Nil, Nil, boosted, filter))
+      Bm25Query.batchCandidates(idx, planned(-1), 10).explain("formatted")
       println("### PLAN 5: terms dictionary lookup (pushed In(term), sorted row groups)")
       idx.terms.where(col("term").isin(PagesCorpus.vocab(3), PagesCorpus.vocab(7)))
         .explain("formatted")
@@ -51,12 +51,13 @@ object PlanDump {
         .select(col("doc_id"),
           posexplode(split(col("text"), "\n")).as(Seq("ln0", "line")))
         .explain("formatted")
-      println("### PLAN 8: filtered block-WAND (doc filter BROADCAST into the merge; zero Exchange, no naive fallback)")
+      println("### PLAN 8: filtered block-WAND (doc filter as a SIDE INPUT: the allow set hash-partitioned by its docs' blocks buckets, zipped with the bucketed blocks scan; zero Exchange on the blocks side)")
+      val (numBuckets, blockBits) = idx.blocksMeta.get
       val allow = idx.docs.where(col("doc_id") % 3 === 0).select("doc_id")
-      val arr = allow.collect().map(_.getLong(0)); java.util.Arrays.sort(arr)
-      Bm25Query.batchCandidates(idx,
-        planned(Some(Bm25Query.DocFilter(arr, isAllow = true))), 10, null)
-        .explain("formatted")
+      val sideAllow = graft.query.SideInput(Seq(allow), None, numBuckets, blockBits)
+      idx.blocks.where(col("term_id").isin(qids: _*))
+        .sortWithinPartitions(col("block_id"), col("term_id")).explain("formatted")
+      println(Bm25Query.sideCandidates(idx, planned(0), 10, sideAllow).toDebugString)
       println("### PLAN 9: symbols search via artifact (containment on the names DIMENSION, pushed In(name) on the fact table)")
       val symDir = java.nio.file.Files.createTempDirectory("graft-plans-sym").toString
       graft.symbols.Symbols.build(pages, symDir)
@@ -70,13 +71,15 @@ object PlanDump {
       graft.query.RegexQuery.termIdsForLiteral(idx,
         graft.query.RegexQuery.Lit("vous", leftBound = false, rightBound = true))
         .explain("formatted")
-      println("### PLAN 12: DENSE-filter block query (per-block shards bucket-joined with blocks; no Exchange on the blocks side)")
+      println("### PLAN 12: DENSE filter + rank set on a HOT index (the resident partitions zipped with the side input: one job, the side input's shuffle its only map stage)")
       val allowDense = idx.docs.where(col("doc_id") % 3 =!= 0).select("doc_id")
-      val (shardScored, cleanupShards) = Bm25Query.scoredBlocksSharded(idx,
-        s"${PagesCorpus.vocab(3)} ${PagesCorpus.vocab(7)}", 10,
-        conjunctive = true, allowDense)
-      shardScored.get.explain("formatted")
-      cleanupShards()
+      val rank = idx.docs.where(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), lit(2.0).as("static_rank"))
+      val hot = IndexBuilder.load(spark, dir).cacheHot()
+      graft.query.HotServing.zipped(hot.hotPartitions.get,
+        graft.query.SideInput(Seq(allowDense), Some(rank), numBuckets, blockBits),
+        planned(0, boosted = true), 10, q8 = false)
+        .toDebugString.linesIterator.foreach(println)
       println("### PLAN 13: blocks encode FROM TF ROWS (round 5 byte cut — the one build shuffle ships (tf INT, doc_len INT), impacts computed in-task from the broadcast idf dict)")
       val idfMap = new graft.index.LongDoubleMap(
         math.max(16, idx.stats.num_terms.toInt))
