@@ -639,11 +639,11 @@ object SparkEntry {
       graft.query.RegexQuery.search(indexFor(s, dir), documents(s, dir),
         "\\w+ustome\\w+", 1000).toDF().select("doc_id")),
 
-    // batched regex serving (round 6): every class — accelerated,
-    // alternation, prefix/suffix/infix, full scan — through the shared
-    // kernel (one postings pass + chunked verify legs + one fullscan
-    // content pass); per-query results must equal RegexQuery.search and
-    // therefore the per-pattern oracles
+    // batched regex serving: every class — accelerated, alternation,
+    // prefix/suffix/infix, full scan — through the one regex runner (one
+    // candidate pass + chunked verify legs + one fullscan content pass),
+    // of which RegexQuery.search is a batch of one; per-query results
+    // must equal the per-pattern oracles
     "p3_regex_batch" -> ((s, dir) => {
       val pats = Seq("spark\\s+\\w+\\s+merge", "(vector|stream)\\s+\\w+",
         "\\svect\\w+", "\\w+tor\\s", "\\w+ustome\\w+", "ba.ch")

@@ -1,8 +1,14 @@
 package graft.query
 
+import java.util.regex.{Pattern, PatternSyntaxException}
+
+import scala.collection.mutable
+import scala.concurrent.Future
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.Par
 import graft.index.{BuiltIndex, PostingBlocks}
 import graft.tokenize.Tokenizer
 
@@ -359,12 +365,11 @@ object RegexQuery {
     None
   }
 
-  /** Candidate doc_ids for partially-bounded literals: each literal maps
-    * to the dictionary terms it can live in (exact / prefix / suffix /
-    * infix), then one postings pass keeps docs covering ALL literals.
-    * The pass joins the term ids onto the encoded blocks before it
-    * decodes them: the ids come from a join, so no `In(term_id)` reaches
-    * the scan, and decoding first would decode every block.
+  private def esc(s: String) =
+    s.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
+
+  /** Dictionary term_ids a literal can live in (exact / prefix / suffix /
+    * infix).
     *
     * Lookup shapes (the dictionary files are SORTED, so range predicates
     * prune parquet row groups — a bare LIKE pushes nothing and pays a
@@ -379,25 +384,6 @@ object RegexQuery {
     *     exact containment verify on just those rows (round 5; the
     *     reference's trigram trick, trigram.rs:130-162, applied to the
     *     dictionary). Literals under 3 CHARS keep the containment scan.
-    */
-  private def candidatesByLiterals(index: BuiltIndex,
-      lits: Seq[Lit]): DataFrame = {
-    val reqTerms = lits.zipWithIndex.map { case (l, i) =>
-      termIdsForLiteral(index, l).withColumn("req", lit(i))
-    }.reduce(_ unionAll _)
-    PostingBlocks.decode(index.blockFiles.join(reqTerms, Seq("term_id")),
-        index.impactCodec)
-      .groupBy("doc_id")
-      .agg(countDistinct(col("req")).as("nreq"))
-      .where(col("nreq") === lits.size)
-      .select("doc_id")
-  }
-
-  private def esc(s: String) =
-    s.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
-
-  /** Dictionary term_ids a literal can live in (see
-    * [[candidatesByLiterals]] for the lookup shapes).
     */
   private[graft] def termIdsForLiteral(index: BuiltIndex, l: Lit): DataFrame =
     (l.leftBound, l.rightBound) match {
@@ -451,441 +437,289 @@ object RegexQuery {
     if (s.length < 3) Nil
     else (0 to s.length - 3).map(i => s.substring(i, i + 3)).distinct
 
-  /** Union of per-branch candidate sets (a match satisfies some branch). */
-  private def candidatesByBranches(index: BuiltIndex,
-      branches: Seq[Seq[Lit]]): DataFrame =
-    branches.map(candidatesByLiterals(index, _))
-      .reduce(_ unionAll _).distinct()
-
-  /** Candidate count up to which the verify scan materializes the id set
-    * on the driver and pushes `In(doc_id)` into the pages scan (parquet
-    * row-group pruning — the content table is docId-sorted). 100k ids =
-    * ~800 KB driver-side; past it the verify degrades to the join (a
-    * candidate set that large is within an order of magnitude of a scan
-    * anyway). Late materialization matters here like it did for line
-    * serving (PLANS.md 7): without the pushdown every accelerated regex
-    * query still paid a FULL content-column scan just to verify a
-    * handful of candidates.
+  /** Candidate count up to which the verify scan materializes a query's
+    * id set on the driver and pushes `In(doc_id)` into the pages scan
+    * (parquet row-group pruning — the content table is docId-sorted).
+    * 100k ids = ~800 KB driver-side; past it the query is verified by a
+    * distributed join (a candidate set that large is within an order of
+    * magnitude of a scan anyway). Late materialization matters here like
+    * it did for line serving (PLANS.md 7): without the pushdown every
+    * accelerated regex query still paid a FULL content-column scan just
+    * to verify a handful of candidates.
     */
   val MaxPushedVerifyDocs = 100000
 
-  /** Verification join: candidates × content. Under
-    * [[MaxPushedVerifyDocs]] the doc_ids push into the pages scan as an
-    * In-filter; above it a semi-join keeps the plan distributed.
-    */
-  private def verifyCandidates(cands: DataFrame, pagesText: DataFrame,
-      rx: String): DataFrame = {
-    val ids = cands.select("doc_id").limit(MaxPushedVerifyDocs + 1)
-      .collect().map(_.getLong(0))
-    val content =
-      if (ids.length <= MaxPushedVerifyDocs)
-        pagesText.where(col("doc_id").isin(ids.toIndexedSeq: _*))
-          .select("doc_id", "text")
-      else pagesText.select("doc_id", "text")
-        .join(cands.select("doc_id"), Seq("doc_id"), "left_semi")
-    content
-      .where(regexp_like(col("text"), lit(rx)))
-      .select("doc_id")
+  /** One regex query of a [[run]]: its pattern and url globs. */
+  private[graft] case class Query(pattern: String,
+      include: Seq[String] = Nil, exclude: Seq[String] = Nil) {
+    def filtered: Boolean = include.nonEmpty || exclude.nonEmpty
   }
 
-  /** Index-accelerated regex search. `pagesText` supplies (doc_id, text)
-    * for verification (the index itself stores no raw text — lazy content
-    * materialization, like the reference's mmap-on-demand store).
-    * Ranking: BM25 over the literal terms when every literal is a
-    * complete token; otherwise score 0.0 in doc_id order. Tie-break
-    * (score DESC, doc_id ASC), k clamped to 1..1000.
+  /** Index-accelerated regex search: a batch of one through [[run]].
+    * `pagesText` supplies (doc_id, text) for verification (the index
+    * itself stores no raw text — lazy content materialization, like the
+    * reference's mmap-on-demand store). Ranking: BM25 over the literal
+    * terms when every literal is a complete token; otherwise score 0.0
+    * in doc_id order. Tie-break (score DESC, doc_id ASC), k clamped to
+    * 1..1000. `include`/`exclude` url globs restrict the candidates
+    * BEFORE the top-k, like the BM25 paths (the reference's search_regex
+    * honors the same path filters, engine.rs:1540-1613).
     */
   def search(index: BuiltIndex, pagesText: DataFrame, pattern: String,
       k: Int,
       include: Seq[String] = Nil, exclude: Seq[String] = Nil): Dataset[Hit] = {
     val spark = index.spark
     import spark.implicits._
-    val kk = math.max(1, math.min(k, 1000))
-    // P5 on the regex path (reference search_regex honors the same path
-    // filters, engine.rs:1540-1613): restrict candidates by url BEFORE
-    // the top-k, exactly like the BM25 paths
-    val urlFilter: DataFrame => DataFrame =
-      if (include.isEmpty && exclude.isEmpty) identity
-      else df => df.join(
-        index.docs.where(PathFilter.predicate(col("url"), include, exclude))
-          .select("doc_id"),
-        Seq("doc_id"), "left_semi")
-    val branches = requiredLiteralBranches(pattern)
-    // (?i): ASCII case-insensitive like the reference's fold
-    // (engine.rs:22-65); (?s): '.' crosses lines. Applied to the ORIGINAL
-    // pattern — see scaladoc.
-    val rx = "(?is)" + pattern
-
-    val verifiedScored: DataFrame =
-      if (branches.size == 1 && branches.head.forall(_.bothBound)) {
-        // single branch, all literals complete index terms -> conjunctive
-        // BM25 prefilter AND BM25-ranked results. The candidate job runs
-        // ONCE: (doc_id, score) pairs collect together, driving BOTH the
-        // In(doc_id) verify pushdown and the final score attach (a local
-        // relation) — the previous shape collected ids inside
-        // verifyCandidates and then re-executed the whole scoring plan
-        // for the outer join (one redundant job per accelerated query).
-        Bm25Query.scoredNaive(index, branches.head.map(_.text).mkString(" "),
-            conjunctive = true) match {
-          case None => return spark.emptyDataset[Hit] // literal not in corpus
-          case Some(scored) =>
-            val pairs = scored.select("doc_id", "score")
-              .limit(MaxPushedVerifyDocs + 1)
-              .collect().map(r => (r.getLong(0), r.getDouble(1)))
-            if (pairs.length <= MaxPushedVerifyDocs) {
-              pagesText
-                .where(col("doc_id").isin(pairs.map(_._1).toIndexedSeq: _*))
-                .where(regexp_like(col("text"), lit(rx)))
-                .select("doc_id")
-                .join(spark.createDataset(pairs.toIndexedSeq)
-                  .toDF("doc_id", "score"), Seq("doc_id"))
-            } else {
-              // past the pushdown cap: one distributed plan (semi-join
-              // verify + score attach) — the candidate set at this size is
-              // within an order of magnitude of a scan anyway
-              scored.join(
-                pagesText.select("doc_id", "text")
-                  .join(scored.select("doc_id"), Seq("doc_id"), "left_semi")
-                  .where(regexp_like(col("text"), lit(rx)))
-                  .select("doc_id"),
-                Seq("doc_id"))
-                .select(col("doc_id"), col("score"))
-            }
-        }
-      } else if (branches.nonEmpty) {
-        // union of per-branch candidate sets -> verify; doc_id-ordered
-        // (score 0.0 — mixed-branch literal sets have no shared BM25 frame)
-        verifyCandidates(candidatesByBranches(index, branches), pagesText, rx)
-          .select(col("doc_id"), lit(0.0).as("score"))
-      } else {
-        pagesText.select("doc_id", "text")
-          .where(regexp_like(col("text"), lit(rx)))
-          .select(col("doc_id"), lit(0.0).as("score"))
-      }
-    val top = urlFilter(verifiedScored)
-      .orderBy(col("score").desc, col("doc_id").asc).limit(kk)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    if (top.isEmpty) return spark.emptyDataset[Hit]
-    val urls = index.docs.where(col("doc_id").isin(top.map(_._1): _*))
-      .select("doc_id", "url").as[(Long, String)].collect().toMap
-    spark.createDataset(top.zipWithIndex.map { case ((d, s), i) =>
-      Hit(d, urls.getOrElse(d, ""), s, i + 1)
-    }.toSeq)
+    spark.createDataset(run(index, pagesText, Seq(Query(pattern, include, exclude)), k).head)
   }
 
-  // ------------------------------------------------------------------
-  // Batched regex serving (round 6)
-  // ------------------------------------------------------------------
-
-  /** Per-literal driver-side term-id cap for the batch kernel: a literal
-    * whose dictionary lookup exceeds this many term_ids sends its query
-    * through the single-query path (a set that large degrades toward a
-    * scan there too). 100k ids = ~800 KB on the driver.
-    */
-  val MaxBatchLiteralTermIds = 100000
-
-  /** The ONE shared postings pass of [[searchBatch]] (split out so the
-    * plan audit — PLANS.md plan 15 — explains the exact serving plan):
-    * pushed In(term_id) over the union of every query's ids, a broadcast
-    * (term_id -> qi, bi, req, rk) mapping replayed per query/branch, one
-    * aggregation computing BOTH the conjunctive countDistinct(req) merge
-    * and (for ranked rows, rk=true) the BM25 score via the SAME
-    * canonical ascending-term_id fold as Bm25Query.scoredNaive
-    * (sort_array over (term_id, impact) structs, left fold from 0.0;
-    * accelerated rows contribute no structs — collect_list drops the
-    * null the when() yields) — for a ranked query the per-(qi, doc)
-    * group holds exactly the rows the single path's per-doc group holds,
-    * so the fold is bit-identical. Output: (qi, doc_id, score), capped
-    * per query at [[MaxPushedVerifyDocs]]+1 by a row_number window.
-    */
-  private[graft] def batchCandidatesDf(index: BuiltIndex,
-      mapRows: IndexedSeq[(Long, Int, Int, Int, Boolean)],
-      needRows: IndexedSeq[(Int, Int, Int)]): DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    val allIds = mapRows.map(_._1).distinct
-    val mapDf = spark.createDataset(mapRows)
-      .toDF("term_id", "qi", "bi", "req", "rk")
-    val needDf = spark.createDataset(needRows).toDF("qi", "bi", "need")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qi").orderBy(col("doc_id").asc)
-    index.postings
-      .where(col("term_id").isin(allIds: _*))
-      .join(broadcast(mapDf), Seq("term_id"))
-      .groupBy("qi", "bi", "doc_id")
-      .agg(countDistinct(col("req")).as("nreq"),
-        aggregate(
-          sort_array(collect_list(when(col("rk"),
-            struct(col("term_id"), col("impact"))))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("impact")).as("score"))
-      .join(broadcast(needDf), Seq("qi", "bi"))
-      .where(col("nreq") === col("need"))
-      .select("qi", "doc_id", "score").distinct()
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= MaxPushedVerifyDocs + 1)
-      .select("qi", "doc_id", "score")
-  }
-
-  /** Batched regex serving: B patterns answered with SHARED jobs —
-    * regex was the one class still paying its full single-query cost
-    * (p50 ~2.6 s), and the reference's load mix is 5% regex
-    * (fast_code_search_validator.rs:706-719). Per-query results are
-    * BIT-IDENTICAL to [[search]] (RegexBatchSpec).
-    *
-    * Job sharing, by query class (classes analyzed on the driver):
-    *   - RANKED (one branch, all literals complete terms): terms resolve
-    *     against the driver-resident dictionary (zero-job in serving
-    *     mode), then the class RIDES THE SHARED POSTINGS PASS below
-    *     (round 7 — previously one scoredNaive collect job per ranked
-    *     pattern): its rows are flagged in the broadcast mapping and the
-    *     per-(qi, doc) BM25 score is replayed inside the one aggregation
-    *     by the SAME canonical ascending-term_id fold scoredNaive uses,
-    *     so scores are bit-identical to the single path. The verify
-    *     rides the shared leg union below.
-    *   - ACCELERATED (literal branches with open sides): ONE postings
-    *     pass answers every query — each literal's dictionary term_ids
-    *     collect (capped at [[MaxBatchLiteralTermIds]]), a broadcast
-    *     (term_id -> qi, branch, req, rk) mapping replays the per-branch
-    *     conjunctive countDistinct merge per query, and the pushed
-    *     In(term_id) over the UNION of all queries' ids (both classes)
-    *     prunes the one scan. Per-query candidates cap at
-    *     [[MaxPushedVerifyDocs]] (row_number window); over-cap queries
-    *     fall back.
-    *   - VERIFY for both classes: union of per-query PRUNED content
-    *     scans (In(doc_id) pushed below the regexp filter, like the
-    *     single path / lines batch), CHUNKED so the driver collect stays
-    *     under `maxCollectRows`.
-    *   - FULL SCAN (no usable literal): ONE content pass evaluates every
-    *     scan query's regex per row (array-of-when + explode) — B full
-    *     scans become one; per-query top-k taken distributed (window)
-    *     before the collect.
-    *   - One shared url lookup attaches urls for every query's winners.
+  /** Batched regex serving: B patterns through [[run]], sharing its
+    * jobs (the reference's load mix is 5% regex,
+    * fast_code_search_validator.rs:706-719). [[search]] is the same
+    * runner with a batch of one, so each query's hits are those of
+    * [[search]] on its own.
     */
   def searchBatch(index: BuiltIndex, pagesText: DataFrame,
       patterns: Seq[String], k: Int,
+      maxCollectRows: Long = Bm25Query.MaxBatchCollectRows): Seq[Vector[Hit]] =
+    run(index, pagesText, patterns.map(Query(_)), k, maxCollectRows)
+
+  /** The one regex runner: candidates, verification and top-k of every
+    * query, planned per query class on the driver.
+    *
+    *   - RANKED (one branch, every literal a complete token) and
+    *     ACCELERATED (literal branches with an open side) queries share
+    *     ONE candidate pass ([[candidates]]). The candidate ids, capped
+    *     per query, collect once; each query's ids push into the pages
+    *     scan as `In(doc_id)` below its regex, and the per-query scans
+    *     run as one union, chunked so each collect stays under
+    *     `maxCollectRows` ids. The top-k is taken on the driver. A query
+    *     with more than [[MaxPushedVerifyDocs]] candidates joins its
+    *     candidates with the pages instead, top-k taken distributed.
+    *   - FULL SCAN (no usable literal): ONE content pass evaluates every
+    *     scan query's regex per row (array-of-when + explode); each
+    *     partition keeps its k smallest doc ids per query. It shares no
+    *     data with the candidate pass, so the two run as concurrent legs.
+    *   - Url globs restrict each query's candidates, or its full-scan
+    *     rows, before the top-k; one url lookup attaches the winners'
+    *     urls.
+    *
+    * Patterns compile on the driver first: a bad one throws
+    * IllegalArgumentException before any job starts. Every leg is
+    * awaited before the runner returns or rethrows.
+    */
+  private[graft] def run(index: BuiltIndex, pagesText: DataFrame,
+      queries: Seq[Query], k: Int,
       maxCollectRows: Long = Bm25Query.MaxBatchCollectRows): Seq[Vector[Hit]] = {
     val spark = index.spark
     import spark.implicits._
     val kk = math.max(1, math.min(k, 1000))
-    val out = scala.collection.mutable.Map.empty[Int, Vector[Hit]]
-    def rxOf(p: String) = "(?is)" + p
-
-    // ---- driver-side classification ----
-    final case class Planned(qi: Int, branches: Seq[Seq[Lit]])
-    val ranked = scala.collection.mutable.ArrayBuffer.empty[Planned]
-    val accel = scala.collection.mutable.ArrayBuffer.empty[Planned]
-    val fullscan = scala.collection.mutable.ArrayBuffer.empty[Int]
-    patterns.zipWithIndex.foreach { case (p, qi) =>
-      val branches = requiredLiteralBranches(p)
-      if (branches.size == 1 && branches.head.forall(_.bothBound))
-        ranked += Planned(qi, branches)
-      else if (branches.nonEmpty) accel += Planned(qi, branches)
-      else fullscan += qi
+    val rx = queries.zipWithIndex.map { case (q, qi) =>
+      compiled(q.pattern, if (queries.size > 1) Some(qi) else None)
     }
-
-    // full-scan class launched NOW as a future (consumed further down):
-    // it reads only the content table, independent of every other leg
-    val fFullscan: scala.concurrent.Future[Array[(Int, Long)]] =
-      if (fullscan.isEmpty) scala.concurrent.Future.successful(Array.empty)
-      else graft.Par.leg(spark) {
-        val tagged = fullscan.map(qi =>
-          when(regexp_like(col("text"), lit(rxOf(patterns(qi)))), lit(qi)))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("qi").orderBy(col("doc_id").asc)
-        pagesText.select(col("doc_id"),
-            explode(filter(array(tagged.toSeq: _*), x => x.isNotNull)).as("qi"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= kk)
-          .select("qi", "doc_id").as[(Int, Long)].collect()
-      }
-
-    // ---- ranked class: driver-side term analysis only (round 7 — the
-    // round-6 shape paid one scoredNaive collect job PER ranked pattern,
-    // the exact per-query driver-job floor the batch exists to
-    // amortize; ranked terms now ride the SAME shared postings pass as
-    // the accelerated class, with the per-(qi, doc) score replayed by
-    // the canonical ascending-term_id fold scoredNaive uses, so scores
-    // stay bit-identical to the single path) ----
-    val rankedPairs = scala.collection.mutable.Map.empty[Int, Array[(Long, Double)]]
-    final case class RankedPlan(qi: Int, terms: Vector[QueryTerm])
-    val rankedLive = scala.collection.mutable.ArrayBuffer.empty[RankedPlan]
-    ranked.foreach { pl =>
-      val a = Bm25Query.analyze(index,
-        pl.branches.head.map(_.text).mkString(" "))
-      if (a.terms.isEmpty || !a.allResolved)
-        out(pl.qi) = Vector.empty // literal not in corpus (single path: None)
-      else rankedLive += RankedPlan(pl.qi, a.terms)
-    }
-
-    // ---- shared postings pass: accelerated + ranked classes ----
-    val accelIds = scala.collection.mutable.Map.empty[Int, Array[Long]]
-    if (accel.nonEmpty || rankedLive.nonEmpty) {
-      // resolve every literal's term_ids (tiny pruned dictionary jobs;
-      // exact literals batch into ONE In(term) scan)
-      // round 8: the exact-literal scan and every distinct open literal's
-      // dictionary lookup are INDEPENDENT pruned scans — overlap them
-      // (guide §2.6); the collected id sets (and thus results) are
-      // unchanged. (The old serial loop skipped remaining lookups of an
-      // already-over-cap query — a shortcut, not a semantic.)
-      val exactTexts = accel.flatMap(_.branches).flatten
-        .filter(_.bothBound).map(_.text).distinct
-      val fExact = graft.Par.leg[Map[String, Array[Long]]](spark) {
-        if (exactTexts.isEmpty) Map.empty
-        else index.terms.where(col("term").isin(exactTexts.toSeq: _*))
-          .select("term", "term_id").as[(String, Long)].collect()
-          .groupBy(_._1).map { case (t, a) => t -> a.map(_._2) }
-      }
-      val distinctOpen = accel.flatMap(_.branches).flatten
-        .filterNot(_.bothBound)
-        .map(l => ((l.text, l.leftBound, l.rightBound), l)).toMap
-      val fOpen = distinctOpen.map { case (key, l) =>
-        key -> graft.Par.leg(spark) {
-          termIdsForLiteral(index, l)
-            .limit(MaxBatchLiteralTermIds + 1).as[Long].collect()
-        }
-      }
-      val exactIds = graft.Par.join(fExact)
-      val openIds = scala.collection.mutable.Map.empty[(String, Boolean, Boolean), Array[Long]]
-      val overCap = scala.collection.mutable.Set.empty[Int]
-      val openResolved = fOpen.map { case (k, f) =>
-        k -> graft.Par.join(f) }
-      accel.foreach { pl =>
-        pl.branches.flatten.foreach { l =>
-          if (!l.bothBound) {
-            val key = (l.text, l.leftBound, l.rightBound)
-            val ids = openResolved(key)
-            if (ids.length > MaxBatchLiteralTermIds) overCap += pl.qi
-            else openIds(key) = ids
-          }
-        }
-      }
-      def idsOf(l: Lit): Array[Long] =
-        if (l.bothBound) exactIds.getOrElse(l.text, Array.empty)
-        else openIds.getOrElse((l.text, l.leftBound, l.rightBound), Array.empty)
-      overCap.foreach { qi =>
-        out(qi) = search(index, pagesText, patterns(qi), kk).collect().toVector
-      }
-      val live = accel.filterNot(pl => overCap(pl.qi))
-      // mapping (term_id, qi, branch, req, rk) for branches where EVERY
-      // literal resolved (a branch with an unresolvable literal yields
-      // no candidates in the single path — skip it here the same way);
-      // rk marks ranked-class rows, whose (term_id, impact) structs feed
-      // the score fold below (accelerated rows contribute no structs —
-      // collect_list drops the null the when() yields)
-      val mapRows = live.flatMap { pl =>
-        pl.branches.zipWithIndex.flatMap { case (br, bi) =>
-          val perLit = br.map(idsOf)
-          if (perLit.exists(_.isEmpty)) Nil
-          else perLit.zipWithIndex.flatMap { case (ids, req) =>
-            ids.map(id => (id, pl.qi, bi, req, false))
-          }
-        }
-      } ++ rankedLive.flatMap { rp =>
-        rp.terms.zipWithIndex.map { case (t, req) =>
-          (t.term_id, rp.qi, 0, req, true)
-        }
-      }
-      if (mapRows.nonEmpty) {
-        val needRows = live.flatMap { pl =>
-          pl.branches.zipWithIndex.map { case (br, bi) => (pl.qi, bi, br.size) }
-        } ++ rankedLive.map(rp => (rp.qi, 0, rp.terms.size))
-        val rows = batchCandidatesDf(index, mapRows.toIndexedSeq,
-          needRows.toIndexedSeq).as[(Int, Long, Double)].collect()
-        val byQ = rows.groupBy(_._1)
-        live.foreach { pl =>
-          val ids = byQ.getOrElse(pl.qi, Array.empty[(Int, Long, Double)]).map(_._2)
-          if (ids.length > MaxPushedVerifyDocs)
-            out(pl.qi) = search(index, pagesText, patterns(pl.qi), kk)
-              .collect().toVector
-          else accelIds(pl.qi) = ids.sorted
-        }
-        rankedLive.foreach { rp =>
-          val pairs = byQ.getOrElse(rp.qi, Array.empty[(Int, Long, Double)])
-            .map(r => (r._2, r._3))
-          if (pairs.length > MaxPushedVerifyDocs)
-            out(rp.qi) = search(index, pagesText, patterns(rp.qi), kk)
-              .collect().toVector
-          else rankedPairs(rp.qi) = pairs
-        }
-      } else {
-        live.foreach(pl => accelIds(pl.qi) = Array.empty)
-        rankedLive.foreach(rp => rankedPairs(rp.qi) = Array.empty)
-      }
-    }
-
-    // ---- verify: chunked union of per-query pruned scans ----
-    final case class Leg(qi: Int, ids: Array[Long])
-    val legs = (rankedPairs.keysIterator.map(qi =>
-        Leg(qi, rankedPairs(qi).map(_._1))) ++
-      accelIds.keysIterator.map(qi => Leg(qi, accelIds(qi))))
-      .filter(_.ids.nonEmpty).toSeq.sortBy(_.qi)
-    rankedPairs.keysIterator.filter(rankedPairs(_).isEmpty)
-      .foreach(qi => out(qi) = Vector.empty)
-    accelIds.keysIterator.filter(accelIds(_).isEmpty)
-      .foreach(qi => out(qi) = Vector.empty)
-    val verified = scala.collection.mutable.Map.empty[Int, Array[Long]]
-    if (legs.nonEmpty) {
-      // chunk by cumulative id budget (the collect upper bound)
-      val chunks = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer.empty[Leg])
-      var budget = 0L
-      legs.foreach { leg =>
-        if (budget + leg.ids.length > maxCollectRows && chunks.last.nonEmpty) {
-          chunks += scala.collection.mutable.ArrayBuffer.empty[Leg]
-          budget = 0L
-        }
-        chunks.last += leg; budget += leg.ids.length
-      }
-      chunks.foreach { chunk =>
-        val rows = chunk.map { leg =>
-          pagesText
-            .where(col("doc_id").isin(leg.ids.toIndexedSeq: _*))
-            .where(regexp_like(col("text"), lit(rxOf(patterns(leg.qi)))))
-            .select(lit(leg.qi).as("qi"), col("doc_id"))
-        }.reduce(_ unionByName _).as[(Int, Long)].collect()
-        rows.groupBy(_._1).foreach { case (qi, arr) =>
-          verified(qi) = arr.map(_._2)
-        }
-      }
-    }
-    legs.foreach { leg =>
-      val ids = verified.getOrElse(leg.qi, Array.empty[Long])
-      val hitsSorted: Array[(Long, Double)] = rankedPairs.get(leg.qi) match {
-        case Some(pairs) =>
-          val scoreOf = pairs.toMap
-          ids.map(d => (d, scoreOf(d))).sortBy { case (d, s) => (-s, d) }
-        case None => ids.sorted.map(d => (d, 0.0))
-      }
-      out(leg.qi) = hitsSorted.take(kk).toVector.map { case (d, s) =>
-        Hit(d, "", s, 0) // url + rank attached below
-      }
-    }
-
-    // ---- full-scan class: ONE content pass for every scan query ----
-    // awaited here, LAUNCHED before the accel/ranked postings+verify
-    // legs (round 8, guide §2.6): the scan shares no data with them, so
-    // its content pass back-fills the cluster while the other classes'
-    // driver round trips run
-    if (fullscan.nonEmpty) {
-      val rows = graft.Par.join(fFullscan)
-      val byQ = rows.groupBy(_._1)
-      fullscan.foreach { qi =>
-        out(qi) = byQ.getOrElse(qi, Array.empty[(Int, Long)]).map(_._2).sorted.take(kk)
-          .toVector.map(d => Hit(d, "", 0.0, 0))
-      }
-    }
-
-    // ---- one shared url lookup + final ranks ----
-    val needUrls = out.valuesIterator.flatten.map(_.doc_id).toArray.distinct
+    val (scan, indexed) = queries.indices
+      .partition(qi => requiredLiteralBranches(queries(qi).pattern).isEmpty)
+    def leg(qis: Seq[Int])(f: => Map[Int, Seq[(Long, Double)]]) =
+      if (qis.isEmpty) Future.successful(Map.empty[Int, Seq[(Long, Double)]])
+      else Par.leg(spark)(f)
+    val top = Par.await(Seq(
+      leg(scan)(fullScan(index, pagesText, queries, rx, scan, kk)),
+      leg(indexed)(indexedTop(index, pagesText, queries, rx, kk, maxCollectRows))
+    )).reduce(_ ++ _)
+    val ids = top.valuesIterator.flatten.map(_._1).toArray.distinct
     val urls =
-      if (needUrls.isEmpty) Map.empty[Long, String]
-      else index.docs.where(col("doc_id").isin(needUrls.toIndexedSeq: _*))
+      if (ids.isEmpty) Map.empty[Long, String]
+      else index.docs.where(col("doc_id").isin(ids.toIndexedSeq: _*))
         .select("doc_id", "url").as[(Long, String)].collect().toMap
-    patterns.indices.map { qi =>
-      out.getOrElse(qi, Vector.empty).zipWithIndex.map { case (h, i) =>
-        Hit(h.doc_id, urls.getOrElse(h.doc_id, h.url), h.score, i + 1)
+    queries.indices.map { qi =>
+      top.getOrElse(qi, Nil).toVector.zipWithIndex.map { case ((d, s), i) =>
+        Hit(d, urls.getOrElse(d, ""), s, i + 1)
       }
-    }.toVector
+    }
+  }
+
+  /** `(?is)` + pattern, compiled once on the driver so that a bad pattern
+    * fails before any job. (?i): ASCII case-insensitive like the
+    * reference's fold (engine.rs:22-65); (?s): '.' crosses lines. Applied
+    * to the ORIGINAL pattern — see the object doc.
+    */
+  private def compiled(pattern: String, qi: Option[Int]): String = {
+    val rx = "(?is)" + pattern
+    try Pattern.compile(rx) catch {
+      case e: PatternSyntaxException =>
+        throw new IllegalArgumentException(s"invalid regex pattern '$pattern'" +
+          qi.fold("")(i => s" (batch query $i)") + s": ${e.getDescription}", e)
+    }
+    rx
+  }
+
+  /** Top-k of the full-scan queries `qis`: one content pass for all. */
+  private def fullScan(index: BuiltIndex, pagesText: DataFrame,
+      queries: Seq[Query], rx: Seq[String], qis: Seq[Int],
+      kk: Int): Map[Int, Seq[(Long, Double)]] = {
+    val spark = index.spark
+    import spark.implicits._
+    val tags = qis.map(qi => when(regexp_like(col("text"), lit(rx(qi))), lit(qi)))
+    val hits = pagesText.select(col("doc_id"),
+      explode(filter(array(tags: _*), _.isNotNull)).as("qi"))
+    urlFiltered(index, hits, queries).select("qi", "doc_id").as[(Int, Long)]
+      .mapPartitions(smallestPerQuery(kk)).collect()
+      .groupBy(_._1).map { case (qi, rows) =>
+        qi -> rows.map(_._2).sorted.take(kk).toSeq.map(d => (d, 0.0))
+      }
+  }
+
+  /** The `k` smallest doc ids of each query among one partition's rows. */
+  private def smallestPerQuery(k: Int)(rows: Iterator[(Int, Long)]): Iterator[(Int, Long)] = {
+    val heaps = mutable.HashMap.empty[Int, mutable.PriorityQueue[Long]]
+    rows.foreach { case (qi, d) =>
+      val h = heaps.getOrElseUpdate(qi, mutable.PriorityQueue.empty[Long])
+      if (h.size < k) h += d
+      else if (d < h.head) { h.dequeue(); h += d }
+    }
+    heaps.iterator.flatMap { case (qi, h) => h.iterator.map(qi -> _) }
+  }
+
+  /** Top-k of the ranked and accelerated queries: the candidate pass,
+    * then the verify legs.
+    */
+  private def indexedTop(index: BuiltIndex, pagesText: DataFrame,
+      queries: Seq[Query], rx: Seq[String], kk: Int,
+      maxCollectRows: Long): Map[Int, Seq[(Long, Double)]] = {
+    val spark = index.spark
+    import spark.implicits._
+    val cands = candidates(index, queries).getOrElse(return Map.empty)
+    // each partition returns at most MaxPushedVerifyDocs + 1 rows of a
+    // query, so the collect holds no more than that per query and
+    // partition, and a query past the cap is seen to be past it
+    val byQ = cands.as[(Int, Long, Double)]
+      .mapPartitions(firstPerQuery(MaxPushedVerifyDocs + 1)).collect()
+      .groupBy(_._1).map { case (qi, rows) => qi -> rows.map(r => (r._2, r._3)) }
+    val (overCap, pushed) = byQ.partition(_._2.length > MaxPushedVerifyDocs)
+
+    // pushed verify: chunk the legs by cumulative id count (the collect
+    // upper bound)
+    val chunks = mutable.ArrayBuffer(mutable.ArrayBuffer.empty[Int])
+    var budget = 0L
+    pushed.keys.toSeq.sorted.foreach { qi =>
+      val n = pushed(qi).length
+      if (budget + n > maxCollectRows && chunks.last.nonEmpty) {
+        chunks += mutable.ArrayBuffer.empty[Int]
+        budget = 0L
+      }
+      chunks.last += qi; budget += n
+    }
+    val verified = chunks.filter(_.nonEmpty).flatMap { chunk =>
+      chunk.map { qi =>
+        pagesText
+          .where(col("doc_id").isin(pushed(qi).map(_._1).toIndexedSeq: _*))
+          .where(regexp_like(col("text"), lit(rx(qi))))
+          .select(lit(qi).as("qi"), col("doc_id"))
+      }.reduce(_ unionByName _).as[(Int, Long)].collect()
+    }.groupBy(_._1)
+    val pushedTop = pushed.map { case (qi, pairs) =>
+      val scoreOf = pairs.toMap
+      qi -> verified.getOrElse(qi, Nil).map { case (_, d) => (d, scoreOf(d)) }
+        .sortBy { case (d, s) => (-s, d) }.take(kk).toSeq
+    }
+    // past the cap: one distributed plan per query
+    pushedTop ++ overCap.keys.map { qi =>
+      qi -> cands.where(col("qi") === qi)
+        .join(pagesText.select("doc_id", "text"), Seq("doc_id"))
+        .where(regexp_like(col("text"), lit(rx(qi))))
+        .orderBy(col("score").desc, col("doc_id").asc).limit(kk)
+        .select("doc_id", "score").as[(Long, Double)].collect().toSeq
+    }
+  }
+
+  /** At most `cap` of each query's rows from one partition. */
+  private def firstPerQuery(cap: Int)(
+      rows: Iterator[(Int, Long, Double)]): Iterator[(Int, Long, Double)] = {
+    val seen = mutable.HashMap.empty[Int, Int].withDefaultValue(0)
+    rows.filter { r => seen(r._1) += 1; seen(r._1) <= cap }
+  }
+
+  /** The one candidate pass of [[run]] over its ranked and accelerated
+    * queries (split out for the plan audit, PLANS.md plan 15); None when
+    * no query has a term to look up.
+    *
+    * Every query contributes tagged dictionary rows (term_id, qi, bi,
+    * req, need, rk): per branch bi, literal req's term ids from
+    * [[termIdsForLiteral]] (need = the branch's literal count); a ranked
+    * query, its terms as resolved by `Bm25Query.analyze` (zero jobs on a
+    * cached dictionary) as a local relation with rk set — a term missing
+    * from the corpus leaves the query without candidates. The tagged
+    * rows join the encoded blocks before the decode, so only their blocks
+    * decode, and no term id is collected on the driver. One repartition
+    * by doc_id serves everything above it, as every key above contains
+    * doc_id (a (qi, doc_id) key would not: on a batch of one qi folds to
+    * a constant, and Spark plans two more shuffles). ONE aggregation
+    * keyed (qi, bi, need, doc_id) computes both the conjunctive
+    * count(distinct req) merge and, for ranked rows, the BM25 score by
+    * the canonical ascending-term_id fold of `Bm25Query.scoredNaive`
+    * (sort_array over (term_id, impact) structs, left fold from 0.0;
+    * accelerated rows add no structs — collect_list drops the null the
+    * when() yields), so a ranked score is bit-identical to it. Output:
+    * (qi, doc_id, score) once per query and doc, restricted by the
+    * query's url globs.
+    */
+  private[graft] def candidates(index: BuiltIndex,
+      queries: Seq[Query]): Option[DataFrame] = {
+    val spark = index.spark
+    import spark.implicits._
+    val ranked = mutable.ArrayBuffer.empty[(Long, Int, Int, Int, Int, Boolean)]
+    val lookups = mutable.ArrayBuffer.empty[DataFrame]
+    queries.zipWithIndex.foreach { case (q, qi) =>
+      val branches = requiredLiteralBranches(q.pattern)
+      if (branches.size == 1 && branches.head.forall(_.bothBound)) {
+        val a = Bm25Query.analyze(index, branches.head.map(_.text).mkString(" "))
+        if (a.terms.nonEmpty && a.allResolved)
+          a.terms.zipWithIndex.foreach { case (t, req) =>
+            ranked += ((t.term_id, qi, 0, req, a.terms.size, true))
+          }
+      } else for ((br, bi) <- branches.zipWithIndex; (l, req) <- br.zipWithIndex)
+        lookups += termIdsForLiteral(index, l).select(col("term_id"),
+          lit(qi).as("qi"), lit(bi).as("bi"), lit(req).as("req"),
+          lit(br.size).as("need"), lit(false).as("rk"))
+    }
+    val local =
+      if (ranked.isEmpty) None
+      else Some(ranked.toSeq.toDF("term_id", "qi", "bi", "req", "need", "rk"))
+    // without ranked rows nothing reads the impacts, so none decode
+    val score =
+      if (ranked.isEmpty) lit(0.0)
+      else aggregate(
+        sort_array(collect_list(when(col("rk"), struct(col("term_id"), col("impact"))))),
+        lit(0.0),
+        (acc, x) => acc + x.getField("impact"))
+    (lookups ++ local).reduceOption(_ unionByName _).map { tagged =>
+      val perBranch = PostingBlocks.decode(
+          index.blockFiles.join(tagged, Seq("term_id")), index.impactCodec)
+        .repartition(col("doc_id"))
+        .groupBy("qi", "bi", "need", "doc_id")
+        .agg(countDistinct(col("req")).as("nreq"), score.as("score"))
+        .where(col("nreq") === col("need"))
+        .select("qi", "doc_id", "score")
+      urlFiltered(index, perBranch, queries).dropDuplicates("qi", "doc_id")
+    }
+  }
+
+  /** Rows (qi, doc_id, ...) whose doc url passes their query's include/
+    * exclude globs — a doc missing from `docs` passes none; rows of a
+    * query without globs pass as they are.
+    */
+  private def urlFiltered(index: BuiltIndex, rows: DataFrame,
+      queries: Seq[Query]): DataFrame = {
+    val globbed = queries.indices.filter(queries(_).filtered)
+    if (globbed.isEmpty) rows
+    else {
+      def pass(qi: Int) =
+        PathFilter.predicate(col("url"), queries(qi).include, queries(qi).exclude)
+      val ok = globbed.tail.foldLeft(when(col("qi") === globbed.head, pass(globbed.head))) {
+        (c, qi) => c.when(col("qi") === qi, pass(qi))
+      }.otherwise(lit(true))
+      rows.join(index.docs.select("doc_id", "url"), Seq("doc_id"), "left")
+        .where(ok).select(rows.columns.map(col).toSeq: _*)
+    }
   }
 }

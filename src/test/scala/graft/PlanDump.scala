@@ -93,13 +93,10 @@ object PlanDump {
       graft.query.RegexQuery.termIdsForLiteral(idx,
         graft.query.RegexQuery.Lit("ecto", leftBound = false, rightBound = false))
         .explain("formatted")
-      println("### PLAN 15: batched-regex SHARED postings pass (ONE pushed In(term_id) blocks scan decoded in place for every ranked+accelerated query; broadcast query mapping; one agg = conjunctive merge + canonical ranked score fold; per-query row_number cap)")
-      val bIds = Seq(PagesCorpus.vocab(3), PagesCorpus.vocab(7),
-        PagesCorpus.vocab(11)).map(graft.index.Bm25.termId)
-      graft.query.RegexQuery.batchCandidatesDf(idx,
-        IndexedSeq((bIds(0), 0, 0, 0, true), (bIds(1), 0, 0, 1, true),
-          (bIds(2), 1, 0, 0, false)),
-        IndexedSeq((0, 0, 2), (1, 0, 1)))
+      println("### PLAN 15: regex CANDIDATE pass (one ranked + one prefix query: tagged dictionary rows joined onto the encoded blocks before the decode; one repartition by doc_id under the one agg (conjunctive merge + canonical ranked score fold) and the dedupe)")
+      graft.query.RegexQuery.candidates(idx, Seq(
+        graft.query.RegexQuery.Query(s" ${PagesCorpus.vocab(3)} ${PagesCorpus.vocab(7)} "),
+        graft.query.RegexQuery.Query("\\svect\\w+"))).get
         .explain("formatted")
       println("### PLAN 16: one-pass symbol extraction (extractCode: ONE exploded-lines scan, arms as array-of-structs, doc-local lag window; extractWeb: ONE combined-regex scan)")
       graft.symbols.Symbols.extractCode(

@@ -170,10 +170,9 @@ object QueryBench {
     println(f"[loadtest:batched_lines] queries=${lq.size} rounds=$rounds " +
       f"best_wall=${lBest}%.0fms amortized=${lBest / lq.size}%.1fms/query")
 
-    // batched REGEX class (round 6): the one class that still paid its
-    // full single-query cost (p50 ~2.6 s) — B patterns through
-    // RegexQuery.searchBatch: one shared postings pass (accelerated
-    // classes), chunked verify legs, one content pass for all fullscans
+    // batched REGEX class: B patterns through RegexQuery.searchBatch —
+    // one candidate pass (ranked + accelerated classes), chunked verify
+    // legs, one content pass for all fullscans
     val rq = (0 until 8).map(i => s"${PagesCorpus.vocab(8 + i)}\\s+\\w+") ++
       Seq("(vector|stream)\\s+\\w+", "ba.a")
     graft.query.RegexQuery.searchBatch(idx, pages, rq, 100) // warm
@@ -187,10 +186,10 @@ object QueryBench {
       f"best_wall=${rBest}%.0fms amortized=${rBest / rq.size}%.1fms/query " +
       f"qps=${rq.size / (rBest / 1000.0)}%.1f")
 
-    // RANKED-heavy regex mix (round 7): bothBound literal patterns now
-    // ride the SAME shared postings pass (previously one scoredNaive
-    // collect job per ranked pattern); the single-path sum is printed
-    // alongside so the amortization is visible in one row
+    // RANKED-heavy regex mix: bothBound literal patterns share one
+    // candidate pass; the same patterns run one by one (RegexQuery.search,
+    // a batch of one each) are summed alongside, so the amortization is
+    // visible in one row
     val kq = (0 until 10).map(i => s" ${PagesCorpus.vocab(40 + i)} ")
     graft.query.RegexQuery.searchBatch(idx, pages, kq, 10) // warm
     kq.foreach(p => graft.query.RegexQuery.search(idx, pages, p, 10).collect())
@@ -206,7 +205,7 @@ object QueryBench {
     }
     println(f"[loadtest:batched_regex_ranked] queries=${kq.size} rounds=$rounds " +
       f"best_wall=${kt.min}%.0fms amortized=${kt.min / kq.size}%.1fms/query " +
-      f"single_path_sum=${st.min}%.0fms speedup=${st.min / kt.min}%.1fx")
+      f"batches_of_one_sum=${st.min}%.0fms speedup=${st.min / kt.min}%.1fx")
     spark.stop()
     // ~750 MB of per-run scratch; leaked copies filled /tmp in round 5
     ScalingBench.deleteRecursively(dir)

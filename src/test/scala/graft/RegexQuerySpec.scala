@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.util.UUID
 
+import org.apache.spark.JobExecutionStatus
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -12,6 +14,23 @@ import graft.query.RegexQuery
 import graft.query.RegexQuery.Lit
 
 class RegexQuerySpec extends AnyFunSuite {
+
+  /** A 200-doc index whose extra rows hold the 'rendez...' tokens. */
+  private lazy val (fxDir, fxIdx, fxPages) = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-rx-fx").toString
+    val base = IndexBuilder.extractPages(
+      PagesCorpus.pages(spark, 200, parts = 2).toDF())
+      .where(Extract.safe(col("text")))
+    val extra = Seq(
+      (910000L, "https://x/alt1", "metadata join rendezvous"),
+      (910001L, "https://x/alt2", "dashboard rendezvous"),
+      (910002L, "https://x/pre", "rendezvousness prefix-extended token"))
+      .toDF("doc_id", "url", "text")
+    val pages = base.unionByName(extra)
+    (dir, IndexBuilder.build(spark, pages, dir, blockBits = 6), pages)
+  }
 
   test("requiredLiterals: sound boundary analysis") {
     // pattern start/end are NOT boundaries (unanchored regex can match
@@ -277,5 +296,78 @@ class RegexQuerySpec extends AnyFunSuite {
     val withX = RegexQuery.search(idx, pages, "rendezvous\\Wonce", 1000,
       exclude = Seq("https://x/*")).collect().map(_.doc_id).toSet
     assert(withX == groundTruth(p5).filter(_ < 900000L))
+  }
+
+  test("a bad pattern fails on the driver before any job, single and batch") {
+    val spark = TestSpark.spark
+    fxIdx // built outside the counted calls
+    for (bad <- Seq("ba)a", "\\sreba\\w+[a-")) {
+      val (single, singleJobs) = SparkJobs.count(spark) {
+        intercept[IllegalArgumentException](RegexQuery.search(fxIdx, fxPages, bad, 10))
+      }
+      assert(single.getMessage.contains(s"'$bad'"), single.getMessage)
+      assert(singleJobs == 0)
+      val (batch, batchJobs) = SparkJobs.count(spark) {
+        intercept[IllegalArgumentException](
+          RegexQuery.searchBatch(fxIdx, fxPages, Seq("ba.a", bad), 10))
+      }
+      assert(batch.getMessage.contains(s"'$bad'") &&
+        batch.getMessage.contains("batch query 1"), batch.getMessage)
+      assert(batchJobs == 0)
+    }
+  }
+
+  test("a failed leg fails the call only once every leg has finished") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    // the extra docs' text throws at once, every other page's text takes
+    // 8 ms: the full scan reads the 200 slow pages first (one partition,
+    // base rows first), so it is still running when the verify of the
+    // accelerated query, which reads only the extra docs, fails
+    val text = udf { (id: Long, t: String) =>
+      if (id >= 910000L) throw new IllegalStateException(s"unreadable page $id")
+      Thread.sleep(8); t
+    }
+    val failing = fxPages.coalesce(1)
+      .select(col("doc_id"), col("url"), text(col("doc_id"), col("text")).as("text"))
+    val group = s"rx-legs-${UUID.randomUUID()}"
+    sc.setJobGroup(group, "regex legs")
+    val e = try intercept[Exception] {
+      RegexQuery.searchBatch(fxIdx, failing, Seq("ba.a", "\\srendez\\w+"), 10)
+    } finally sc.clearJobGroup()
+    // the status store lags the scheduler: once it has seen a job started
+    // after the exception, it has seen every job end before it
+    val fence = s"$group-fence"
+    sc.setJobGroup(fence, "fence")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val tracker = sc.statusTracker
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (!tracker.getJobIdsForGroup(fence).exists(id =>
+        tracker.getJobInfo(id).exists(_.status == JobExecutionStatus.SUCCEEDED))) {
+      assert(System.nanoTime() < deadline, "the fence job never showed as done")
+      Thread.sleep(10)
+    }
+    val running = tracker.getActiveJobIds.filter(id =>
+      tracker.getJobIdsForGroup(group).contains(id))
+    assert(running.isEmpty, s"jobs ${running.mkString(",")} of the failed call still run")
+    assert(tracker.getJobIdsForGroup(group).nonEmpty)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("unreadable page")), e.toString)
+  }
+
+  test("hot index: a batch of one of the serving regex class runs at most 5 jobs") {
+    val spark = TestSpark.spark
+    val hot = IndexBuilder.load(spark, fxDir).cacheHot().cacheDictionary()
+    // the class perfbench's serve workload draws its regex queries from
+    val pat = s"${PagesCorpus.vocab(8)}\\s+\\w+"
+    RegexQuery.searchBatch(hot, fxPages, Seq(pat), 100) // warm
+    val (hits, jobs) = SparkJobs.count(spark) {
+      RegexQuery.searchBatch(hot, fxPages, Seq(pat), 100)
+    }
+    assert(hits.head.nonEmpty, "fixture should produce matches")
+    // candidates (dictionary broadcast, postings shuffle, collect),
+    // verify, urls: as many as the single path ran before it became a
+    // batch of one
+    assert(jobs <= 5, s"a batch of one ran $jobs jobs")
   }
 }
