@@ -121,14 +121,6 @@ private[graft] final class BuildSpine(spark: SparkSession,
   Files.createDirectories(Paths.get(outDir))
   private[checkpoint] val log = new ManifestLog(spark, outDir)
 
-  // an index from before blocks became the one posting layout: its
-  // postings copy goes and stats, which counted it, is recomputed
-  if (Files.exists(Paths.get(outDir, "postings"))) {
-    invalidate("stats")
-    log.remove("postings", None)
-    DriverParquet.remove(Paths.get(outDir, "postings"))
-  }
-
   private def stage(name: String): Stage = Graph.find(_.name == name).get
   private def dependents(name: String): Seq[Stage] = Graph.filter(_.inputs.contains(name))
 

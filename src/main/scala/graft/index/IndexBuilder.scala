@@ -2,9 +2,12 @@ package graft.index
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.checkpoint.{BuildSpine, DriverParquet, TfInput, TfUnit}
@@ -24,6 +27,7 @@ case class IndexStats(
   *   {path}/docs      (doc_id, url, doc_len)           — per-doc metadata
   *   {path}/terms     (term_id, term, df, idf)         — term dictionary
   *   {path}/terms_rev (term_rev, term_id)              — suffix-lookup dim
+  *   {path}/terms_ngrams (gram, term_id)               — infix-lookup dim
   *   {path}/blocks    (term_id, block_id, n, docs_enc,
   *                     impacts_enc, block_max)         — the one posting layout
   *   {path}/blocks_meta single [[BlocksMeta]] row
@@ -34,10 +38,18 @@ case class IndexStats(
   * so the query-side `IN (...)` filters prune parquet row groups via
   * min/max stats — the distributed analog of the reference's hash lookup
   * (/root/reference/src/index/trigram.rs:130-145) — and blocks are
-  * additionally BUCKETED by block_id (see [[blocks]]).
+  * additionally BUCKETED by block_id (see [[blocks]]). This is the one
+  * layout an index has: opening a directory checks it on the driver
+  * ([[BuiltIndex.readLayout]]), and any other fails to load.
   */
 class BuiltIndex(val spark: SparkSession, val path: String) {
   BuiltIndex.requireLocal(path)
+
+  /** The bucketing and impact codec of the blocks, read on the driver as
+    * the index is opened: an index of any other layout fails here.
+    */
+  private val layout: ((Int, Int), String) = BuiltIndex.readLayout(path)
+
   lazy val docs: DataFrame = read("docs", IndexBuilder.DocsSchema)
   lazy val terms: DataFrame = read("terms", IndexBuilder.TermsSchema)
 
@@ -63,23 +75,14 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     * analysis) become sorted-range predicates that prune row groups —
     * the mirror of the sorted `terms` files serving prefix ranges.
     */
-  lazy val termsRev: DataFrame =
-    dimension("terms_rev", IndexBuilder.TermsRevSchema, BuiltIndex.termsRevOf)
+  lazy val termsRev: DataFrame = read("terms_rev", IndexBuilder.TermsRevSchema)
 
   /** Character-trigram dimension (gram, term_id), files sorted by gram:
     * infix dictionary lookups (`%foo%` from regex literal analysis)
     * become pushed In(gram) probes that prune row groups instead of a
     * full containment scan of the dictionary.
     */
-  lazy val termsNgrams: DataFrame =
-    dimension("terms_ngrams", IndexBuilder.TermsNgramsSchema, BuiltIndex.termsNgramsOf)
-
-  /** A dictionary dimension; an index written before it existed derives
-    * it from `terms` on the fly (correct, unpruned).
-    */
-  private def dimension(table: String, schema: StructType,
-      derive: DataFrame => DataFrame): DataFrame =
-    if (Files.exists(Paths.get(path, table))) read(table, schema) else derive(terms)
+  lazy val termsNgrams: DataFrame = read("terms_ngrams", IndexBuilder.TermsNgramsSchema)
 
   /** Raw token-frequency rows (term, doc_id, tf[, doc_len]) — the build
     * intermediate every derived table re-reads on rebuilds. Batch builds
@@ -89,65 +92,38 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     */
   lazy val tfRows: DataFrame = spark.read.parquet(s"$path/tf")
 
-  /** ((num_buckets, block_bits), impact codec) from `blocks_meta`, read on
-    * the driver: no Spark job.
-    */
-  private lazy val meta: (Option[(Int, Int)], String) = BuiltIndex.readBlocksMeta(path)
-
-  /** (num_buckets, block_bits) recorded at build time; None for a legacy
-    * (pre-bucketed) blocks layout.
-    */
-  lazy val blocksMeta: Option[(Int, Int)] = meta._1
-
-  /** Block width of a legacy index, which records none, found from one
-    * block past block 0: the shift that maps its first doc id to its
-    * block id (one Spark job). When every posting lies in block 0, a
-    * shift of 63 maps every doc id there too.
-    */
-  private[graft] lazy val legacyBlockBits: Int =
-    blockFiles.where(col("block_id") > 0).select("block_id", "docs_enc").head(1)
-      .headOption.fold(63) { r =>
-        val block = r.getLong(0)
-        val doc = PostingCodec.decodeDocIds(r.getAs[Array[Byte]](1), 1)(0)
-        (0 until 63).find(s => (doc >> s) == block).getOrElse(throw
-          new IllegalStateException(s"block $block cannot hold doc $doc in $path"))
-      }
+  /** (num_buckets, block_bits) the blocks were written with. */
+  val blocksMeta: (Int, Int) = layout._1
 
   /** Impact encoding of the blocks table: "f64" (bit-exact scores) or
     * "q8" (8-bit quantized, ~8x smaller impact payloads).
     */
-  lazy val impactCodec: String = meta._2
+  val impactCodec: String = layout._2
 
-  /** Whether the blocks table carries the bucketed-by-block_id contract
-    * (query merge may then skip its per-query Exchange).
+  /** The blocks table, registered in the session catalog as bucketed by
+    * block_id so that its scan plans ONE TASK PER BUCKET: all
+    * (term_id, block_id) groups of a docId range complete inside a single
+    * task, with no per-query shuffle. `autoBucketedScan` must stay
+    * DISABLED for this session: Spark would otherwise fall back to
+    * size-based file splitting for plans with no distribution requirement
+    * (the block path's are none), and the block path then fails rather
+    * than score a block group split across tasks.
     */
-  def blocksBucketed: Boolean = blocksMeta.isDefined
-
-  /** The blocks table. Bucketed layout: registered in the session catalog
-    * so the scan plans ONE TASK PER BUCKET — all (term_id, block_id)
-    * groups of a docId range complete inside a single task, no per-query
-    * shuffle. `autoBucketedScan` must stay DISABLED for this session:
-    * Spark would otherwise fall back to size-based file splitting for
-    * plans with no distribution requirement (ours is a mapPartitions
-    * merge), which can split a block group across tasks and silently drop
-    * conjunctive candidates.
-    */
-  lazy val blocks: DataFrame = blocksMeta match {
-    case Some((numBuckets, _)) =>
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      val t = BuiltIndex.blocksTableName(path)
-      spark.sql(
-        s"""CREATE TABLE IF NOT EXISTS $t (
-           |  term_id BIGINT, block_id BIGINT, n INT,
-           |  docs_enc BINARY, impacts_enc BINARY,
-           |  block_max DOUBLE)
-           |USING PARQUET
-           |CLUSTERED BY (block_id) SORTED BY (term_id, block_id)
-           |INTO $numBuckets BUCKETS
-           |LOCATION '$path/blocks'""".stripMargin)
-      spark.table(t)
-    case None => spark.read.parquet(s"$path/blocks")
+  lazy val blocks: DataFrame = {
+    spark.conf.set(SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key, "false")
+    val t = BuiltIndex.blocksTableName(path)
+    spark.sql(
+      s"""CREATE TABLE IF NOT EXISTS $t (
+         |  term_id BIGINT, block_id BIGINT, n INT,
+         |  docs_enc BINARY, impacts_enc BINARY,
+         |  block_max DOUBLE)
+         |USING PARQUET
+         |CLUSTERED BY (block_id) SORTED BY (term_id, block_id)
+         |INTO ${blocksMeta._1} BUCKETS
+         |LOCATION '$path/blocks'""".stripMargin)
+    spark.table(t)
   }
+
   /** The stats row, read on the driver. */
   lazy val stats: IndexStats = BuiltIndex.readStats(path)
 
@@ -157,42 +133,36 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     * note: blocks+terms are the compressed index (a small fraction of the
     * corpus); at cluster scale this is the standard hot-tier cache.
     *
-    * For a bucketed index the hot tier holds the `terms` and `docs`
-    * tables and one resident `HotPartition` per blocks bucket: its block
-    * rows indexed by term_id plus the urls of its docs, persisted
-    * MEMORY_AND_DISK with its lineage kept, so a lost executor recomputes
-    * it from the parquet files. With the partitions in memory, every
-    * batchable chunk of `Bm25Query.searchBlocksBatchEx` — and so
-    * `searchBlocks` (plain or url-glob filtered), `searchBlocksBoosted`,
-    * `searchBlocksFiltered` and `searchWithLines`, each a batch of one —
-    * runs as ONE Spark job with no SQL planning; a doc set or rank set
-    * joins it as a side input partitioned like the buckets, whose shuffle
-    * is a stage of that job. `searchNaive` and short queries keep the
-    * Dataset path, which reads blocks from parquet. If some partition
-    * does not fit in memory, or is later
-    * evicted to disk, queries take the Dataset path too, since a spilled
-    * partition is read back whole per query. An
-    * unbucketed index caches the `blocks` table instead of the partitions.
+    * The hot tier holds the `terms` and `docs` tables and one resident
+    * `HotPartition` per blocks bucket: its block rows indexed by term_id
+    * plus the urls of its docs, persisted MEMORY_AND_DISK with its lineage
+    * kept, so a lost executor recomputes it from the parquet files. With
+    * the partitions in memory, every batchable chunk of
+    * `Bm25Query.searchBlocksBatchEx` — and so `searchBlocks` (plain or
+    * url-glob filtered), `searchBlocksBoosted`, `searchBlocksFiltered` and
+    * `searchWithLines`, each a batch of one — runs as ONE Spark job with
+    * no SQL planning; a doc set or rank set joins it as a side input
+    * partitioned like the buckets, whose shuffle is a stage of that job.
+    * `searchNaive` and short queries keep the Dataset path. If some
+    * partition does not fit in memory, or is later evicted to disk,
+    * queries run as on a cold index: a pruned scan of the blocks parquet
+    * files, scored by the same per-bucket scorer, since a spilled
+    * partition is read back whole per query. Every index has this one
+    * layout; an index of an older one fails at load and must be rebuilt.
     * On the 2000-doc perfbench `serve` corpus the partitions, terms and
-    * docs take about 3.4 MB of executor memory, where caching the blocks
-    * table with terms and docs takes 4.0 MB.
+    * docs take about 3.4 MB of executor memory.
     */
   def cacheHot(): this.type = {
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    if (blocksMeta.isEmpty) blocks.persist(level)
     terms.persist(level)
     docs.persist(level)
-    impactCodec // read once here; the hot path consults it per query
     // materialize the caches CONCURRENTLY (guide §2.6) — they are
     // independent scans, and serially each paid its own planning+schedule
     // round trip; the hot partitions are one more leg
     graft.Par.all(spark)(
-      () => if (blocksMeta.isEmpty) blocks.count(),
       () => terms.count(),
       () => docs.count(),
-      () => blocksMeta.filter(_ => hot.isEmpty).foreach { case (n, bits) =>
-        hot = graft.query.HotServing.tier(this, n, bits)
-      })
+      () => if (hot.isEmpty) hot = graft.query.HotServing.tier(this))
     this
   }
 
@@ -271,7 +241,7 @@ object BuiltIndex {
   /** Index paths are local filesystem paths without a URI scheme: the
     * one-row tables, commit markers and manifest are read and written on
     * the driver through java.nio, which would not see an index on a
-    * remote filesystem and load it as a legacy one instead of failing.
+    * remote filesystem.
     */
   private[graft] def requireLocal(path: String): Unit =
     require(new org.apache.hadoop.fs.Path(path).toUri.getScheme == null,
@@ -289,19 +259,24 @@ object BuiltIndex {
   }
 
   /** ((num_buckets, block_bits), impact codec) of the index at `path`,
-    * read on the driver. A missing `blocks_meta` is a legacy index:
-    * unbucketed, "f64" (as is a row from before the codec column). One
-    * that exists but cannot be read fails: a "q8" index read as "f64"
-    * would serve wrong scores.
+    * read on the driver before any Spark job. An index has one layout:
+    * bucketed blocks described by a `blocks_meta` row that names its
+    * impact codec, beside the `terms_rev` and `terms_ngrams` dimensions.
+    * Anything else — no, an unreadable or an incomplete `blocks_meta`
+    * row, or a missing dimension — fails the load; such an index must be
+    * rebuilt. (A "q8" index read as "f64" would serve wrong scores.)
     */
-  private[graft] def readBlocksMeta(path: String): (Option[(Int, Int)], String) = {
-    val dir = Paths.get(path, "blocks_meta")
-    if (!Files.exists(dir)) (None, "f64")
-    else {
-      val r = DriverParquet.read(dir, BlocksMetaSchema).headOption
-        .getOrElse(throw new IllegalStateException(s"no blocks_meta row in $path"))
-      (Some((r.getInt(0), r.getInt(1))), Option(r.getString(2)).getOrElse("f64"))
-    }
+  private[graft] def readLayout(path: String): ((Int, Int), String) = {
+    def stale(why: String, cause: Throwable = null) = new IllegalStateException(
+      s"index $path $why: it is not of the current index layout and must be rebuilt", cause)
+    Seq("terms_rev", "terms_ngrams").find(t => !Files.isDirectory(Paths.get(path, t)))
+      .foreach(t => throw stale(s"has no $t table"))
+    val rows =
+      try DriverParquet.read(Paths.get(path, "blocks_meta"), BlocksMetaSchema)
+      catch { case NonFatal(e) => throw stale("has an unreadable blocks_meta table", e) }
+    rows.headOption.filterNot(r => (0 until 3).exists(r.isNullAt))
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getString(2)))
+      .getOrElse(throw stale("has no blocks_meta row with an impact codec"))
   }
 
   /** Default cap for the driver-resident dictionary (~1 GB on-heap at
@@ -436,16 +411,17 @@ object IndexBuilder {
   }
 
   /** Build the index tables from token-frequency rows — v3 `(term sparse,
-    * term_id, doc_id, tf, doc_len)`, v2 `(term, doc_id, tf, doc_len)` or
-    * legacy v1 `(term, doc_id, tf)` — and a docs dimension `(doc_id, url,
-    * doc_len)` whose doc lengths are kept: streaming compaction
-    * (IncrementalIndex.compact) and rebuilds from a written tf table.
+    * term_id, doc_id, tf, doc_len)` or v2 `(term, doc_id, tf, doc_len)` —
+    * and a docs dimension `(doc_id, url, doc_len)` whose doc lengths are
+    * kept: streaming compaction (IncrementalIndex.compact) and rebuilds
+    * from a written tf table. Rows without `doc_len` are refused before
+    * any job.
     *
     * The [[BuildSpine]] front end with the rows as one unit, brought to
-    * the v3 shape first (doc_len joined from the docs dimension, `term_id
-    * = xxhash64(term)` with the string on every row), so the dictionary
-    * has one code path. Past `maxBroadcastTerms` dictionary terms the idf
-    * attach takes an id-keyed shuffle join instead of a broadcast.
+    * the v3 shape first (`term_id = xxhash64(term)` with the string on
+    * every row), so the dictionary has one code path. Past
+    * `maxBroadcastTerms` dictionary terms the idf attach takes an id-keyed
+    * shuffle join instead of a broadcast.
     */
   def buildFromTf(spark: SparkSession, tfR: DataFrame, docsDim: DataFrame,
       outDir: String,
@@ -453,11 +429,10 @@ object IndexBuilder {
       numBuckets: Int = -1,
       quantizeImpacts: Boolean = false,
       maxBroadcastTerms: Long = DictBroadcastMaxTerms): BuiltIndex = {
-    val withLen =
-      if (tfR.columns.contains("doc_len")) tfR
-      else tfR.join(docsDim.select("doc_id", "doc_len"), Seq("doc_id"))
-    val tf = (if (withLen.columns.contains("term_id")) withLen
-      else withLen.withColumn("term_id", xxhash64(col("term"))))
+    require(Seq("term", "doc_id", "tf", "doc_len").forall(tfR.columns.contains),
+      s"tf rows need the columns term, doc_id, tf and doc_len; got ${tfR.columns.mkString(", ")}")
+    val tf = (if (tfR.columns.contains("term_id")) tfR
+      else tfR.withColumn("term_id", xxhash64(col("term"))))
       .select("term", "term_id", "doc_id", "tf", "doc_len")
     val spine = new BuildSpine(spark, outDir).reset(keepTf = true)
     spine.run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"), docsDim, blockBits,

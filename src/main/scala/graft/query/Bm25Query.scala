@@ -2,8 +2,6 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -59,11 +57,16 @@ case class BlockRow(term_id: Long, block_id: Long, n: Int,
   *     path. Every block entry point ([[searchBlocks]],
   *     [[searchBlocksBoosted]], [[searchBlocksFiltered]],
   *     [[searchWithLines]]) is a batch of one through the planner of
-  *     [[searchBlocksBatchEx]], which runs each chunk as ONE Spark job:
-  *     on the resident partitions of a hot index ([[HotServing]]) or,
-  *     otherwise, as one job over a pruned blocks scan. Doc filters and
-  *     the rank set reach either as a [[SideInput]] partitioned like the
-  *     blocks buckets, whatever their size.
+  *     [[searchBlocksBatchEx]], which scores each chunk bucket by bucket
+  *     with one scorer ([[HotServing]]) in ONE Spark job: over the
+  *     resident partitions of a hot index or, otherwise, over transient
+  *     partitions built from a pruned scan of the bucketed blocks table.
+  *     Doc filters and the rank set reach either as a [[SideInput]]
+  *     partitioned like the blocks buckets, whatever their size.
+  *
+  * Every index has one layout (bucketed blocks with a `blocks_meta` row);
+  * an index of any other fails at load ([[BuiltIndex.readLayout]]) and
+  * must be rebuilt.
   */
 object Bm25Query {
 
@@ -104,23 +107,13 @@ object Bm25Query {
     * collect and re-drive a pruned scan of `docs`.
     */
   private def finish(index: BuiltIndex, scored: DataFrame, k: Int): Dataset[Hit] = {
-    val spark = index.spark
-    import spark.implicits._
     val top = scored
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
       .select("doc_id", "score")
       .collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    if (top.isEmpty) return hitsDataset(index, Nil)
-    val urls = index.docs
-      .where(col("doc_id").isin(top.map(_._1): _*))
-      .select("doc_id", "url")
-      .as[(Long, String)].collect().toMap
-    val hits = top.zipWithIndex.map { case ((d, s), i) =>
-      Hit(d, urls.getOrElse(d, ""), s, i + 1)
-    }
-    spark.createDataset(hits.toSeq)
+      .zipWithIndex.map { case (r, i) => Hit(r.getLong(0), "", r.getDouble(1), i + 1) }
+    hitsDataset(index, withUrls(index, Array(top.toVector)).head)
   }
 
   // ------------------------------------------------------------------
@@ -608,20 +601,21 @@ object Bm25Query {
     * filters (each distinct url-glob pair of a cold index) and the shared
     * rank set ship as ONE [[SideInput]] per call, partitioned like the
     * blocks buckets and zipped with them: its shuffle is a map stage of
-    * the first chunk's job, which later chunks reuse. Each bucket buffers
-    * its pruned, (block_id, term_id)-sorted rows ONCE per chunk — the
-    * buffer holds one bucket's rows for the union of the CHUNK's query
-    * terms, the same rows a one-query scan of the busiest term would hold
-    * — and replays them through the SAME merge kernel per query
-    * (per-query heaps, mode, filter, boost), so a query's hits do not
-    * depend on its batch (asserted in BatchServingSpec). Short queries
-    * and unresolvable conjunctive queries settle individually. A chunk
-    * with no filter and no boosted query runs the blocks scan alone.
+    * the first chunk's job, which later chunks reuse. Each chunk is
+    * scored bucket by bucket by ONE scorer ([[HotServing]]): per query it
+    * gathers the bucket's rows of that query's terms in
+    * (block_id, term_id) order and runs the merge kernel with the query's
+    * heap, mode, filter and boost, so a query's hits do not depend on its
+    * batch (asserted in BatchServingSpec); the driver merges the
+    * per-bucket survivors. Short queries and unresolvable conjunctive
+    * queries settle individually.
     *
-    * On a hot index each chunk runs on the resident partitions instead
-    * ([[HotServing]]): url globs resolve inside the job against each
-    * bucket's own docs, urls come back with the survivors, and the chunk
-    * is ONE job, side input included.
+    * On a hot index the buckets are its resident partitions: url globs
+    * resolve inside the job against each bucket's own docs, urls come
+    * back with the survivors, and the chunk is ONE job, side input
+    * included. On a cold index each bucket of the chunk's pruned blocks
+    * scan becomes one transient partition without urls, and one url
+    * lookup follows: two jobs.
     *
     * Returns one Vector[Hit] per input query, in input order.
     */
@@ -660,33 +654,27 @@ object Bm25Query {
       index.docs.where(PathFilter.predicate(col("url"), inc, exc)).select("doc_id")
     }
     val boosted = planned.exists(_._2.boosted)
+    val (numBuckets, blockBits) = index.blocksMeta
     val side =
       if (filters.isEmpty && !boosted) None
-      else Some(SideInput(filters, rank.filter(_ => boosted), buckets(index),
-        index.blocksMeta.fold(index.legacyBlockBits)(_._2)))
+      else Some(SideInput(filters, rank.filter(_ => boosted), numBuckets, blockBits))
     val chunkB = math.max(1L,
-      maxCollectRows / math.max(1L, kk.toLong * buckets(index))).toInt
+      maxCollectRows / math.max(1L, kk.toLong * numBuckets)).toInt
     planned.grouped(chunkB).foreach { chunk =>
       val qs = chunk.map { case (_, p) =>
         p.copy(filter = if (docSet.nonEmpty) 0 else globs.indexOf((p.include, p.exclude)))
       }.toArray
+      // a cold chunk scores one transient partition per bucket of its
+      // pruned blocks scan, without urls: its globs arrive as doc filters
       val hits = hot match {
         case Some(h) => HotServing.run(index, h, qs, kk, side)
-        case None => runBatchChunk(index, qs, kk, side)
+        case None => withUrls(index,
+          HotServing.run(index, HotServing.transient(index, chunkRows(index, qs)), qs, kk, side))
       }
       chunk.map(_._1).zip(hits).foreach { case (qi, v) => results(qi) = v }
     }
     queries.indices.map(results)
   }
-
-  /** The number of partitions the block path scores: the blocks buckets,
-    * or the session's shuffle partitions that a legacy index is
-    * repartitioned into by the same hash. A side input places its docs
-    * by the block width of `blocks_meta`, or of a legacy index's blocks
-    * ([[BuiltIndex.legacyBlockBits]]).
-    */
-  private def buckets(index: BuiltIndex): Int = index.blocksMeta
-    .fold(index.spark.sessionState.conf.numShufflePartitions)(_._1)
 
   /** Driver-side analysis of one query into its batch form; None when its
     * result is empty: no resolved term or a conjunctive query missing a
@@ -699,115 +687,32 @@ object Bm25Query {
       q.include, q.exclude, q.boosted))
   }
 
-  /** The pruned block rows of a chunk's query terms, one partition per
-    * blocks bucket, sorted by (block_id, term_id) within it.
+  /** The pruned block rows of a chunk's query terms: a scan of the
+    * bucketed blocks table with one partition per bucket and no Exchange.
+    * A bucket holds every term's blocks of its docId ranges, so its local
+    * top-k heaps are exact: the global top-k is a subset of the union of
+    * the local ones.
     */
-  private def chunkRows(index: BuiltIndex, chunk: Array[BatchPlanned]): Dataset[BlockRow] = {
+  private[graft] def chunkRows(index: BuiltIndex, chunk: Array[BatchPlanned]): Dataset[BlockRow] = {
     val spark = index.spark
     import spark.implicits._
-    val rows = index.blocks
+    index.blocks
       .where(col("term_id").isin(chunk.flatMap(_.termIds).distinct.toIndexedSeq: _*))
-      .select("term_id", "block_id", "n", "docs_enc", "impacts_enc",
-        "block_max")
+      .select("term_id", "block_id", "n", "docs_enc", "impacts_enc", "block_max")
       .as[BlockRow]
-    // All terms' blocks of one docId range must be in one task, then the
-    // merge applies partition-local block-max thresholds (conservative =>
-    // exact top-k: the global top-k is a subset of the union of local
-    // top-k sets). With a bucketed index the scan itself delivers that
-    // co-location (one task per block_id bucket — zero Exchange, only a
-    // local sort of the pruned rows); a legacy layout pays a per-query
-    // repartition shuffle by the bucket hash (Murmur3 pmod, as bucketBy).
-    val coLocated =
-      if (index.blocksBucketed) rows
-      else rows.repartition(buckets(index), col("block_id"))
-    coLocated.sortWithinPartitions(col("block_id"), col("term_id"))
   }
 
-  /** The survivors (chunk position, doc_id, score) of one chunk of
-    * batch-planned queries with no side input: ONE pruned blocks scan,
-    * each bucket's rows buffered once and replayed through the merge
-    * kernel per query.
-    */
-  private[graft] def batchCandidates(index: BuiltIndex, chunk: Array[BatchPlanned],
-      kk: Int): Dataset[(Int, Long, Double)] = {
-    val q8 = index.impactCodec == "q8"
-    chunkRows(index, chunk).mapPartitions { it =>
-      scoreBucket(it.toArray, BucketSide.Empty, chunk, kk, q8)
-    }(org.apache.spark.sql.Encoders.product[(Int, Long, Double)])
-  }
-
-  /** [[batchCandidates]] with the call's side input zipped in: bucket p
-    * of the blocks scan meets partition p of the side input.
-    */
-  private[graft] def sideCandidates(index: BuiltIndex, chunk: Array[BatchPlanned],
-      kk: Int, side: SideInput): RDD[(Int, Long, Double)] = {
-    val q8 = index.impactCodec == "q8"
-    val nFilters = side.nFilters
-    val n = side.records.getNumPartitions
-    chunkRows(index, chunk).rdd.zipPartitions(side.records) { (it, r) =>
-      val part = it.toArray
-      val bucket = TaskContext.getPartitionId()
-      require(part.forall(b => HotPartition.bucketOf(b.block_id, n) == bucket),
-        s"blocks partition $bucket holds a block of another bucket")
-      scoreBucket(part, BucketSide(r, nFilters), chunk, kk, q8)
-    }
-  }
-
-  /** Survivors (chunk position, doc_id, score) of one bucket's rows,
-    * sorted by (block_id, term_id).
-    */
-  private def scoreBucket(part: Array[BlockRow], side: BucketSide,
-      chunk: Array[BatchPlanned], kk: Int, q8: Boolean): Iterator[(Int, Long, Double)] =
-    chunk.indices.iterator.flatMap { pi =>
-      val q = chunk(pi)
-      val allow = if (q.filter < 0) null else side.allow(q.filter)
-      if (allow != null && allow.isEmpty) Iterator.empty
-      else {
-        val tset = q.termIds.toSet
-        scoreQuery(part.iterator.filter(r => tset.contains(r.term_id)), q, kk, q8,
-          allow, side).map { case (d, s) => (pi, d, s) }
-      }
-    }
-
-  /** One query's survivors over its block rows of one bucket: the merge
-    * kernel with the query's mode, its allow array and, if it is
-    * boosted, the bucket's ranks.
-    */
-  private[query] def scoreQuery(rows: Iterator[BlockRow], q: BatchPlanned, k: Int,
-      q8: Boolean, allow: Array[Long], side: BucketSide): Iterator[(Long, Double)] =
-    if (q.boosted) processPartition(rows, q.termIds.length, k, q.conjunctive, q8,
-      allow, side.rankIds, side.rankVals, side.maxRank)
-    else processPartition(rows, q.termIds.length, k, q.conjunctive, q8, allow)
-
-  /** Run one chunk of batch-planned queries as ONE Spark job over one
-    * pruned blocks scan; returns each query's hits in chunk order.
-    * Candidate collect is bounded by buckets x chunk-size x k (see
-    * [[MaxBatchCollectRows]]).
-    */
-  private def runBatchChunk(index: BuiltIndex, chunk: Array[BatchPlanned],
-      kk: Int, side: Option[SideInput]): Array[Vector[Hit]] = {
+  /** `hits` with their urls: ONE pruned lookup of every query's winners. */
+  private def withUrls(index: BuiltIndex, hits: Array[Vector[Hit]]): Array[Vector[Hit]] = {
     val spark = index.spark
     import spark.implicits._
-    val candidates = side match {
-      case None => batchCandidates(index, chunk, kk).collect()
-      case Some(s) => sideCandidates(index, chunk, kk, s).collect()
-    }
-    // per-query top-k with the frozen tie-break, then ONE pruned url
-    // lookup for every query's winners together
-    val topPer = candidates.groupBy(_._1).map { case (pi, arr) =>
-      pi -> arr.map(c => (c._2, c._3))
-        .sortBy { case (d, s) => (-s, d) }.take(kk).toVector
-    }
-    val allIds = topPer.values.flatten.map(_._1).toArray.distinct
-    val urls =
-      if (allIds.isEmpty) Map.empty[Long, String]
-      else index.docs.where(col("doc_id").isin(allIds.toIndexedSeq: _*))
+    val ids = hits.flatMap(_.map(_.doc_id)).distinct
+    if (ids.isEmpty) hits
+    else {
+      val urls = index.docs.where(col("doc_id").isin(ids.toIndexedSeq: _*))
         .select("doc_id", "url").as[(Long, String)].collect().toMap
-    chunk.indices.map { pi =>
-      topPer.getOrElse(pi, Vector.empty).zipWithIndex.map {
-        case ((d, s), i) => Hit(d, urls.getOrElse(d, ""), s, i + 1)
-      }
-    }.toArray
+      hits.map(_.map(h => h.copy(url = urls.getOrElse(h.doc_id, ""))))
+    }
   }
 
   /** Batched line-level serving: [[searchBlocksBatchEx]] for the hit

@@ -1,13 +1,16 @@
 package graft.query
 
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
-/** One blocks bucket of a hot index, resident in executor memory (see
-  * [[graft.index.BuiltIndex.cacheHot]]): the bucket's block rows sorted
-  * by (term_id, block_id) with a term_id -> row-range index, and the url
-  * of every doc whose block falls in the same bucket. A query reads only
-  * its terms' row ranges and resolves url globs and urls locally, so the
-  * hot path needs no scan, no shuffle and no second job for urls.
+/** One blocks bucket as [[HotServing]] scores it: the bucket's block rows
+  * sorted by (term_id, block_id) with a term_id -> row-range index, and
+  * the url of every doc whose block falls in the same bucket. A query
+  * reads only its terms' row ranges. Resident in executor memory on a hot
+  * index (see [[graft.index.BuiltIndex.cacheHot]]), where url globs and
+  * urls resolve locally, so the hot path needs no scan, no shuffle and no
+  * second job for urls; transient and without urls for a cold query,
+  * built from the bucket's pruned blocks scan.
   */
 final class HotPartition private (
     termIds: Array[Long],
@@ -55,6 +58,10 @@ object HotPartition {
     if (h < 0) h + numBuckets else h
   }
 
+  /** What keeps a scan of the blocks table one task per bucket. */
+  val BucketedScanRule: String =
+    s"${SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key} must stay false for a session that serves an index"
+
   /** Assemble bucket `bucket` from its block rows and its docs. Every
     * block row must hash to `bucket`: a row read from another bucket's
     * files would silently drop candidates, so a mismatch fails loudly.
@@ -63,7 +70,7 @@ object HotPartition {
       blocks: Iterator[BlockRow], docs: Iterator[(Long, String)]): HotPartition = {
     val rows = blocks.toArray.sortBy(r => (r.term_id, r.block_id))
     require(rows.forall(r => bucketOf(r.block_id, numBuckets) == bucket),
-      s"blocks partition $bucket holds a block of another bucket")
+      s"blocks partition $bucket holds a block of another bucket: $BucketedScanRule")
     val termIds = Array.newBuilder[Long]
     val termStart = Array.newBuilder[Int]
     var i = 0

@@ -7,6 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 
@@ -22,18 +23,22 @@ private[graft] case class BatchPlanned(termIds: Array[Long],
     conjunctive: Boolean, include: Seq[String], exclude: Seq[String],
     boosted: Boolean, filter: Int = -1)
 
-/** Serving over the resident partitions of a hot index (see
-  * [[BuiltIndex.cacheHot]]): a chunk of analyzed queries is answered by
-  * ONE Spark job, with no Catalyst planning per query. Per bucket and
-  * query, a task gathers only that query's block rows in
-  * (block_id, term_id) order, turns its url globs into the sorted allow
-  * array of the bucket's own docs, runs the same merge kernel as the
-  * Dataset path ([[Bm25Query.processPartition]]) and returns the
-  * survivors with their urls. The driver merges them with the frozen
-  * tie-break (score desc, doc_id asc) — the batched per-partition top-k
-  * of the cache-efficient top-k aggregation pattern (VLDB 2023). A doc
-  * set or rank set arrives as the call's [[SideInput]], zipped with the
-  * resident partitions: its shuffle is a map stage of the same job.
+/** The one bucket scorer of the block path: a chunk of analyzed queries
+  * is answered by ONE Spark job over one [[HotPartition]] per blocks
+  * bucket. On a hot index (see [[BuiltIndex.cacheHot]]) those are the
+  * resident partitions, with the urls of their docs, and no query is
+  * planned by Catalyst; on a cold one they are transient, built from a
+  * pruned scan of the bucketed blocks table without urls (url globs then
+  * arrive as doc filters of the side input, and the caller looks the
+  * winners' urls up). Per bucket and query, a task gathers only that
+  * query's block rows in (block_id, term_id) order, turns its url globs
+  * into the sorted allow array of the bucket's own docs, runs the merge
+  * kernel ([[Bm25Query.processPartition]]) and returns the survivors. The
+  * driver merges them with the frozen tie-break (score desc, doc_id asc)
+  * — the batched per-partition top-k of the cache-efficient top-k
+  * aggregation pattern (VLDB 2023). A doc set or rank set arrives as the
+  * call's [[SideInput]], zipped with the partitions: its shuffle is a map
+  * stage of the same job.
   *
   * Exact: a block bucket holds every block of its docId ranges and the
   * urls and side-input records of exactly those docs, so the local allow
@@ -55,14 +60,12 @@ private[graft] object HotServing {
     * None, with nothing left cached, when some partition did not fit in
     * memory: see [[HotTier]].
     */
-  def tier(index: BuiltIndex, numBuckets: Int, blockBits: Int): Option[HotTier] = {
+  def tier(index: BuiltIndex): Option[HotTier] = {
     val spark = index.spark
     import spark.implicits._
-    val blocks = index.blocks.select("term_id", "block_id", "n", "docs_enc",
-      "impacts_enc", "block_max").as[BlockRow].rdd
-    require(blocks.getNumPartitions == numBuckets,
-      s"hot partitions need the $numBuckets-bucket blocks scan, got " +
-      s"${blocks.getNumPartitions} partitions")
+    val (numBuckets, blockBits) = index.blocksMeta
+    val blocks = bucketScan(index, index.blocks.select("term_id", "block_id", "n",
+      "docs_enc", "impacts_enc", "block_max").as[BlockRow])
     val docs = index.docs.select(col("doc_id"), col("url")).as[(Long, String)].rdd
       .partitionBy(new DocBucketPartitioner(numBuckets, blockBits))
     val rdd = blocks.zipPartitions(docs) { (b, d) =>
@@ -82,17 +85,40 @@ private[graft] object HotServing {
     }
   }
 
-  /** The top-k hits of each query of `chunk`, in chunk order: one job
-    * over the resident partitions, zipped with the side input if any.
+  /** One transient partition per bucket of `blocks`, a pruned scan of the
+    * bucketed blocks table, without urls.
     */
-  private[query] def run(index: BuiltIndex, hot: RDD[HotPartition],
+  private[graft] def transient(index: BuiltIndex, blocks: Dataset[BlockRow]): RDD[HotPartition] = {
+    val numBuckets = index.blocksMeta._1
+    bucketScan(index, blocks).mapPartitionsWithIndex { (p, b) =>
+      Iterator.single(HotPartition(p, numBuckets, b, Iterator.empty))
+    }
+  }
+
+  /** `blocks`, a scan of the bucketed blocks table, as one RDD partition
+    * per bucket: with Spark's automatic bucketed-scan choice on, the scan
+    * may pack files by size instead, and then fails here.
+    */
+  private def bucketScan(index: BuiltIndex, blocks: Dataset[BlockRow]): RDD[BlockRow] = {
+    val rdd = blocks.rdd
+    val numBuckets = index.blocksMeta._1
+    if (rdd.getNumPartitions != numBuckets) throw new IllegalStateException(
+      s"the blocks scan of ${index.path} has ${rdd.getNumPartitions} partitions, " +
+      s"not one per each of its $numBuckets buckets: ${HotPartition.BucketedScanRule}")
+    rdd
+  }
+
+  /** The top-k hits of each query of `chunk`, in chunk order: one job
+    * over the bucket partitions, zipped with the side input if any.
+    */
+  private[query] def run(index: BuiltIndex, parts: RDD[HotPartition],
       chunk: Array[BatchPlanned], k: Int, side: Option[SideInput]): Array[Vector[Hit]] = {
     val q8 = index.impactCodec == "q8"
     val sc = index.spark.sparkContext
     val survivors = side match {
-      case None => sc.runJob(hot, (it: Iterator[HotPartition]) =>
+      case None => sc.runJob(parts, (it: Iterator[HotPartition]) =>
         it.flatMap(score(_, BucketSide.Empty, chunk, k, q8)).toArray)
-      case Some(s) => sc.runJob(zipped(hot, s, chunk, k, q8),
+      case Some(s) => sc.runJob(zipped(parts, s, chunk, k, q8),
         (it: Iterator[(Int, Long, Double, String)]) => it.toArray)
     }
     val byQuery = survivors.flatten.groupBy(_._1)
@@ -105,12 +131,12 @@ private[graft] object HotServing {
   }
 
   /** Survivors (query index, doc_id, score, url) of every bucket, each
-    * resident partition zipped with its slice of the side input.
+    * partition zipped with its slice of the side input.
     */
-  private[graft] def zipped(hot: RDD[HotPartition], side: SideInput,
+  private[graft] def zipped(parts: RDD[HotPartition], side: SideInput,
       chunk: Array[BatchPlanned], k: Int, q8: Boolean): RDD[(Int, Long, Double, String)] = {
     val nFilters = side.nFilters
-    hot.zipPartitions(side.records) { (h, r) =>
+    parts.zipPartitions(side.records) { (h, r) =>
       val bs = BucketSide(r, nFilters)
       h.flatMap(score(_, bs, chunk, k, q8))
     }
@@ -138,8 +164,12 @@ private[graft] object HotServing {
         val rows = ranges.flatMap { case (from, until) =>
           part.rows.slice(from, until)
         }.sortBy(_.block_id)
-        Bm25Query.scoreQuery(rows.iterator, q, k, q8, allow, side)
-          .map { case (d, s) => (qi, d, s, part.url(d)) }
+        val hits =
+          if (q.boosted) Bm25Query.processPartition(rows.iterator, q.termIds.length, k,
+            q.conjunctive, q8, allow, side.rankIds, side.rankVals, side.maxRank)
+          else Bm25Query.processPartition(rows.iterator, q.termIds.length, k,
+            q.conjunctive, q8, allow)
+        hits.map { case (d, s) => (qi, d, s, part.url(d)) }
       }
     }
   }

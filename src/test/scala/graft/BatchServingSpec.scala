@@ -121,12 +121,31 @@ class BatchServingSpec extends AnyFunSuite {
       BatchQuery(q, boosted = true))
   }
 
-  /** The declarative reference of a [[filteredAndBoosted]] query. */
-  private def declarative(ix: graft.index.BuiltIndex, q: BatchQuery) =
-    hitsOf((if (q.boosted) Bm25Query.searchBoosted(ix, q.query, 10, rankDf,
+  /** The declarative reference of a batch query: hot and cold batches
+    * share the bucket scorer, so they are also checked against this path.
+    */
+  private def referenceHits(ix: graft.index.BuiltIndex, q: BatchQuery,
+      k: Int = 10): Vector[graft.query.Hit] =
+    (if (q.boosted) Bm25Query.searchBoosted(ix, q.query, k, rankDf,
       q.conjunctive, q.include, q.exclude)
-    else Bm25Query.searchNaive(ix, q.query, 10, q.conjunctive, q.include, q.exclude))
-      .collect().toVector)
+    else Bm25Query.searchNaive(ix, q.query, k, q.conjunctive, q.include, q.exclude))
+      .collect().toVector
+
+  private def declarative(ix: graft.index.BuiltIndex, q: BatchQuery) =
+    hitsOf(referenceHits(ix, q))
+
+  /** Hits as (doc_id, url, score bits, rank). */
+  private def bitsOf(v: Seq[graft.query.Hit]): Seq[(Long, String, Long, Int)] =
+    v.map(h => (h.doc_id, h.url, java.lang.Double.doubleToLongBits(h.score), h.rank))
+
+  private def reference(ix: graft.index.BuiltIndex, q: BatchQuery) =
+    bitsOf(referenceHits(ix, q))
+
+  /** Every line record belongs to a hit of the declarative top-k. */
+  private def linesWithin(lines: Seq[graft.query.LineHit], q: BatchQuery, k: Int): Boolean = {
+    val want = bitsOf(referenceHits(cold, q, k)).toSet
+    lines.forall(h => want((h.doc_id, h.url, java.lang.Double.doubleToLongBits(h.score), h.rank)))
+  }
 
   test("filtered and boosted batch queries keep BOTH filter and boost") {
     val queries = filteredAndBoosted
@@ -169,29 +188,6 @@ class BatchServingSpec extends AnyFunSuite {
         Bm25Query.searchBlocksBoosted(ix, q, 10, rank).collect())
       assert(e.getMessage.contains(message), s"$mode: ${e.getMessage}")
     }
-  }
-
-  test("a legacy index's filtered and boosted queries equal the declarative path") {
-    val dir = Files.createTempDirectory("graft-batch-legacy").toString
-    IndexBuilder.build(spark, pages, dir, blockBits = 6)
-    graft.checkpoint.DriverParquet.remove(java.nio.file.Paths.get(dir, "blocks_meta"))
-    val legacy = IndexBuilder.load(spark, dir).cacheDictionary()
-    assert(!legacy.blocksBucketed && legacy.legacyBlockBits == 6)
-    val queries = filteredAndBoosted
-    val got = Bm25Query.searchBlocksBatchEx(legacy, queries, 10, Some(rankDf))
-    queries.indices.foreach(i =>
-      assert(hitsOf(got(i)) == declarative(legacy, queries(i)), s"query $i"))
-    assert(got.forall(_.nonEmpty))
-    // an arbitrary doc set: the semi-join of the declarative scores
-    val q = queries.head.query
-    val allowed = legacy.docs.where(col("doc_id") % 3 =!= 0).select("doc_id")
-    val want = Bm25Query.scoredNaive(legacy, q, conjunctive = true).get
-      .join(allowed, Seq("doc_id"), "left_semi")
-      .orderBy(col("score").desc, col("doc_id").asc).limit(10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val filtered = Bm25Query.searchBlocksFiltered(legacy, q, 10, conjunctive = true, allowed)
-      .collect().map(h => (h.doc_id, h.score)).toSeq
-    assert(filtered == want && want.nonEmpty)
   }
 
   test("lines batch chunking (tiny collect bound) == unchunked") {
@@ -248,6 +244,8 @@ class BatchServingSpec extends AnyFunSuite {
       val want = coldSingle(q)
       assert(hitsOf(hot(i)) == want, s"hot batch, query $i")
       assert(hitsOf(coldBatch(i)) == want, s"cold batch, query $i")
+      assert(bitsOf(hot(i)) == reference(cold, q), s"hot batch vs reference, query $i")
+      assert(bitsOf(coldBatch(i)) == reference(cold, q), s"cold batch vs reference, query $i")
     }
     assert(hot.take(5).forall(_.nonEmpty))
   }
@@ -261,6 +259,7 @@ class BatchServingSpec extends AnyFunSuite {
       maxCollectRows = 1L)
     queries.zipWithIndex.foreach { case (q, i) =>
       assert(hitsOf(chunked(i)) == coldSingle(q), s"query $i")
+      assert(bitsOf(chunked(i)) == reference(cold, q), s"query $i vs reference")
     }
     assert(chunked.exists(_.nonEmpty))
   }
@@ -281,6 +280,7 @@ class BatchServingSpec extends AnyFunSuite {
           h.match_end, h.snippet, h.score)).sortBy(x => (x._2, x._3))
       assert(got == single.toVector, s"query $qi")
       assert(got.nonEmpty, s"query $qi")
+      assert(linesWithin(batch(qi), q, 5), s"query $qi vs reference")
     }
   }
 }

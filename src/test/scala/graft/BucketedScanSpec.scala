@@ -1,0 +1,71 @@
+package graft
+
+import java.nio.file.Files
+
+import scala.util.{Failure, Success, Try}
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+
+import graft.corpus.PagesCorpus
+import graft.index.IndexBuilder
+import graft.query.{Bm25Query, Hit}
+
+/** A cold query reads the blocks through the bucketed scan, one task per
+  * bucket. With Spark's automatic bucketed-scan choice switched back on,
+  * that scan may pack the bucket files by size instead: a cold query must
+  * then fail with a message naming the setting, or return the declarative
+  * path's hits — never other hits.
+  */
+class BucketedScanSpec extends AnyFunSuite {
+
+  private def bits(hits: Seq[Hit]): Seq[(Long, String, Long, Int)] =
+    hits.map(h => (h.doc_id, h.url, java.lang.Double.doubleToLongBits(h.score), h.rank))
+
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+
+  test("cold queries with autoBucketedScan on fail naming it or equal searchNaive") {
+    // a session of its own: the setting stays out of the other suites
+    val spark = TestSpark.spark.newSession()
+    val key = SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key
+    val dir = Files.createTempDirectory("graft-autobucketed").toString
+    IndexBuilder.build(spark, IndexBuilder.extractPages(
+      PagesCorpus.pages(spark, 400, parts = 4).toDF()), dir, blockBits = 5, numBuckets = 5)
+    val cold = IndexBuilder.load(spark, dir).cacheDictionary()
+    val w = (i: Int) => PagesCorpus.vocab(i)
+    val q = s"${w(2)} ${w(7)}"
+    val inc = Seq("https://site-00*.example/**")
+    val allowed = cold.docs.where(col("doc_id") % 3 =!= 0).select("doc_id")
+    val filteredWant = {
+      val top = Bm25Query.scoredNaive(cold, q, conjunctive = true).get
+        .join(allowed, Seq("doc_id"), "left_semi")
+        .orderBy(col("score").desc, col("doc_id").asc).limit(10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1)))
+      val urls = cold.docs.where(col("doc_id").isin(top.map(_._1).toIndexedSeq: _*))
+        .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("url")).toMap
+      top.zipWithIndex.map { case ((d, s), i) => Hit(d, urls(d), s, i + 1) }.toSeq
+    }
+    val cases = Seq[(String, () => Seq[Hit], Seq[Hit])](
+      ("plain", () => Bm25Query.searchBlocks(cold, q, 10).collect().toSeq,
+        Bm25Query.searchNaive(cold, q, 10).collect().toSeq),
+      ("glob", () => Bm25Query.searchBlocks(cold, q, 10, include = inc).collect().toSeq,
+        Bm25Query.searchNaive(cold, q, 10, include = inc).collect().toSeq),
+      ("doc set", () => Bm25Query.searchBlocksFiltered(cold, q, 10, conjunctive = true,
+        allowed).collect().toSeq, filteredWant))
+    assert(cases.forall(_._3.nonEmpty))
+    cold.blocks // registered, and the setting turned off, before it is turned back on
+    spark.conf.set(key, "true")
+    try cases.foreach { case (name, run, want) =>
+      Try(run()) match {
+        case Success(got) =>
+          assert(bits(got) == bits(want), name)
+          info(s"$name: the declarative hits")
+        case Failure(e) =>
+          assert(messages(e).exists(_.contains(key)), s"$name: ${messages(e).mkString(" | ")}")
+          info(s"$name: failed naming $key")
+      }
+    } finally spark.conf.set(key, "false")
+  }
+}

@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.DriverBroadcasts
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.{CheckpointedBuild, DriverParquet}
@@ -130,31 +131,59 @@ class BuildSpineSpec extends AnyFunSuite {
     assert(meta == ((8, 6, "f64")))
   }
 
-  test("a missing blocks_meta loads as a legacy index; an unreadable one fails the load") {
-    val dir = tmp("meta")
-    IndexBuilder.build(spark, IndexBuilder.extractPages(raw), dir, blockBits = 6)
-    val q = s"${PagesCorpus.vocab(3)} ${PagesCorpus.vocab(7)}"
-    val want = Bm25Query.searchBlocks(IndexBuilder.load(spark, dir), q, 10).collect().toSeq
-    assert(want.nonEmpty)
-    val meta = Paths.get(dir, "blocks_meta")
-    val file = Files.list(meta).iterator().asScala
-      .find(p => !DriverParquet.hidden(p.getFileName.toString)).get
-    Files.write(file, "not parquet".getBytes("UTF-8"))
-    intercept[Exception](IndexBuilder.load(spark, dir).impactCodec)
-    intercept[Exception](IndexBuilder.load(spark, dir).blocksMeta)
+  /** A copy of the batch index, changed by `damage`. */
+  private def damaged(name: String)(damage: String => Unit): String = {
+    val dir = tmp(name)
+    val src = Paths.get(batchDir)
+    val walk = Files.walk(src)
+    try walk.iterator().asScala.foreach { p =>
+      val to = Paths.get(dir).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    } finally walk.close()
+    damage(dir)
+    dir
+  }
 
-    DriverParquet.remove(meta)
-    val legacy = IndexBuilder.load(spark, dir)
-    assert(legacy.blocksMeta.isEmpty && legacy.impactCodec == "f64")
-    assert(!legacy.blocksBucketed)
-    // the legacy (unbucketed) read of the same f64 blocks serves the same hits
-    assert(Bm25Query.searchBlocks(legacy, q, 10).collect().toSeq == want)
+  /** Loading `dir` fails on the driver, naming the path and the rebuild. */
+  private def refused(dir: String): Unit = {
+    val (e, jobs) = SparkJobs.count(spark)(
+      intercept[IllegalStateException](IndexBuilder.load(spark, dir)))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("rebuilt"), e.getMessage)
+    assert(jobs == 0)
+  }
 
-    // a path the driver-side reads cannot see is refused, not loaded as
-    // a legacy index
-    Seq("hdfs://namenode/idx", s"file:$dir").foreach { p =>
+  test("a missing or unreadable blocks_meta fails the load before any job") {
+    refused(damaged("no-meta")(d => DriverParquet.remove(Paths.get(d, "blocks_meta"))))
+    refused(damaged("bad-meta") { d =>
+      val file = DriverParquet.list(Paths.get(d, "blocks_meta"))
+        .find(p => !DriverParquet.hidden(p.getFileName.toString)).get
+      Files.write(file, "not parquet".getBytes("UTF-8"))
+    })
+    // a path the driver-side reads cannot see is refused too
+    Seq("hdfs://namenode/idx", s"file:$batchDir").foreach { p =>
       intercept[IllegalArgumentException](IndexBuilder.load(spark, p))
     }
+  }
+
+  test("a blocks_meta row with a null codec fails the load before any job") {
+    refused(damaged("null-codec") { d =>
+      DriverParquet.writeTable(spark, Paths.get(d, "blocks_meta"), BuiltIndex.BlocksMetaSchema,
+        Row(8, 6, null))
+    })
+  }
+
+  test("an index without terms_rev fails the load before any job") {
+    refused(damaged("no-terms-rev")(d => DriverParquet.remove(Paths.get(d, "terms_rev"))))
+  }
+
+  test("buildFromTf refuses tf rows without doc_len before any job") {
+    val tf = IndexBuilder.load(spark, batchDir).tfRows.drop("doc_len")
+    val docs = spark.read.parquet(s"$batchDir/docs")
+    val dir = tmp("no-doc-len")
+    val (e, jobs) = SparkJobs.count(spark)(intercept[IllegalArgumentException](
+      IndexBuilder.buildFromTf(spark, tf, docs, dir, blockBits = 6)))
+    assert(e.getMessage.contains("doc_len"), e.getMessage)
+    assert(jobs == 0)
   }
 
   test("a build and cold boosted and filtered queries leave no broadcast behind") {

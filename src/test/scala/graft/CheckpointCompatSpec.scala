@@ -87,46 +87,6 @@ class CheckpointCompatSpec extends AnyFunSuite {
       Bm25Query.searchBlocks(want, q, 10).collect().toSeq)
   }
 
-  test("a checkpoint with a postings table resumes: the table and its rows go, " +
-      "stats is recomputed and the committed blocks are kept") {
-    import spark.implicits._
-    val dir = tmp("postings-era")
-    val raw = PagesCorpus.pages(spark, n, parts = 4).toDF()
-    val idx = CheckpointedBuild.build(spark, raw, dir, slices = 2)
-    // what a build that still wrote the postings copy leaves: a committed
-    // postings unit per slice, its manifest rows, and a stats row whose
-    // lineage reads the copy (rows written the way Spark's writer did)
-    val now = System.currentTimeMillis()
-    (0 until 2).foreach { p =>
-      idx.postings.write.parquet(s"$dir/postings/slice=$p")
-      Files.createFile(Paths.get(dir, "postings", s"slice=$p", CheckpointedBuild.Marker))
-      Seq(ManifestRow("postings", p, 1L, 0L, s"tf/slice=$p+terms", now)).toDS()
-        .write.mode("overwrite").parquet(s"$dir/manifest/postings_$p")
-    }
-    val stats0 = spark.read.parquet(s"$dir/manifest/stats_0").as[ManifestRow].head()
-    Seq(stats0.copy(lineage = "docs+terms+postings")).toDS()
-      .write.mode("overwrite").parquet(s"$dir/manifest/stats_0")
-    val before = CheckpointedBuild.manifest(spark, dir).as[ManifestRow].collect()
-      .map(m => (m.stage, m.part) -> m.committed_at).toMap
-
-    val resumed = CheckpointedBuild.build(spark, raw, dir, slices = 2)
-    val after = CheckpointedBuild.manifest(spark, dir).as[ManifestRow].collect()
-    assert(!Files.exists(Paths.get(dir, "postings")))
-    assert(!after.exists(_.stage == "postings"))
-    val stats = after.find(_.stage == "stats").get
-    assert(stats.lineage == "docs+terms+blocks")
-    assert(stats.committed_at != before(("stats", 0)), "stats must be recomputed")
-    Seq("tf" -> 0, "tf" -> 1, "docs" -> 0, "terms" -> 0, "blocks" -> 0).foreach { u =>
-      assert(after.find(m => (m.stage, m.part) == u).get.committed_at == before(u), u)
-    }
-    val fresh = CheckpointedBuild.build(spark, raw, tmp("postings-era-fresh"), slices = 2)
-    assert(resumed.stats == fresh.stats)
-    assert(resumed.stats.num_postings == idx.stats.num_postings)
-    val q = PagesCorpus.vocab(2)
-    assert(Bm25Query.searchBlocks(resumed, q, 10).collect().toSeq ==
-      Bm25Query.searchBlocks(fresh, q, 10).collect().toSeq)
-  }
-
   test("a leftover hidden temp file under manifest/ is ignored") {
     val dir = tmp("leftover")
     val raw = PagesCorpus.pages(spark, n, parts = 4).toDF()
@@ -203,7 +163,7 @@ class CheckpointCompatSpec extends AnyFunSuite {
     val loaded = IndexBuilder.load(spark, dir)
     assert(resumed.stats == loaded.stats)
     assert(resumed.blocksMeta == loaded.blocksMeta)
-    assert(resumed.blocksMeta.map(_._2).contains(7))
+    assert(resumed.blocksMeta._2 == 7)
     assert(resumed.impactCodec == loaded.impactCodec)
   }
 }

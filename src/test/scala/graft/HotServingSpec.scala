@@ -14,10 +14,12 @@ import graft.query.{BatchQuery, Bm25Query, Hit, LineHit}
 
 /** Hot serving: one index directory opened twice, hot
   * (`cacheHot().cacheDictionary()`, queries on the resident partitions)
-  * and cold (`cacheDictionary()` only: the Dataset path). Every hit must be bit-identical — doc_id,
-  * url, score bits and rank — on both impact codecs, with a bucket count
+  * and cold (`cacheDictionary()` only: transient partitions of a pruned
+  * blocks scan). Every hit must be bit-identical — doc_id, url, score bits and rank — on both impact codecs, with a bucket count
   * different from the shuffle partitions and a small block width; and a
-  * hot query or batch must be one Spark job.
+  * hot query or batch must be one Spark job. Hot and cold share the
+  * bucket scorer, so their hits are also checked against the declarative
+  * path (`searchNaive`, `searchBoosted`).
   */
 class HotServingSpec extends AnyFunSuite {
 
@@ -76,12 +78,29 @@ class HotServingSpec extends AnyFunSuite {
     Bm25Query.searchBlocks(ix, q.query, 10, q.conjunctive, q.include, q.exclude)
       .collect().toSeq
 
+  /** The declarative reference of `q`: hot and cold queries share the
+    * bucket scorer, so each is also checked against this path.
+    */
+  private def declarative(ix: BuiltIndex, q: BatchQuery, rank: DataFrame = null,
+      k: Int = 10): Seq[Hit] =
+    (if (q.boosted) Bm25Query.searchBoosted(ix, q.query, k, rank, q.conjunctive,
+      q.include, q.exclude)
+    else Bm25Query.searchNaive(ix, q.query, k, q.conjunctive, q.include, q.exclude))
+      .collect().toSeq
+
+  /** Every line record belongs to a hit of the declarative top-k. */
+  private def linesWithin(lines: Seq[LineHit], hits: Seq[Hit]): Boolean = {
+    val want = bits(hits).toSet
+    lines.forall(h => want((h.doc_id, h.url, java.lang.Double.doubleToLongBits(h.score), h.rank)))
+  }
+
   for (codec <- Seq("f64", "q8")) {
     test(s"$codec: hot single queries equal the Dataset path bit for bit") {
       val (hot, cold) = opened(codec)
       assert(hot.hotPartitions.nonEmpty && cold.hotPartitions.isEmpty)
       queries.foreach { q =>
         assert(bits(single(hot, q)) == bits(single(cold, q)), q.toString)
+        assert(bits(single(cold, q)) == bits(declarative(cold, q)), q.toString)
       }
       assert(single(hot, queries.head).nonEmpty && single(hot, headOr).size == 10)
       val Seq(included, excluded, _, empty) = queries.slice(12, 16)
@@ -102,6 +121,7 @@ class HotServingSpec extends AnyFunSuite {
         assert(lineBits(got) == lineBits(Bm25Query.searchWithLines(cold, text, q, 5)
           .collect().toSeq), q)
         assert(got.nonEmpty, q)
+        assert(linesWithin(got, declarative(cold, BatchQuery(q), k = 5)), q)
       }
     }
 
@@ -118,7 +138,10 @@ class HotServingSpec extends AnyFunSuite {
         maxCollectRows = bound)
       val want = Bm25Query.searchBlocksBatchEx(cold, batch, 10, Some(rank),
         maxCollectRows = bound)
-      batch.indices.foreach(i => assert(bits(got(i)) == bits(want(i)), batch(i).toString))
+      batch.indices.foreach { i =>
+        assert(bits(got(i)) == bits(want(i)), batch(i).toString)
+        assert(bits(want(i)) == bits(declarative(cold, batch(i), rank)), batch(i).toString)
+      }
       // a cold boosted single runs the Dataset runner: an independent check
       val boosted = Bm25Query.searchBlocksBoosted(cold, batch(queries.size).query, 10, rank)
       assert(bits(got(queries.size)) == bits(boosted.collect().toSeq))
@@ -128,7 +151,7 @@ class HotServingSpec extends AnyFunSuite {
 
     test(s"$codec: hot searchBlocksFiltered equals the Dataset path; a bucket without allowed docs returns none") {
       val (hot, cold) = opened(codec)
-      val (n, shift) = hot.blocksMeta.get
+      val (n, shift) = hot.blocksMeta
       val bucketOf = (doc: Column) => pmod(hash(shiftright(doc, shift)), lit(n))
       val twoBuckets = cold.docs.where(bucketOf(col("doc_id")) < 2).select("doc_id")
       val sets = Seq(
@@ -160,7 +183,7 @@ class HotServingSpec extends AnyFunSuite {
     test(s"$codec: hot partition p holds bucket p's blocks and exactly its docs") {
       val (hot, cold) = opened(codec)
       import spark.implicits._
-      val (n, shift) = hot.blocksMeta.get
+      val (n, shift) = hot.blocksMeta
       assert(n == numBuckets && shift == blockBits)
       // the bucket formula is the blocks table's own bucketing
       val bucket = (c: org.apache.spark.sql.Column) => pmod(hash(c), lit(n))
@@ -228,6 +251,7 @@ class HotServingSpec extends AnyFunSuite {
       assert(hot.hotPartitions.isEmpty)
       val (hits, jobs) = SparkJobs.count(spark)(single(hot, q))
       assert(hits.nonEmpty && bits(hits) == bits(single(cold, q)))
+      assert(bits(hits) == bits(declarative(cold, q)))
       assert(jobs > 1, "a spilled hot tier must not run the one-job path")
     } finally report(StorageLevel.MEMORY_AND_DISK)
     assert(hot.hotPartitions.nonEmpty)

@@ -34,10 +34,12 @@ object PlanDump {
         graft.index.Bm25.termId(PagesCorpus.vocab(3)),
         graft.index.Bm25.termId(PagesCorpus.vocab(7)))
       idx.blocks.where(col("term_id").isin(qids: _*)).explain("formatted")
-      println("### PLAN 4: FULL block-WAND query (bucketed scan -> local sort -> merge; zero Exchange)")
+      println("### PLAN 4: FULL block-WAND query on a cold index (pruned bucketed scan -> one transient partition per bucket -> the one bucket scorer; zero Exchange)")
       def planned(filter: Int, boosted: Boolean = false) =
         Array(BatchPlanned(qids.toArray, conjunctive = true, Nil, Nil, boosted, filter))
-      Bm25Query.batchCandidates(idx, planned(-1), 10).explain("formatted")
+      val rows = Bm25Query.chunkRows(idx, planned(-1))
+      rows.explain("formatted")
+      println(graft.query.HotServing.transient(idx, rows).toDebugString)
       println("### PLAN 5: terms dictionary lookup (pushed In(term), sorted row groups)")
       idx.terms.where(col("term").isin(PagesCorpus.vocab(3), PagesCorpus.vocab(7)))
         .explain("formatted")
@@ -51,13 +53,13 @@ object PlanDump {
         .select(col("doc_id"),
           posexplode(split(col("text"), "\n")).as(Seq("ln0", "line")))
         .explain("formatted")
-      println("### PLAN 8: filtered block-WAND (doc filter as a SIDE INPUT: the allow set hash-partitioned by its docs' blocks buckets, zipped with the bucketed blocks scan; zero Exchange on the blocks side)")
-      val (numBuckets, blockBits) = idx.blocksMeta.get
+      println("### PLAN 8: filtered block-WAND on a cold index (doc filter as a SIDE INPUT: the allow set hash-partitioned by its docs' blocks buckets, zipped with the transient partitions of plan 4; zero Exchange on the blocks side)")
+      val (numBuckets, blockBits) = idx.blocksMeta
       val allow = idx.docs.where(col("doc_id") % 3 === 0).select("doc_id")
       val sideAllow = graft.query.SideInput(Seq(allow), None, numBuckets, blockBits)
-      idx.blocks.where(col("term_id").isin(qids: _*))
-        .sortWithinPartitions(col("block_id"), col("term_id")).explain("formatted")
-      println(Bm25Query.sideCandidates(idx, planned(0), 10, sideAllow).toDebugString)
+      println(graft.query.HotServing.zipped(
+        graft.query.HotServing.transient(idx, Bm25Query.chunkRows(idx, planned(0))),
+        sideAllow, planned(0), 10, q8 = false).toDebugString)
       println("### PLAN 9: symbols search via artifact (containment on the names DIMENSION, pushed In(name) on the fact table)")
       val symDir = java.nio.file.Files.createTempDirectory("graft-plans-sym").toString
       graft.symbols.Symbols.build(pages, symDir)
