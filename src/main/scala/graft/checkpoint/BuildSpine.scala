@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 import graft.Par
 import graft.checkpoint.CheckpointedBuild.isCommitted
 import graft.index.{BlocksMeta, Bm25, BuiltIndex, IndexBuilder, IndexStats, LongDoubleMap,
-  PostingBlock, PostingBlocks}
+  PostingBlocks}
 
 /** One manifest row per committed build unit: its lineage and build
   * metrics (analog of the reference's IndexingProgress in
@@ -82,13 +82,11 @@ private[checkpoint] object ManifestLog {
   */
 final case class TfUnit(part: Int, name: String, rows: DataFrame)
 
-/** A build's tf units, all of them as one table named `name`, and, for a
-  * build sliced by docId range, the range's bounds: per-unit stages then
-  * keep one `key=p` subdirectory per unit, and the blocks encode splits
-  * into as many 2^blockBits-aligned ranges.
+/** A build's tf units, all of them as one table named `name`: `tf` for
+  * an unsliced build's one unit, `tf/slice=*` for a sliced one, whose
+  * per-unit stages then keep one `slice=p` subdirectory per unit.
   */
-final case class TfInput(units: Seq[TfUnit], all: DataFrame, name: String,
-    docIdRange: Option[(Long, Long)] = None)
+final case class TfInput(units: Seq[TfUnit], all: DataFrame, name: String)
 
 /** The one stage runner of every index build: batch
   * ([[IndexBuilder.build]]), from tf rows ([[IndexBuilder.buildFromTf]])
@@ -96,19 +94,20 @@ final case class TfInput(units: Seq[TfUnit], all: DataFrame, name: String,
   * its tf units and hands them over with their docs' rows; the runner
   * runs the declared graph below tf:
   *
-  *   tf ─┬─ docs ──────────────┐
-  *       └─ terms_part ─ terms ┴─ blocks_enc ─ blocks ─ stats (each also reads docs, terms)
+  *   tf ─┬─ docs ──────────────┬─ blocks ─ stats (blocks also reads tf; stats docs, terms)
+  *       └─ terms_part ─ terms ┘
   *
   * It owns commit (a unit's files, then its [[ManifestRow]], then its
   * `_GRAFT_COMMITTED` marker; committed units are skipped, so every build
   * writes a manifest and resumes), invalidation ([[invalidate]]), overlap
   * (each stage is a [[Par]] leg that starts once its inputs' legs have
-  * finished, so docs runs beside the dictionary partials, and the blocks
-  * encode, blocks and stats each as soon as their inputs commit, while
-  * the units of a stage run in part order) and the
-  * transient terms_part and blocks_enc stages: committed like any other,
-  * so a crash redoes one unit, and deleted once the stage reading them
-  * committed. Bookkeeping runs no Spark job: manifest rows and the
+  * finished, so docs runs beside the dictionary partials, and blocks and
+  * stats each as soon as their inputs commit, while the units of a stage
+  * run in part order) and the transient terms_part stage: committed like
+  * any other, so a crash redoes one unit, and deleted once terms
+  * committed. Every other stage is one unit, which a crash redoes whole;
+  * blocks encodes the tf rows and writes the bucketed serving table in
+  * one plan. Bookkeeping runs no Spark job: manifest rows and the
   * one-row tables are local files written and read on the driver, and
   * every read-back carries a pinned schema. Index paths are local
   * filesystem paths ([[BuiltIndex.requireLocal]]).
@@ -135,7 +134,7 @@ private[graft] final class BuildSpine(spark: SparkSession,
       if (wipe) {
         touched += s.name
         s.outputs.foreach(o => DriverParquet.remove(
-          p.fold(Paths.get(outDir, o))(u => Paths.get(outDir, o, s"${s.key}=$u"))))
+          p.fold(Paths.get(outDir, o))(u => Paths.get(outDir, o, s"slice=$u"))))
         log.remove(s.name, p)
       }
       dependents(s.name).foreach { d =>
@@ -182,7 +181,7 @@ private[graft] final class BuildSpine(spark: SparkSession,
     * `(doc_id, url)`, or `(doc_id, url, doc_len)` to keep given doc
     * lengths. Blocks go into `numBuckets` buckets (the session's shuffle
     * partitions if not positive); past `maxBroadcastTerms` terms the idf
-    * attach is an id-keyed shuffle join and blocks_enc is one unit.
+    * attach is an id-keyed shuffle join instead of a broadcast map.
     */
   def run(tf: TfInput, docRows: DataFrame,
       blockBits: Int = PostingBlocks.DefaultBlockBits,
@@ -223,7 +222,7 @@ private[graft] final class BuildSpine(spark: SparkSession,
         gc()
       }
     }
-    try Par.await(legs.values.toSeq) finally ctx.releaseIdf()
+    Par.await(legs.values.toSeq)
     new BuiltIndex(spark, outDir)
   }
 }
@@ -231,18 +230,17 @@ private[graft] final class BuildSpine(spark: SparkSession,
 private[graft] object BuildSpine {
 
   /** One unit of a stage; its lineage is known once its inputs are. */
-  private final class Part(val part: Int, val dir: String, lineage0: => String,
-      val range: Option[(Long, Long)] = None) {
+  private final class Part(val part: Int, val dir: String, lineage0: => String) {
     lazy val lineage: String = lineage0
   }
 
   /** A stage: the stages it reads, the directories it owns, whether its
-    * units follow the tf units (`key=p` subdirectories), whether it is
+    * units follow the tf units (`slice=p` subdirectories), whether it is
     * transient, its units in a build and the write of one unit,
     * returning its row count.
     */
   private final case class Stage(name: String, inputs: Seq[String], outputs: Seq[String],
-      perUnit: Boolean = false, key: String = "slice", transient: Boolean = false,
+      perUnit: Boolean = false, transient: Boolean = false,
       units: Ctx => Seq[Part] = _ => Nil, write: (Ctx, Part) => Long = (_, _) => 0L)
 
   /** The stage graph, in topological order; tf belongs to the front ends. */
@@ -253,13 +251,10 @@ private[graft] object BuildSpine {
     Stage("terms_part", Seq("tf"), Seq("terms_part"), perUnit = true, transient = true,
       units = _.termsParts, write = (c, u) => c.writeTermsPart(u)),
     Stage("terms", Seq("terms_part", "docs"), Seq("terms", "terms_rev", "terms_ngrams"),
-      units = c => Seq(c.global("terms", c.namesOf("terms_part", "slice", c.termsParts))),
+      units = c => Seq(c.global("terms", c.namesOf("terms_part", c.termsParts))),
       write = (c, u) => c.writeTerms(u)),
-    Stage("blocks_enc", Seq("tf", "docs", "terms"), Seq("blocks_enc"), key = "unit",
-      transient = true,
-      units = _.encodeUnits, write = (c, u) => c.writeEncoded(u)),
-    Stage("blocks", Seq("blocks_enc", "docs", "terms"), Seq("blocks", "blocks_meta"),
-      units = c => Seq(c.global("blocks", c.namesOf("blocks_enc", "unit", c.encodeUnits))),
+    Stage("blocks", Seq("tf", "docs", "terms"), Seq("blocks", "blocks_meta"),
+      units = c => Seq(c.global("blocks", s"${c.tf.name}+terms")),
       write = (c, _) => c.writeBlocks()),
     Stage("stats", Seq("docs", "terms", "blocks"), Seq("stats"),
       units = c => Seq(c.global("stats", "docs+terms+blocks")),
@@ -270,21 +265,19 @@ private[graft] object BuildSpine {
       blockBits: Int, buckets: Int, q8: Boolean, maxBroadcastTerms: Long) {
     private val spark = docRows.sparkSession
     private val outDir = spine.outDir
-    private val sliced = tf.docIdRange.isDefined
+    private val sliced = tf.name != "tf"
 
     /** A unit of a per-unit stage; unsliced, the one unit is the stage dir. */
-    def unit(stage: String, key: String, part: Int, lineage: => String,
-        range: Option[(Long, Long)] = None): Part =
-      new Part(part, if (sliced) s"$outDir/$stage/$key=$part" else s"$outDir/$stage",
-        lineage, range)
+    def unit(stage: String, part: Int, lineage: => String): Part =
+      new Part(part, if (sliced) s"$outDir/$stage/slice=$part" else s"$outDir/$stage", lineage)
 
     def global(stage: String, lineage: => String): Part = new Part(0, s"$outDir/$stage", lineage)
 
     /** The lineage name of a stage's units: the stage dir, or a glob of
-      * its `key=p` subdirectories.
+      * its `slice=p` subdirectories.
       */
-    def namesOf(stage: String, key: String, parts: Seq[Part]): String =
-      if (parts.map(_.dir) == Seq(s"$outDir/$stage")) stage else s"$stage/$key=*"
+    def namesOf(stage: String, parts: Seq[Part]): String =
+      if (parts.map(_.dir) == Seq(s"$outDir/$stage")) stage else s"$stage/slice=*"
 
     private def read(schema: StructType, paths: Seq[String]): DataFrame =
       spark.read.schema(BuiltIndex.nullable(schema)).parquet(paths: _*)
@@ -348,7 +341,7 @@ private[graft] object BuildSpine {
     // tf on every row), so min-of-mins != max-of-maxs catches two
     // spellings of one id, which would silently merge their postings.
 
-    def termsParts: Seq[Part] = tf.units.map(t => unit("terms_part", "slice", t.part, t.name))
+    def termsParts: Seq[Part] = tf.units.map(t => unit("terms_part", t.part, t.name))
 
     private def partial(rows: DataFrame): DataFrame = rows.groupBy("term_id")
       .agg(count(lit(1)).as("df_part"), min("term").as("term_mn"), max("term").as("term_mx"))
@@ -386,71 +379,37 @@ private[graft] object BuildSpine {
     private def numTerms: Long = spine.log.get("terms", 0).map(_.rows).getOrElse(
       throw new IllegalStateException(s"terms committed without a manifest row in $outDir"))
 
-    /** The dictionary ships as a broadcast: blocks_enc is then per unit. */
-    def broadcastable: Boolean = numTerms <= maxBroadcastTerms
-
     private def dict =
       read(IndexBuilder.TermsSchema, Seq(s"$outDir/terms")).select("term_id", "idf")
 
-    // ---- blocks_enc: per 2^blockBits-ALIGNED docId range, so every
-    // (term_id, block_id) group lies in one unit. The
-    // impact is computed in the encode from the broadcast idf map, so the
-    // shuffle ships (tf, doc_len) ints; past the broadcast ceiling one
-    // unit encodes posting rows (impact doubles shuffled).
+    // ---- blocks: the tf rows encoded and written as the bucketed serving
+    // table in one plan (shuffle, encode, local bucket sort, write), then
+    // its metadata. Up to maxBroadcastTerms the impact is computed in the
+    // encode from a broadcast idf map, so the shuffle ships (tf, doc_len)
+    // ints; past it the encode takes posting rows (impact doubles
+    // shuffled) from an id-keyed join.
 
-    private var idfShipped: Option[Broadcast[LongDoubleMap]] = None
-
-    private def idf: Broadcast[LongDoubleMap] = synchronized {
-      idfShipped.getOrElse {
-        val m = new LongDoubleMap(math.max(16, numTerms.toInt))
-        dict.collect().foreach(r => m.put(r.getLong(0), r.getDouble(1)))
-        idfShipped = Some(spark.sparkContext.broadcast(m))
-        idfShipped.get
-      }
+    private def idfMap(): Broadcast[LongDoubleMap] = {
+      val m = new LongDoubleMap(math.max(16, numTerms.toInt))
+      dict.collect().foreach(r => m.put(r.getLong(0), r.getDouble(1)))
+      spark.sparkContext.broadcast(m)
     }
-
-    def releaseIdf(): Unit = synchronized { idfShipped.foreach(_.destroy()); idfShipped = None }
-
-    def encodeUnits: Seq[Part] = tf.docIdRange match {
-      case Some((lo, hi)) if broadcastable =>
-        val n = tf.units.size
-        val bw = 1L << blockBits
-        val alo = java.lang.Math.floorDiv(lo, bw) * bw
-        val w = ((math.max(1L, (hi - alo + n) / n) + bw - 1) / bw) * bw
-        (0 until n).map(u => (u, alo + u * w, if (u == n - 1) hi + 1 else alo + (u + 1) * w))
-          .collect { case (u, uLo, uHi) if uLo < uHi =>
-            unit("blocks_enc", "unit", u, s"tf:doc_id:[$uLo,$uHi)+terms", Some((uLo, uHi)))
-          }
-      case _ => Seq(global("blocks_enc", s"${tf.name}+terms"))
-    }
-
-    private def encoded(range: Option[(Long, Long)]): DataFrame =
-      if (!broadcastable) {
-        val postings = tf.all.join(dict, Seq("term_id")).select(col("term_id"), col("doc_id"),
-          Bm25.impactCol(col("tf").cast("double"), col("doc_len").cast("double"), avgdl,
-            col("idf")).as("impact"))
-        PostingBlocks.encode(postings, blockBits, q8).toDF()
-      } else {
-        val rows = range.fold(tf.all) { case (lo, hi) =>
-          tf.all.where(col("doc_id") >= lo && col("doc_id") < hi)
-        }
-        PostingBlocks.encodeFromTf(rows.select("term_id", "doc_id", "tf", "doc_len"),
-          avgdl, idf, blockBits, q8).toDF()
-      }
-
-    def writeEncoded(u: Part): Long = writeCounted(encoded(u.range), u)
-
-    // ---- blocks: the bucketed serving table from the encoded units (no
-    // shuffle, no re-encode), then its metadata
 
     @volatile private var postingsObserved: Option[Long] = None
 
     def writeBlocks(): Long = {
-      import spark.implicits._
-      val blocks = readCommitted(PostingBlocks.Schema, encodeUnits)
-      val (n, postings) = PostingBlocks.writeBlocksEncoded(blocks.as[PostingBlock], outDir, buckets)
+      val idf = if (numTerms <= maxBroadcastTerms) Some(idfMap()) else None
+      val (n, postings) = try {
+        val encoded = idf match {
+          case Some(m) => PostingBlocks.encodeFromTf(
+            tf.all.select("term_id", "doc_id", "tf", "doc_len"), avgdl, m, blockBits, q8)
+          case None => PostingBlocks.encode(tf.all.join(dict, Seq("term_id")).select(
+            col("term_id"), col("doc_id"), Bm25.impactCol(col("tf").cast("double"),
+              col("doc_len").cast("double"), avgdl, col("idf")).as("impact")), blockBits, q8)
+        }
+        PostingBlocks.writeBlocksEncoded(encoded, outDir, buckets)
+      } finally idf.foreach(_.destroy())
       postingsObserved = Some(postings)
-      releaseIdf()
       DriverParquet.writeTable(spark, Paths.get(outDir, "blocks_meta"), BuiltIndex.BlocksMetaSchema,
         Row.fromTuple(BlocksMeta(buckets, blockBits, if (q8) "q8" else "f64")))
       n

@@ -15,8 +15,7 @@ import graft.index.{Bm25, BuiltIndex, IndexBuilder, PostingBlocks}
   * per docId-range slice of the input, at `tf/slice=p/` with the slice's
   * `(doc_id, url)` rows at `docs_raw/slice=p/` (slicing by docId range
   * aligns with input file ranges, so each unit re-scans only its files).
-  * Per-unit stages keep `slice=p` (`unit=u` for blocks_enc) units; see
-  * the README's index layout.
+  * Per-unit stages keep `slice=p` units; see the README's index layout.
   *
   * A unit directory containing `_GRAFT_COMMITTED` is skipped on resume.
   * The reference analog: `already_indexed_files` skip-set + checkpoint
@@ -67,10 +66,7 @@ object CheckpointedBuild {
 
     val hasHtml = pagesRaw.columns.contains("html")
     val pages =
-      if (hasHtml)
-        pagesRaw.withColumn("text", Extract.extractText(col("html")))
-          .where(col("text").isNotNull)
-          .select("doc_id", "url", "text")
+      if (hasHtml) IndexBuilder.extractPages(pagesRaw)
       else pagesRaw.select("doc_id", "url", "text")
     val tfSchema = IndexBuilder.termFrequencies(pages).schema
     val docsRawSchema = pages.select("doc_id", "url").schema
@@ -166,7 +162,7 @@ object CheckpointedBuild {
       // the stage each config component first derives; the spine wipes it
       // and everything downstream. terms_part holds only (df, term
       // strings), so the partials survive a bm25 change.
-      val root = Map("blockBits" -> "blocks_enc", "bm25" -> "terms").withDefaultValue("tf")
+      val root = Map("blockBits" -> "blocks", "bm25" -> "terms").withDefaultValue("tf")
       val changed =
         if (committedWithoutConfig) Seq("missing-config")
         else (config.map(_._1) ++ priorConfig.keys).distinct
@@ -229,7 +225,7 @@ object CheckpointedBuild {
 
     val units = (0 until slices).map(p =>
       TfUnit(p, s"tf/slice=$p", read(tfSchema, s"$outDir/tf/slice=$p")))
-    spine.run(TfInput(units, read(tfSchema, slicesOf("tf"): _*), "tf/slice=*", Some((lo, hi))),
+    spine.run(TfInput(units, read(tfSchema, slicesOf("tf"): _*), "tf/slice=*"),
       read(docsRawSchema, slicesOf("docs_raw"): _*), blockBits,
       onUnitCommitted = onUnitCommitted)
   }

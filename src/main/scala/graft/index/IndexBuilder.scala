@@ -100,19 +100,21 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     */
   val impactCodec: String = layout._2
 
-  /** The blocks table, registered in the session catalog as bucketed by
-    * block_id so that its scan plans ONE TASK PER BUCKET: all
-    * (term_id, block_id) groups of a docId range complete inside a single
-    * task, with no per-query shuffle. `autoBucketedScan` must stay
-    * DISABLED for this session: Spark would otherwise fall back to
-    * size-based file splitting for plans with no distribution requirement
-    * (the block path's are none), and the block path then fails rather
-    * than score a block group split across tasks.
+  /** The blocks table, registered in the catalog as bucketed by block_id
+    * so that its scan plans ONE TASK PER BUCKET: all (term_id, block_id)
+    * groups of a docId range complete inside a single task, with no
+    * per-query shuffle. It is planned in a session of the index's own
+    * (same SparkContext and catalog) with `autoBucketedScan` DISABLED:
+    * Spark would otherwise fall back to size-based file splitting for
+    * plans with no distribution requirement (the block path's are none),
+    * and the block path then fails rather than score a block group split
+    * across tasks. The caller's session keeps its own setting.
     */
   lazy val blocks: DataFrame = {
-    spark.conf.set(SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key, "false")
+    val own = spark.newSession()
+    own.conf.set(SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key, "false")
     val t = BuiltIndex.blocksTableName(path)
-    spark.sql(
+    own.sql(
       s"""CREATE TABLE IF NOT EXISTS $t (
          |  term_id BIGINT, block_id BIGINT, n INT,
          |  docs_enc BINARY, impacts_enc BINARY,
@@ -121,7 +123,7 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
          |CLUSTERED BY (block_id) SORTED BY (term_id, block_id)
          |INTO ${blocksMeta._1} BUCKETS
          |LOCATION '$path/blocks'""".stripMargin)
-    spark.table(t)
+    own.table(t)
   }
 
   /** The stats row, read on the driver. */

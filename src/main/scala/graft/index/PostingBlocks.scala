@@ -177,7 +177,10 @@ object PostingBlocks {
 
   /** Write encoded blocks as a BUCKETED table (bucketBy block_id, files
     * sorted by (term_id, block_id)) registered in the session catalog with
-    * the data under `$outDir/blocks`; returns the block and posting counts.
+    * the data under `$outDir/blocks`; returns the block and posting counts,
+    * observed on the write. `blocks` is the encode itself ([[encode]] or
+    * [[encodeFromTf]]), so the tf shuffle, the encode, the local bucket
+    * sort and the write run as one plan, with no intermediate table.
     *
     * The bucketing is the serving-path contract: a query reads the blocks
     * of its terms (pushed In(term_id) filter; file sort keeps row-group
@@ -185,11 +188,11 @@ object PostingBlocks {
     * group of one docId range is complete inside a single task and the
     * WAND merge runs with zero per-query Exchange.
     *
-    * The write itself needs no shuffle: each task writes its groups into
-    * per-bucket files after a local sort by the bucket expression (a
-    * bucket may hold files from many tasks — correctness only needs
-    * bucket-level co-location, because the query side re-sorts locally
-    * by (block_id, term_id)).
+    * The write adds no shuffle to the encode's: each encode task writes
+    * its groups into per-bucket files after a local sort by the bucket
+    * expression (a bucket may hold files from many tasks — correctness
+    * only needs bucket-level co-location, because the query side re-sorts
+    * locally by (block_id, term_id)).
     */
   def writeBlocksEncoded(blocks: Dataset[PostingBlock], outDir: String,
       numBuckets: Int): (Long, Long) = {

@@ -378,7 +378,9 @@ object Dedup {
 
   /** Edge-count ceiling for the driver union-find shortcut in
     * [[connectedComponents]]: 4M edges collect as two long arrays
-    * (~64 MB), the same documented driver-budget class as the term
+    * (~64 MB), and the union-find runs over their sorted distinct ids (at
+    * most 8M longs) with an int parent array (~96 MB more, no boxed
+    * entries) — the same documented driver-budget class as the term
     * dictionary and broadcast rank sets elsewhere in this engine. A
     * near-dup pair list under the ceiling resolves in ONE collect + a
     * path-compressed union-find instead of 3-4 alternating contraction
@@ -454,27 +456,39 @@ object Dedup {
     if (longIds && d._1 <= driverMaxEdges) {
       val spark = e.sparkSession
       import spark.implicits._
-      val edges = e.as[(Long, Long)].collect()
-      val parent = new java.util.HashMap[Long, Long](edges.length * 2)
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrDefault(x, x)
-        while (p != x) { // path halving
-          val gp = parent.getOrDefault(p, p)
-          parent.put(x, gp); x = gp; p = parent.getOrDefault(x, x)
-        }
-        x
+      // the edges as two primitive id arrays, one pair of arrays per task
+      val parts = e.as[(Long, Long)].mapPartitions { it =>
+        val (us, vs) = (Array.newBuilder[Long], Array.newBuilder[Long])
+        it.foreach { case (u, v) => us += u; vs += v }
+        Iterator((us.result(), vs.result()))
+      }.collect()
+      val us = Array.concat(parts.map(_._1): _*)
+      val vs = Array.concat(parts.map(_._2): _*)
+      // union-find over the indices of the sorted distinct ids, so the
+      // smaller index is the smaller id
+      val ids = {
+        val all = Array.concat(us, vs)
+        java.util.Arrays.sort(all)
+        var k = 0
+        all.indices.foreach { i => if (k == 0 || all(i) != all(k - 1)) { all(k) = all(i); k += 1 } }
+        java.util.Arrays.copyOf(all, k)
       }
-      edges.foreach { case (u, v) =>
-        val ru = find(u); val rv = find(v)
+      val parent = Array.tabulate(ids.length)(identity)
+      def find(i0: Int): Int = {
+        var i = i0
+        while (parent(i) != i) { // path halving
+          parent(i) = parent(parent(i)); i = parent(i)
+        }
+        i
+      }
+      us.indices.foreach { j =>
+        val ru = find(java.util.Arrays.binarySearch(ids, us(j)))
+        val rv = find(java.util.Arrays.binarySearch(ids, vs(j)))
         // union by MIN root so the final label is the component minimum
-        if (ru != rv) {
-          if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv)
-        }
+        if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
       }
-      val out = edges.iterator.flatMap { case (u, v) => Iterator(u, v) }
-        .toArray.distinct.map(x => (x, find(x)))
-      return spark.createDataset(out.toIndexedSeq).toDF("id", "component")
+      val out = ids.indices.map(i => (ids(i), ids(find(i))))
+      return spark.createDataset(out).toDF("id", "component")
     }
 
     var it = 0

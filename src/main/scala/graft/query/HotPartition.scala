@@ -60,7 +60,7 @@ object HotPartition {
 
   /** What keeps a scan of the blocks table one task per bucket. */
   val BucketedScanRule: String =
-    s"${SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key} must stay false for a session that serves an index"
+    s"${SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key} must stay false for the session that plans an index's blocks scan"
 
   /** Assemble bucket `bucket` from its block rows and its docs. Every
     * block row must hash to `bucket`: a row read from another bucket's

@@ -13,10 +13,12 @@ import graft.index.IndexBuilder
 import graft.query.{Bm25Query, Hit}
 
 /** A cold query reads the blocks through the bucketed scan, one task per
-  * bucket. With Spark's automatic bucketed-scan choice switched back on,
-  * that scan may pack the bucket files by size instead: a cold query must
-  * then fail with a message naming the setting, or return the declarative
-  * path's hits — never other hits.
+  * bucket. With Spark's automatic bucketed-scan choice on, that scan may
+  * pack the bucket files by size instead: a cold query must then fail with
+  * a message naming the setting, or return the declarative path's hits —
+  * never other hits. The index plans its blocks scan in a session of its
+  * own with the setting off, so the caller's setting is neither changed
+  * nor used.
   */
 class BucketedScanSpec extends AnyFunSuite {
 
@@ -55,7 +57,6 @@ class BucketedScanSpec extends AnyFunSuite {
       ("doc set", () => Bm25Query.searchBlocksFiltered(cold, q, 10, conjunctive = true,
         allowed).collect().toSeq, filteredWant))
     assert(cases.forall(_._3.nonEmpty))
-    cold.blocks // registered, and the setting turned off, before it is turned back on
     spark.conf.set(key, "true")
     try cases.foreach { case (name, run, want) =>
       Try(run()) match {
@@ -67,5 +68,24 @@ class BucketedScanSpec extends AnyFunSuite {
           info(s"$name: failed naming $key")
       }
     } finally spark.conf.set(key, "false")
+  }
+
+  test("opening and querying an index hot and cold leaves the caller's autoBucketedScan") {
+    val spark = TestSpark.spark.newSession()
+    val key = SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key
+    val dir = Files.createTempDirectory("graft-autobucketed-kept").toString
+    IndexBuilder.build(spark, IndexBuilder.extractPages(
+      PagesCorpus.pages(spark, 200, parts = 2).toDF()), dir, blockBits = 5, numBuckets = 4)
+    val q = s"${PagesCorpus.vocab(2)} ${PagesCorpus.vocab(7)}"
+    Seq("true", "false").foreach { v =>
+      spark.conf.set(key, v)
+      val cold = IndexBuilder.load(spark, dir)
+      val want = bits(Bm25Query.searchNaive(cold, q, 10).collect().toSeq)
+      assert(want.nonEmpty)
+      assert(bits(Bm25Query.searchBlocks(cold, q, 10).collect().toSeq) == want, v)
+      val hot = IndexBuilder.load(spark, dir).cacheHot()
+      assert(bits(Bm25Query.searchBlocks(hot, q, 10).collect().toSeq) == want, v)
+      assert(spark.conf.get(key) == v)
+    }
   }
 }

@@ -89,15 +89,13 @@ class BuildSpineSpec extends AnyFunSuite {
       assert(blocksBytes(d) == want, d)
     }
 
-    // one manifest row per stage unit; with blockBits 6 the 300 docs of
-    // three slices encode as [0,128) [128,256) [256,300)
-    val spine = Set("docs", "terms_part", "terms", "blocks_enc", "blocks", "stats")
-      .map(_ -> 0)
+    // one manifest row per stage unit
+    val spine = Set("docs", "terms_part", "terms", "blocks", "stats").map(_ -> 0)
     assert(units(batchDir) == spine + ("tf" -> 0))
     assert(units(fromTf) == spine)
     assert(units(ck1) == spine ++ Set("tf", "config").map(_ -> 0))
     assert(units(ck3) == spine + ("config" -> 0) ++
-      Seq("tf", "terms_part", "blocks_enc").flatMap(s => (0 until 3).map(s -> _)))
+      Seq("tf", "terms_part").flatMap(s => (0 until 3).map(s -> _)))
     // blocks are the one posting layout
     Seq(batchDir, fromTf, ck1, ck3).foreach(d => assert(!Files.exists(Paths.get(d, "postings")), d))
   }

@@ -119,8 +119,7 @@ class CheckpointCompatSpec extends AnyFunSuite {
     // the same 100-doc, 2-slice build with every row written by Spark's
     // writer (update when the tokenizer, extractor or corpus change)
     val want = Set(
-      ("blocks", 0, 1993L, "blocks_enc/unit=*", ""),
-      ("blocks_enc", 0, 1993L, "tf:doc_id:[0,8192)+terms", ""),
+      ("blocks", 0, 1993L, "tf/slice=*+terms", ""),
       ("config", 0, 0L, "tok=1;extract=6;bm25=1.2,0.75;blockBits=13;tfSchema=3", ""),
       ("docs", 0, 100L, "tf/slice=*", ""),
       ("stats", 0, 1L, "docs+terms+blocks", ""),

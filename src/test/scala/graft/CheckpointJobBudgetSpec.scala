@@ -1,12 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.CheckpointedBuild
 import graft.corpus.PagesCorpus
+import graft.index.IndexBuilder
 import graft.query.Bm25Query
 
 /** Spark-job budget of `CheckpointedBuild.build`: checkpoint bookkeeping
@@ -23,6 +25,11 @@ class CheckpointJobBudgetSpec extends AnyFunSuite {
 
   private def top(ix: graft.index.BuiltIndex, q: String): Seq[(Long, Double)] =
     Bm25Query.searchBlocks(ix, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq
+
+  /** `raw` with new content for doc 123, in slice 1 of [0, 300) x 4. */
+  private def mutated(raw: DataFrame): DataFrame = raw.withColumn("html",
+    when(col("doc_id") === 123L, lit("budgetmutation fresh content".getBytes("UTF-8")))
+      .otherwise(col("html")))
 
   test("no-op resume of a 4-slice checkpoint runs at most 5 Spark jobs") {
     val dir = Files.createTempDirectory("graft-budget-noop").toString
@@ -42,20 +49,36 @@ class CheckpointJobBudgetSpec extends AnyFunSuite {
     val fresh = Files.createTempDirectory("graft-budget-fresh").toString
     val raw = PagesCorpus.pages(spark, n, parts = 4).toDF()
     CheckpointedBuild.build(spark, raw, dir, slices = 4)
-    // doc 123 lives in slice 1 of [0, 300) x 4
-    val mutated = raw.withColumn("html",
-      when(col("doc_id") === 123L,
-        lit("budgetmutation fresh content".getBytes("UTF-8")))
-        .otherwise(col("html")))
-    val (ix, jobs) = jobsOf(CheckpointedBuild.build(spark, mutated, dir, slices = 4))
+    val (ix, jobs) = jobsOf(CheckpointedBuild.build(spark, mutated(raw), dir, slices = 4))
     // 95 jobs while each manifest row, config check, triage lookup and
     // read-back schema ran Spark jobs of its own (same scenario and
     // session: local[4], 8 shuffle partitions, AQE on)
     info(s"resume after one changed slice: $jobs Spark jobs")
     assert(jobs <= 95 / 2, s"resume after one changed slice ran $jobs Spark jobs")
-    val want = CheckpointedBuild.build(spark, mutated, fresh, slices = 4)
+    val want = CheckpointedBuild.build(spark, mutated(raw), fresh, slices = 4)
     assert(ix.stats == want.stats)
     assert(top(ix, "budgetmutation") == Seq((123L, top(want, "budgetmutation").head._2)))
     assert(top(ix, PagesCorpus.vocab(3)) == top(want, PagesCorpus.vocab(3)))
+  }
+
+  test("batch build and one-slice resume encode and write blocks in one stage") {
+    val raw = PagesCorpus.pages(spark, n, parts = 4).toDF()
+    def noEncodeDir(dir: String): Unit =
+      assert(!Files.exists(Paths.get(dir, "blocks_enc")), s"a build wrote $dir/blocks_enc")
+    val batch = Files.createTempDirectory("graft-budget-batch").toString
+    val (_, batchJobs) = jobsOf(IndexBuilder.build(spark, IndexBuilder.extractPages(raw), batch))
+    noEncodeDir(batch)
+    val dir = Files.createTempDirectory("graft-budget-blocks").toString
+    val watch: (String, Int) => Unit = (_, _) => noEncodeDir(dir)
+    CheckpointedBuild.build(spark, raw, dir, slices = 4, onUnitCommitted = watch)
+    val (_, resumeJobs) = jobsOf(
+      CheckpointedBuild.build(spark, mutated(raw), dir, slices = 4, onUnitCommitted = watch))
+    noEncodeDir(dir)
+    // 18 and 28 jobs while the encode was written to a blocks_enc stage
+    // and read back for the bucketed blocks write (same calls and session:
+    // local[4], 8 shuffle partitions, AQE on)
+    info(s"batch build: $batchJobs Spark jobs, one-slice resume: $resumeJobs")
+    assert(batchJobs <= 18 - 1, s"batch build ran $batchJobs Spark jobs")
+    assert(resumeJobs <= 28 - 1, s"one-slice resume ran $resumeJobs Spark jobs")
   }
 }

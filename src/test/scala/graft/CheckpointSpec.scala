@@ -221,43 +221,32 @@ class CheckpointSpec extends AnyFunSuite {
     assert(cr.length == 1 && cr.head.getAs[String]("lineage").contains("bm25"))
   }
 
-  test("kill mid-blocks: committed blocks_enc units are not recomputed") {
+  test("kill after blocks commits: docs, terms and blocks are not recomputed") {
     val dirA = Files.createTempDirectory("graft-ckpt-blk-a").toString
     val dirB = Files.createTempDirectory("graft-ckpt-blk-b").toString
     val raw = PagesCorpus.pages(spark, n, parts = 4).toDF()
-    // blockBits=6 => 64-doc blocks; 300 docs over 6 slices align to
-    // 64-wide units [0,64) [64,128) [128,192) [192,256) [256,300) — five
-    // non-empty blocks_enc units
     val idxB = CheckpointedBuild.build(spark, raw, dirB, slices = 6,
       blockBits = 6)
 
-    // die after the 2nd committed blocks_enc unit
-    var committed = 0
+    // die once blocks has committed, before stats runs
     intercept[Boom] {
       CheckpointedBuild.build(spark, raw, dirA, slices = 6, blockBits = 6,
-        onUnitCommitted = (stage, _) => {
-          if (stage == "blocks_enc") {
-            committed += 1; if (committed == 2) throw Boom()
-          }
-        })
+        onUnitCommitted = (stage, _) => if (stage == "blocks") throw Boom())
     }
-    assert((0 until 2).forall(u =>
-      CheckpointedBuild.isCommitted(s"$dirA/blocks_enc/unit=$u")))
-    assert(!CheckpointedBuild.isCommitted(s"$dirA/blocks_enc/unit=2"))
-    assert(!CheckpointedBuild.isCommitted(s"$dirA/blocks"))
-    val before = CheckpointedBuild.manifest(spark, dirA)
-      .where(col("stage") === "blocks_enc")
-      .collect().map(r => r.getAs[Int]("part") -> r.getAs[Long]("committed_at")).toMap
-    assert(before.keySet == Set(0, 1))
+    assert(CheckpointedBuild.isCommitted(s"$dirA/blocks"))
+    assert(!CheckpointedBuild.isCommitted(s"$dirA/stats"))
+    val kept = Seq("docs", "terms", "blocks")
+    def committedAt(dir: String): Map[String, Long] = CheckpointedBuild.manifest(spark, dir)
+      .where(col("part") === 0).collect()
+      .map(r => r.getAs[String]("stage") -> r.getAs[Long]("committed_at")).toMap
+    val before = committedAt(dirA)
+    assert(kept.forall(before.contains) && !before.contains("stats"))
 
     val idxA = CheckpointedBuild.build(spark, raw, dirA, slices = 6,
       blockBits = 6)
-    val after = CheckpointedBuild.manifest(spark, dirA)
-      .where(col("stage") === "blocks_enc")
-      .collect().map(r => r.getAs[Int]("part") -> r.getAs[Long]("committed_at")).toMap
-    assert(after.size == 5) // unit 5 is past hi -> empty, never commits
-    (0 until 2).foreach(u =>
-      assert(after(u) == before(u), s"blocks_enc unit $u recomputed"))
+    val after = committedAt(dirA)
+    kept.foreach(st => assert(after(st) == before(st), s"$st recomputed"))
+    assert(after.contains("stats"), "stats must be recomputed")
 
     // full bit-level content identity of the serving blocks table
     def blocksBytes(path: String): Map[(Long, Long), (Int, Seq[Byte], Seq[Byte], Double)] =
@@ -367,7 +356,7 @@ class CheckpointSpec extends AnyFunSuite {
     val m = CheckpointedBuild.manifest(spark, dir).collect()
     val stages = m.map(_.getAs[String]("stage")).toSet
     assert(stages == Set("config", "tf", "docs", "terms_part", "terms",
-      "blocks_enc", "blocks", "stats"))
+      "blocks", "stats"))
     m.foreach { r =>
       assert(r.getAs[Long]("rows") >= 0)
       assert(r.getAs[String]("lineage").nonEmpty)
