@@ -384,10 +384,10 @@ private[graft] object BuildSpine {
 
     // ---- blocks: the tf rows encoded and written as the bucketed serving
     // table in one plan (shuffle, encode, local bucket sort, write), then
-    // its metadata. Up to maxBroadcastTerms the impact is computed in the
-    // encode from a broadcast idf map, so the shuffle ships (tf, doc_len)
-    // ints; past it the encode takes posting rows (impact doubles
-    // shuffled) from an id-keyed join.
+    // its metadata. The encode needs each term's idf for block_max (and
+    // q8's impacts): up to maxBroadcastTerms from a broadcast idf map, so
+    // the shuffle ships (tf, doc_len) ints alone; past it from an
+    // id-keyed join, which ships the idf with them.
 
     private def idfMap(): Broadcast[LongDoubleMap] = {
       val m = new LongDoubleMap(math.max(16, numTerms.toInt))
@@ -400,18 +400,17 @@ private[graft] object BuildSpine {
     def writeBlocks(): Long = {
       val idf = if (numTerms <= maxBroadcastTerms) Some(idfMap()) else None
       val (n, postings) = try {
+        val rows = tf.all.select("term_id", "doc_id", "tf", "doc_len")
         val encoded = idf match {
-          case Some(m) => PostingBlocks.encodeFromTf(
-            tf.all.select("term_id", "doc_id", "tf", "doc_len"), avgdl, m, blockBits, q8)
-          case None => PostingBlocks.encode(tf.all.join(dict, Seq("term_id")).select(
-            col("term_id"), col("doc_id"), Bm25.impactCol(col("tf").cast("double"),
-              col("doc_len").cast("double"), avgdl, col("idf")).as("impact")), blockBits, q8)
+          case Some(m) => PostingBlocks.encodeFromTf(rows, avgdl, m, blockBits, q8)
+          case None =>
+            PostingBlocks.encode(rows.join(dict, Seq("term_id")), avgdl, blockBits, q8)
         }
         PostingBlocks.writeBlocksEncoded(encoded, outDir, buckets)
       } finally idf.foreach(_.destroy())
       postingsObserved = Some(postings)
       DriverParquet.writeTable(spark, Paths.get(outDir, "blocks_meta"), BuiltIndex.BlocksMetaSchema,
-        Row.fromTuple(BlocksMeta(buckets, blockBits, if (q8) "q8" else "f64")))
+        Row.fromTuple(BlocksMeta(buckets, blockBits, if (q8) "q8" else "tfdl")))
       n
     }
 

@@ -141,6 +141,9 @@ object CheckpointedBuild {
       "extract" -> Extract.Version.toString,
       "bm25" -> s"${Bm25.K1},${Bm25.B}",
       "blockBits" -> blockBits.toString,
+      // the blocks' impact codec: a checkpoint of another (the f64 impact
+      // doubles before "tfdl") re-encodes its blocks
+      "codec" -> "tfdl",
       // tf-slice schema version: v2 added doc_len per row, v3 replaced the
       // per-row term string with (sparse term, term_id) — a resume must
       // not mix slices of different schemas under one parquet scan
@@ -162,7 +165,8 @@ object CheckpointedBuild {
       // the stage each config component first derives; the spine wipes it
       // and everything downstream. terms_part holds only (df, term
       // strings), so the partials survive a bm25 change.
-      val root = Map("blockBits" -> "blocks", "bm25" -> "terms").withDefaultValue("tf")
+      val root = Map("blockBits" -> "blocks", "codec" -> "blocks", "bm25" -> "terms")
+        .withDefaultValue("tf")
       val changed =
         if (committedWithoutConfig) Seq("missing-config")
         else (config.map(_._1) ++ priorConfig.keys).distinct

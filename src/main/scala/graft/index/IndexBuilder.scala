@@ -54,10 +54,13 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
   lazy val terms: DataFrame = read("terms", IndexBuilder.TermsSchema)
 
   /** `(term_id, doc_id, impact)` decoded from the block files, read as
-    * plain parquet: the decode needs no one-task-per-bucket scan. On a
-    * "q8" index the impacts are the quantized ones the block path scores.
+    * plain parquet (the decode needs no one-task-per-bucket scan), joined
+    * with the dictionary's idf: a "tfdl" impact is recomputed from it and
+    * avgdl exactly as the block path does. On a "q8" index the impacts
+    * are the quantized ones the block path scores.
     */
-  lazy val postings: DataFrame = PostingBlocks.decode(blockFiles, impactCodec)
+  lazy val postings: DataFrame = PostingBlocks.decode(
+    blockFiles.join(terms.select("term_id", "idf"), "term_id"), impactCodec, stats.avgdl)
 
   /** The encoded block rows behind [[postings]], for a reader that joins
     * before it decodes.
@@ -95,8 +98,9 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
   /** (num_buckets, block_bits) the blocks were written with. */
   val blocksMeta: (Int, Int) = layout._1
 
-  /** Impact encoding of the blocks table: "f64" (bit-exact scores) or
-    * "q8" (8-bit quantized, ~8x smaller impact payloads).
+  /** Impact encoding of the blocks table: "tfdl" (each posting's tf and
+    * doc_len, from which every reader recomputes the bit-exact impact) or
+    * "q8" (8-bit quantized impacts, lossy).
     */
   val impactCodec: String = layout._2
 
@@ -152,7 +156,7 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     * partition is read back whole per query. Every index has this one
     * layout; an index of an older one fails at load and must be rebuilt.
     * On the 2000-doc perfbench `serve` corpus the partitions, terms and
-    * docs take about 3.4 MB of executor memory.
+    * docs take about 1.8 MB of executor memory.
     */
   def cacheHot(): this.type = {
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -263,10 +267,11 @@ object BuiltIndex {
   /** ((num_buckets, block_bits), impact codec) of the index at `path`,
     * read on the driver before any Spark job. An index has one layout:
     * bucketed blocks described by a `blocks_meta` row that names its
-    * impact codec, beside the `terms_rev` and `terms_ngrams` dimensions.
-    * Anything else — no, an unreadable or an incomplete `blocks_meta`
-    * row, or a missing dimension — fails the load; such an index must be
-    * rebuilt. (A "q8" index read as "f64" would serve wrong scores.)
+    * impact codec, "tfdl" or "q8", beside the `terms_rev` and
+    * `terms_ngrams` dimensions. Anything else — no, an unreadable or an
+    * incomplete `blocks_meta` row, another codec (the f64 impact doubles
+    * of older builds, or an unknown one), or a missing dimension — fails
+    * the load; such an index must be rebuilt.
     */
   private[graft] def readLayout(path: String): ((Int, Int), String) = {
     def stale(why: String, cause: Throwable = null) = new IllegalStateException(
@@ -276,10 +281,16 @@ object BuiltIndex {
     val rows =
       try DriverParquet.read(Paths.get(path, "blocks_meta"), BlocksMetaSchema)
       catch { case NonFatal(e) => throw stale("has an unreadable blocks_meta table", e) }
-    rows.headOption.filterNot(r => (0 until 3).exists(r.isNullAt))
+    val layout = rows.headOption.filterNot(r => (0 until 3).exists(r.isNullAt))
       .map(r => ((r.getInt(0), r.getInt(1)), r.getString(2)))
       .getOrElse(throw stale("has no blocks_meta row with an impact codec"))
+    if (!ImpactCodecs.contains(layout._2))
+      throw stale(s"has blocks of impact codec ${layout._2}, not one of ${ImpactCodecs.mkString(", ")}")
+    layout
   }
+
+  /** The impact codecs of the blocks an index may have. */
+  private val ImpactCodecs = Seq("tfdl", "q8")
 
   /** Default cap for the driver-resident dictionary (~1 GB on-heap at
     * ~200 bytes/entry — see [[BuiltIndex.cacheDictionary]]).

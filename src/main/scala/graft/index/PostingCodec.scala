@@ -3,10 +3,17 @@ package graft.index
 import java.io.ByteArrayOutputStream
 
 /** Byte codecs for posting blocks: sorted docIds as delta + unsigned
-  * varint; impacts as fixed 8-byte little-endian doubles
-  * (kept exact so distributed scores equal the oracle bit-for-bit — a
-  * production deployment would quantize impacts to 8 bits, trading the
-  * exactness gate for ~8x impact compression; see README).
+  * varint, and each posting's impact payload in one of two codecs:
+  *
+  *   - "tfdl" (exact): per posting an unsigned varint tf, then an
+  *     unsigned varint doc_len. A reader recomputes the impact as
+  *     `Bm25.impact(tf, doc_len, avgdl, idf)` from the term's idf and the
+  *     index's avgdl, the very function the encode applies, so every
+  *     score equals the oracle bit for bit. Both integers are small and
+  *     repetitive: about 3 bytes a posting before zstd, where the exact
+  *     impact double took 8 (as Lucene stores freqs and norms, not
+  *     scores);
+  *   - "q8" (lossy, behind a flag): 8-bit quantized impacts, see below.
   *
   * The reference compresses posting sets as RoaringBitmaps
   * (/root/reference/src/index/trigram.rs:63-71, persistence at
@@ -61,24 +68,71 @@ object PostingCodec {
     out
   }
 
-  def encodeImpacts(a: Array[Double]): Array[Byte] = {
-    val out = new Array[Byte](a.length * 8)
+  /** The "tfdl" payload of n postings: per posting an unsigned varint
+    * tf, then an unsigned varint doc_len (both non-negative).
+    */
+  def encodeTfDl(tf: Array[Int], docLen: Array[Int], n: Int): Array[Byte] = {
+    val out = new ByteArrayOutputStream(n * 3)
     var i = 0
-    while (i < a.length) { writeDoubleLE(out, i * 8, a(i)); i += 1 }
+    while (i < n) {
+      require(tf(i) >= 0 && docLen(i) >= 0, s"negative tf or doc_len at $i")
+      writeVarLong(out, tf(i))
+      writeVarLong(out, docLen(i))
+      i += 1
+    }
+    out.toByteArray
+  }
+
+  /** The (tf, doc_len) pairs of a "tfdl" payload of n postings. */
+  def decodeTfDl(bytes: Array[Byte], n: Int): (Array[Int], Array[Int]) = {
+    val tf = new Array[Int](n)
+    val dl = new Array[Int](n)
+    readTfDl(bytes, n, (i, t, d) => { tf(i) = t; dl(i) = d })
+    (tf, dl)
+  }
+
+  /** The impacts of a "tfdl" payload of n postings of a term of `idf`:
+    * `Bm25.impact(tf, doc_len, avgdl, idf)` per posting, the function the
+    * encode applies, so bit-identical to the impacts it saw.
+    */
+  def decodeTfDlImpacts(bytes: Array[Byte], n: Int, idf: Double, avgdl: Double): Array[Double] = {
+    val out = new Array[Double](n)
+    readTfDl(bytes, n, (i, t, d) => out(i) = Bm25.impact(t.toDouble, d.toDouble, avgdl, idf))
     out
   }
 
-  def decodeImpacts(bytes: Array[Byte], n: Int): Array[Double] = {
-    val out = new Array[Double](n)
+  @inline private def readTfDl(bytes: Array[Byte], n: Int, f: (Int, Int, Int) => Unit): Unit = {
+    var p = 0
+    def next(): Int = {
+      var v = 0
+      var shift = 0
+      var b = 0
+      do {
+        b = bytes(p) & 0xff; p += 1
+        v |= (b & 0x7f) << shift
+        shift += 7
+      } while ((b & 0x80) != 0)
+      v
+    }
     var i = 0
-    while (i < n) { out(i) = readDoubleLE(bytes, i * 8); i += 1 }
-    out
+    while (i < n) {
+      val t = next()
+      f(i, t, next())
+      i += 1
+    }
   }
+
+  /** The impacts of one block's payload in `codec`: "q8" dequantizes,
+    * "tfdl" recomputes them from the term's idf and the index's avgdl.
+    */
+  def decodeImpacts(codec: String, bytes: Array[Byte], n: Int,
+      idf: Double, avgdl: Double): Array[Double] =
+    if (codec == "q8") decodeImpactsQ8(bytes, n) else decodeTfDlImpacts(bytes, n, idf, avgdl)
 
   // ---- 8-bit impact quantization (production compression path) ----
   //
   // Per-block linear quantization: a 16-byte [lo, hi] header then ONE
-  // byte per posting (~8x smaller than f64 impacts). Levels are rounded
+  // byte per posting (tfdl's varint pair takes about 3). Levels are rounded
   // UP, so decoded >= true impact and decoded <= hi <= block_max — the
   // WAND upper bounds stay admissible and pruning stays safe; scores are
   // slight overestimates with error <= (hi-lo)/255 per term. This trades

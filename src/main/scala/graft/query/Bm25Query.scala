@@ -2,7 +2,7 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.index.{BuiltIndex, PostingCodec}
@@ -96,11 +96,10 @@ object Bm25Query {
     Analyzed(resolved.sortBy(t => (t.df, t.term_id)), qTokens.size)
   }
 
-  private def hitsDataset(index: BuiltIndex, hits: Seq[Hit]): Dataset[Hit] = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.createDataset(hits)
-  }
+  private val HitEncoder = Encoders.product[Hit]
+
+  private def hitsDataset(index: BuiltIndex, hits: Seq[Hit]): Dataset[Hit] =
+    index.spark.createDataset(hits)(HitEncoder)
 
   /** Attach urls + ranks to a (doc_id, score) top-k result. k is small
     * (clamped 1..1000 like the reference API, web/api.rs:164), so we
@@ -304,22 +303,21 @@ object Bm25Query {
   // ------------------------------------------------------------------
 
   /** Merge one bucket's block groups for one query. Rows arrive sorted
-    * by (block_id, term_id). `allow`, when not null, is the sorted array
-    * of the docs the query may return among this bucket's docs: a
-    * filtered-out doc never reaches the heap, so heap thresholds are
-    * thresholds over the FILTERED doc set (exact).
+    * by (block_id, term_id); `impacts` decodes a row's impact payload
+    * (see [[HotServing]]), and is called only for rows a candidate is
+    * scored from. `allow`, when not null, is the sorted array of the docs
+    * the query may return among this bucket's docs: a filtered-out doc
+    * never reaches the heap, so heap thresholds are thresholds over the
+    * FILTERED doc set (exact).
     */
   private[graft] def processPartition(it: Iterator[BlockRow],
       nTerms: Int, k: Int,
       conjunctive: Boolean,
-      q8: Boolean = false,
+      impacts: BlockRow => Array[Double],
       allow: Array[Long] = null,
       boostIds: Array[Long] = null,
       boostVals: Array[Double] = null,
       maxBoost: Double = 1.0): Iterator[(Long, Double)] = {
-    @inline def decodeImp(bytes: Array[Byte], n: Int): Array[Double] =
-      if (q8) PostingCodec.decodeImpactsQ8(bytes, n)
-      else PostingCodec.decodeImpacts(bytes, n)
     @inline def allowed(doc: Long): Boolean =
       allow == null || java.util.Arrays.binarySearch(allow, doc) >= 0
     // K3 static-rank boost pushed into the merge: final = bm25 * rank(doc)
@@ -368,8 +366,8 @@ object Bm25Query {
         // docId arrays decode eagerly (the intersection needs them);
         // IMPACT arrays decode lazily, only if the intersection actually
         // survives to scoring — on head/stopword-conjunctive queries most
-        // groups produce no candidate, and impacts are the bigger payload
-        // (8B/posting vs ~1-2B delta-varint docIds)
+        // groups produce no candidate, and a tfdl impact costs a varint
+        // pair and a BM25 evaluation per posting
         val docArrays = new Array[Array[Long]](present)
         val impArrays = new Array[Array[Double]](present)
         gi = 0
@@ -379,7 +377,7 @@ object Bm25Query {
         }
         @inline def imps(ti: Int): Array[Double] = {
           if (impArrays(ti) == null)
-            impArrays(ti) = decodeImp(group(ti).impacts_enc, group(ti).n)
+            impArrays(ti) = impacts(group(ti))
           impArrays(ti)
         }
         // doc-level bound: remUb(ti) = max attainable from terms ti..end
@@ -464,7 +462,7 @@ object Bm25Query {
         val impArr = new Array[Array[Double]](present)
         @inline def imps(ti: Int): Array[Double] = {
           if (impArr(ti) == null)
-            impArr(ti) = decodeImp(group(ti).impacts_enc, group(ti).n)
+            impArr(ti) = impacts(group(ti))
           impArr(ti)
         }
         val ptr = new Array[Int](present)
@@ -632,7 +630,7 @@ object Bm25Query {
       maxCollectRows: Long): Seq[Vector[Hit]] = {
     require(!queries.exists(_.boosted) || rank.nonEmpty,
       "batch contains boosted queries but no rank DataFrame was supplied")
-    val hot = index.hotPartitions
+    val hot = index.hotTier.filter(_.resident)
     val results = mutable.Map.empty[Int, Vector[Hit]]
     val planned = queries.zipWithIndex.flatMap { case (q, qi) =>
       if (isShortQuery(q.query)) {
@@ -667,9 +665,10 @@ object Bm25Query {
       // a cold chunk scores one transient partition per bucket of its
       // pruned blocks scan, without urls: its globs arrive as doc filters
       val hits = hot match {
-        case Some(h) => HotServing.run(index, h, qs, kk, side)
-        case None => withUrls(index,
-          HotServing.run(index, HotServing.transient(index, chunkRows(index, qs)), qs, kk, side))
+        case Some(h) => HotServing.run(index, h.rdd, h.occupied, qs, kk, side)
+        case None =>
+          val parts = HotServing.transient(index, chunkRows(index, qs))
+          withUrls(index, HotServing.run(index, parts, parts.partitions.indices, qs, kk, side))
       }
       chunk.map(_._1).zip(hits).foreach { case (qi, v) => results(qi) = v }
     }
@@ -683,8 +682,8 @@ object Bm25Query {
   private def plan(index: BuiltIndex, q: BatchQuery): Option[BatchPlanned] = {
     val a = analyze(index, q.query)
     if (a.terms.isEmpty || (q.conjunctive && !a.allResolved)) None
-    else Some(BatchPlanned(a.terms.map(_.term_id).toArray, q.conjunctive,
-      q.include, q.exclude, q.boosted))
+    else Some(BatchPlanned(a.terms.map(_.term_id).toArray, a.terms.map(_.idf).toArray,
+      q.conjunctive, q.include, q.exclude, q.boosted))
   }
 
   /** The pruned block rows of a chunk's query terms: a scan of the

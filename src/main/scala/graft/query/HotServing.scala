@@ -11,17 +11,31 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 
-import graft.index.BuiltIndex
+import graft.index.{BuiltIndex, PostingCodec}
 
-/** One driver-analyzed query of a batch: its resolved term ids, mode, url
-  * globs, whether it takes the batch's rank set, and the index of the doc
-  * filter of the call's [[SideInput]] that restricts it (-1: none). Url
-  * globs are such a filter on a cold index; a hot bucket resolves them
-  * against its own urls instead.
+/** One driver-analyzed query of a batch: its resolved term ids and their
+  * idfs, mode, url globs, whether it takes the batch's rank set, and the
+  * index of the doc filter of the call's [[SideInput]] that restricts it
+  * (-1: none). Url globs are such a filter on a cold index; a hot bucket
+  * resolves them against its own urls instead.
   */
-private[graft] case class BatchPlanned(termIds: Array[Long],
+private[graft] case class BatchPlanned(termIds: Array[Long], idfs: Array[Double],
     conjunctive: Boolean, include: Seq[String], exclude: Seq[String],
     boosted: Boolean, filter: Int = -1)
+
+/** How a bucket task reads the impacts of a block row: in the index's
+  * codec, a "tfdl" impact recomputed from the idf of the row's term (as
+  * the query's analysis resolved it) and the index's avgdl, on the hot
+  * and the cold path alike.
+  */
+private[graft] final case class ImpactReader(codec: String, avgdl: Double) {
+  def of(q: BatchPlanned): BlockRow => Array[Double] = r =>
+    PostingCodec.decodeImpacts(codec, r.impacts_enc, r.n, q.idfs(q.termIds.indexOf(r.term_id)), avgdl)
+}
+
+private[graft] object ImpactReader {
+  def apply(index: BuiltIndex): ImpactReader = ImpactReader(index.impactCodec, index.stats.avgdl)
+}
 
 /** The one bucket scorer of the block path: a chunk of analyzed queries
   * is answered by ONE Spark job over one [[HotPartition]] per blocks
@@ -58,7 +72,9 @@ private[graft] object HotServing {
     * urls of exactly the docs those blocks can name. MEMORY_AND_DISK
     * with the lineage kept: a lost executor recomputes its buckets.
     * None, with nothing left cached, when some partition did not fit in
-    * memory: see [[HotTier]].
+    * memory: see [[HotTier]]. The materializing job also counts each
+    * partition's block rows: a query job then runs only the partitions
+    * that hold some ([[HotTier.occupied]]).
     */
   def tier(index: BuiltIndex): Option[HotTier] = {
     val spark = index.spark
@@ -74,7 +90,8 @@ private[graft] object HotServing {
     val sc = spark.sparkContext
     val t = new HotTier(rdd)
     sc.addSparkListener(t)
-    rdd.count()
+    val rows = sc.runJob(rdd, (it: Iterator[HotPartition]) => it.map(_.rows.length).sum)
+    t.occupied = rows.indices.filter(rows(_) > 0)
     val deadline = System.nanoTime() + ReportWaitNs
     while (!t.reported && System.nanoTime() < deadline) Thread.sleep(1)
     if (t.resident) Some(t)
@@ -109,17 +126,19 @@ private[graft] object HotServing {
   }
 
   /** The top-k hits of each query of `chunk`, in chunk order: one job
-    * over the bucket partitions, zipped with the side input if any.
+    * over the bucket partitions `buckets` of `parts`, zipped with the side
+    * input if any. A bucket left out must hold no block row: it could
+    * yield no survivor for any query.
     */
-  private[query] def run(index: BuiltIndex, parts: RDD[HotPartition],
+  private[query] def run(index: BuiltIndex, parts: RDD[HotPartition], buckets: Seq[Int],
       chunk: Array[BatchPlanned], k: Int, side: Option[SideInput]): Array[Vector[Hit]] = {
-    val q8 = index.impactCodec == "q8"
+    val impacts = ImpactReader(index)
     val sc = index.spark.sparkContext
     val survivors = side match {
       case None => sc.runJob(parts, (it: Iterator[HotPartition]) =>
-        it.flatMap(score(_, BucketSide.Empty, chunk, k, q8)).toArray)
-      case Some(s) => sc.runJob(zipped(parts, s, chunk, k, q8),
-        (it: Iterator[(Int, Long, Double, String)]) => it.toArray)
+        it.flatMap(score(_, BucketSide.Empty, chunk, k, impacts)).toArray, buckets)
+      case Some(s) => sc.runJob(zipped(parts, s, chunk, k, impacts),
+        (it: Iterator[(Int, Long, Double, String)]) => it.toArray, buckets)
     }
     val byQuery = survivors.flatten.groupBy(_._1)
     chunk.indices.map { qi =>
@@ -134,17 +153,17 @@ private[graft] object HotServing {
     * partition zipped with its slice of the side input.
     */
   private[graft] def zipped(parts: RDD[HotPartition], side: SideInput,
-      chunk: Array[BatchPlanned], k: Int, q8: Boolean): RDD[(Int, Long, Double, String)] = {
+      chunk: Array[BatchPlanned], k: Int, impacts: ImpactReader): RDD[(Int, Long, Double, String)] = {
     val nFilters = side.nFilters
     parts.zipPartitions(side.records) { (h, r) =>
       val bs = BucketSide(r, nFilters)
-      h.flatMap(score(_, bs, chunk, k, q8))
+      h.flatMap(score(_, bs, chunk, k, impacts))
     }
   }
 
   /** Survivors (query index, doc_id, score, url) of one bucket. */
   private def score(part: HotPartition, side: BucketSide, chunk: Array[BatchPlanned],
-      k: Int, q8: Boolean): Iterator[(Int, Long, Double, String)] = {
+      k: Int, impacts: ImpactReader): Iterator[(Int, Long, Double, String)] = {
     val globbed = mutable.HashMap.empty[(Seq[String], Seq[String]), Array[Long]]
     chunk.indices.iterator.flatMap { qi =>
       val q = chunk(qi)
@@ -166,9 +185,9 @@ private[graft] object HotServing {
         }.sortBy(_.block_id)
         val hits =
           if (q.boosted) Bm25Query.processPartition(rows.iterator, q.termIds.length, k,
-            q.conjunctive, q8, allow, side.rankIds, side.rankVals, side.maxRank)
+            q.conjunctive, impacts.of(q), allow, side.rankIds, side.rankVals, side.maxRank)
           else Bm25Query.processPartition(rows.iterator, q.termIds.length, k,
-            q.conjunctive, q8, allow)
+            q.conjunctive, impacts.of(q), allow)
         hits.map { case (d, s) => (qi, d, s, part.url(d)) }
       }
     }
@@ -199,4 +218,9 @@ private[graft] final class HotTier(val rdd: RDD[HotPartition]) extends SparkList
 
   /** Every partition is held in executor memory. */
   def resident: Boolean = reported && !inMemory.containsValue(false)
+
+  /** The partitions that hold block rows, counted as [[HotServing.tier]]
+    * materializes them: a query job runs only these.
+    */
+  @volatile var occupied: Seq[Int] = 0 until numPartitions
 }

@@ -644,11 +644,12 @@ object RegexQuery {
     * no query has a term to look up.
     *
     * Every query contributes tagged dictionary rows (term_id, qi, bi,
-    * req, need, rk): per branch bi, literal req's term ids from
-    * [[termIdsForLiteral]] (need = the branch's literal count); a ranked
-    * query, its terms as resolved by `Bm25Query.analyze` (zero jobs on a
-    * cached dictionary) as a local relation with rk set — a term missing
-    * from the corpus leaves the query without candidates. The tagged
+    * req, need, rk, idf): per branch bi, literal req's term ids from
+    * [[termIdsForLiteral]] (need = the branch's literal count, idf null:
+    * these rows decode no impact); a ranked query, its terms and their
+    * idfs as resolved by `Bm25Query.analyze` (zero jobs on a cached
+    * dictionary) as a local relation with rk set — a term missing from
+    * the corpus leaves the query without candidates. The tagged
     * rows join the encoded blocks before the decode, so only their blocks
     * decode, and no term id is collected on the driver. One repartition
     * by doc_id serves everything above it, as every key above contains
@@ -667,7 +668,7 @@ object RegexQuery {
       queries: Seq[Query]): Option[DataFrame] = {
     val spark = index.spark
     import spark.implicits._
-    val ranked = mutable.ArrayBuffer.empty[(Long, Int, Int, Int, Int, Boolean)]
+    val ranked = mutable.ArrayBuffer.empty[(Long, Int, Int, Int, Int, Boolean, Double)]
     val lookups = mutable.ArrayBuffer.empty[DataFrame]
     queries.zipWithIndex.foreach { case (q, qi) =>
       val branches = requiredLiteralBranches(q.pattern)
@@ -675,16 +676,16 @@ object RegexQuery {
         val a = Bm25Query.analyze(index, branches.head.map(_.text).mkString(" "))
         if (a.terms.nonEmpty && a.allResolved)
           a.terms.zipWithIndex.foreach { case (t, req) =>
-            ranked += ((t.term_id, qi, 0, req, a.terms.size, true))
+            ranked += ((t.term_id, qi, 0, req, a.terms.size, true, t.idf))
           }
       } else for ((br, bi) <- branches.zipWithIndex; (l, req) <- br.zipWithIndex)
         lookups += termIdsForLiteral(index, l).select(col("term_id"),
           lit(qi).as("qi"), lit(bi).as("bi"), lit(req).as("req"),
-          lit(br.size).as("need"), lit(false).as("rk"))
+          lit(br.size).as("need"), lit(false).as("rk"), lit(null).cast("double").as("idf"))
     }
     val local =
       if (ranked.isEmpty) None
-      else Some(ranked.toSeq.toDF("term_id", "qi", "bi", "req", "need", "rk"))
+      else Some(ranked.toSeq.toDF("term_id", "qi", "bi", "req", "need", "rk", "idf"))
     // without ranked rows nothing reads the impacts, so none decode
     val score =
       if (ranked.isEmpty) lit(0.0)
@@ -694,7 +695,7 @@ object RegexQuery {
         (acc, x) => acc + x.getField("impact"))
     (lookups ++ local).reduceOption(_ unionByName _).map { tagged =>
       val perBranch = PostingBlocks.decode(
-          index.blockFiles.join(tagged, Seq("term_id")), index.impactCodec)
+          index.blockFiles.join(tagged, Seq("term_id")), index.impactCodec, index.stats.avgdl)
         .repartition(col("doc_id"))
         .groupBy("qi", "bi", "need", "doc_id")
         .agg(countDistinct(col("req")).as("nreq"), score.as("score"))

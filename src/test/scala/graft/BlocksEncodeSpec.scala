@@ -9,10 +9,11 @@ import graft.corpus.PagesCorpus
 import graft.index.{Bm25, IndexBuilder, LongDoubleMap}
 import graft.query.Bm25Query
 
-/** The round-5 blocks-encode byte cut (impacts computed inside the encode
-  * from a broadcast idf dictionary, shuffle ships (tf, doc_len) ints) must
-  * be BIT-IDENTICAL to the postings-driven encode — same delta/varint
-  * docId payloads, same impact byte payloads, same block_max doubles.
+/** The round-5 blocks-encode byte cut (idf looked up inside the encode
+  * from a broadcast dictionary, shuffle ships (tf, doc_len) ints) must be
+  * BIT-IDENTICAL to the encode whose tf rows carry the idf of an id-keyed
+  * join — same delta/varint docId payloads, same (tf, doc_len) payloads,
+  * same block_max doubles.
   */
 class BlocksEncodeSpec extends AnyFunSuite {
 
@@ -25,8 +26,8 @@ class BlocksEncodeSpec extends AnyFunSuite {
       PagesCorpus.pages(spark, 400, parts = 4).toDF())
     // dirA: dictionary broadcasts -> tf-driven byte-cut encode
     val idxA = IndexBuilder.build(spark, pages, dirA, blockBits = 6)
-    // dirB: same tf rows, broadcast ceiling forced to 0 -> postings-driven
-    // encode (impact doubles through the shuffle), id-keyed idf join
+    // dirB: same tf rows, broadcast ceiling forced to 0 -> id-keyed idf
+    // join, the idf shipped through the shuffle with each tf row
     val docsDim = spark.read.parquet(s"$dirA/docs")
     val idxB = IndexBuilder.buildFromTf(spark, idxA.tfRows, docsDim, dirB,
       blockBits = 6, maxBroadcastTerms = 0L)

@@ -126,7 +126,7 @@ class BuildSpineSpec extends AnyFunSuite {
     Seq(meta).toDF("num_buckets", "block_bits", "impact_codec")
       .coalesce(1).write.mode("overwrite").parquet(metaViaSpark)
     assert(parquetSchema(s"$batchDir/blocks_meta") == parquetSchema(metaViaSpark))
-    assert(meta == ((8, 6, "f64")))
+    assert(meta == ((8, 6, "tfdl")))
   }
 
   /** A copy of the batch index, changed by `damage`. */
@@ -164,10 +164,13 @@ class BuildSpineSpec extends AnyFunSuite {
   }
 
   test("a blocks_meta row with a null codec fails the load before any job") {
-    refused(damaged("null-codec") { d =>
-      DriverParquet.writeTable(spark, Paths.get(d, "blocks_meta"), BuiltIndex.BlocksMetaSchema,
-        Row(8, 6, null))
-    })
+    // a null codec, the f64 impact doubles of older builds, an unknown one
+    Seq("null-codec" -> null, "f64-codec" -> "f64", "unknown-codec" -> "zz9").foreach {
+      case (name, codec) => refused(damaged(name) { d =>
+        DriverParquet.writeTable(spark, Paths.get(d, "blocks_meta"), BuiltIndex.BlocksMetaSchema,
+          Row(8, 6, codec))
+      })
+    }
   }
 
   test("an index without terms_rev fails the load before any job") {

@@ -120,7 +120,7 @@ class CheckpointCompatSpec extends AnyFunSuite {
     // writer (update when the tokenizer, extractor or corpus change)
     val want = Set(
       ("blocks", 0, 1993L, "tf/slice=*+terms", ""),
-      ("config", 0, 0L, "tok=1;extract=6;bm25=1.2,0.75;blockBits=13;tfSchema=3", ""),
+      ("config", 0, 0L, "tok=1;extract=6;bm25=1.2,0.75;blockBits=13;codec=tfdl;tfSchema=3", ""),
       ("docs", 0, 100L, "tf/slice=*", ""),
       ("stats", 0, 1L, "docs+terms+blocks", ""),
       ("terms", 0, 1993L, "terms_part/slice=*", ""),

@@ -3,11 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.checkpoint.CheckpointedBuild
+import graft.checkpoint.{CheckpointedBuild, DriverParquet, ManifestRow}
 import graft.corpus.PagesCorpus
-import graft.index.BuiltIndex
+import graft.index.{BuiltIndex, IndexBuilder}
 import graft.query.Bm25Query
 
 /** Kill-and-resume fixture (FIXTURES.md §4): interrupt the build after k
@@ -174,6 +175,36 @@ class CheckpointSpec extends AnyFunSuite {
     val q = PagesCorpus.vocab(2)
     assert(Bm25Query.searchBlocks(idxA, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq ==
       Bm25Query.searchBlocks(idxC, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq)
+
+    // a checkpoint from before the codec joined the config, whose blocks
+    // hold f64 impact doubles: it does not load, and a resume re-encodes
+    // blocks (and stats), not tf, docs or terms
+    import spark.implicits._
+    val cfg = spark.read.parquet(s"$dirA/manifest/config_0").as[ManifestRow].head()
+    assert(cfg.lineage.contains(";codec=tfdl;"))
+    Seq(cfg.copy(lineage = cfg.lineage.replace(";codec=tfdl", ""))).toDS()
+      .write.mode("overwrite").parquet(s"$dirA/manifest/config_0")
+    DriverParquet.writeTable(spark, Paths.get(dirA, "blocks_meta"), BuiltIndex.BlocksMetaSchema,
+      Row(idxA.blocksMeta._1, 6, "f64"))
+    intercept[IllegalStateException](IndexBuilder.load(spark, dirA))
+    val resumed = CheckpointedBuild.build(spark, raw, dirA, slices = 4, blockBits = 6)
+    val last = CheckpointedBuild.manifest(spark, dirA)
+      .collect().map(r =>
+        (r.getAs[String]("stage"), r.getAs[Int]("part")) ->
+          r.getAs[Long]("committed_at")).toMap
+    Seq("blocks", "stats").foreach(st =>
+      assert(last((st, 0)) != after((st, 0)), s"$st must be rebuilt for the codec"))
+    (0 until 4).foreach(p => assert(last(("tf", p)) == after(("tf", p))))
+    Seq("docs", "terms").foreach(st => assert(last((st, 0)) == after((st, 0))))
+    val cr2 = CheckpointedBuild.manifest(spark, dirA)
+      .where(col("stage") === "config_reconcile").collect()
+    assert(cr2.map(_.getAs[String]("lineage")).toSeq ==
+      Seq("changed=codec invalidated=blocks,stats"))
+    assert(resumed.impactCodec == "tfdl" && resumed.stats == idxC.stats)
+    def payloads(path: String): Seq[String] = spark.read.parquet(s"$path/blocks")
+      .select(col("term_id"), col("block_id"), hex(col("impacts_enc")), col("block_max"))
+      .collect().map(_.toString).sorted.toSeq
+    assert(payloads(dirA) == payloads(dirC))
   }
 
   test("bm25-config change after a mid-terms kill keeps committed " +

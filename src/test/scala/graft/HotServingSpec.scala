@@ -33,7 +33,7 @@ class HotServingSpec extends AnyFunSuite {
 
   /** (hot, cold) over one freshly built directory per impact codec. */
   private lazy val opened: Map[String, (BuiltIndex, BuiltIndex)] =
-    Seq("f64", "q8").map { codec =>
+    Seq("tfdl", "q8").map { codec =>
       val dir = Files.createTempDirectory(s"graft-hot-$codec").toString
       IndexBuilder.build(spark, pages, dir, blockBits = blockBits,
         numBuckets = numBuckets, quantizeImpacts = codec == "q8")
@@ -94,7 +94,7 @@ class HotServingSpec extends AnyFunSuite {
     lines.forall(h => want((h.doc_id, h.url, java.lang.Double.doubleToLongBits(h.score), h.rank)))
   }
 
-  for (codec <- Seq("f64", "q8")) {
+  for (codec <- Seq("tfdl", "q8")) {
     test(s"$codec: hot single queries equal the Dataset path bit for bit") {
       val (hot, cold) = opened(codec)
       assert(hot.hotPartitions.nonEmpty && cold.hotPartitions.isEmpty)
@@ -208,7 +208,7 @@ class HotServingSpec extends AnyFunSuite {
   }
 
   test("a hot query, a hot glob query and a 32-query hot batch are one Spark job each") {
-    val (hot, cold) = opened("f64")
+    val (hot, cold) = opened("tfdl")
     val plain = queries(4)
     val glob = queries(12)
     val batch = (queries.take(15) ++ queries.take(15) ++ queries.take(2)).take(32)
@@ -237,8 +237,28 @@ class HotServingSpec extends AnyFunSuite {
     assert(counts == Seq(1, 1, 2, 2))
   }
 
+  test("a hot query runs one task per bucket that holds block rows") {
+    // 4 buckets of 2^13-doc blocks over 400 docs: every block is block 0,
+    // so one bucket holds rows and three are empty
+    val dir = Files.createTempDirectory("graft-hot-one-bucket").toString
+    IndexBuilder.build(spark, pages, dir, numBuckets = 4)
+    val hot = IndexBuilder.load(spark, dir).cacheHot().cacheDictionary()
+    val cold = IndexBuilder.load(spark, dir).cacheDictionary()
+    assert(hot.blocksMeta == ((4, 13)))
+    val q = queries(4)
+    single(hot, q) // warm: the first hot run ships its closure classes
+    val (hits, tasks) = SparkJobs.resultTasks(spark)(single(hot, q))
+    assert(tasks == Seq(1))
+    assert(hits.nonEmpty && bits(hits) == bits(single(cold, q)))
+    val rank = rankOf(cold)
+    val (boosted, boostTasks) = SparkJobs.resultTasks(spark)(
+      Bm25Query.searchBlocksBoosted(hot, q.query, 10, rank).collect().toSeq)
+    assert(boostTasks == Seq(1))
+    assert(bits(boosted) == bits(declarative(cold, q.copy(boosted = true), rank)))
+  }
+
   test("a hot index with a partition out of memory serves on the Dataset path") {
-    val (hot, cold) = opened("f64")
+    val (hot, cold) = opened("tfdl")
     val tier = hot.hotTier.get
     // the report an executor sends when it evicts bucket 0 to disk (the
     // tier reads no block manager id)

@@ -36,14 +36,15 @@ object PlanDump {
       idx.blocks.where(col("term_id").isin(qids: _*)).explain("formatted")
       println("### PLAN 4: FULL block-WAND query on a cold index (pruned bucketed scan -> one transient partition per bucket -> the one bucket scorer; zero Exchange)")
       def planned(filter: Int, boosted: Boolean = false) =
-        Array(BatchPlanned(qids.toArray, conjunctive = true, Nil, Nil, boosted, filter))
+        Array(BatchPlanned(qids.toArray, qids.map(_ => 1.0).toArray, conjunctive = true,
+          Nil, Nil, boosted, filter))
       val rows = Bm25Query.chunkRows(idx, planned(-1))
       rows.explain("formatted")
       println(graft.query.HotServing.transient(idx, rows).toDebugString)
       println("### PLAN 5: terms dictionary lookup (pushed In(term), sorted row groups)")
       idx.terms.where(col("term").isin(PagesCorpus.vocab(3), PagesCorpus.vocab(7)))
         .explain("formatted")
-      println("### PLAN 6: decoded posting reader (pushed In(term_id) on the plain blocks scan; the decode is a Generate, no Exchange)")
+      println("### PLAN 6: decoded posting reader (pushed In(term_id) on the plain blocks scan and the broadcast idf scan; the decode is a Generate, no shuffle)")
       idx.postings.where(col("term_id").isin(qids: _*)).explain("formatted")
       println("### PLAN 7: line-serving content scan (pushed In(doc_id) — reads ONLY the top-k docs)")
       val pages = spark.read.parquet(s"$dir/pages")
@@ -59,7 +60,7 @@ object PlanDump {
       val sideAllow = graft.query.SideInput(Seq(allow), None, numBuckets, blockBits)
       println(graft.query.HotServing.zipped(
         graft.query.HotServing.transient(idx, Bm25Query.chunkRows(idx, planned(0))),
-        sideAllow, planned(0), 10, q8 = false).toDebugString)
+        sideAllow, planned(0), 10, graft.query.ImpactReader(idx)).toDebugString)
       println("### PLAN 9: symbols search via artifact (containment on the names DIMENSION, pushed In(name) on the fact table)")
       val symDir = java.nio.file.Files.createTempDirectory("graft-plans-sym").toString
       graft.symbols.Symbols.build(pages, symDir)
@@ -80,9 +81,9 @@ object PlanDump {
       val hot = IndexBuilder.load(spark, dir).cacheHot()
       graft.query.HotServing.zipped(hot.hotPartitions.get,
         graft.query.SideInput(Seq(allowDense), Some(rank), numBuckets, blockBits),
-        planned(0, boosted = true), 10, q8 = false)
+        planned(0, boosted = true), 10, graft.query.ImpactReader(idx))
         .toDebugString.linesIterator.foreach(println)
-      println("### PLAN 13: blocks encode FROM TF ROWS (round 5 byte cut — the one build shuffle ships (tf INT, doc_len INT), impacts computed in-task from the broadcast idf dict)")
+      println("### PLAN 13: blocks encode FROM TF ROWS (round 5 byte cut — the one build shuffle ships (tf INT, doc_len INT), block_max computed in-task from the broadcast idf dict)")
       val idfMap = new graft.index.LongDoubleMap(
         math.max(16, idx.stats.num_terms.toInt))
       idx.terms.select("term_id", "idf").collect()

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
-import graft.index.PostingCodec
+import graft.index.{Bm25, PostingCodec}
 
 class PostingCodecSpec extends AnyFunSuite {
 
@@ -30,13 +30,39 @@ class PostingCodecSpec extends AnyFunSuite {
     }
   }
 
+  private val rnd = new scala.util.Random(11)
+
+  /** (tf, doc_len) arrays: tf = 1, one- to five-byte varints, random. */
+  private val tfdl = Seq(
+    (Array(1), Array(1)),
+    (Array(1, 1, 2), Array(127, 128, 16384)),
+    (Array(1, 300, 7), Array(Int.MaxValue, 1 << 21, 529)),
+    (Array.fill(1000)(1 + rnd.nextInt(40)), Array.fill(1000)(1 + rnd.nextInt(100000))))
+
+  test("tfdl round trip: varint pairs, payload length is the summed varint lengths") {
+    def varLen(v: Int): Int = { var n = 1; var x = v >>> 7; while (x != 0) { n += 1; x >>>= 7 }; n }
+    for ((tf, dl) <- tfdl) {
+      val enc = PostingCodec.encodeTfDl(tf, dl, tf.length)
+      assert(enc.length == tf.map(varLen).sum + dl.map(varLen).sum)
+      val (tf2, dl2) = PostingCodec.decodeTfDl(enc, tf.length)
+      assert(tf2.sameElements(tf) && dl2.sameElements(dl))
+    }
+    // only the first n postings are encoded
+    assert(PostingCodec.encodeTfDl(Array(3, 9), Array(5, 9), 1).toSeq == Seq[Byte](3, 5))
+    intercept[IllegalArgumentException](PostingCodec.encodeTfDl(Array(-1), Array(5), 1))
+  }
+
   test("impacts double round-trip is bit-exact") {
-    val xs = Array(0.0, -0.0, 1.5, math.Pi, Double.MinPositiveValue,
-      1.7976931348623157e308, math.log(2.2))
-    val dec = PostingCodec.decodeImpacts(PostingCodec.encodeImpacts(xs), xs.length)
-    xs.zip(dec).foreach { case (a, b) =>
-      assert(java.lang.Double.doubleToLongBits(a) ==
-        java.lang.Double.doubleToLongBits(b))
+    // the impacts a tfdl payload decodes to are the doubles the encoder
+    // computes for block_max: Bm25.impact of the same tf and doc_len
+    for ((tf, dl) <- tfdl; (idf, avgdl) <- Seq((0.0001, 529.3), (7.3, 1.0), (math.log(2.2), 12345.678))) {
+      val n = tf.length
+      val enc = PostingCodec.encodeTfDl(tf, dl, n)
+      val got = PostingCodec.decodeTfDlImpacts(enc, n, idf, avgdl)
+      val want = (0 until n).map(i => Bm25.impact(tf(i).toDouble, dl(i).toDouble, avgdl, idf))
+      assert(got.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+        want.map(java.lang.Double.doubleToRawLongBits))
+      assert(PostingCodec.decodeImpacts("tfdl", enc, n, idf, avgdl).sameElements(got))
     }
   }
 
@@ -53,7 +79,7 @@ class PostingCodecSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val xs = Array.fill(1000)(0.5 + rnd.nextDouble() * 7.5)
     val enc = PostingCodec.encodeImpactsQ8(xs)
-    assert(enc.length == 16 + xs.length) // vs 8 bytes/posting for f64
+    assert(enc.length == 16 + xs.length)
     val dec = PostingCodec.decodeImpactsQ8(enc, xs.length)
     val hi = xs.max
     val step = (hi - xs.min) / 255.0

@@ -1,8 +1,9 @@
 package graft
 
 import java.util.UUID
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -15,15 +16,31 @@ object SparkJobs {
     * so jobs of suites running alongside are not counted.
     */
   def count[A](spark: SparkSession)(f: => A): (A, Int) = {
+    val (r, started) = jobs(spark)(f)
+    (r, started.size)
+  }
+
+  /** Runs `f` and returns its result with the number of tasks of the
+    * result stage of each Spark job it started on this thread, in order.
+    */
+  def resultTasks[A](spark: SparkSession)(f: => A): (A, Seq[Int]) = {
+    val (r, started) = jobs(spark)(f)
+    (r, started.map(_.stageInfos.maxBy(_.stageId).numTasks))
+  }
+
+  /** Runs `f` and returns its result with the start events of the Spark
+    * jobs it started on this thread (see [[count]]).
+    */
+  private def jobs[A](spark: SparkSession)(f: => A): (A, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
     val group = s"job-budget-${UUID.randomUUID()}"
     val fence = s"$group-fence"
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
     val fenceSeen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`group`) => jobs.add(e)
           case Some(`fence`) => fenceSeen.countDown()
           case _ =>
         }
@@ -37,7 +54,7 @@ object SparkJobs {
       sc.setJobGroup(fence, "job budget fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(fenceSeen.await(60, TimeUnit.SECONDS), "listener events did not arrive")
-      (r, jobs.get)
+      (r, jobs.asScala.toSeq.sortBy(_.jobId))
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.PostingCodec
+import graft.index.{Bm25, PostingCodec}
 import graft.query.{BlockRow, Bm25Query}
 
 /** Unit tests of the block-merge kernel (processPartition) — the
@@ -17,8 +17,23 @@ import graft.query.{BlockRow, Bm25Query}
   */
 class WandMergeSpec extends AnyFunSuite {
 
-  private def enc(imps: Array[Double]): Array[Byte] =
-    PostingCodec.encodeImpacts(imps)
+  // every posting has doc_len = avgdl; terms 1 and 3 share an idf
+  private val avgdl = 100.0
+  private val idfs = Map(1L -> 1.0, 2L -> 0.125, 3L -> 1.0)
+
+  private def imp(term: Long, tf: Int): Double =
+    Bm25.impact(tf.toDouble, avgdl, avgdl, idfs(term))
+
+  /** The "tfdl" payload of postings with these tfs. */
+  private def enc(tfs: Int*): Array[Byte] =
+    PostingCodec.encodeTfDl(tfs.toArray, Array.fill(tfs.size)(avgdl.toInt), tfs.size)
+
+  private def row(term: Long, block: Long, docs: Array[Long], tfs: Int*): BlockRow =
+    BlockRow(term, block, docs.length, PostingCodec.encodeDocIds(docs), enc(tfs: _*),
+      tfs.map(imp(term, _)).max)
+
+  private val impacts: BlockRow => Array[Double] =
+    r => PostingCodec.decodeTfDlImpacts(r.impacts_enc, r.n, idfs(r.term_id), avgdl)
 
   test("empty intersection: impact payloads are never decoded") {
     // docs disjoint within the block -> intersection empty. The impact
@@ -29,7 +44,7 @@ class WandMergeSpec extends AnyFunSuite {
     val t2 = BlockRow(2L, 0L, 3,
       PostingCodec.encodeDocIds(Array(1L, 3L, 5L)), Array[Byte](2), 4.0)
     val out = Bm25Query.processPartition(
-      Iterator(t1, t2), nTerms = 2, k = 10, conjunctive = true).toList
+      Iterator(t1, t2), nTerms = 2, k = 10, conjunctive = true, impacts).toList
     assert(out.isEmpty)
   }
 
@@ -38,68 +53,55 @@ class WandMergeSpec extends AnyFunSuite {
     // corrupt here) must not be touched
     val t1 = BlockRow(1L, 0L, 3, Array[Byte](7), Array[Byte](7), 5.0)
     val out = Bm25Query.processPartition(
-      Iterator(t1), nTerms = 2, k = 10, conjunctive = true).toList
+      Iterator(t1), nTerms = 2, k = 10, conjunctive = true, impacts).toList
     assert(out.isEmpty)
   }
 
   test("overlap scores exactly from intersection pointers") {
-    val t1 = BlockRow(1L, 0L, 3,
-      PostingCodec.encodeDocIds(Array(0L, 2L, 4L)),
-      enc(Array(1.0, 2.0, 3.0)), 3.0)
-    val t2 = BlockRow(2L, 0L, 2,
-      PostingCodec.encodeDocIds(Array(2L, 7L)),
-      enc(Array(10.0, 20.0)), 20.0)
+    val t1 = row(1L, 0L, Array(0L, 2L, 4L), 1, 2, 3)
+    val t2 = row(2L, 0L, Array(2L, 7L), 10, 20)
     val out = Bm25Query.processPartition(
-      Iterator(t1, t2), nTerms = 2, k = 10, conjunctive = true).toList
-    assert(out == List((2L, 12.0)))
+      Iterator(t1, t2), nTerms = 2, k = 10, conjunctive = true, impacts).toList
+    assert(out == List((2L, imp(1L, 2) + imp(2L, 10))))
   }
 
   test("multi-block runs intersect per block; union mode sums all terms") {
     val rows = Iterator(
-      BlockRow(1L, 0L, 2, PostingCodec.encodeDocIds(Array(0L, 1L)),
-        enc(Array(1.0, 4.0)), 4.0),
-      BlockRow(2L, 0L, 2, PostingCodec.encodeDocIds(Array(1L, 3L)),
-        enc(Array(0.5, 0.5)), 0.5),
-      BlockRow(1L, 9L, 1, PostingCodec.encodeDocIds(Array(100L)),
-        enc(Array(2.0)), 2.0))
+      row(1L, 0L, Array(0L, 1L), 1, 4),
+      row(2L, 0L, Array(1L, 3L), 1, 1),
+      row(1L, 9L, Array(100L), 2))
     val conj = Bm25Query.processPartition(
-      rows, nTerms = 2, k = 10, conjunctive = true).toList
-    assert(conj == List((1L, 4.5))) // block 9 lacks term 2
+      rows, nTerms = 2, k = 10, conjunctive = true, impacts).toList
+    assert(conj == List((1L, imp(1L, 4) + imp(2L, 1)))) // block 9 lacks term 2
     val rows2 = Iterator(
-      BlockRow(1L, 0L, 2, PostingCodec.encodeDocIds(Array(0L, 1L)),
-        enc(Array(1.0, 4.0)), 4.0),
-      BlockRow(2L, 0L, 2, PostingCodec.encodeDocIds(Array(1L, 3L)),
-        enc(Array(0.5, 0.5)), 0.5))
+      row(1L, 0L, Array(0L, 1L), 1, 4),
+      row(2L, 0L, Array(1L, 3L), 1, 1))
     val union = Bm25Query.processPartition(
-      rows2, nTerms = 2, k = 10, conjunctive = false).toList.sortBy(_._1)
-    assert(union == List((0L, 1.0), (1L, 4.5), (3L, 0.5)))
+      rows2, nTerms = 2, k = 10, conjunctive = false, impacts).toList.sortBy(_._1)
+    assert(union == List((0L, imp(1L, 1)), (1L, imp(1L, 4) + imp(2L, 1)), (3L, imp(2L, 1))))
   }
 
   test("union WAND: below-threshold list is never decoded (k=1)") {
-    // list 1 fills the k=1 heap with score 10; list 2's block_max (0.5)
+    // list 1 fills the k=1 heap with its top impact; list 2's block_max
     // then bounds every remaining doc strictly below the threshold, so
     // its CORRUPT impact payload must never be decoded
+    val top = imp(1L, 10)
     val rows = Iterator(
-      BlockRow(1L, 0L, 2, PostingCodec.encodeDocIds(Array(0L, 1L)),
-        enc(Array(10.0, 9.0)), 10.0),
+      row(1L, 0L, Array(0L, 1L), 10, 9),
       BlockRow(2L, 0L, 2, PostingCodec.encodeDocIds(Array(50L, 60L)),
-        Array[Byte](3), 0.5))
+        Array[Byte](3), top / 2))
     val out = Bm25Query.processPartition(
-      rows, nTerms = 2, k = 1, conjunctive = false).toList
-    assert(out == List((0L, 10.0)))
+      rows, nTerms = 2, k = 1, conjunctive = false, impacts).toList
+    assert(out == List((0L, top)))
   }
 
   test("union WAND: equal-to-threshold docs are still evaluated (ties exact)") {
-    // doc 5 scores exactly the heap threshold (3.0) from a list whose
-    // block_max equals it — strictly-below-only skipping must evaluate
-    // it, and the tie-break (smaller doc_id) must keep doc 2
-    val rows = Iterator(
-      BlockRow(1L, 0L, 1, PostingCodec.encodeDocIds(Array(2L)),
-        enc(Array(3.0)), 3.0),
-      BlockRow(2L, 0L, 1, PostingCodec.encodeDocIds(Array(5L)),
-        enc(Array(3.0)), 3.0))
+    // doc 5 scores exactly the heap threshold from a list whose block_max
+    // equals it — strictly-below-only skipping must evaluate it, and the
+    // tie-break (smaller doc_id) must keep doc 2
+    val rows = Iterator(row(1L, 0L, Array(2L), 3), row(3L, 0L, Array(5L), 3))
     val out = Bm25Query.processPartition(
-      rows, nTerms = 2, k = 1, conjunctive = false).toList
-    assert(out == List((2L, 3.0)))
+      rows, nTerms = 2, k = 1, conjunctive = false, impacts).toList
+    assert(out == List((2L, imp(1L, 3))))
   }
 }
