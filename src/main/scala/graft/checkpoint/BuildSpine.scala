@@ -88,11 +88,12 @@ final case class TfUnit(part: Int, name: String, rows: DataFrame)
   */
 final case class TfInput(units: Seq[TfUnit], all: DataFrame, name: String)
 
-/** The one stage runner of every index build: batch
-  * ([[IndexBuilder.build]]), from tf rows ([[IndexBuilder.buildFromTf]])
-  * and checkpointed ([[CheckpointedBuild.build]]). Each front end commits
-  * its tf units and hands them over with their docs' rows; the runner
-  * runs the declared graph below tf:
+/** The one stage runner of every index build. It has two front ends:
+  * batch ([[IndexBuilder.build]]) and checkpointed
+  * ([[CheckpointedBuild.build]]), which a stream's compaction
+  * ([[graft.streaming.IncrementalIndex.compact]]) runs too. Each front
+  * end commits its tf units and hands them over with their docs' rows;
+  * the runner runs the declared graph below tf:
   *
   *   tf ─┬─ docs ──────────────┬─ blocks ─ stats (blocks also reads tf; stats docs, terms)
   *       └─ terms_part ─ terms ┘
@@ -177,21 +178,21 @@ private[graft] final class BuildSpine(spark: SparkSession,
       .foreach(_.outputs.foreach(o => DriverParquet.remove(Paths.get(outDir, o))))
   }
 
-  /** Run every stage below tf not yet committed over `tf` and `docRows`:
-    * `(doc_id, url)`, or `(doc_id, url, doc_len)` to keep given doc
-    * lengths. Blocks go into `numBuckets` buckets (the session's shuffle
-    * partitions if not positive); past `maxBroadcastTerms` terms the idf
-    * attach is an id-keyed shuffle join instead of a broadcast map.
+  /** Run every stage below tf not yet committed over `tf` and the
+    * `(doc_id, url)` rows `docRows`; each doc's length comes from its tf
+    * rows. Blocks go into `numBuckets` buckets (the session's shuffle
+    * partitions if not positive); past `maxBroadcastTerms` terms (a test
+    * seam) the idf attach is an id-keyed shuffle join instead of a
+    * broadcast map.
     */
   def run(tf: TfInput, docRows: DataFrame,
       blockBits: Int = PostingBlocks.DefaultBlockBits,
       numBuckets: Int = -1,
-      quantizeImpacts: Boolean = false,
       maxBroadcastTerms: Long = IndexBuilder.DictBroadcastMaxTerms,
       onUnitCommitted: (String, Int) => Unit = (_, _) => ()): BuiltIndex = {
     val ctx = new Ctx(this, tf, docRows, blockBits,
       if (numBuckets > 0) numBuckets else spark.sessionState.conf.numShufflePartitions,
-      quantizeImpacts, maxBroadcastTerms)
+      maxBroadcastTerms)
     // complete: all units committed and every non-transient input complete
     // (invalidation wipes what is downstream of a wiped stage); a transient
     // stage runs only for a dependent that runs
@@ -262,7 +263,7 @@ private[graft] object BuildSpine {
 
   /** One run: its inputs, options and the values stages pass on. */
   private final class Ctx(spine: BuildSpine, val tf: TfInput, docRows: DataFrame,
-      blockBits: Int, buckets: Int, q8: Boolean, maxBroadcastTerms: Long) {
+      blockBits: Int, buckets: Int, maxBroadcastTerms: Long) {
     private val spark = docRows.sparkSession
     private val outDir = spine.outDir
     private val sliced = tf.name != "tf"
@@ -300,9 +301,8 @@ private[graft] object BuildSpine {
     // ---- docs; (num_docs, total_tokens) ride on its write
 
     private val docs: DataFrame =
-      (if (docRows.columns.contains("doc_len")) docRows
-       else docRows.join(tf.all.groupBy("doc_id").agg(first("doc_len").as("doc_len")),
-         Seq("doc_id"), "left").na.fill(0L, Seq("doc_len")))
+      docRows.join(tf.all.groupBy("doc_id").agg(first("doc_len").as("doc_len")),
+        Seq("doc_id"), "left").na.fill(0L, Seq("doc_len"))
         .select(col("doc_id"), col("url"), col("doc_len").cast("long"))
     @volatile private var docsObserved: Option[(Long, Long)] = None
 
@@ -337,9 +337,9 @@ private[graft] object BuildSpine {
     // string), a pure function of the unit; one merge of the partials
     // (dictionary-sized, orders of magnitude below tf) into the global
     // dictionary with idf. Collision guard: every unit has >= 1 non-null
-    // string per term (v3 tf emits it at first sight per partition, dense
-    // tf on every row), so min-of-mins != max-of-maxs catches two
-    // spellings of one id, which would silently merge their postings.
+    // string per term (tf emits it at first sight per partition), so
+    // min-of-mins != max-of-maxs catches two spellings of one id, which
+    // would silently merge their postings.
 
     def termsParts: Seq[Part] = tf.units.map(t => unit("terms_part", t.part, t.name))
 
@@ -384,10 +384,10 @@ private[graft] object BuildSpine {
 
     // ---- blocks: the tf rows encoded and written as the bucketed serving
     // table in one plan (shuffle, encode, local bucket sort, write), then
-    // its metadata. The encode needs each term's idf for block_max (and
-    // q8's impacts): up to maxBroadcastTerms from a broadcast idf map, so
-    // the shuffle ships (tf, doc_len) ints alone; past it from an
-    // id-keyed join, which ships the idf with them.
+    // its metadata. The encode needs each term's idf for block_max: up
+    // to maxBroadcastTerms from a broadcast idf map, so the shuffle ships
+    // (tf, doc_len) ints alone; past it from an id-keyed join, which
+    // ships the idf with them.
 
     private def idfMap(): Broadcast[LongDoubleMap] = {
       val m = new LongDoubleMap(math.max(16, numTerms.toInt))
@@ -402,15 +402,14 @@ private[graft] object BuildSpine {
       val (n, postings) = try {
         val rows = tf.all.select("term_id", "doc_id", "tf", "doc_len")
         val encoded = idf match {
-          case Some(m) => PostingBlocks.encodeFromTf(rows, avgdl, m, blockBits, q8)
-          case None =>
-            PostingBlocks.encode(rows.join(dict, Seq("term_id")), avgdl, blockBits, q8)
+          case Some(m) => PostingBlocks.encodeFromTf(rows, avgdl, m, blockBits)
+          case None => PostingBlocks.encode(rows.join(dict, Seq("term_id")), avgdl, blockBits)
         }
         PostingBlocks.writeBlocksEncoded(encoded, outDir, buckets)
       } finally idf.foreach(_.destroy())
       postingsObserved = Some(postings)
       DriverParquet.writeTable(spark, Paths.get(outDir, "blocks_meta"), BuiltIndex.BlocksMetaSchema,
-        Row.fromTuple(BlocksMeta(buckets, blockBits, if (q8) "q8" else "tfdl")))
+        Row.fromTuple(BlocksMeta(buckets, blockBits, BuiltIndex.ImpactCodec)))
       n
     }
 

@@ -92,7 +92,8 @@ object CheckpointedBuild {
     // exceeds hi). The slicing is guessed from the committed tf
     // lineages; a resume over an input with the same docId range — the
     // common case — needs this one job, any other build a second pass
-    // with the bounds the first one found. (Input is assumed stable for
+    // with the bounds the first one found. An empty input has no bounds
+    // (min > max); its slices are all empty. (Input is assumed stable for
     // the build's duration.)
     def scanInput(guess: Option[(Long, Long)]): (Long, Long, Map[Int, String]) = {
       val (gLo, gWidth) = guess.fold((0L, 0L)) { case (l, h) => (l, widthOf(l, h)) }
@@ -111,7 +112,6 @@ object CheckpointedBuild {
         }.collect()
       val mn = parts.map(_._1).foldLeft(Long.MaxValue)(math.min)
       val mx = parts.map(_._2).foldLeft(Long.MinValue)(math.max)
-      require(mn <= mx, "no input rows")
       val fps = (0 until n).filter(p => parts.exists(_._4(p) > 0))
         .map(p => p -> java.lang.Long.toHexString(parts.map(_._3(p)).sum)).toMap
       (mn, mx, fps)
@@ -124,7 +124,8 @@ object CheckpointedBuild {
       else Some((committedRanges.map(_._1).min, committedRanges.map(_._2).max))
     val (lo, hi, sliceFps) = {
       val first = scanInput(guess)
-      if (guess.contains((first._1, first._2))) first
+      if (first._1 > first._2) (0L, -1L, first._3)
+      else if (guess.contains((first._1, first._2))) first
       else scanInput(Some((first._1, first._2)))
     }
     val width = widthOf(lo, hi)
@@ -143,7 +144,7 @@ object CheckpointedBuild {
       "blockBits" -> blockBits.toString,
       // the blocks' impact codec: a checkpoint of another (the f64 impact
       // doubles before "tfdl") re-encodes its blocks
-      "codec" -> "tfdl",
+      "codec" -> BuiltIndex.ImpactCodec,
       // tf-slice schema version: v2 added doc_len per row, v3 replaced the
       // per-row term string with (sparse term, term_id) — a resume must
       // not mix slices of different schemas under one parquet scan

@@ -45,22 +45,23 @@ case class IndexStats(
 class BuiltIndex(val spark: SparkSession, val path: String) {
   BuiltIndex.requireLocal(path)
 
-  /** The bucketing and impact codec of the blocks, read on the driver as
-    * the index is opened: an index of any other layout fails here.
+  /** (num_buckets, block_bits) the blocks were written with, read on the
+    * driver as the index is opened: an index of any other layout fails
+    * here.
     */
-  private val layout: ((Int, Int), String) = BuiltIndex.readLayout(path)
+  val blocksMeta: (Int, Int) = BuiltIndex.readLayout(path)
 
   lazy val docs: DataFrame = read("docs", IndexBuilder.DocsSchema)
   lazy val terms: DataFrame = read("terms", IndexBuilder.TermsSchema)
 
   /** `(term_id, doc_id, impact)` decoded from the block files, read as
     * plain parquet (the decode needs no one-task-per-bucket scan), joined
-    * with the dictionary's idf: a "tfdl" impact is recomputed from it and
-    * avgdl exactly as the block path does. On a "q8" index the impacts
-    * are the quantized ones the block path scores.
+    * with the dictionary's idf: each impact is recomputed from the
+    * posting's tf and doc_len, the idf and avgdl exactly as the block
+    * path does.
     */
   lazy val postings: DataFrame = PostingBlocks.decode(
-    blockFiles.join(terms.select("term_id", "idf"), "term_id"), impactCodec, stats.avgdl)
+    blockFiles.join(terms.select("term_id", "idf"), "term_id"), stats.avgdl)
 
   /** The encoded block rows behind [[postings]], for a reader that joins
     * before it decodes.
@@ -87,22 +88,14 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     */
   lazy val termsNgrams: DataFrame = read("terms_ngrams", IndexBuilder.TermsNgramsSchema)
 
-  /** Raw token-frequency rows (term, doc_id, tf[, doc_len]) — the build
-    * intermediate every derived table re-reads on rebuilds. Batch builds
+  /** Raw token-frequency rows (term sparse, term_id, doc_id, tf, doc_len)
+    * — the build intermediate every derived table re-reads on rebuilds
+    * ([[IndexBuilder.termFrequencies]]). Batch builds
     * write it at {path}/tf; checkpointed builds at {path}/tf/slice=p,
     * which the same read covers via partition discovery (commit markers
     * are underscore-prefixed and ignored by the reader).
     */
   lazy val tfRows: DataFrame = spark.read.parquet(s"$path/tf")
-
-  /** (num_buckets, block_bits) the blocks were written with. */
-  val blocksMeta: (Int, Int) = layout._1
-
-  /** Impact encoding of the blocks table: "tfdl" (each posting's tf and
-    * doc_len, from which every reader recomputes the bit-exact impact) or
-    * "q8" (8-bit quantized impacts, lossy).
-    */
-  val impactCodec: String = layout._2
 
   /** The blocks table, registered in the catalog as bucketed by block_id
     * so that its scan plans ONE TASK PER BUCKET: all (term_id, block_id)
@@ -264,16 +257,16 @@ object BuiltIndex {
     IndexStats(r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4))
   }
 
-  /** ((num_buckets, block_bits), impact codec) of the index at `path`,
-    * read on the driver before any Spark job. An index has one layout:
-    * bucketed blocks described by a `blocks_meta` row that names its
-    * impact codec, "tfdl" or "q8", beside the `terms_rev` and
-    * `terms_ngrams` dimensions. Anything else — no, an unreadable or an
-    * incomplete `blocks_meta` row, another codec (the f64 impact doubles
-    * of older builds, or an unknown one), or a missing dimension — fails
-    * the load; such an index must be rebuilt.
+  /** (num_buckets, block_bits) of the index at `path`, read on the
+    * driver before any Spark job. An index has one layout: bucketed
+    * blocks described by a `blocks_meta` row that names the impact codec
+    * "tfdl" ([[PostingCodec]]), beside the `terms_rev` and `terms_ngrams`
+    * dimensions. Anything else — no, an unreadable or an incomplete
+    * `blocks_meta` row, another codec (the f64 impact doubles or the q8
+    * quantized impacts of older builds, or an unknown one), or a missing
+    * dimension — fails the load; such an index must be rebuilt.
     */
-  private[graft] def readLayout(path: String): ((Int, Int), String) = {
+  private[graft] def readLayout(path: String): (Int, Int) = {
     def stale(why: String, cause: Throwable = null) = new IllegalStateException(
       s"index $path $why: it is not of the current index layout and must be rebuilt", cause)
     Seq("terms_rev", "terms_ngrams").find(t => !Files.isDirectory(Paths.get(path, t)))
@@ -284,13 +277,13 @@ object BuiltIndex {
     val layout = rows.headOption.filterNot(r => (0 until 3).exists(r.isNullAt))
       .map(r => ((r.getInt(0), r.getInt(1)), r.getString(2)))
       .getOrElse(throw stale("has no blocks_meta row with an impact codec"))
-    if (!ImpactCodecs.contains(layout._2))
-      throw stale(s"has blocks of impact codec ${layout._2}, not one of ${ImpactCodecs.mkString(", ")}")
-    layout
+    if (layout._2 != ImpactCodec)
+      throw stale(s"has blocks of impact codec ${layout._2}, not $ImpactCodec")
+    layout._1
   }
 
-  /** The impact codecs of the blocks an index may have. */
-  private val ImpactCodecs = Seq("tfdl", "q8")
+  /** The impact codec of the blocks, recorded in `blocks_meta`. */
+  private[graft] val ImpactCodec = "tfdl"
 
   /** Default cap for the driver-resident dictionary (~1 GB on-heap at
     * ~200 bytes/entry — see [[BuiltIndex.cacheDictionary]]).
@@ -341,6 +334,11 @@ object IndexBuilder {
     * the strings with `min/max(term)` over the id groups, and min≠max is
     * the collision guard's signal. term_id is the SAME xxhash64(seed 42)
     * as the Catalyst function ([[Tokenizer.termId]], parity-tested).
+    *
+    * This is the one tf pass: the batch build runs it over its pages, a
+    * checkpointed build (and so a stream's compaction) per docId slice.
+    * Each unit is tokenized whole from its pages, so every unit carries
+    * at least one string of each of its terms.
     */
   def termFrequencies(pages: DataFrame): DataFrame = {
     val spark = pages.sparkSession
@@ -357,23 +355,6 @@ object IndexBuilder {
           }
         }
       }.toDF("term", "term_id", "doc_id", "tf", "doc_len")
-  }
-
-  /** v2 tf schema (term dense per row) — kept for the STREAMING path:
-    * latest-wins batch views can drop the rows carrying a term's only
-    * non-null string while keeping other rows of the same term, which
-    * would break the sparse-string recovery above. Batch builds (where
-    * the whole tf table is one consistent snapshot) use the sparse v3.
-    */
-  def termFrequenciesDense(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val tc = Tokenizer.termFrequencies(text)
-        val dl = tc.total
-        tc.iterator.map { case (t, c) => (t, id, c, dl) }
-      }.toDF("term", "doc_id", "tf", "doc_len")
   }
 
   /** Schemas of the `docs` and `terms` tables, pinned for read-backs so
@@ -408,8 +389,7 @@ object IndexBuilder {
     */
   def build(spark: SparkSession, pagesDf: DataFrame, outDir: String,
       blockBits: Int = PostingBlocks.DefaultBlockBits,
-      numBuckets: Int = -1,
-      quantizeImpacts: Boolean = false): BuiltIndex = {
+      numBuckets: Int = -1): BuiltIndex = {
     val spine = new BuildSpine(spark, outDir).reset(keepTf = false)
     // Par.spread: a single-file corpus otherwise runs the safety UDF —
     // and every downstream stage reading the written pages — as one task
@@ -420,36 +400,7 @@ object IndexBuilder {
     val pages = spark.read.parquet(s"$outDir/pages")
     val tf = spine.commitTf(0, s"$outDir/tf", termFrequencies(pages), "pages")()
     spine.run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
-      pages.select("doc_id", "url"), blockBits, numBuckets, quantizeImpacts)
-  }
-
-  /** Build the index tables from token-frequency rows — v3 `(term sparse,
-    * term_id, doc_id, tf, doc_len)` or v2 `(term, doc_id, tf, doc_len)` —
-    * and a docs dimension `(doc_id, url, doc_len)` whose doc lengths are
-    * kept: streaming compaction (IncrementalIndex.compact) and rebuilds
-    * from a written tf table. Rows without `doc_len` are refused before
-    * any job.
-    *
-    * The [[BuildSpine]] front end with the rows as one unit, brought to
-    * the v3 shape first (`term_id = xxhash64(term)` with the string on
-    * every row), so the dictionary has one code path. Past
-    * `maxBroadcastTerms` dictionary terms the idf attach takes an id-keyed
-    * shuffle join instead of a broadcast.
-    */
-  def buildFromTf(spark: SparkSession, tfR: DataFrame, docsDim: DataFrame,
-      outDir: String,
-      blockBits: Int = PostingBlocks.DefaultBlockBits,
-      numBuckets: Int = -1,
-      quantizeImpacts: Boolean = false,
-      maxBroadcastTerms: Long = DictBroadcastMaxTerms): BuiltIndex = {
-    require(Seq("term", "doc_id", "tf", "doc_len").forall(tfR.columns.contains),
-      s"tf rows need the columns term, doc_id, tf and doc_len; got ${tfR.columns.mkString(", ")}")
-    val tf = (if (tfR.columns.contains("term_id")) tfR
-      else tfR.withColumn("term_id", xxhash64(col("term"))))
-      .select("term", "term_id", "doc_id", "tf", "doc_len")
-    val spine = new BuildSpine(spark, outDir).reset(keepTf = true)
-    spine.run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"), docsDim, blockBits,
-      numBuckets, quantizeImpacts, maxBroadcastTerms)
+      pages.select("doc_id", "url"), blockBits, numBuckets)
   }
 
   /** S4 extraction front end: raw pages (url, warc_ts, html, ...) ->

@@ -37,17 +37,18 @@ object PostingBlocks {
 
   /** Blocks with an `idf` column the caller joined -> one `(term_id,
     * doc_id, impact)` row per posting, the impact recomputed from the
-    * payload in `codec` with the idf and `avgdl` ([[PostingCodec
-    * .decodeImpacts]]); a row whose idf is null decodes no impact. Any
-    * other column a caller joined onto the blocks rides along after
-    * `term_id`, so a join decodes only the blocks it keeps. The decode is
-    * a generator, so a term_id filter pushes below it into the scan; it
-    * is an outer one (every block has n >= 1) because Spark would infer a
-    * non-empty filter for an inner one and decode each block twice.
+    * payload with the idf and `avgdl`
+    * ([[PostingCodec.decodeTfDlImpacts]]); a row whose idf is null
+    * decodes no impact. Any other column a caller joined onto the blocks
+    * rides along after `term_id`, so a join decodes only the blocks it
+    * keeps. The decode is a generator, so a term_id filter pushes below
+    * it into the scan; it is an outer one (every block has n >= 1)
+    * because Spark would infer a non-empty filter for an inner one and
+    * decode each block twice.
     */
-  private[graft] def decode(blocks: DataFrame, codec: String, avgdl: Double): DataFrame = {
+  private[graft] def decode(blocks: DataFrame, avgdl: Double): DataFrame = {
     val impacts = (bytes: Array[Byte], n: Int, idf: Double) =>
-      PostingCodec.decodeImpacts(codec, bytes, n, idf, avgdl)
+      PostingCodec.decodeTfDlImpacts(bytes, n, idf, avgdl)
     val keep = blocks.columns.filterNot(Schema.fieldNames.toSet - "term_id" + "idf")
       .map(col).toSeq
     blocks.select(keep ++ Seq(
@@ -69,9 +70,8 @@ object PostingBlocks {
     * state is ONE group's arrays (bounded by 2^blockBits docIds).
     */
   def encode(tfRows: DataFrame, avgdl: Double,
-      blockBits: Int = DefaultBlockBits,
-      quantizeImpacts: Boolean = false): Dataset[PostingBlock] =
-    encodeSorted(shuffled(tfRows, blockBits, col("idf")), avgdl, blockBits, quantizeImpacts)
+      blockBits: Int = DefaultBlockBits): Dataset[PostingBlock] =
+    encodeSorted(shuffled(tfRows, blockBits, col("idf")), avgdl, blockBits)
 
   /** [[encode]] for tf rows `(term_id, doc_id, tf, doc_len)` with the idf
     * looked up in a broadcast `(term_id -> idf)` dictionary after the
@@ -81,11 +81,10 @@ object PostingBlocks {
     */
   def encodeFromTf(tfRows: DataFrame, avgdl: Double,
       idf: org.apache.spark.broadcast.Broadcast[LongDoubleMap],
-      blockBits: Int = DefaultBlockBits,
-      quantizeImpacts: Boolean = false): Dataset[PostingBlock] = {
+      blockBits: Int = DefaultBlockBits): Dataset[PostingBlock] = {
     val lookup = udf((termId: Long) => idf.value(termId))
     encodeSorted(shuffled(tfRows, blockBits).withColumn("idf", lookup(col("term_id"))),
-      avgdl, blockBits, quantizeImpacts)
+      avgdl, blockBits)
   }
 
   /** `(term_id, doc_id, tf, doc_len)` and `extra` columns of `tfRows`,
@@ -99,24 +98,21 @@ object PostingBlocks {
       .repartition(col("term_id"), shiftright(col("doc_id"), bits))
       .sortWithinPartitions("term_id", "doc_id")
 
-  private def encodeSorted(rows: DataFrame, avgdl: Double, bits: Int,
-      q8: Boolean): Dataset[PostingBlock] = {
+  private def encodeSorted(rows: DataFrame, avgdl: Double, bits: Int): Dataset[PostingBlock] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.as[TfRowIn].mapPartitions(it => encodeGroups(it, bits, q8, avgdl))
+    rows.as[TfRowIn].mapPartitions(it => encodeGroups(it, bits, avgdl))
   }
 
   /** Streaming group encoder over rows sorted by (term_id, doc_id): one
     * block per (term_id, doc_id >> bits) group, whose live state is that
     * group's arrays. The payload is the group's (tf, doc_len) pairs
-    * ("tfdl") or its impacts quantized ("q8"); block_max is the largest
-    * impact `Bm25.impact(tf, doc_len, avgdl, idf)`, the value every
-    * reader recomputes. Strictly-increasing doc_ids within a group are
+    * ("tfdl"); block_max is the largest impact `Bm25.impact(tf, doc_len,
+    * avgdl, idf)`, the value every reader recomputes. Strictly-increasing doc_ids within a group are
     * enforced by the codec — a violation means a term_id hash collision
     * merged two terms' postings, and the build fails loudly.
     */
-  private def encodeGroups(it: Iterator[TfRowIn], bits: Int, q8: Boolean,
-      avgdl: Double): Iterator[PostingBlock] =
+  private def encodeGroups(it: Iterator[TfRowIn], bits: Int, avgdl: Double): Iterator[PostingBlock] =
     new Iterator[PostingBlock] {
       private var pending: TfRowIn = if (it.hasNext) it.next() else null
       def hasNext: Boolean = pending != null
@@ -128,7 +124,6 @@ object PostingBlocks {
         var docs = new Array[Long](cap)
         var tfs = new Array[Int](cap)
         var dls = new Array[Int](cap)
-        var imps = new Array[Double](cap)
         var n = 0
         var blockMax = Double.NegativeInfinity
         var r = pending
@@ -138,10 +133,9 @@ object PostingBlocks {
             docs = java.util.Arrays.copyOf(docs, cap)
             tfs = java.util.Arrays.copyOf(tfs, cap)
             dls = java.util.Arrays.copyOf(dls, cap)
-            imps = java.util.Arrays.copyOf(imps, cap)
           }
           val imp = Bm25.impact(r.tf.toDouble, r.doc_len.toDouble, avgdl, idf)
-          docs(n) = r.doc_id; tfs(n) = r.tf; dls(n) = r.doc_len; imps(n) = imp
+          docs(n) = r.doc_id; tfs(n) = r.tf; dls(n) = r.doc_len
           if (imp > blockMax) blockMax = imp
           n += 1
           r = if (it.hasNext) it.next() else null
@@ -149,8 +143,7 @@ object PostingBlocks {
         pending = r
         PostingBlock(t, block, n,
           PostingCodec.encodeDocIds(java.util.Arrays.copyOf(docs, n)),
-          if (q8) PostingCodec.encodeImpactsQ8(java.util.Arrays.copyOf(imps, n))
-          else PostingCodec.encodeTfDl(tfs, dls, n),
+          PostingCodec.encodeTfDl(tfs, dls, n),
           blockMax)
       }
     }

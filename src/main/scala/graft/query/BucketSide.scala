@@ -58,9 +58,10 @@ private[graft] object BucketSide {
   val Empty = new BucketSide(Array.empty, null, null, 1.0)
 
   /** Sort one bucket's side-input records. A doc lives in exactly one
-    * bucket, so the rank-set checks here are the global ones: a
-    * duplicated doc_id would let the merge pick either of its ranks, and
-    * a negative rank would break its pruning bounds.
+    * bucket and a call with a side input runs every bucket, hot or cold,
+    * so the rank-set checks here are the global ones: a duplicated doc_id
+    * would let the merge pick either of its ranks, and a negative rank
+    * would break its pruning bounds.
     */
   def apply(records: Iterator[(Long, (Int, Double))], nFilters: Int): BucketSide = {
     val docs = Array.fill(nFilters)(mutable.ArrayBuilder.make[Long])

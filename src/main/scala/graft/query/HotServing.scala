@@ -23,18 +23,18 @@ private[graft] case class BatchPlanned(termIds: Array[Long], idfs: Array[Double]
     conjunctive: Boolean, include: Seq[String], exclude: Seq[String],
     boosted: Boolean, filter: Int = -1)
 
-/** How a bucket task reads the impacts of a block row: in the index's
-  * codec, a "tfdl" impact recomputed from the idf of the row's term (as
-  * the query's analysis resolved it) and the index's avgdl, on the hot
-  * and the cold path alike.
+/** How a bucket task reads the impacts of a block row: each recomputed
+  * from the posting's tf and doc_len, the idf of the row's term (as the
+  * query's analysis resolved it) and the index's avgdl, on the hot and
+  * the cold path alike.
   */
-private[graft] final case class ImpactReader(codec: String, avgdl: Double) {
+private[graft] final case class ImpactReader(avgdl: Double) {
   def of(q: BatchPlanned): BlockRow => Array[Double] = r =>
-    PostingCodec.decodeImpacts(codec, r.impacts_enc, r.n, q.idfs(q.termIds.indexOf(r.term_id)), avgdl)
+    PostingCodec.decodeTfDlImpacts(r.impacts_enc, r.n, q.idfs(q.termIds.indexOf(r.term_id)), avgdl)
 }
 
 private[graft] object ImpactReader {
-  def apply(index: BuiltIndex): ImpactReader = ImpactReader(index.impactCodec, index.stats.avgdl)
+  def apply(index: BuiltIndex): ImpactReader = ImpactReader(index.stats.avgdl)
 }
 
 /** The one bucket scorer of the block path: a chunk of analyzed queries
@@ -73,8 +73,8 @@ private[graft] object HotServing {
     * with the lineage kept: a lost executor recomputes its buckets.
     * None, with nothing left cached, when some partition did not fit in
     * memory: see [[HotTier]]. The materializing job also counts each
-    * partition's block rows: a query job then runs only the partitions
-    * that hold some ([[HotTier.occupied]]).
+    * partition's block rows: a query job without side input then runs
+    * only the partitions that hold some ([[HotTier.occupied]]).
     */
   def tier(index: BuiltIndex): Option[HotTier] = {
     val spark = index.spark
@@ -126,9 +126,11 @@ private[graft] object HotServing {
   }
 
   /** The top-k hits of each query of `chunk`, in chunk order: one job
-    * over the bucket partitions `buckets` of `parts`, zipped with the side
-    * input if any. A bucket left out must hold no block row: it could
-    * yield no survivor for any query.
+    * over the bucket partitions `buckets` of `parts`, or over every
+    * partition zipped with the side input if any. A bucket left out must
+    * hold no block row: it could yield no survivor for any query. With a
+    * side input none is left out, so every bucket checks its slice of the
+    * rank set ([[BucketSide]]) as the cold path does.
     */
   private[query] def run(index: BuiltIndex, parts: RDD[HotPartition], buckets: Seq[Int],
       chunk: Array[BatchPlanned], k: Int, side: Option[SideInput]): Array[Vector[Hit]] = {
@@ -138,7 +140,7 @@ private[graft] object HotServing {
       case None => sc.runJob(parts, (it: Iterator[HotPartition]) =>
         it.flatMap(score(_, BucketSide.Empty, chunk, k, impacts)).toArray, buckets)
       case Some(s) => sc.runJob(zipped(parts, s, chunk, k, impacts),
-        (it: Iterator[(Int, Long, Double, String)]) => it.toArray, buckets)
+        (it: Iterator[(Int, Long, Double, String)]) => it.toArray)
     }
     val byQuery = survivors.flatten.groupBy(_._1)
     chunk.indices.map { qi =>
@@ -220,7 +222,7 @@ private[graft] final class HotTier(val rdd: RDD[HotPartition]) extends SparkList
   def resident: Boolean = reported && !inMemory.containsValue(false)
 
   /** The partitions that hold block rows, counted as [[HotServing.tier]]
-    * materializes them: a query job runs only these.
+    * materializes them: a query job without side input runs only these.
     */
   @volatile var occupied: Seq[Int] = 0 until numPartitions
 }

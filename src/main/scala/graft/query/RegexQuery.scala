@@ -695,7 +695,7 @@ object RegexQuery {
         (acc, x) => acc + x.getField("impact"))
     (lookups ++ local).reduceOption(_ unionByName _).map { tagged =>
       val perBranch = PostingBlocks.decode(
-          index.blockFiles.join(tagged, Seq("term_id")), index.impactCodec, index.stats.avgdl)
+          index.blockFiles.join(tagged, Seq("term_id")), index.stats.avgdl)
         .repartition(col("doc_id"))
         .groupBy("qi", "bi", "need", "doc_id")
         .agg(countDistinct(col("req")).as("nreq"), score.as("score"))

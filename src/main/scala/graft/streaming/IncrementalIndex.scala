@@ -1,11 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
+import graft.checkpoint.CheckpointedBuild
 import graft.extract.Extract
+import graft.index.{BuiltIndex, IndexBuilder, PostingBlocks}
 
 /** Incremental index maintenance via Structured Streaming — the Spark
   * re-expression of the reference's watcher pipeline:
@@ -13,46 +17,44 @@ import graft.extract.Extract
   *  - file-watcher source with debounce
   *    (/root/reference/src/search/watcher.rs:16-160) -> streaming file
   *    source + trigger interval;
-  *  - append-only upsert: a modified file is simply re-indexed and its
-  *    postings APPENDED; stale postings are tolerated, deletes are no-ops
+  *  - append-only upsert: a modified file is simply re-ingested and its
+  *    pages APPENDED; stale versions are tolerated, deletes are no-ops
   *    (engine.rs:2676-2681, main.rs:270-277) — we keep exactly those
-  *    semantics: the merged view takes the LATEST batch per doc;
+  *    semantics: the read view takes the LATEST batch per doc;
   *  - save-after-N-updates checkpointing (config.rs:150) -> the streaming
   *    checkpoint location (exactly-once per micro-batch).
   *
+  * The stream only appends pages; it tokenizes nothing. Compaction runs
+  * the one indexing pipeline, a [[CheckpointedBuild]] over the current
+  * pages, as the reference's watcher upsert and resume re-drive its one
+  * pipeline.
+  *
   * Layout under `indexDir`:
-  *   stream_tf/batch=<id>/   — per-micro-batch tf rows (term, doc_id, tf,
-  *                             doc_len, batch) — appended, never rewritten
-  *   stream_docs/batch=<id>/ — per-batch (doc_id, url, doc_len, batch)
+  *   stream_pages/batch=<id>/ — per-micro-batch extracted, safety-gated
+  *                              pages (doc_id, url, text, batch) —
+  *                              appended, never rewritten
   */
 object IncrementalIndex {
 
-  /** Per-batch ingest: extract -> safety gate -> tokenize -> tf, appended
-    * under the batch id. Pure function of the batch content.
+  /** The schema of a `stream_pages` batch, pinned for read-backs. */
+  private val PagesSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("url", StringType),
+    StructField("text", StringType), StructField("batch", LongType)))
+
+  /** Per-batch ingest: extract (when the batch has html) -> safety gate,
+    * appended under the batch id. A page the gate rejects is not
+    * written, so a rejected update leaves the doc's prior version
+    * current. Pure function of the batch content.
     */
   def appendBatch(batch: DataFrame, indexDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val hasHtml = batch.columns.contains("html")
     val pages =
-      if (hasHtml)
-        batch.withColumn("text", Extract.extractText(col("html")))
-          .where(col("text").isNotNull)
+      if (batch.columns.contains("html")) IndexBuilder.extractPages(batch)
       else batch
-    val clean = pages.where(Extract.safe(col("text")))
-      .select(col("doc_id"), col("url"), col("text"))
-    // doc-local tf histogram — zero-shuffle. DENSE v2 schema on purpose:
-    // the latest-wins read view can drop the rows that carry a term's only
-    // non-null string while keeping other rows of the term, so the sparse
-    // v3 string recovery is unsound across batch supersedes.
-    val tf = graft.index.IndexBuilder.termFrequenciesDense(clean)
-      .withColumn("batch", lit(batchId))
-    tf.write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .parquet(s"$indexDir/stream_tf/batch=$batchId")
-    clean.select("doc_id", "url")
-      .join(tf.groupBy("doc_id").agg(first("doc_len").as("doc_len")), Seq("doc_id"), "left")
-      .na.fill(0L, Seq("doc_len"))
-      .withColumn("batch", lit(batchId))
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stream_docs/batch=$batchId")
+    pages.where(Extract.safe(col("text")))
+      .select(col("doc_id").cast("long"), col("url"), col("text"), lit(batchId).as("batch"))
+      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
+      .parquet(s"$indexDir/stream_pages/batch=$batchId")
   }
 
   /** Start the maintenance stream over a directory of page parquet files.
@@ -71,91 +73,58 @@ object IncrementalIndex {
       .foreachBatch { (b: DataFrame, id: Long) => appendBatch(b, indexDir, id) }
       .start()
 
-  /** Cache for the per-directory "does any batch lack doc_len" verdict:
-    * ONE entry per indexDir holding (last-seen batch count, verdict),
-    * replaced whenever the count changes (stream dirs are append-only, so
-    * a new batch re-evaluates; existing batches never change schema). A
-    * single slot per dir also means a long-running stream doesn't
-    * accumulate one stale entry per batch ever observed.
-    */
-  private val healCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Boolean)]
-
-  /** True when some stream_tf batch predates the doc_len column. Decided
-    * from the per-batch parquet FOOTER schemas — driver-side metadata
-    * reads, no Spark job, no data scan (the previous
-    * `where(doc_len.isNull).isEmpty` probe executed a full scan of every
-    * batch on every serving-path read).
-    */
-  private def needsHealing(spark: SparkSession, indexDir: String): Boolean = {
-    val batches = batchDirs(spark, indexDir, "stream_tf")
-    healCache.get(indexDir) match {
-      case Some((n, verdict)) if n == batches.length => verdict
-      case _ =>
-        val verdict = batches.exists { b =>
-          !spark.read.parquet(b).schema.fieldNames.contains("doc_len")
-        }
-        healCache.put(indexDir, (batches.length, verdict))
-        verdict
-    }
-  }
-
-  /** The `batch=<id>` directories of `indexDir/table`, listed on the
-    * driver. Reads take them as an explicit path list: a glob path makes
-    * Spark probe it for a streaming-sink metadata directory, which logs a
+  /** The `batch=<id>` directories of `indexDir/stream_pages`, listed on
+    * the driver (none before the first batch). Reads take them as an
+    * explicit path list: a glob path makes Spark probe it for a
+    * streaming-sink metadata directory, which logs a
     * `FileNotFoundException` at WARN on every read. Each batch's rows
     * carry their `batch` column.
+    *
+    * A stream directory of an older layout, which held its batches
+    * tokenized (`stream_*` tf and docs tables instead of pages), fails
+    * here, before any job: its pages were not kept, so it must be
+    * re-ingested.
     */
-  private def batchDirs(spark: SparkSession, indexDir: String, table: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/$table")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).filter(b => b.isDirectory && b.getPath.getName.startsWith("batch="))
+  private def batchDirs(spark: SparkSession, indexDir: String): Seq[String] = {
+    val root = new Path(indexDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root)) fs.listStatus(root).map(_.getPath.getName)
+      .find(t => t.startsWith("stream_") && t != "stream_pages").foreach { t =>
+        throw new IllegalStateException(s"stream $indexDir holds $t batches of an older " +
+          "layout, not stream_pages: the stream must be re-ingested")
+      }
+    val p = new Path(s"$indexDir/stream_pages")
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).filter(b => b.isDirectory && b.getPath.getName.startsWith("batch="))
       .map(_.getPath.toString).sorted.toSeq
   }
 
-  /** Merged current view of the streamed index: latest batch wins per
-    * doc (the reference keeps stale postings around until a full rebuild;
-    * exposing latest-wins at read time is the same contract with the
-    * staleness removed at query time instead of compaction time).
+  /** Current pages `(doc_id, url, text)` of the stream: the latest batch
+    * wins per doc (the reference keeps stale postings around until a full
+    * rebuild; taking the latest version at read time is the same contract
+    * with the staleness removed).
     */
-  def currentTf(spark: SparkSession, indexDir: String): DataFrame = {
-    // mergeSchema: a long-lived stream dir may mix v1 batches (no
-    // doc_len) with v2 batches. v1 rows are healed EXACTLY — doc_len is
-    // by definition the per-(doc, batch) sum of tf, so a window sum
-    // reconstructs it; v2 rows keep their carried value (coalesce). An
-    // all-v2 dir short-circuits past the window (no extra shuffle) — the
-    // verdict comes from batch footer schemas, not a data scan.
-    val tf = spark.read.option("mergeSchema", "true")
-      .parquet(batchDirs(spark, indexDir, "stream_tf"): _*)
-    val withLen =
-      if (!tf.columns.contains("doc_len"))
-        tf.withColumn("doc_len", sum("tf").over(
-          org.apache.spark.sql.expressions.Window.partitionBy("doc_id", "batch")))
-      else if (!needsHealing(spark, indexDir)) tf
-      else tf.withColumn("doc_len", coalesce(col("doc_len"), sum("tf").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id", "batch"))))
-    val latest = withLen.groupBy("doc_id").agg(max("batch").as("batch"))
-    withLen.join(latest, Seq("doc_id", "batch"))
-      .select("term", "doc_id", "tf", "doc_len")
+  def currentPages(spark: SparkSession, indexDir: String): DataFrame = {
+    val dirs = batchDirs(spark, indexDir)
+    val pages =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), PagesSchema)
+      else spark.read.schema(PagesSchema).parquet(dirs: _*)
+    val latest = pages.groupBy("doc_id").agg(max("batch").as("batch"))
+    pages.join(latest, Seq("doc_id", "batch")).select("doc_id", "url", "text")
   }
 
-  def currentDocs(spark: SparkSession, indexDir: String): DataFrame = {
-    val d = spark.read.parquet(batchDirs(spark, indexDir, "stream_docs"): _*)
-    val latest = d.groupBy("doc_id").agg(max("batch").as("batch"))
-    d.join(latest, Seq("doc_id", "batch")).select("doc_id", "url", "doc_len")
-  }
-
-  /** Compact the streamed state into a full SERVING index (terms,
-    * compressed bucketed blocks, stats) at `outDir` — the
-    * analog of the reference's periodic full save after watcher updates
-    * (save_on_watcher_update, config.rs:150): the stream keeps the
-    * latest-wins tf/docs deltas cheap to append; compaction turns them
-    * into the query-optimal layout whenever serving wants to refresh.
+  /** Compact the stream into a full SERVING index (terms, compressed
+    * bucketed blocks, stats) at `outDir` — the analog of the reference's
+    * periodic full save after watcher updates (save_on_watcher_update,
+    * config.rs:150). It is a [[CheckpointedBuild]] of [[currentPages]]:
+    * compacting again into the same `outDir` re-tokenizes only the docId
+    * slices whose pages changed, while the docId range stays the same;
+    * appends that widen the range re-slice and re-tokenize every slice.
     */
   def compact(spark: SparkSession, indexDir: String, outDir: String,
-      blockBits: Int = graft.index.PostingBlocks.DefaultBlockBits,
-      numBuckets: Int = -1): graft.index.BuiltIndex =
-    graft.index.IndexBuilder.buildFromTf(spark,
-      currentTf(spark, indexDir), currentDocs(spark, indexDir),
-      outDir, blockBits, numBuckets)
+      blockBits: Int = PostingBlocks.DefaultBlockBits): BuiltIndex = {
+    val pages = currentPages(spark, indexDir).persist(StorageLevel.MEMORY_AND_DISK)
+    try CheckpointedBuild.build(spark, pages, outDir, blockBits = blockBits)
+    finally pages.unpersist(blocking = false)
+  }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.checkpoint.{BuildSpine, TfInput, TfUnit}
 import graft.corpus.PagesCorpus
 import graft.index.{Bm25, IndexBuilder, LongDoubleMap}
 import graft.query.Bm25Query
@@ -26,11 +27,13 @@ class BlocksEncodeSpec extends AnyFunSuite {
       PagesCorpus.pages(spark, 400, parts = 4).toDF())
     // dirA: dictionary broadcasts -> tf-driven byte-cut encode
     val idxA = IndexBuilder.build(spark, pages, dirA, blockBits = 6)
-    // dirB: same tf rows, broadcast ceiling forced to 0 -> id-keyed idf
-    // join, the idf shipped through the shuffle with each tf row
-    val docsDim = spark.read.parquet(s"$dirA/docs")
-    val idxB = IndexBuilder.buildFromTf(spark, idxA.tfRows, docsDim, dirB,
-      blockBits = 6, maxBroadcastTerms = 0L)
+    // dirB: the stages below tf over the same tf rows, broadcast ceiling
+    // forced to 0 -> id-keyed idf join, the idf shipped through the
+    // shuffle with each tf row
+    val tf = idxA.tfRows
+    val idxB = new BuildSpine(spark, dirB).run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
+      spark.read.parquet(s"$dirA/docs").select("doc_id", "url"), blockBits = 6,
+      maxBroadcastTerms = 0L)
 
     def blocksBytes(path: String): Map[(Long, Long), (Int, Seq[Byte], Seq[Byte], Double)] =
       spark.read.parquet(s"$path/blocks").collect().map { r =>

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.checkpoint.{BuildSpine, TfInput, TfUnit}
 import graft.corpus.PagesCorpus
 import graft.extract.Extract
 import graft.index.IndexBuilder
@@ -160,29 +161,9 @@ class Bm25EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("sparse v3 tf builds the same dictionary+postings as dense v2 tf") {
+  test("sparse v3 tf carries each term's string once per partition") {
     import org.apache.spark.sql.functions.col
-    // the sparse term column (string once per partition, null on repeats)
-    // must be invisible in every derived artifact
-    val raw = PagesCorpus.pages(spark, n, parts = 4)
-    val pages = IndexBuilder.extractPages(raw.toDF())
-      .where(Extract.safe(col("text")))
-    val dirD = Files.createTempDirectory("graft-densetf").toString
-    val tfDense = IndexBuilder.termFrequenciesDense(pages)
-    val docLens = tfDense.groupBy("doc_id")
-      .agg(org.apache.spark.sql.functions.first("doc_len").as("doc_len"))
-    val docsDim = pages.select("doc_id", "url")
-      .join(docLens, Seq("doc_id"), "left").na.fill(0L, Seq("doc_len"))
-    val idxD = IndexBuilder.buildFromTf(spark, tfDense, docsDim, dirD,
-      blockBits = 6)
-    def canon(df: org.apache.spark.sql.DataFrame, cols: String*): Seq[String] =
-      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
-    assert(canon(index.terms, "term_id", "term", "df", "idf") ==
-      canon(idxD.terms, "term_id", "term", "df", "idf"))
-    assert(canon(index.postings, "term_id", "doc_id", "impact") ==
-      canon(idxD.postings, "term_id", "doc_id", "impact"))
-    assert(index.stats == idxD.stats)
-    // and the sparse tf itself: per-partition first-sight strings only
+    // per-partition first-sight strings only, one spelling per term_id
     val tfSparse = index.tfRows
     assert(tfSparse.where(col("term").isNotNull).count() <
       tfSparse.count())
@@ -197,10 +178,10 @@ class Bm25EngineSpec extends AnyFunSuite {
     // dictionary would take; every serving table must equal the
     // broadcast build bit-for-bit
     val dirB = java.nio.file.Files.createTempDirectory("graft-bigvocab").toString
-    val idxB = graft.index.IndexBuilder.buildFromTf(spark,
-      spark.read.parquet(s"${index.path}/tf"),
-      spark.read.parquet(s"${index.path}/docs"),
-      dirB, blockBits = 6, maxBroadcastTerms = 0L)
+    val tf = spark.read.parquet(s"${index.path}/tf")
+    val idxB = new BuildSpine(spark, dirB).run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
+      spark.read.parquet(s"${index.path}/docs").select("doc_id", "url"), blockBits = 6,
+      maxBroadcastTerms = 0L)
     def canon(df: org.apache.spark.sql.DataFrame, cols: String*): Seq[String] =
       df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
     assert(canon(idxB.postings, "term_id", "doc_id", "impact") ==

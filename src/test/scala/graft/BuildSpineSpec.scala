@@ -17,10 +17,11 @@ import graft.checkpoint.{CheckpointedBuild, DriverParquet}
 import graft.corpus.PagesCorpus
 import graft.index.{BuiltIndex, IndexBuilder, IndexStats, LongDoubleMap}
 import graft.query.{BatchQuery, Bm25Query}
+import graft.streaming.IncrementalIndex
 
-/** Every build mode runs one stage runner: the batch build, a build from
-  * that build's tf rows and checkpointed builds at one and three slices
-  * write the same index and one manifest row per stage unit; the one-row
+/** Every build mode runs one stage runner: the batch build, a compacted
+  * stream of the same pages and checkpointed builds at one and three
+  * slices write the same index and one manifest row per stage unit; the one-row
   * tables are written and read on the driver; a build and cold queries
   * leave no broadcast behind.
   */
@@ -67,11 +68,12 @@ class BuildSpineSpec extends AnyFunSuite {
     d
   }
 
-  test("batch, from-tf and 1- and 3-slice checkpointed builds write the same index") {
+  test("batch, compacted, 1- and 3-slice checkpointed builds write the same index") {
     val batch = IndexBuilder.load(spark, batchDir)
-    val fromTf = tmp("from-tf")
-    IndexBuilder.buildFromTf(spark, batch.tfRows, spark.read.parquet(s"$batchDir/docs"),
-      fromTf, blockBits = 6)
+    val stream = tmp("stream")
+    IncrementalIndex.appendBatch(raw, stream, 0L)
+    val compacted = tmp("compacted")
+    IncrementalIndex.compact(spark, stream, compacted, blockBits = 6)
     val ck1 = tmp("ck1")
     CheckpointedBuild.build(spark, raw, ck1, slices = 1, blockBits = 6)
     val ck3 = tmp("ck3")
@@ -79,7 +81,7 @@ class BuildSpineSpec extends AnyFunSuite {
 
     val want = blocksBytes(batchDir)
     assert(want.nonEmpty)
-    Seq(fromTf, ck1, ck3).foreach { d =>
+    Seq(compacted, ck1, ck3).foreach { d =>
       assert(canon(d, "docs", "doc_id", "url", "doc_len") ==
         canon(batchDir, "docs", "doc_id", "url", "doc_len"), d)
       assert(canon(d, "terms", "term_id", "term", "df", "idf") ==
@@ -92,12 +94,32 @@ class BuildSpineSpec extends AnyFunSuite {
     // one manifest row per stage unit
     val spine = Set("docs", "terms_part", "terms", "blocks", "stats").map(_ -> 0)
     assert(units(batchDir) == spine + ("tf" -> 0))
-    assert(units(fromTf) == spine)
+    // a compaction is a checkpointed build of the default 8 slices
+    assert(units(compacted) == spine + ("config" -> 0) ++
+      Seq("tf", "terms_part").flatMap(s => (0 until 8).map(s -> _)))
     assert(units(ck1) == spine ++ Set("tf", "config").map(_ -> 0))
     assert(units(ck3) == spine + ("config" -> 0) ++
       Seq("tf", "terms_part").flatMap(s => (0 until 3).map(s -> _)))
     // blocks are the one posting layout
-    Seq(batchDir, fromTf, ck1, ck3).foreach(d => assert(!Files.exists(Paths.get(d, "postings")), d))
+    Seq(batchDir, compacted, ck1, ck3).foreach(d => assert(!Files.exists(Paths.get(d, "postings")), d))
+  }
+
+  test("an empty input builds the same empty index in every front end") {
+    val empty = raw.limit(0)
+    val built = Seq(
+      IndexBuilder.build(spark, IndexBuilder.extractPages(empty), tmp("empty-batch"), blockBits = 6),
+      CheckpointedBuild.build(spark, empty, tmp("empty-ck"), slices = 3, blockBits = 6),
+      // a stream with no batch yet
+      IncrementalIndex.compact(spark, tmp("empty-stream"), tmp("empty-compacted"), blockBits = 6))
+    val q = s"${PagesCorpus.vocab(2)} ${PagesCorpus.vocab(7)}"
+    built.foreach { ix =>
+      assert(ix.stats == IndexStats(0L, 0L, 0.0, 0L, 0L), ix.path)
+      val cold = IndexBuilder.load(spark, ix.path)
+      val hot = IndexBuilder.load(spark, ix.path).cacheHot().cacheDictionary()
+      // a query of two terms and a short one (every doc, unranked)
+      for (i <- Seq(cold, hot); query <- Seq(q, "ab"))
+        assert(Bm25Query.searchBlocks(i, query, 10).collect().isEmpty, s"${ix.path} $query")
+    }
   }
 
   test("a batch index keeps its pages and today's table columns") {
@@ -164,8 +186,10 @@ class BuildSpineSpec extends AnyFunSuite {
   }
 
   test("a blocks_meta row with a null codec fails the load before any job") {
-    // a null codec, the f64 impact doubles of older builds, an unknown one
-    Seq("null-codec" -> null, "f64-codec" -> "f64", "unknown-codec" -> "zz9").foreach {
+    // a null codec, the f64 impact doubles and the q8 quantized impacts of
+    // older builds, an unknown one
+    Seq("null-codec" -> null, "f64-codec" -> "f64", "q8-codec" -> "q8",
+        "unknown-codec" -> "zz9").foreach {
       case (name, codec) => refused(damaged(name) { d =>
         DriverParquet.writeTable(spark, Paths.get(d, "blocks_meta"), BuiltIndex.BlocksMetaSchema,
           Row(8, 6, codec))
@@ -175,16 +199,6 @@ class BuildSpineSpec extends AnyFunSuite {
 
   test("an index without terms_rev fails the load before any job") {
     refused(damaged("no-terms-rev")(d => DriverParquet.remove(Paths.get(d, "terms_rev"))))
-  }
-
-  test("buildFromTf refuses tf rows without doc_len before any job") {
-    val tf = IndexBuilder.load(spark, batchDir).tfRows.drop("doc_len")
-    val docs = spark.read.parquet(s"$batchDir/docs")
-    val dir = tmp("no-doc-len")
-    val (e, jobs) = SparkJobs.count(spark)(intercept[IllegalArgumentException](
-      IndexBuilder.buildFromTf(spark, tf, docs, dir, blockBits = 6)))
-    assert(e.getMessage.contains("doc_len"), e.getMessage)
-    assert(jobs == 0)
   }
 
   test("a build and cold boosted and filtered queries leave no broadcast behind") {

@@ -200,7 +200,8 @@ class CheckpointSpec extends AnyFunSuite {
       .where(col("stage") === "config_reconcile").collect()
     assert(cr2.map(_.getAs[String]("lineage")).toSeq ==
       Seq("changed=codec invalidated=blocks,stats"))
-    assert(resumed.impactCodec == "tfdl" && resumed.stats == idxC.stats)
+    assert(spark.read.parquet(s"$dirA/blocks_meta").head().getAs[String]("impact_codec") ==
+      "tfdl" && resumed.stats == idxC.stats)
     def payloads(path: String): Seq[String] = spark.read.parquet(s"$path/blocks")
       .select(col("term_id"), col("block_id"), hex(col("impacts_enc")), col("block_max"))
       .collect().map(_.toString).sorted.toSeq

@@ -67,7 +67,7 @@ class NoGlobReadSpec extends AnyFunSuite {
       IncrementalIndex.appendBatch(pages.where("doc_id < 40"), dir, 0L)
       IncrementalIndex.appendBatch(pages.where("doc_id >= 30"), dir, 1L)
       val ix = IncrementalIndex.compact(spark, dir, s"$dir/compacted")
-      assert(ix.stats.num_docs == IncrementalIndex.currentDocs(spark, dir).count())
+      assert(ix.stats.num_docs == IncrementalIndex.currentPages(spark, dir).count())
     }
     assert(warned.isEmpty, warned.mkString("\n"))
   }
