@@ -1,11 +1,12 @@
 package graft
 
 import java.util.concurrent.{Executors, ThreadFactory}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Concurrency and parallelism helpers shared by every operator: legs of
@@ -31,38 +32,74 @@ object Par {
     }))
 
   /** Local properties a leg takes from its submitter, so its jobs count in
-    * the submitter's job group and carry its description, and those it
-    * clears: each of its actions is a new SQL execution, not part of one
-    * running on the submitter.
+    * the submitter's job group and carry its description and job tags, and
+    * those it clears: each of its actions is a new SQL execution, not part
+    * of one running on the submitter.
     */
   private val Inherited = Seq("spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel")
+    "spark.job.interruptOnCancel", "spark.job.tags")
   private val Cleared = Seq("spark.sql.execution.id", "spark.sql.execution.root.id")
+
+  /** A leg's own job tag, which its nested legs inherit, and whether an
+    * [[await]] cancelled it.
+    */
+  private final class Tag(sc: SparkContext, val name: String) {
+    @volatile var cancelled = false
+    def cancel(): Unit = { cancelled = true; sc.cancelJobsWithTag(name, "a sibling leg failed") }
+  }
+  private val tags = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[Future[_], Tag]())
+  private val tagIds = new AtomicLong(0)
 
   /** Start `f` as a leg of an operation: an independent Spark action (an
     * artifact write, a driver collect of an unrelated dimension, a build
-    * stage) on the pool.
+    * stage) on the pool, its jobs tagged with the leg's own job tag.
     */
   def leg[A](spark: SparkSession)(f: => A): Future[A] = {
     val sc = spark.sparkContext
     val props = Inherited.map(k => k -> sc.getLocalProperty(k)) ++ Cleared.map(_ -> null)
-    Future {
+    val tag = new Tag(sc, s"graft-leg-${tagIds.getAndIncrement()}")
+    val leg = Future {
       val saved = props.map { case (k, _) => k -> sc.getLocalProperty(k) }
       props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.addJobTag(tag.name)
       try f finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     }(pool)
+    tags.put(leg, tag)
+    leg
   }
 
-  /** Wait for every leg and return their results in order; the first
-    * failure in leg order is rethrown once every leg has finished.
+  /** Wait for every leg and return their results in order. The first
+    * failure cancels the Spark jobs of every unfinished leg (by its job
+    * tag); once every leg has finished, the first failure in leg order of
+    * a leg that was not cancelled is rethrown, never a sibling's
+    * cancellation.
     */
   def await[A](legs: Seq[Future[A]]): Seq[A] = {
+    val failed = new AtomicBoolean(false)
+    legs.foreach(_.failed.foreach { _ =>
+      if (failed.compareAndSet(false, true))
+        legs.filterNot(_.isCompleted).flatMap(l => Option(tags.get(l))).foreach(_.cancel())
+    }(ExecutionContext.parasitic))
     legs.foreach(Await.ready(_, Duration.Inf))
-    legs.map(Await.result(_, Duration.Inf))
+    val failures = legs.flatMap(l => l.value.get.failed.toOption
+      .map(_ -> Option(tags.get(l)).exists(_.cancelled)))
+    failures.find(!_._2).orElse(failures.headOption).foreach(f => throw f._1)
+    legs.map(_.value.get.get)
   }
 
   /** The result of one leg, once it has finished; its failure is rethrown. */
   def join[A](leg: Future[A]): A = Await.result(leg, Duration.Inf)
+
+  /** `f` with `description` as the `spark.job.description` of the jobs it
+    * starts on this thread (and in the legs it starts), restored after.
+    */
+  def described[A](spark: SparkSession, description: String)(f: => A): A = {
+    val sc = spark.sparkContext
+    val saved = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try f finally sc.setJobDescription(saved)
+  }
 
   /** Run `fs` as concurrent legs and wait for all of them ([[await]]). */
   def all[A](spark: SparkSession)(fs: (() => A)*): Seq[A] =

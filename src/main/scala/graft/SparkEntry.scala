@@ -207,11 +207,10 @@ object SparkEntry {
       documents(s, dir).where(Extract.safe(col("text"))).select("doc_id")),
 
     "a1_postings" -> ((s, dir) => {
-      // tf lives in the tf intermediate only — the blocks serving
-      // artifact carries impacts, which subsume tf at fixed BM25 constants.
-      // v3 tf rows carry term_id (the per-row string was cut from the
-      // intermediate); the string comes back from the dictionary — so this
-      // gate also proves the id<->string round-trip end to end.
+      // tf rows decoded from the blocks, which store each posting's tf
+      // and doc_len (the index keeps no other copy of the postings). They
+      // carry term_id only; the string comes back from the dictionary, so
+      // this gate also proves the id<->string round-trip end to end.
       val idx = indexFor(s, dir)
       idx.tfRows.select(col("term_id"), col("doc_id"), col("tf"))
         .join(idx.terms.select(col("term_id"), col("term")), Seq("term_id"))

@@ -124,32 +124,30 @@ private[graft] final class BuildSpine(spark: SparkSession,
   private def stage(name: String): Stage = Graph.find(_.name == name).get
   private def dependents(name: String): Seq[Stage] = Graph.filter(_.inputs.contains(name))
 
-  /** Wipe `name` (its unit `part`, if given; only its dependents if not
-    * `self`) and everything downstream: files, manifest rows, markers. A
-    * dependent whose inputs are all per-unit loses the same unit, any
-    * other the whole stage. Returns the stages touched, in graph order.
+  /** Wipe `name` (its unit `part`, if given) and everything downstream:
+    * files, manifest rows, markers. A dependent whose inputs are all
+    * per-unit loses the same unit, any other the whole stage. Returns the
+    * stages touched, in graph order.
     */
-  def invalidate(name: String, part: Option[Int] = None, self: Boolean = true): Seq[String] = {
+  def invalidate(name: String, part: Option[Int] = None): Seq[String] = {
     val touched = mutable.Set[String]()
-    def go(s: Stage, p: Option[Int], wipe: Boolean): Unit = {
-      if (wipe) {
-        touched += s.name
-        s.outputs.foreach(o => DriverParquet.remove(
-          p.fold(Paths.get(outDir, o))(u => Paths.get(outDir, o, s"slice=$u"))))
-        log.remove(s.name, p)
-      }
+    def go(s: Stage, p: Option[Int]): Unit = {
+      touched += s.name
+      s.outputs.foreach(o => DriverParquet.remove(
+        p.fold(Paths.get(outDir, o))(u => Paths.get(outDir, o, s"slice=$u"))))
+      log.remove(s.name, p)
       dependents(s.name).foreach { d =>
-        go(d, p.filter(_ => d.perUnit && d.inputs.forall(stage(_).perUnit)), wipe = true)
+        go(d, p.filter(_ => d.perUnit && d.inputs.forall(stage(_).perUnit)))
       }
     }
-    go(stage(name), part, self)
+    go(stage(name), part)
     Graph.map(_.name).filter(touched)
   }
 
-  /** Start afresh, tf kept or not, and with no manifest row left (config
-    * rows included) that a checkpointed resume could trust.
+  /** Start afresh: every stage's files, tf included, and no manifest row
+    * left (config rows included) that a checkpointed resume could trust.
     */
-  def reset(keepTf: Boolean): this.type = { invalidate("tf", self = !keepTf); log.clear(); this }
+  def reset(): this.type = { invalidate("tf"); log.clear(); this }
 
   def commit(dir: String, m: ManifestRow): Unit = {
     log.put(m)
@@ -163,9 +161,11 @@ private[graft] final class BuildSpine(spark: SparkSession,
       fingerprint: String = "")(andThen: => Unit = ()): DataFrame = {
     val t0 = System.nanoTime()
     val obs = org.apache.spark.sql.Observation()
-    rows.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(dir)
-    andThen
+    Par.described(spark, "graft.build.tf") {
+      rows.observe(obs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(dir)
+      andThen
+    }
     commit(dir, ManifestRow("tf", part, obs.get("n").asInstanceOf[Long],
       (System.nanoTime() - t0) / 1000000, lineage, System.currentTimeMillis(), fingerprint))
     spark.read.schema(BuiltIndex.nullable(rows.schema)).parquet(dir)
@@ -206,7 +206,9 @@ private[graft] final class BuildSpine(spark: SparkSession,
       if (needed && !complete(s.name)) s :: later else later
     }
     // a stage's leg first waits for the legs of its inputs (a failed input
-    // fails it unrun); every leg has finished before a failure is rethrown
+    // fails it unrun); a failure cancels the jobs of the running legs, and
+    // every leg has finished before it is rethrown. Each leg's jobs carry
+    // the description graft.build.<stage>
     gc()
     val legs = mutable.LinkedHashMap[String, Future[Unit]]()
     toRun.foreach { s =>
@@ -215,7 +217,7 @@ private[graft] final class BuildSpine(spark: SparkSession,
         Par.await(after)
         s.units(ctx).filterNot(u => isCommitted(u.dir)).foreach { u =>
           val t0 = System.nanoTime()
-          val rows = s.write(ctx, u)
+          val rows = Par.described(spark, s"graft.build.${s.name}")(s.write(ctx, u))
           commit(u.dir, ManifestRow(s.name, u.part, rows,
             (System.nanoTime() - t0) / 1000000, u.lineage, System.currentTimeMillis()))
           onUnitCommitted(s.name, u.part)

@@ -98,8 +98,8 @@ object CheckpointedBuild {
     def scanInput(guess: Option[(Long, Long)]): (Long, Long, Map[Int, String]) = {
       val (gLo, gWidth) = guess.fold((0L, 0L)) { case (l, h) => (l, widthOf(l, h)) }
       val n = slices
-      val parts = pagesRaw.select(col("doc_id"), fpColumn).as[(Long, Long)]
-        .mapPartitions { rows =>
+      val parts = graft.Par.described(spark, "graft.build.fingerprint") {
+        pagesRaw.select(col("doc_id"), fpColumn).as[(Long, Long)].mapPartitions { rows =>
           var (mn, mx) = (Long.MaxValue, Long.MinValue)
           val sums = new Array[Long](n)
           val counts = new Array[Long](n)
@@ -110,6 +110,7 @@ object CheckpointedBuild {
           }
           Iterator((mn, mx, sums, counts))
         }.collect()
+      }
       val mn = parts.map(_._1).foldLeft(Long.MaxValue)(math.min)
       val mx = parts.map(_._2).foldLeft(Long.MinValue)(math.max)
       val fps = (0 until n).filter(p => parts.exists(_._4(p) > 0))

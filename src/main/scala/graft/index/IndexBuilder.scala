@@ -88,14 +88,13 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     */
   lazy val termsNgrams: DataFrame = read("terms_ngrams", IndexBuilder.TermsNgramsSchema)
 
-  /** Raw token-frequency rows (term sparse, term_id, doc_id, tf, doc_len)
-    * — the build intermediate every derived table re-reads on rebuilds
-    * ([[IndexBuilder.termFrequencies]]). Batch builds
-    * write it at {path}/tf; checkpointed builds at {path}/tf/slice=p,
-    * which the same read covers via partition discovery (commit markers
-    * are underscore-prefixed and ignored by the reader).
+  /** `(term_id, doc_id, tf, doc_len)`, one row per posting, decoded from
+    * the block files: blocks store each posting's tf and doc_len, so every
+    * index — batch, checkpointed or compacted — has this one tf reader. A
+    * checkpoint keeps its `tf/slice=p` units as its resume state and a
+    * batch build drops its `tf` table; neither is read here.
     */
-  lazy val tfRows: DataFrame = spark.read.parquet(s"$path/tf")
+  lazy val tfRows: DataFrame = PostingBlocks.decodeTf(blockFiles)
 
   /** The blocks table, registered in the catalog as bucketed by block_id
     * so that its scan plans ONE TASK PER BUCKET: all (term_id, block_id)
@@ -383,24 +382,33 @@ object IndexBuilder {
     * at `{outDir}/pages` (extraction and the safety scan are the build's
     * most expensive per-byte work, and the tf pass and line-level serving
     * both read them), then the tf pass writes `{outDir}/tf` once for every
-    * derived table to read back. A batch build starts afresh; it never
-    * resumes an earlier one. `outDir` is a local filesystem path
+    * derived table to read back, and the build deletes it once they all
+    * committed: the blocks carry each posting's tf ([[BuiltIndex.tfRows]]).
+    * A batch build starts afresh, a `tf` left by a crashed one included;
+    * it never resumes an earlier one. `outDir` is a local filesystem path
     * ([[BuiltIndex.requireLocal]]).
     */
   def build(spark: SparkSession, pagesDf: DataFrame, outDir: String,
       blockBits: Int = PostingBlocks.DefaultBlockBits,
       numBuckets: Int = -1): BuiltIndex = {
-    val spine = new BuildSpine(spark, outDir).reset(keepTf = false)
+    val spine = new BuildSpine(spark, outDir).reset()
     // Par.spread: a single-file corpus otherwise runs the safety UDF —
     // and every downstream stage reading the written pages — as one task
-    graft.Par.spread(pagesDf.select(col("doc_id"), col("url"), col("text")))
-      .where(Extract.safe(col("text")))
-      .write.mode("overwrite").option("compression", "zstd")
-      .parquet(s"$outDir/pages")
-    val pages = spark.read.parquet(s"$outDir/pages")
+    val pages = graft.Par.described(spark, "graft.build.extract") {
+      graft.Par.spread(pagesDf.select(col("doc_id"), col("url"), col("text")))
+        .where(Extract.safe(col("text")))
+        .write.mode("overwrite").option("compression", "zstd")
+        .parquet(s"$outDir/pages")
+      spark.read.parquet(s"$outDir/pages")
+    }
     val tf = spine.commitTf(0, s"$outDir/tf", termFrequencies(pages), "pages")()
-    spine.run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
+    val built = spine.run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
       pages.select("doc_id", "url"), blockBits, numBuckets)
+    // every stage that reads tf has committed and blocks hold each
+    // posting's tf and doc_len: tf is the one table a batch index drops
+    // (its manifest row stays, as the lineage record)
+    DriverParquet.remove(Paths.get(outDir, "tf"))
+    built
   }
 
   /** S4 extraction front end: raw pages (url, warc_ts, html, ...) ->

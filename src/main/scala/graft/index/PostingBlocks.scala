@@ -58,6 +58,21 @@ object PostingBlocks {
       .select(keep ++ Seq(col("doc_id"), col("impacts").getItem(col("i")).as("impact")): _*)
   }
 
+  /** Blocks -> `(term_id, doc_id, tf, doc_len)`, one row per posting, each
+    * pair read back from the "tfdl" payload ([[PostingCodec.decodeTfDl]]):
+    * the tf rows the blocks were encoded from, with their column types
+    * ([[IndexBuilder.termFrequencies]]). An outer generator, as in
+    * [[decode]].
+    */
+  private[graft] def decodeTf(blocks: DataFrame): DataFrame = {
+    blocks.select(col("term_id"),
+        udf(PostingCodec.decodeDocIds _).apply(col("docs_enc"), col("n")).as("docs"),
+        udf(PostingCodec.decodeTfDl _).apply(col("impacts_enc"), col("n")).as("tfdl"))
+      .select(col("term_id"), posexplode_outer(col("docs")).as(Seq("i", "doc_id")), col("tfdl"))
+      .select(col("term_id"), col("doc_id"), col("tfdl._1").getItem(col("i")).as("tf"),
+        col("tfdl._2").getItem(col("i")).cast("long").as("doc_len"))
+  }
+
   /** Tf rows `(term_id, doc_id, tf, doc_len, idf)` -> encoded blocks, the
     * idf taken from each row: the encode past the broadcast ceiling,
     * whose rows come from an id-keyed join with the dictionary.

@@ -27,10 +27,10 @@ class BlocksEncodeSpec extends AnyFunSuite {
       PagesCorpus.pages(spark, 400, parts = 4).toDF())
     // dirA: dictionary broadcasts -> tf-driven byte-cut encode
     val idxA = IndexBuilder.build(spark, pages, dirA, blockBits = 6)
-    // dirB: the stages below tf over the same tf rows, broadcast ceiling
-    // forced to 0 -> id-keyed idf join, the idf shipped through the
-    // shuffle with each tf row
-    val tf = idxA.tfRows
+    // dirB: the stages below tf over the same tf rows (recomputed from
+    // dirA's pages), broadcast ceiling forced to 0 -> id-keyed idf join,
+    // the idf shipped through the shuffle with each tf row
+    val tf = IndexBuilder.termFrequencies(spark.read.parquet(s"$dirA/pages"))
     val idxB = new BuildSpine(spark, dirB).run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
       spark.read.parquet(s"$dirA/docs").select("doc_id", "url"), blockBits = 6,
       maxBroadcastTerms = 0L)

@@ -164,7 +164,7 @@ class Bm25EngineSpec extends AnyFunSuite {
   test("sparse v3 tf carries each term's string once per partition") {
     import org.apache.spark.sql.functions.col
     // per-partition first-sight strings only, one spelling per term_id
-    val tfSparse = index.tfRows
+    val tfSparse = IndexBuilder.termFrequencies(spark.read.parquet(s"${index.path}/pages"))
     assert(tfSparse.where(col("term").isNotNull).count() <
       tfSparse.count())
     assert(tfSparse.groupBy("term_id")
@@ -178,7 +178,7 @@ class Bm25EngineSpec extends AnyFunSuite {
     // dictionary would take; every serving table must equal the
     // broadcast build bit-for-bit
     val dirB = java.nio.file.Files.createTempDirectory("graft-bigvocab").toString
-    val tf = spark.read.parquet(s"${index.path}/tf")
+    val tf = IndexBuilder.termFrequencies(spark.read.parquet(s"${index.path}/pages"))
     val idxB = new BuildSpine(spark, dirB).run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
       spark.read.parquet(s"${index.path}/docs").select("doc_id", "url"), blockBits = 6,
       maxBroadcastTerms = 0L)

@@ -132,8 +132,10 @@ class BuildSpineSpec extends AnyFunSuite {
       Seq("term_id", "block_id", "n", "docs_enc", "impacts_enc", "block_max"))
     assert(spark.read.parquet(s"$batchDir/stats").columns.toSeq ==
       Seq("num_docs", "total_tokens", "avgdl", "num_terms", "num_postings"))
-    assert(!Files.exists(Paths.get(batchDir, "terms_part")))
-    assert(!Files.exists(Paths.get(batchDir, "blocks_enc")))
+    assert(ix.tfRows.columns.toSeq == Seq("term_id", "doc_id", "tf", "doc_len"))
+    // tf is read back from the blocks: the build deletes its tf table
+    Seq("tf", "terms_part", "blocks_enc").foreach(t =>
+      assert(!Files.exists(Paths.get(batchDir, t)), t))
   }
 
   test("driver-written stats and blocks_meta have the parquet schema of Spark's writer") {
@@ -195,6 +197,20 @@ class BuildSpineSpec extends AnyFunSuite {
           Row(8, 6, codec))
       })
     }
+  }
+
+  test("a batch index with a leftover tf table loads and decodes its tf from the blocks") {
+    val tfOf = (ix: BuiltIndex) => ix.tfRows.collect().map(_.toString).sorted.toSeq
+    val batch = IndexBuilder.load(spark, batchDir)
+    // a tf table of other rows, as an older build or a crashed one leaves
+    val dir = damaged("leftover-tf")(d => IndexBuilder.termFrequencies(
+      spark.read.parquet(s"$d/pages").where(col("doc_id") < 50)).write.parquet(s"$d/tf"))
+    val ix = IndexBuilder.load(spark, dir)
+    assert(tfOf(ix) == tfOf(batch))
+    assert(tfOf(ix).size.toLong == batch.stats.num_postings)
+    val q = s"${PagesCorpus.vocab(2)} ${PagesCorpus.vocab(7)}"
+    assert(Bm25Query.searchBlocks(ix, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq ==
+      Bm25Query.searchBlocks(batch, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq)
   }
 
   test("an index without terms_rev fails the load before any job") {

@@ -7,12 +7,14 @@ import org.apache.spark.sql.functions._
 
 import graft.checkpoint.CheckpointedBuild
 import graft.corpus.PagesCorpus
+import graft.extract.Extract
 import graft.index.{Bm25, BuiltIndex, IndexBuilder}
 
-/** `BuiltIndex.postings` decodes the blocks in place. Its impacts,
-  * recomputed from each posting's stored tf and doc_len ("tfdl"), equal
-  * the BM25 SQL expression over tf, docs and terms bit for bit: the
-  * cross-check of the scalar impact against the SQL expression. A
+/** The blocks are the one posting store, cross-checked against tf rows
+  * recomputed from the index's pages ([[IndexBuilder.termFrequencies]]):
+  * `BuiltIndex.tfRows`, decoded from each posting's stored tf and doc_len
+  * ("tfdl"), equals them as a multiset, and `BuiltIndex.postings`' impacts
+  * equal the BM25 SQL expression over them, docs and terms bit for bit. A
   * term_id predicate on the view reaches the blocks scan.
   */
 class DecodedPostingsSpec extends AnyFunSuite {
@@ -31,22 +33,44 @@ class DecodedPostingsSpec extends AnyFunSuite {
     rows.select("term_id", "doc_id", "impact").collect().map(r =>
       (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
 
-  private def sqlImpacts(ix: BuiltIndex) =
-    ix.tfRows.select("term_id", "doc_id", "tf")
+  /** (term_id, doc_id, tf, doc_len) of every row, sorted: a multiset. */
+  private def tfMultiset(rows: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int, Long)] =
+    rows.select("term_id", "doc_id", "tf", "doc_len").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq.sorted
+
+  private def sqlImpacts(ix: BuiltIndex, tf: org.apache.spark.sql.DataFrame) =
+    tf.select("term_id", "doc_id", "tf")
       .join(ix.docs.select("doc_id", "doc_len"), "doc_id")
       .join(ix.terms.select("term_id", "idf"), "term_id")
       .select(col("term_id"), col("doc_id"), Bm25.impactCol(col("tf").cast("double"),
         col("doc_len").cast("double"), ix.stats.avgdl, col("idf")).as("impact"))
 
+  /** A batch and a 3-slice checkpointed index, each with tf rows
+    * recomputed from its pages: a checkpointed index keeps none, so from
+    * the same extracted, safety-gated rows.
+    */
+  private lazy val withTf = Seq(
+    batch -> IndexBuilder.termFrequencies(spark.read.parquet(s"${batch.path}/pages")),
+    CheckpointedBuild.build(spark, raw, tmp("ck3"), slices = 3, blockBits = 6) ->
+      IndexBuilder.termFrequencies(IndexBuilder.extractPages(raw).where(Extract.safe(col("text")))))
+
+  test("tfRows decoded from the blocks equal tf recomputed from the pages, " +
+      "on a batch and a 3-slice checkpointed build") {
+    withTf.foreach { case (ix, tf) =>
+      val want = tfMultiset(tf)
+      assert(want.nonEmpty)
+      assert(tfMultiset(ix.tfRows) == want, ix.path)
+    }
+  }
+
   test("decoded f64 impacts equal Bm25.impactCol over tf, docs and terms, " +
       "on a batch and a 3-slice checkpointed build") {
-    val ck3 = CheckpointedBuild.build(spark, raw, tmp("ck3"), slices = 3, blockBits = 6)
-    Seq(batch, ck3).foreach { ix =>
+    withTf.foreach { case (ix, tf) =>
       assert(spark.read.parquet(s"${ix.path}/blocks_meta").head().getAs[String]("impact_codec") ==
         "tfdl")
       val got = bits(ix.postings)
       assert(got.nonEmpty)
-      assert(got == bits(sqlImpacts(ix)), ix.path)
+      assert(got == bits(sqlImpacts(ix, tf)), ix.path)
       assert(got.size.toLong == ix.stats.num_postings, ix.path)
     }
   }

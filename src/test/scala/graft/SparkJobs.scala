@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** Counts the Spark jobs a block of driver code starts. */
+/** Counts and describes the Spark jobs a block of driver code starts. */
 object SparkJobs {
 
   /** Runs `f` and returns its result with the number of Spark jobs it
@@ -26,6 +26,14 @@ object SparkJobs {
   def resultTasks[A](spark: SparkSession)(f: => A): (A, Seq[Int]) = {
     val (r, started) = jobs(spark)(f)
     (r, started.map(_.stageInfos.maxBy(_.stageId).numTasks))
+  }
+
+  /** Runs `f` and returns its result with the `spark.job.description` of
+    * each Spark job it started on this thread, in order (null for none).
+    */
+  def descriptions[A](spark: SparkSession)(f: => A): (A, Seq[String]) = {
+    val (r, started) = jobs(spark)(f)
+    (r, started.map(e => Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
   }
 
   /** Runs `f` and returns its result with the start events of the Spark
