@@ -1,10 +1,12 @@
 package graft.query
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Par
 import graft.index.{BuiltIndex, PostingCodec}
 import graft.tokenize.Tokenizer
 
@@ -88,18 +90,34 @@ object Bm25Query {
         hits.map { case (t, id, df, idf) => QueryTerm(t, id, df, idf) }.toVector
       case None =>
         import index.spark.implicits._
-        index.terms
-          .where(col("term").isin(qTokens: _*))
-          .select("term", "term_id", "df", "idf")
-          .as[QueryTerm].collect().toVector
+        Par.described(index.spark, "graft.query.analyze") {
+          index.terms
+            .where(col("term").isin(qTokens: _*))
+            .select("term", "term_id", "df", "idf")
+            .as[QueryTerm].collect().toVector
+        }
     }
     Analyzed(resolved.sortBy(t => (t.df, t.term_id)), qTokens.size)
   }
 
   private val HitEncoder = Encoders.product[Hit]
+  private val LineHitEncoder = Encoders.product[LineHit]
 
-  private def hitsDataset(index: BuiltIndex, hits: Seq[Hit]): Dataset[Hit] =
-    index.spark.createDataset(hits)(HitEncoder)
+  /** `rows` as a Dataset of `enc`'s case class: a local relation of
+    * external rows, converted by Catalyst's interpreted type converters,
+    * with the schema of `enc` (nullability included) and the rows
+    * `spark.createDataset` would give. `createDataset` generates and
+    * compiles a serializer projection on every call, milliseconds of
+    * fixed cost against a k-row result. Flat case classes only: every
+    * field a primitive or a String.
+    */
+  private def resultDataset[A <: Product](spark: SparkSession, rows: Seq[A],
+      enc: Encoder[A]): Dataset[A] =
+    spark.createDataFrame(rows.map(Row.fromTuple).asJava, enc.schema).as(enc)
+
+  /** A result of hits as a Dataset: see [[resultDataset]]. */
+  private[query] def hitsDataset(index: BuiltIndex, hits: Seq[Hit]): Dataset[Hit] =
+    resultDataset(index.spark, hits, HitEncoder)
 
   /** Attach urls + ranks to a (doc_id, score) top-k result. k is small
     * (clamped 1..1000 like the reference API, web/api.rs:164), so we
@@ -189,9 +207,11 @@ object Bm25Query {
     val base =
       if (allowedDocs == null) globbed
       else globbed.join(allowedDocs.select("doc_id"), Seq("doc_id"), "left_semi")
-    val top = base.orderBy(col("doc_id").asc).limit(k)
-      .select("doc_id", "url").as[(Long, String)].collect()
-    spark.createDataset(top.zipWithIndex.map { case ((d, u), i) =>
+    val top = Par.described(spark, "graft.query.urls") {
+      base.orderBy(col("doc_id").asc).limit(k)
+        .select("doc_id", "url").as[(Long, String)].collect()
+    }
+    hitsDataset(index, top.zipWithIndex.map { case ((d, u), i) =>
       Hit(d, u, 0.0, i + 1)
     }.toSeq)
   }
@@ -247,12 +267,9 @@ object Bm25Query {
 
   /** A batch of one through [[searchWithLinesBatch]]. */
   def searchWithLines(index: BuiltIndex, pagesText: DataFrame, query: String,
-      k: Int, conjunctive: Boolean = true): Dataset[LineHit] = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.createDataset(searchWithLinesBatch(index, pagesText,
-      Seq(BatchQuery(query, conjunctive)), k).head)
-  }
+      k: Int, conjunctive: Boolean = true): Dataset[LineHit] =
+    resultDataset(index.spark, searchWithLinesBatch(index, pagesText,
+      Seq(BatchQuery(query, conjunctive)), k).head, LineHitEncoder)
 
   /** Per-match line records for an already-final top-k hit set (the shared
     * tail of the single and batched lines paths).
@@ -266,10 +283,7 @@ object Bm25Query {
     */
   private def lineRecords(index: BuiltIndex, pagesText: DataFrame,
       top: Seq[Hit], terms: Seq[String]): DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    val hitDf = spark.createDataset(top.toIndexedSeq).toDF()
-      .select(col("doc_id"), col("url"), col("score"), col("rank"))
+    val hitDf = hitsDataset(index, top).toDF()
     val topIds = top.map(_.doc_id)
     val lines = hitDf
       .join(pagesText
@@ -708,8 +722,10 @@ object Bm25Query {
     val ids = hits.flatMap(_.map(_.doc_id)).distinct
     if (ids.isEmpty) hits
     else {
-      val urls = index.docs.where(col("doc_id").isin(ids.toIndexedSeq: _*))
-        .select("doc_id", "url").as[(Long, String)].collect().toMap
+      val urls = Par.described(spark, "graft.query.urls") {
+        index.docs.where(col("doc_id").isin(ids.toIndexedSeq: _*))
+          .select("doc_id", "url").as[(Long, String)].collect().toMap
+      }
       hits.map(_.map(h => h.copy(url = urls.getOrElse(h.doc_id, ""))))
     }
   }
@@ -754,12 +770,14 @@ object Bm25Query {
     val legsPerChunk = math.max(1L,
       maxCollectRows / math.max(1L, kk.toLong * MaxMatchesPerDoc)).toInt
     legs.grouped(legsPerChunk).foreach { chunk =>
-      val rows = chunk.reduce(_ unionByName _)
-        .select(col("qi"), col("doc_id"), col("url"), col("score"),
-          col("rank"), col("line_number"), col("match_start"),
-          col("match_end"), col("snippet"))
-        .as[(Int, Long, String, Double, Int, Int, Int, Int, String)]
-        .collect()
+      val rows = Par.described(spark, "graft.query.lines") {
+        chunk.reduce(_ unionByName _)
+          .select(col("qi"), col("doc_id"), col("url"), col("score"),
+            col("rank"), col("line_number"), col("match_start"),
+            col("match_end"), col("snippet"))
+          .as[(Int, Long, String, Double, Int, Int, Int, Int, String)]
+          .collect()
+      }
       rows.groupBy(_._1).foreach { case (qi, arr) =>
         out(qi) = arr.map(r =>
           LineHit(r._2, r._3, r._4, r._5, r._6, r._7, r._8, r._9))

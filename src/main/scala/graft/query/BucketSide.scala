@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Places a doc in the blocks bucket of its block, `bucketOf(doc_id >>
@@ -36,10 +36,13 @@ private[graft] object SideInput {
       f.select(col("doc_id").cast("long"), lit(i), lit(0.0))
     } ++ rank.map(_.select(col("doc_id").cast("long"), lit(filters.size),
       col("static_rank").cast("double")))
-    SideInput(tagged.reduce(_ union _).rdd
-      .map(r => (r.getLong(0), (r.getInt(1), r.getDouble(2))))
+    SideInput(tagged.reduce(_ union _).rdd.map(record)
       .partitionBy(new DocBucketPartitioner(numBuckets, blockBits)), filters.size)
   }
+
+  /** A tagged row `(doc_id, f, rank)` as its side-input record. */
+  private[graft] val record: Named1[Row, (Long, (Int, Double))] =
+    new Named1((r: Row) => (r.getLong(0), (r.getInt(1), r.getDouble(2))))
 }
 
 /** One bucket's slice of a [[SideInput]]: the sorted, distinct allow

@@ -11,6 +11,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 
+import graft.Par
 import graft.index.{BuiltIndex, PostingCodec}
 
 /** One driver-analyzed query of a batch: its resolved term ids and their
@@ -57,6 +58,15 @@ private[graft] object ImpactReader {
   * Exact: a block bucket holds every block of its docId ranges and the
   * urls and side-input records of exactly those docs, so the local allow
   * array is the global one restricted to the bucket.
+  *
+  * Every function a call hands Spark (the job's, the side-input zip's and
+  * record map's and the cold transient map's) is a [[Named]] function,
+  * and the job goes through the `(TaskContext, Iterator)` overload of
+  * `runJob`, so a hot call without side input makes Spark's closure
+  * cleaner parse no class file. A call with a side input, and every cold
+  * call, still takes a Dataset's `rdd` (the side input's, the blocks
+  * scan's), and that adds a map of Spark's own, which the cleaner parses
+  * on each such call. The job carries the description `graft.query.wand`.
   */
 private[graft] object HotServing {
 
@@ -64,6 +74,9 @@ private[graft] object HotServing {
     * just cached to reach the driver's listener.
     */
   private val ReportWaitNs = TimeUnit.SECONDS.toNanos(10)
+
+  /** A survivor of one bucket: (query index, doc_id, score, url). */
+  type Survivor = (Int, Long, Double, String)
 
   /** The resident partitions of `index`, cached and materialized:
     * partition p of the bucketed blocks scan zipped with the docs
@@ -84,13 +97,16 @@ private[graft] object HotServing {
       "docs_enc", "impacts_enc", "block_max").as[BlockRow])
     val docs = index.docs.select(col("doc_id"), col("url")).as[(Long, String)].rdd
       .partitionBy(new DocBucketPartitioner(numBuckets, blockBits))
-    val rdd = blocks.zipPartitions(docs) { (b, d) =>
-      Iterator.single(HotPartition(TaskContext.getPartitionId(), numBuckets, b, d))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    val rdd = blocks.zipPartitions(docs)(Named {
+      (b: Iterator[BlockRow], d: Iterator[(Long, String)]) =>
+        Iterator.single(HotPartition(TaskContext.getPartitionId(), numBuckets, b, d))
+    }).persist(StorageLevel.MEMORY_AND_DISK)
     val sc = spark.sparkContext
     val t = new HotTier(rdd)
     sc.addSparkListener(t)
-    val rows = sc.runJob(rdd, (it: Iterator[HotPartition]) => it.map(_.rows.length).sum)
+    val rows = sc.runJob(rdd, Named { (_: TaskContext, it: Iterator[HotPartition]) =>
+      it.map(_.rows.length).sum
+    })
     t.occupied = rows.indices.filter(rows(_) > 0)
     val deadline = System.nanoTime() + ReportWaitNs
     while (!t.reported && System.nanoTime() < deadline) Thread.sleep(1)
@@ -105,12 +121,16 @@ private[graft] object HotServing {
   /** One transient partition per bucket of `blocks`, a pruned scan of the
     * bucketed blocks table, without urls.
     */
-  private[graft] def transient(index: BuiltIndex, blocks: Dataset[BlockRow]): RDD[HotPartition] = {
-    val numBuckets = index.blocksMeta._1
-    bucketScan(index, blocks).mapPartitionsWithIndex { (p, b) =>
-      Iterator.single(HotPartition(p, numBuckets, b, Iterator.empty))
-    }
-  }
+  private[graft] def transient(index: BuiltIndex, blocks: Dataset[BlockRow]): RDD[HotPartition] =
+    bucketScan(index, blocks).mapPartitionsWithIndex(transientPartition(index.blocksMeta._1))
+
+  /** The function that turns bucket `p`'s block rows into its transient
+    * partition.
+    */
+  private[graft] def transientPartition(
+      numBuckets: Int): Named[Int, Iterator[BlockRow], Iterator[HotPartition]] =
+    Named((p: Int, b: Iterator[BlockRow]) =>
+      Iterator.single(HotPartition(p, numBuckets, b, Iterator.empty)))
 
   /** `blocks`, a scan of the bucketed blocks table, as one RDD partition
     * per bucket: with Spark's automatic bucketed-scan choice on, the scan
@@ -136,36 +156,46 @@ private[graft] object HotServing {
       chunk: Array[BatchPlanned], k: Int, side: Option[SideInput]): Array[Vector[Hit]] = {
     val impacts = ImpactReader(index)
     val sc = index.spark.sparkContext
-    val survivors = side match {
-      case None => sc.runJob(parts, (it: Iterator[HotPartition]) =>
-        it.flatMap(score(_, BucketSide.Empty, chunk, k, impacts)).toArray, buckets)
-      case Some(s) => sc.runJob(zipped(parts, s, chunk, k, impacts),
-        (it: Iterator[(Int, Long, Double, String)]) => it.toArray)
+    val survivors = Par.described(index.spark, "graft.query.wand") {
+      side match {
+        case None => sc.runJob(parts, scoreJob(chunk, k, impacts), buckets)
+        case Some(s) => sc.runJob(zipped(parts, s, chunk, k, impacts),
+          Named((_: TaskContext, it: Iterator[Survivor]) => it.toArray))
+      }
     }
     val byQuery = survivors.flatten.groupBy(_._1)
     chunk.indices.map { qi =>
-      byQuery.getOrElse(qi, Array.empty[(Int, Long, Double, String)])
+      byQuery.getOrElse(qi, Array.empty[Survivor])
         .sortBy { case (_, d, s, _) => (-s, d) }.take(k)
         .zipWithIndex.map { case ((_, d, s, u), i) => Hit(d, u, s, i + 1) }
         .toVector
     }.toArray
   }
 
-  /** Survivors (query index, doc_id, score, url) of every bucket, each
-    * partition zipped with its slice of the side input.
+  /** The job function of a call without side input: the survivors of
+    * each bucket partition it runs.
+    */
+  private[graft] def scoreJob(chunk: Array[BatchPlanned], k: Int,
+      impacts: ImpactReader): Named[TaskContext, Iterator[HotPartition], Array[Survivor]] =
+    Named((_: TaskContext, it: Iterator[HotPartition]) =>
+      it.flatMap(score(_, BucketSide.Empty, chunk, k, impacts)).toArray)
+
+  /** Survivors of every bucket, each partition zipped with its slice of
+    * the side input.
     */
   private[graft] def zipped(parts: RDD[HotPartition], side: SideInput,
-      chunk: Array[BatchPlanned], k: Int, impacts: ImpactReader): RDD[(Int, Long, Double, String)] = {
+      chunk: Array[BatchPlanned], k: Int, impacts: ImpactReader): RDD[Survivor] = {
     val nFilters = side.nFilters
-    parts.zipPartitions(side.records) { (h, r) =>
-      val bs = BucketSide(r, nFilters)
-      h.flatMap(score(_, bs, chunk, k, impacts))
-    }
+    parts.zipPartitions(side.records)(Named {
+      (h: Iterator[HotPartition], r: Iterator[(Long, (Int, Double))]) =>
+        val bs = BucketSide(r, nFilters)
+        h.flatMap(score(_, bs, chunk, k, impacts))
+    })
   }
 
-  /** Survivors (query index, doc_id, score, url) of one bucket. */
+  /** Survivors of one bucket. */
   private def score(part: HotPartition, side: BucketSide, chunk: Array[BatchPlanned],
-      k: Int, impacts: ImpactReader): Iterator[(Int, Long, Double, String)] = {
+      k: Int, impacts: ImpactReader): Iterator[Survivor] = {
     val globbed = mutable.HashMap.empty[(Seq[String], Seq[String]), Array[Long]]
     chunk.indices.iterator.flatMap { qi =>
       val q = chunk(qi)
@@ -194,6 +224,29 @@ private[graft] object HotServing {
       }
     }
   }
+}
+
+/** A function Spark runs in tasks, under a class name of its own. Spark's
+  * closure cleaner (`SparkContext.clean`) parses, on every call, the class
+  * file that declares each Scala lambda (or `$anonfun$` class) it is
+  * handed, and `runJob`'s `Iterator => U` overload wraps its argument in
+  * a lambda of `SparkContext`'s own. Handed an instance of this class, the
+  * cleaner returns at once (Spark SQL's operators skip it the same way,
+  * through `mapPartitionsInternal`). The wrapped `f` is serialized whole
+  * with the task: it must capture only serializable values, which the
+  * scheduler checks on the driver when it serializes the task binary.
+  */
+private[graft] final class Named[A, B, C](f: (A, B) => C) extends ((A, B) => C) with Serializable {
+  def apply(a: A, b: B): C = f(a, b)
+}
+
+private[graft] object Named {
+  def apply[A, B, C](f: (A, B) => C): Named[A, B, C] = new Named(f)
+}
+
+/** A one-argument [[Named]] function, for `RDD.map`. */
+private[graft] final class Named1[A, B](f: A => B) extends (A => B) with Serializable {
+  def apply(a: A): B = f(a)
 }
 
 /** The resident partitions of a hot index and where executors hold them.

@@ -467,11 +467,8 @@ object RegexQuery {
     */
   def search(index: BuiltIndex, pagesText: DataFrame, pattern: String,
       k: Int,
-      include: Seq[String] = Nil, exclude: Seq[String] = Nil): Dataset[Hit] = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.createDataset(run(index, pagesText, Seq(Query(pattern, include, exclude)), k).head)
-  }
+      include: Seq[String] = Nil, exclude: Seq[String] = Nil): Dataset[Hit] =
+    Bm25Query.hitsDataset(index, run(index, pagesText, Seq(Query(pattern, include, exclude)), k).head)
 
   /** Batched regex serving: B patterns through [[run]], sharing its
     * jobs (the reference's load mix is 5% regex,
