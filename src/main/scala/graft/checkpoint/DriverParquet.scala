@@ -10,6 +10,7 @@ import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -23,7 +24,8 @@ import org.apache.spark.sql.types._
   * rows, the one-row stats and blocks_meta tables) through
   * parquet-hadoop — no Spark job. A one-row `Seq(x).toDS().write` costs a
   * job, and a `spark.read...head()` one or two more; for bookkeeping rows
-  * that is pure scheduling overhead.
+  * that is pure scheduling overhead. Executor tasks read the blocks bucket
+  * files with it too ([[graft.query.BucketFiles]]): serving plans no scan.
   *
   * Files go through parquet's `java.nio` local files, like the rest of
   * the checkpoint's bookkeeping (commit markers are `java.nio` files too):
@@ -107,13 +109,16 @@ private[graft] object DriverParquet {
     list(dir).filter(f => Files.isRegularFile(f) && !hidden(f.getFileName.toString))
       .sortBy(_.getFileName.toString).flatMap(readFile(_, schema))
 
-  // explicit options: the reader's defaults build (and parse) a fresh
-  // Hadoop Configuration per file
-  private lazy val readOptions =
-    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
-
-  private def readFile(file: Path, schema: StructType): Seq[Row] = {
-    val r = ParquetFileReader.open(new LocalInputFile(file), readOptions)
+  /** The records of `file` (see [[read]]) in the row groups whose column
+    * statistics `rowGroups` keeps; no record is filtered. Explicit options
+    * per file: the defaults parse a fresh Hadoop Configuration, and a
+    * reader releases its codec factory on close, so tasks share none.
+    */
+  def readFile(file: Path, schema: StructType,
+      rowGroups: FilterCompat.Filter = FilterCompat.NOOP): Seq[Row] = {
+    val options = ParquetReadOptions.builder(new PlainParquetConfiguration())
+      .withRecordFilter(rowGroups).useRecordFilter(false).useDictionaryFilter(false).build()
+    val r = ParquetFileReader.open(new LocalInputFile(file), options)
     try {
       val fileSchema = r.getFooter.getFileMetaData.getSchema
       val out = ArrayBuffer[Row]()
@@ -138,6 +143,7 @@ private[graft] object DriverParquet {
         case IntegerType => g.getInteger(f.name, 0)
         case LongType    => g.getLong(f.name, 0)
         case DoubleType  => g.getDouble(f.name, 0)
+        case BinaryType  => g.getBinary(f.name, 0).getBytes
         case other => throw new IllegalArgumentException(s"unsupported type $other")
       }
     })

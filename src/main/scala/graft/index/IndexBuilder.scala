@@ -6,8 +6,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.checkpoint.{BuildSpine, DriverParquet, TfInput, TfUnit}
@@ -38,9 +38,10 @@ case class IndexStats(
   * so the query-side `IN (...)` filters prune parquet row groups via
   * min/max stats — the distributed analog of the reference's hash lookup
   * (/root/reference/src/index/trigram.rs:130-145) — and blocks are
-  * additionally BUCKETED by block_id (see [[blocks]]). This is the one
-  * layout an index has: opening a directory checks it on the driver
-  * ([[BuiltIndex.readLayout]]), and any other fails to load.
+  * additionally BUCKETED by block_id, each file named for its bucket (see
+  * [[bucketFiles]]). This is the one layout an index has: opening a
+  * directory checks it on the driver ([[BuiltIndex.readLayout]]), and any
+  * other fails to load.
   */
 class BuiltIndex(val spark: SparkSession, val path: String) {
   BuiltIndex.requireLocal(path)
@@ -96,30 +97,21 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     */
   lazy val tfRows: DataFrame = PostingBlocks.decodeTf(blockFiles)
 
-  /** The blocks table, registered in the catalog as bucketed by block_id
-    * so that its scan plans ONE TASK PER BUCKET: all (term_id, block_id)
-    * groups of a docId range complete inside a single task, with no
-    * per-query shuffle. It is planned in a session of the index's own
-    * (same SparkContext and catalog) with `autoBucketedScan` DISABLED:
-    * Spark would otherwise fall back to size-based file splitting for
-    * plans with no distribution requirement (the block path's are none),
-    * and the block path then fails rather than score a block group split
-    * across tasks. The caller's session keeps its own setting.
+  /** `bucketFiles(i)`: the visible `blocks` files whose names carry Spark
+    * bucket id i, listed once, at the first serving read. A file whose
+    * name carries no id of a bucket fails it, naming the file: no task
+    * would read it. Serving reads the blocks through these lists
+    * ([[graft.query.BucketFiles]]), not through the catalog.
     */
-  lazy val blocks: DataFrame = {
-    val own = spark.newSession()
-    own.conf.set(SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key, "false")
-    val t = BuiltIndex.blocksTableName(path)
-    own.sql(
-      s"""CREATE TABLE IF NOT EXISTS $t (
-         |  term_id BIGINT, block_id BIGINT, n INT,
-         |  docs_enc BINARY, impacts_enc BINARY,
-         |  block_max DOUBLE)
-         |USING PARQUET
-         |CLUSTERED BY (block_id) SORTED BY (term_id, block_id)
-         |INTO ${blocksMeta._1} BUCKETS
-         |LOCATION '$path/blocks'""".stripMargin)
-    own.table(t)
+  private[graft] lazy val bucketFiles: IndexedSeq[Seq[String]] = {
+    val n = blocksMeta._1
+    val byBucket = DriverParquet.list(Paths.get(path, "blocks"))
+      .filterNot(f => DriverParquet.hidden(f.getFileName.toString)).groupBy { f =>
+        val id = BucketingUtils.getBucketId(f.getFileName.toString)
+        id.filter(_ < n).getOrElse(throw new IllegalStateException(s"blocks file $f of index " +
+          s"$path is in none of its $n buckets: its name carries bucket id ${id.getOrElse("none")}"))
+      }
+    (0 until n).map(b => byBucket.getOrElse(b, Nil).map(_.toString).sorted)
   }
 
   /** The stats row, read on the driver. */
@@ -134,7 +126,7 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     * The hot tier holds the `terms` and `docs` tables and one resident
     * `HotPartition` per blocks bucket: its block rows indexed by term_id
     * plus the urls of its docs, persisted MEMORY_AND_DISK with its lineage
-    * kept, so a lost executor recomputes it from the parquet files. With
+    * kept, so a lost executor recomputes it from its bucket's files. With
     * the partitions in memory, every batchable chunk of
     * `Bm25Query.searchBlocksBatchEx` — and so `searchBlocks` (plain or
     * url-glob filtered), `searchBlocksBoosted`, `searchBlocksFiltered` and
@@ -143,8 +135,8 @@ class BuiltIndex(val spark: SparkSession, val path: String) {
     * partitioned like the buckets, whose shuffle is a stage of that job.
     * `searchNaive` and short queries keep the Dataset path. If some
     * partition does not fit in memory, or is later evicted to disk,
-    * queries run as on a cold index: a pruned scan of the blocks parquet
-    * files, scored by the same per-bucket scorer, since a spilled
+    * queries run as on a cold index: each bucket's files read for the
+    * query's terms, scored by the same per-bucket scorer, since a spilled
     * partition is read back whole per query. Every index has this one
     * layout; an index of an older one fails at load and must be rebuilt.
     * On the 2000-doc perfbench `serve` corpus the partitions, terms and
@@ -291,15 +283,6 @@ object BuiltIndex {
 
   private[index] val log =
     org.slf4j.LoggerFactory.getLogger(classOf[BuiltIndex])
-
-  /** Session-catalog name for the bucketed blocks table at `path` (stable
-    * across sessions so a load re-registers the same table).
-    */
-  def blocksTableName(path: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_blocks_${h.take(16)}"
-  }
 }
 
 /** Distributed inverted-index build — the Spark re-expression of the

@@ -163,18 +163,19 @@ object PostingBlocks {
       }
     }
 
-  /** Write encoded blocks as a BUCKETED table (bucketBy block_id, files
-    * sorted by (term_id, block_id)) registered in the session catalog with
-    * the data under `$outDir/blocks`; returns the block and posting counts,
-    * observed on the write. `blocks` is the encode itself ([[encode]] or
-    * [[encodeFromTf]]), so the tf shuffle, the encode, the local bucket
-    * sort and the write run as one plan, with no intermediate table.
+  /** Write encoded blocks BUCKETED (bucketBy block_id, files sorted by
+    * (term_id, block_id)) under `$outDir/blocks`; returns the block and
+    * posting counts, observed on the write. `blocks` is the encode itself
+    * ([[encode]] or [[encodeFromTf]]), so the tf shuffle, the encode, the
+    * local bucket sort and the write run as one plan, with no intermediate
+    * table. It goes through a catalog table named for `outDir` only because
+    * Spark writes bucket files only through one; no reader reads it.
     *
-    * The bucketing is the serving-path contract: a query reads the blocks
-    * of its terms (pushed In(term_id) filter; file sort keeps row-group
-    * stats tight) with ONE TASK PER BUCKET, so every (term_id, block_id)
-    * group of one docId range is complete inside a single task and the
-    * WAND merge runs with zero per-query Exchange.
+    * The bucketing is the serving-path contract: each file is named for
+    * its bucket, and a query reads its terms' blocks (row groups pruned by
+    * term_id) with ONE TASK PER BUCKET ([[graft.query.BucketFiles]]), so
+    * every (term_id, block_id) group of one docId range is complete inside
+    * a single task and the WAND merge runs with zero per-query Exchange.
     *
     * The write adds no shuffle to the encode's: each encode task writes
     * its groups into per-bucket files after a local sort by the bucket
@@ -185,8 +186,9 @@ object PostingBlocks {
   def writeBlocksEncoded(blocks: Dataset[PostingBlock], outDir: String,
       numBuckets: Int): (Long, Long) = {
     val spark = blocks.sparkSession
-    val table = BuiltIndex.blocksTableName(outDir)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val blocksTableName = "graft_blocks_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(outDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+    spark.sql(s"DROP TABLE IF EXISTS $blocksTableName")
     val obs = org.apache.spark.sql.Observation()
     blocks
       .observe(obs, count(lit(1)).as("rows"), sum("n").as("postings"))
@@ -199,7 +201,7 @@ object PostingBlocks {
       .sortBy("term_id", "block_id")
       .option("path", s"$outDir/blocks")
       .mode(SaveMode.Overwrite)
-      .saveAsTable(table)
+      .saveAsTable(blocksTableName)
     (obs.get("rows").asInstanceOf[Long], Option(obs.get("postings")).fold(0L)(_.asInstanceOf[Long]))
   }
 }

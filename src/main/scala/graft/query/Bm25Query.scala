@@ -3,7 +3,7 @@ package graft.query
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Par
@@ -35,8 +35,8 @@ case class BatchQuery(
     exclude: Seq[String] = Nil,
     boosted: Boolean = false)
 
-/** One compressed posting block row as read at query time (top-level so
-  * Catalyst's generated deserializer can construct it).
+/** One compressed posting block row as read at query time
+  * ([[BucketFiles]]).
   */
 case class BlockRow(term_id: Long, block_id: Long, n: Int,
     docs_enc: Array[Byte], impacts_enc: Array[Byte], block_max: Double)
@@ -62,7 +62,7 @@ case class BlockRow(term_id: Long, block_id: Long, n: Int,
   *     [[searchBlocksBatchEx]], which scores each chunk bucket by bucket
   *     with one scorer ([[HotServing]]) in ONE Spark job: over the
   *     resident partitions of a hot index or, otherwise, over transient
-  *     partitions built from a pruned scan of the bucketed blocks table.
+  *     partitions read from each bucket's files ([[BucketFiles]]).
   *     Doc filters and the rank set reach either as a [[SideInput]]
   *     partitioned like the blocks buckets, whatever their size.
   *
@@ -265,50 +265,53 @@ object Bm25Query {
   val MaxMatchesPerDoc = 100
   val SnippetWindow = 200
 
+  /** Spark's `lower` of a string (A-Z mapped when it is all ASCII, else
+    * ICU's `UCharacter.toLowerCase`, as on Spark's default collation),
+    * as a function: Spark's own `lower` pays about a second on its first
+    * call in a JVM, building a title-case table it never reads here.
+    */
+  private[graft] val lowerCase = udf((s: String) =>
+    if (s.forall(_ < 0x80)) s.toLowerCase(java.util.Locale.ROOT)
+    else com.ibm.icu.lang.UCharacter.toLowerCase(s))
+
   /** A batch of one through [[searchWithLinesBatch]]. */
   def searchWithLines(index: BuiltIndex, pagesText: DataFrame, query: String,
       k: Int, conjunctive: Boolean = true): Dataset[LineHit] =
     resultDataset(index.spark, searchWithLinesBatch(index, pagesText,
       Seq(BatchQuery(query, conjunctive)), k).head, LineHitEncoder)
 
-  /** Per-match line records for an already-final top-k hit set (the shared
-    * tail of the single and batched lines paths).
+  /** Per-match line records `(doc_id, line_number, match_start,
+    * match_end, snippet)` of the docs of an already-final top-k hit set
+    * (the shared tail of the single and batched lines paths); the caller
+    * attaches each doc's hit.
     *
     * Late materialization MUST hold in the physical plan, not just the
-    * scaladoc: the In(doc_id) filter sits BELOW the posexplode so the
-    * content scan reads only the k hit docs (pushed to the parquet scan;
-    * PLANS.md plan 6). Joining the generator output instead would explode
-    * every line of the whole corpus to serve k hits — a full-corpus scan
-    * per interactive query at 100x scale.
+    * scaladoc: the In(doc_id) filter is pushed to the content scan, so it
+    * reads only the k hit docs (PLANS.md plan 7). Each doc's lines are
+    * matched and capped inside its own row (split, transform, filter,
+    * slice) before one explode, so the plan is one stage: no join with
+    * the hits, no window and no shuffle.
     */
-  private def lineRecords(index: BuiltIndex, pagesText: DataFrame,
-      top: Seq[Hit], terms: Seq[String]): DataFrame = {
-    val hitDf = hitsDataset(index, top).toDF()
-    val topIds = top.map(_.doc_id)
-    val lines = hitDf
-      .join(pagesText
-        .where(col("doc_id").isin(topIds: _*))
-        .select(col("doc_id"),
-          posexplode(split(col("text"), "\n")).as(Seq("ln0", "line"))), Seq("doc_id"))
+  private[graft] def lineRecords(pagesText: DataFrame, top: Seq[Hit],
+      terms: Seq[String]): DataFrame = {
     // earliest occurrence of any term in the line (struct orders by
     // position first; ties prefer the shorter term), null = no match
-    val lenByPos = terms.map(t => when(instr(lower(col("line")), t) > 0,
-      struct(instr(lower(col("line")), t).as("p"), lit(t.length).as("l"))))
-    val best = array_min(array(lenByPos: _*))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("ln0").asc)
-    lines
-      .withColumn("m", best)
-      .where(col("m").isNotNull)
-      .withColumn("nline", row_number().over(w))
-      .where(col("nline") <= MaxMatchesPerDoc)
+    def best(line: Column) = array_min(array(terms.map(t =>
+      when(instr(lowerCase(line), t) > 0,
+        struct(instr(lowerCase(line), t).as("p"), lit(t.length).as("l")))): _*))
+    val matched = filter(transform(split(col("text"), "\n"),
+      (line, ln0) => struct(ln0.as("ln0"), line.as("line"), best(line).as("m"))),
+      _.getField("m").isNotNull)
+    pagesText
+      .where(col("doc_id").isin(top.map(_.doc_id): _*))
+      .select(col("doc_id"), explode(slice(matched, 1, MaxMatchesPerDoc)).as("x"))
       .select(
-        col("doc_id"), col("url"), col("score"), col("rank"),
-        (col("ln0") + 1).cast("int").as("line_number"),
-        col("m.p").cast("int").as("match_start"),
-        (col("m.p") + col("m.l")).cast("int").as("match_end"),
-        substring(col("line"),
-          greatest(lit(1), col("m.p") - SnippetWindow),
+        col("doc_id"),
+        (col("x.ln0") + 1).cast("int").as("line_number"),
+        col("x.m.p").cast("int").as("match_start"),
+        (col("x.m.p") + col("x.m.l")).cast("int").as("match_end"),
+        substring(col("x.line"),
+          greatest(lit(1), col("x.m.p") - SnippetWindow),
           lit(2 * SnippetWindow)).as("snippet"))
   }
 
@@ -602,8 +605,8 @@ object Bm25Query {
 
   /** Batched serving, full query classes (round 5): each [[BatchQuery]]
     * carries its own mode, url-glob filter and boost opt-in; one Spark
-    * job per chunk answers every batchable query over ONE pruned blocks
-    * scan — the amortization story for the per-query scheduling floor.
+    * job per chunk answers every batchable query over ONE read of the
+    * buckets — the amortization story for the per-query scheduling floor.
     * The reference's validator drives its load test exactly this way — a
     * mixed workload against one hot engine
     * (fast_code_search_validator.rs:692-810). Every single-query block
@@ -625,9 +628,9 @@ object Bm25Query {
     * On a hot index the buckets are its resident partitions: url globs
     * resolve inside the job against each bucket's own docs, urls come
     * back with the survivors, and the chunk is ONE job, side input
-    * included. On a cold index each bucket of the chunk's pruned blocks
-    * scan becomes one transient partition without urls, and one url
-    * lookup follows: two jobs.
+    * included. On a cold index each bucket's rows of the chunk's terms,
+    * read from the bucket's files, become one transient partition without
+    * urls, and one url lookup follows: two jobs.
     *
     * Returns one Vector[Hit] per input query, in input order.
     */
@@ -676,12 +679,12 @@ object Bm25Query {
       val qs = chunk.map { case (_, p) =>
         p.copy(filter = if (docSet.nonEmpty) 0 else globs.indexOf((p.include, p.exclude)))
       }.toArray
-      // a cold chunk scores one transient partition per bucket of its
-      // pruned blocks scan, without urls: its globs arrive as doc filters
+      // a cold chunk scores one transient partition per bucket, its terms'
+      // rows, without urls: its globs arrive as doc filters
       val hits = hot match {
         case Some(h) => HotServing.run(index, h.rdd, h.occupied, qs, kk, side)
         case None =>
-          val parts = HotServing.transient(index, chunkRows(index, qs))
+          val parts = HotServing.transient(index, qs.flatMap(_.termIds).toSeq)
           withUrls(index, HotServing.run(index, parts, parts.partitions.indices, qs, kk, side))
       }
       chunk.map(_._1).zip(hits).foreach { case (qi, v) => results(qi) = v }
@@ -698,21 +701,6 @@ object Bm25Query {
     if (a.terms.isEmpty || (q.conjunctive && !a.allResolved)) None
     else Some(BatchPlanned(a.terms.map(_.term_id).toArray, a.terms.map(_.idf).toArray,
       q.conjunctive, q.include, q.exclude, q.boosted))
-  }
-
-  /** The pruned block rows of a chunk's query terms: a scan of the
-    * bucketed blocks table with one partition per bucket and no Exchange.
-    * A bucket holds every term's blocks of its docId ranges, so its local
-    * top-k heaps are exact: the global top-k is a subset of the union of
-    * the local ones.
-    */
-  private[graft] def chunkRows(index: BuiltIndex, chunk: Array[BatchPlanned]): Dataset[BlockRow] = {
-    val spark = index.spark
-    import spark.implicits._
-    index.blocks
-      .where(col("term_id").isin(chunk.flatMap(_.termIds).distinct.toIndexedSeq: _*))
-      .select("term_id", "block_id", "n", "docs_enc", "impacts_enc", "block_max")
-      .as[BlockRow]
   }
 
   /** `hits` with their urls: ONE pruned lookup of every query's winners. */
@@ -764,24 +752,24 @@ object Bm25Query {
         out(qi) = top.map(h =>
           LineHit(h.doc_id, h.url, h.score, h.rank, 0, 0, 0, ""))
         None
-      } else Some(lineRecords(index, pagesText, top, terms)
-        .withColumn("qi", lit(qi)))
+      } else Some(lineRecords(pagesText, top, terms).withColumn("qi", lit(qi)))
     }
     val legsPerChunk = math.max(1L,
       maxCollectRows / math.max(1L, kk.toLong * MaxMatchesPerDoc)).toInt
     legs.grouped(legsPerChunk).foreach { chunk =>
       val rows = Par.described(spark, "graft.query.lines") {
         chunk.reduce(_ unionByName _)
-          .select(col("qi"), col("doc_id"), col("url"), col("score"),
-            col("rank"), col("line_number"), col("match_start"),
-            col("match_end"), col("snippet"))
-          .as[(Int, Long, String, Double, Int, Int, Int, Int, String)]
+          .select(col("qi"), col("doc_id"), col("line_number"),
+            col("match_start"), col("match_end"), col("snippet"))
+          .as[(Int, Long, Int, Int, Int, String)]
           .collect()
       }
       rows.groupBy(_._1).foreach { case (qi, arr) =>
-        out(qi) = arr.map(r =>
-          LineHit(r._2, r._3, r._4, r._5, r._6, r._7, r._8, r._9))
-          .sortBy(h => (h.rank, h.line_number)).toVector
+        val hit = hitsPer(qi).map(h => h.doc_id -> h).toMap
+        out(qi) = arr.map { r =>
+          val h = hit(r._2)
+          LineHit(h.doc_id, h.url, h.score, h.rank, r._3, r._4, r._5, r._6)
+        }.sortBy(h => (h.rank, h.line_number)).toVector
       }
     }
     queries.indices.foreach(qi =>

@@ -1,6 +1,5 @@
 package graft.query
 
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** One blocks bucket as [[HotServing]] scores it: the bucket's block rows
@@ -10,7 +9,7 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * index (see [[graft.index.BuiltIndex.cacheHot]]), where url globs and
   * urls resolve locally, so the hot path needs no scan, no shuffle and no
   * second job for urls; transient and without urls for a cold query,
-  * built from the bucket's pruned blocks scan.
+  * built from the bucket's rows of its terms ([[BucketFiles]]).
   */
 final class HotPartition private (
     termIds: Array[Long],
@@ -58,19 +57,15 @@ object HotPartition {
     if (h < 0) h + numBuckets else h
   }
 
-  /** What keeps a scan of the blocks table one task per bucket. */
-  val BucketedScanRule: String =
-    s"${SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key} must stay false for the session that plans an index's blocks scan"
-
   /** Assemble bucket `bucket` from its block rows and its docs. Every
-    * block row must hash to `bucket`: a row read from another bucket's
-    * files would silently drop candidates, so a mismatch fails loudly.
+    * block row must hash to `bucket`: a file named for another bucket
+    * would silently drop candidates, so a mismatch fails loudly.
     */
   def apply(bucket: Int, numBuckets: Int,
       blocks: Iterator[BlockRow], docs: Iterator[(Long, String)]): HotPartition = {
     val rows = blocks.toArray.sortBy(r => (r.term_id, r.block_id))
-    require(rows.forall(r => bucketOf(r.block_id, numBuckets) == bucket),
-      s"blocks partition $bucket holds a block of another bucket: $BucketedScanRule")
+    rows.find(r => bucketOf(r.block_id, numBuckets) != bucket).foreach(r => throw new IllegalStateException(
+      s"blocks bucket $bucket holds block ${r.block_id} of bucket ${bucketOf(r.block_id, numBuckets)}"))
     val termIds = Array.newBuilder[Long]
     val termStart = Array.newBuilder[Int]
     var i = 0

@@ -7,7 +7,6 @@ import scala.collection.mutable
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 
@@ -41,11 +40,11 @@ private[graft] object ImpactReader {
 /** The one bucket scorer of the block path: a chunk of analyzed queries
   * is answered by ONE Spark job over one [[HotPartition]] per blocks
   * bucket. On a hot index (see [[BuiltIndex.cacheHot]]) those are the
-  * resident partitions, with the urls of their docs, and no query is
-  * planned by Catalyst; on a cold one they are transient, built from a
-  * pruned scan of the bucketed blocks table without urls (url globs then
-  * arrive as doc filters of the side input, and the caller looks the
-  * winners' urls up). Per bucket and query, a task gathers only that
+  * resident partitions, with the urls of their docs; on a cold one they
+  * are transient, built from the rows of the chunk's terms in each
+  * bucket's files, without urls (url globs then arrive as doc filters of
+  * the side input, and the caller looks the winners' urls up). Both read
+  * through [[BucketFiles]]. Per bucket and query, a task gathers only that
   * query's block rows in (block_id, term_id) order, turns its url globs
   * into the sorted allow array of the bucket's own docs, runs the merge
   * kernel ([[Bm25Query.processPartition]]) and returns the survivors. The
@@ -62,11 +61,11 @@ private[graft] object ImpactReader {
   * Every function a call hands Spark (the job's, the side-input zip's and
   * record map's and the cold transient map's) is a [[Named]] function,
   * and the job goes through the `(TaskContext, Iterator)` overload of
-  * `runJob`, so a hot call without side input makes Spark's closure
-  * cleaner parse no class file. A call with a side input, and every cold
-  * call, still takes a Dataset's `rdd` (the side input's, the blocks
-  * scan's), and that adds a map of Spark's own, which the cleaner parses
-  * on each such call. The job carries the description `graft.query.wand`.
+  * `runJob`, so the scoring job of a call without side input, hot or
+  * cold, makes Spark's closure cleaner parse no class file. A call with a
+  * side input still takes the side input's Dataset `rdd`, and that adds a
+  * map of Spark's own, which the cleaner parses on each such call. The
+  * job carries the description `graft.query.wand`.
   */
 private[graft] object HotServing {
 
@@ -79,11 +78,11 @@ private[graft] object HotServing {
   type Survivor = (Int, Long, Double, String)
 
   /** The resident partitions of `index`, cached and materialized:
-    * partition p of the bucketed blocks scan zipped with the docs
-    * partitioned by the bucket of `doc_id >> blockBits` (the same Murmur3
-    * pmod as bucketBy), so partition p holds bucket p's blocks and the
-    * urls of exactly the docs those blocks can name. MEMORY_AND_DISK
-    * with the lineage kept: a lost executor recomputes its buckets.
+    * bucket p's files ([[BucketFiles]]) zipped with the docs partitioned
+    * by the bucket of `doc_id >> blockBits` (the same Murmur3 pmod as
+    * bucketBy), so partition p holds bucket p's blocks and the urls of
+    * exactly the docs those blocks can name. MEMORY_AND_DISK with the
+    * lineage kept: a lost executor re-reads its buckets' files.
     * None, with nothing left cached, when some partition did not fit in
     * memory: see [[HotTier]]. The materializing job also counts each
     * partition's block rows: a query job without side input then runs
@@ -93,11 +92,9 @@ private[graft] object HotServing {
     val spark = index.spark
     import spark.implicits._
     val (numBuckets, blockBits) = index.blocksMeta
-    val blocks = bucketScan(index, index.blocks.select("term_id", "block_id", "n",
-      "docs_enc", "impacts_enc", "block_max").as[BlockRow])
     val docs = index.docs.select(col("doc_id"), col("url")).as[(Long, String)].rdd
       .partitionBy(new DocBucketPartitioner(numBuckets, blockBits))
-    val rdd = blocks.zipPartitions(docs)(Named {
+    val rdd = new BucketFiles(index).zipPartitions(docs)(Named {
       (b: Iterator[BlockRow], d: Iterator[(Long, String)]) =>
         Iterator.single(HotPartition(TaskContext.getPartitionId(), numBuckets, b, d))
     }).persist(StorageLevel.MEMORY_AND_DISK)
@@ -118,11 +115,9 @@ private[graft] object HotServing {
     }
   }
 
-  /** One transient partition per bucket of `blocks`, a pruned scan of the
-    * bucketed blocks table, without urls.
-    */
-  private[graft] def transient(index: BuiltIndex, blocks: Dataset[BlockRow]): RDD[HotPartition] =
-    bucketScan(index, blocks).mapPartitionsWithIndex(transientPartition(index.blocksMeta._1))
+  /** One transient partition per bucket: its rows of `termIds`, no urls. */
+  private[graft] def transient(index: BuiltIndex, termIds: Seq[Long]): RDD[HotPartition] =
+    new BucketFiles(index, Some(termIds)).mapPartitionsWithIndex(transientPartition(index.blocksMeta._1))
 
   /** The function that turns bucket `p`'s block rows into its transient
     * partition.
@@ -131,19 +126,6 @@ private[graft] object HotServing {
       numBuckets: Int): Named[Int, Iterator[BlockRow], Iterator[HotPartition]] =
     Named((p: Int, b: Iterator[BlockRow]) =>
       Iterator.single(HotPartition(p, numBuckets, b, Iterator.empty)))
-
-  /** `blocks`, a scan of the bucketed blocks table, as one RDD partition
-    * per bucket: with Spark's automatic bucketed-scan choice on, the scan
-    * may pack files by size instead, and then fails here.
-    */
-  private def bucketScan(index: BuiltIndex, blocks: Dataset[BlockRow]): RDD[BlockRow] = {
-    val rdd = blocks.rdd
-    val numBuckets = index.blocksMeta._1
-    if (rdd.getNumPartitions != numBuckets) throw new IllegalStateException(
-      s"the blocks scan of ${index.path} has ${rdd.getNumPartitions} partitions, " +
-      s"not one per each of its $numBuckets buckets: ${HotPartition.BucketedScanRule}")
-    rdd
-  }
 
   /** The top-k hits of each query of `chunk`, in chunk order: one job
     * over the bucket partitions `buckets` of `parts`, or over every
@@ -254,7 +236,7 @@ private[graft] final class Named1[A, B](f: A => B) extends (A => B) with Seriali
   * this listener keeps the latest report per partition. The hot path
   * runs only while every partition is in memory: a partition spilled to
   * disk would be read back whole, all its block rows and urls, by every
-  * query, where the Dataset path prunes parquet row groups by term_id.
+  * query, where the cold path reads only its terms' rows of each bucket.
   */
 private[graft] final class HotTier(val rdd: RDD[HotPartition]) extends SparkListener {
   private val rddId = rdd.id

@@ -186,8 +186,8 @@ class Bm25EngineSpec extends AnyFunSuite {
       df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
     assert(canon(idxB.postings, "term_id", "doc_id", "impact") ==
       canon(index.postings, "term_id", "doc_id", "impact"))
-    assert(canon(idxB.blocks, "term_id", "block_id", "n", "block_max") ==
-      canon(index.blocks, "term_id", "block_id", "n", "block_max"))
+    assert(canon(idxB.blockFiles, "term_id", "block_id", "n", "block_max") ==
+      canon(index.blockFiles, "term_id", "block_id", "n", "block_max"))
     assert(idxB.stats == index.stats)
     val q = s"${PagesCorpus.vocab(3)} ${PagesCorpus.vocab(7)}"
     assert(Bm25Query.searchBlocks(idxB, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq ==

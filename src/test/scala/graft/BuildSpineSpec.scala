@@ -128,7 +128,7 @@ class BuildSpineSpec extends AnyFunSuite {
     assert(ix.docs.columns.toSeq == Seq("doc_id", "url", "doc_len"))
     assert(ix.terms.columns.toSeq == Seq("term", "df", "term_id", "idf"))
     assert(ix.postings.columns.toSeq == Seq("term_id", "doc_id", "impact"))
-    assert(ix.blocks.columns.toSeq ==
+    assert(ix.blockFiles.columns.toSeq ==
       Seq("term_id", "block_id", "n", "docs_enc", "impacts_enc", "block_max"))
     assert(spark.read.parquet(s"$batchDir/stats").columns.toSeq ==
       Seq("num_docs", "total_tokens", "avgdl", "num_terms", "num_postings"))

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.SparkListenerBlockUpdated
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.{BlockUpdatedInfo, RDDBlockId, StorageLevel}
 
@@ -14,8 +15,8 @@ import graft.query.{BatchQuery, Bm25Query, Hit, LineHit}
 
 /** Hot serving: one index directory opened twice, hot
   * (`cacheHot().cacheDictionary()`, queries on the resident partitions)
-  * and cold (`cacheDictionary()` only: transient partitions of a pruned
-  * blocks scan). Every hit must be bit-identical — doc_id, url, score bits and rank — with a bucket count
+  * and cold (`cacheDictionary()` only: transient partitions of the query
+  * terms' rows of each bucket's files). Every hit must be bit-identical — doc_id, url, score bits and rank — with a bucket count
   * different from the shuffle partitions and a small block width; and a
   * hot query or batch must be one Spark job. Hot and cold share the
   * bucket scorer, so their hits are also checked against the declarative
@@ -182,10 +183,14 @@ class HotServingSpec extends AnyFunSuite {
     import spark.implicits._
     val (n, shift) = hot.blocksMeta
     assert(n == numBuckets && shift == blockBits)
-    // the bucket formula is the blocks table's own bucketing
-    val bucket = (c: org.apache.spark.sql.Column) => pmod(hash(c), lit(n))
-    assert(cold.blocks.select(bucket(col("block_id")) === spark_partition_id())
-      .as[Boolean].collect().forall(identity))
+    // the bucket formula is Spark's bucketing: every block row sits in a
+    // file named for bucket pmod(hash(block_id), n)
+    val bucket = (c: Column) => pmod(hash(c), lit(n))
+    val named = cold.blockFiles.select(bucket(col("block_id")), input_file_name())
+      .as[(Int, String)].collect()
+    assert(named.nonEmpty && named.forall { case (b, f) =>
+      BucketingUtils.getBucketId(new org.apache.hadoop.fs.Path(f).getName).contains(b)
+    })
     val docBucket = cold.docs.select(col("doc_id"), col("url"),
         bucket(shiftright(col("doc_id"), shift)))
       .as[(Long, String, Int)].collect()

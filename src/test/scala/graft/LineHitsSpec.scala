@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.index.IndexBuilder
@@ -68,5 +69,19 @@ class LineHitsSpec extends AnyFunSuite {
     val got = Bm25Query.searchWithLines(index, pages, "ab", 10).collect()
     assert(got.map(_.doc_id).sorted.toSeq == Seq(1L, 2L, 3L, 4L))
     assert(got.forall(h => h.line_number == 0 && h.score == 0.0))
+  }
+
+  test("line matching lowercases exactly as Spark's lower") {
+    // ASCII, Latin-1, final sigma, dotted capital I, Cyrillic, titlecase
+    // digraphs and Cherokee, supplementary code points, Kelvin and Ohm
+    val texts = Seq("", "Plain ASCII Needleterm",
+      "\u00DCn\u00EFc\u00F6d\u00E9 \u00C0\u00C9\u00CE\u00D5\u00DC",
+      "\u03A3\u0391\u03A3 \u039F\u0394\u039F\u03A3 \u03A3",
+      "\u0130stanbul D\u0130\u015E",
+      "\u041F\u0420\u0418\u0412\u0415\u0422 \u041F\u043E\u0438\u0441\u043A",
+      "\u01C5 \u01C8 \u1E9E \u13A0\uAB70", "\uD801\uDC00 \uD83D\uDE00 x", "\u00A0\u212A\u2126")
+    val got = texts.toDF("s")
+      .select(functions.lower($"s"), Bm25Query.lowerCase($"s")).as[(String, String)].collect()
+    got.zip(texts).foreach { case ((want, mine), s) => assert(mine == want, s"lower of '$s'") }
   }
 }

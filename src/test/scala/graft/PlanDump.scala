@@ -29,37 +29,31 @@ object PlanDump {
       Bm25Query.scoredNaive(idx,
         s"${PagesCorpus.vocab(3)} ${PagesCorpus.vocab(7)}", conjunctive = true)
         .get.explain("formatted")
-      println("### PLAN 3: block scan for WAND (pushed filter + whole-stage codegen)")
+      println("### PLAN 3: plain blocks scan (pushed filter + whole-stage codegen; the declarative readers' input)")
       val qids = Seq(
         graft.index.Bm25.termId(PagesCorpus.vocab(3)),
         graft.index.Bm25.termId(PagesCorpus.vocab(7)))
-      idx.blocks.where(col("term_id").isin(qids: _*)).explain("formatted")
-      println("### PLAN 4: FULL block-WAND query on a cold index (pruned bucketed scan -> one transient partition per bucket -> the one bucket scorer; zero Exchange)")
+      idx.blockFiles.where(col("term_id").isin(qids: _*)).explain("formatted")
+      println("### PLAN 4: FULL block-WAND query on a cold index (each bucket's files read for the query's terms -> one transient partition per bucket -> the one bucket scorer; no SQL plan, zero Exchange)")
       def planned(filter: Int, boosted: Boolean = false) =
         Array(BatchPlanned(qids.toArray, qids.map(_ => 1.0).toArray, conjunctive = true,
           Nil, Nil, boosted, filter))
-      val rows = Bm25Query.chunkRows(idx, planned(-1))
-      rows.explain("formatted")
-      println(graft.query.HotServing.transient(idx, rows).toDebugString)
+      println(graft.query.HotServing.transient(idx, qids).toDebugString)
       println("### PLAN 5: terms dictionary lookup (pushed In(term), sorted row groups)")
       idx.terms.where(col("term").isin(PagesCorpus.vocab(3), PagesCorpus.vocab(7)))
         .explain("formatted")
       println("### PLAN 6: decoded posting reader (pushed In(term_id) on the plain blocks scan and the broadcast idf scan; the decode is a Generate, no shuffle)")
       idx.postings.where(col("term_id").isin(qids: _*)).explain("formatted")
-      println("### PLAN 7: line-serving content scan (pushed In(doc_id) — reads ONLY the top-k docs)")
+      println("### PLAN 7: line-serving content scan (pushed In(doc_id) — reads ONLY the top-k docs; lines matched in-row, one explode, no shuffle)")
       val pages = spark.read.parquet(s"$dir/pages")
-      val topIds = Bm25Query.searchBlocks(idx, PagesCorpus.vocab(3), 5)
-        .collect().map(_.doc_id).toSeq
-      pages.where(col("doc_id").isin(topIds: _*))
-        .select(col("doc_id"),
-          posexplode(split(col("text"), "\n")).as(Seq("ln0", "line")))
-        .explain("formatted")
+      val top = Bm25Query.searchBlocks(idx, PagesCorpus.vocab(3), 5).collect().toSeq
+      Bm25Query.lineRecords(pages, top, Seq(PagesCorpus.vocab(3))).explain("formatted")
       println("### PLAN 8: filtered block-WAND on a cold index (doc filter as a SIDE INPUT: the allow set hash-partitioned by its docs' blocks buckets, zipped with the transient partitions of plan 4; zero Exchange on the blocks side)")
       val (numBuckets, blockBits) = idx.blocksMeta
       val allow = idx.docs.where(col("doc_id") % 3 === 0).select("doc_id")
       val sideAllow = graft.query.SideInput(Seq(allow), None, numBuckets, blockBits)
       println(graft.query.HotServing.zipped(
-        graft.query.HotServing.transient(idx, Bm25Query.chunkRows(idx, planned(0))),
+        graft.query.HotServing.transient(idx, qids),
         sideAllow, planned(0), 10, graft.query.ImpactReader(idx)).toDebugString)
       println("### PLAN 9: symbols search via artifact (containment on the names DIMENSION, pushed In(name) on the fact table)")
       val symDir = java.nio.file.Files.createTempDirectory("graft-plans-sym").toString

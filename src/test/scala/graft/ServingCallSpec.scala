@@ -41,7 +41,7 @@ class ServingCallSpec extends AnyFunSuite {
   private val nowhere = Seq("https://nowhere.example/**")
 
   test("the hot job, the side-input zip and map and the cold transient map are not closures to Spark") {
-    val (hot, _) = opened
+    val (hot, cold) = opened
     val (numBuckets, blockBits) = hot.blocksMeta
     val chunk = Array(BatchPlanned(Array(1L), Array(1.0), conjunctive = true, Nil, Nil,
       boosted = false, filter = 0))
@@ -60,6 +60,33 @@ class ServingCallSpec extends AnyFunSuite {
     val (hits, jobs) = SparkJobs.count(spark)(
       Bm25Query.searchBlocks(hot, conj, 10).collect())
     assert(hits.nonEmpty && jobs == 1)
+
+    // a cold call without side input: its scoring job is no SQL execution
+    // and reads the blocks through the bucket reader, not a file scan
+    val (coldHits, started) = SparkJobs.jobs(spark)(
+      Bm25Query.searchBlocks(cold, conj, 10).collect())
+    val wand = started.filter(_.properties.getProperty("spark.job.description") ==
+      "graft.query.wand")
+    assert(coldHits.nonEmpty && wand.size == 1)
+    assert(wand.head.properties.getProperty("spark.sql.execution.id") == null)
+    val lineage = wand.head.stageInfos.flatMap(_.rddInfos.map(_.name))
+    assert(lineage.contains("BucketFiles") && !lineage.contains("FileScanRDD"),
+      lineage.mkString(", "))
+  }
+
+  test("loading and querying an index hot and cold leaves the catalog's tables and the session's conf") {
+    val path = opened._2.path
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    val (tablesBefore, confBefore) = (tables, spark.conf.getAll)
+    val cold = IndexBuilder.load(spark, path)
+    val hot = IndexBuilder.load(spark, path).cacheHot()
+    for (ix <- Seq(hot, cold)) {
+      assert(Bm25Query.searchBlocks(ix, conj, 10).collect().nonEmpty)
+      assert(Bm25Query.searchBlocksBatchEx(ix, Seq(BatchQuery(conj), BatchQuery(w(4),
+        include = Seq("https://site-00*.example/**"))), 10).head.nonEmpty)
+    }
+    assert(tables == tablesBefore)
+    assert(spark.conf.getAll == confBefore)
   }
 
   test("a named function that captures an unserializable value fails on the driver") {

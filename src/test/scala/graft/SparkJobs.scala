@@ -39,7 +39,7 @@ object SparkJobs {
   /** Runs `f` and returns its result with the start events of the Spark
     * jobs it started on this thread (see [[count]]).
     */
-  private def jobs[A](spark: SparkSession)(f: => A): (A, Seq[SparkListenerJobStart]) = {
+  def jobs[A](spark: SparkSession)(f: => A): (A, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
     val group = s"job-budget-${UUID.randomUUID()}"
     val fence = s"$group-fence"
