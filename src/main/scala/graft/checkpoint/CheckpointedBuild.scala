@@ -15,7 +15,7 @@ import graft.index.{Bm25, BuiltIndex, IndexBuilder, PostingBlocks}
   * per docId-range slice of the input, at `tf/slice=p/` with the slice's
   * `(doc_id, url)` rows at `docs_raw/slice=p/` (slicing by docId range
   * aligns with input file ranges, so each unit re-scans only its files).
-  * Per-unit stages keep `slice=p` units; see the README's index layout.
+  * Every stage below tf is one unit; see the README's index layout.
   *
   * A unit directory containing `_GRAFT_COMMITTED` is skipped on resume.
   * The reference analog: `already_indexed_files` skip-set + checkpoint
@@ -165,8 +165,8 @@ object CheckpointedBuild {
     if (committedWithoutConfig ||
         (priorConfig.nonEmpty && priorConfig != config.toMap)) {
       // the stage each config component first derives; the spine wipes it
-      // and everything downstream. terms_part holds only (df, term
-      // strings), so the partials survive a bm25 change.
+      // and everything downstream: bm25 first derives the dictionary's
+      // idf, so tf and docs survive a bm25 change.
       val root = Map("blockBits" -> "blocks", "codec" -> "blocks", "bm25" -> "terms")
         .withDefaultValue("tf")
       val changed =
@@ -184,8 +184,8 @@ object CheckpointedBuild {
     // persisted slice Valid / Stale / Removed like the reference's
     // batch_check_files (persistence.rs:275-309, engine.rs:2281-2382); a
     // stale or removed slice is invalidated with everything derived from
-    // it — its own dictionary partial, and every corpus-global stage — so
-    // the rebuild re-drives exactly the invalid lineage.
+    // it — its own tf unit, and every stage below tf — so the rebuild
+    // re-drives exactly the invalid lineage.
     val preCommitted = (0 until slices)
       .filter(p => isCommitted(s"$outDir/tf/slice=$p"))
     if (preCommitted.nonEmpty) {
@@ -229,9 +229,7 @@ object CheckpointedBuild {
       }
     }
 
-    val units = (0 until slices).map(p =>
-      TfUnit(p, s"tf/slice=$p", read(tfSchema, s"$outDir/tf/slice=$p")))
-    spine.run(TfInput(units, read(tfSchema, slicesOf("tf"): _*), "tf/slice=*"),
+    spine.run(TfInput(read(tfSchema, slicesOf("tf"): _*), "tf/slice=*"),
       read(docsRawSchema, slicesOf("docs_raw"): _*), blockBits,
       onUnitCommitted = onUnitCommitted)
   }

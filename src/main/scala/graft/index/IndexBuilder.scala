@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.checkpoint.{BuildSpine, DriverParquet, TfInput, TfUnit}
+import graft.checkpoint.{BuildSpine, DriverParquet, TfInput}
 import graft.extract.Extract
 import graft.tokenize.Tokenizer
 
@@ -350,7 +350,7 @@ object IndexBuilder {
     StructField("term_id", LongType), StructField("idf", DoubleType)))
 
   /** Schemas of the derived dictionary dimensions `terms_rev` and
-    * `terms_ngrams` (written by the build's terms stage).
+    * `terms_ngrams` (written by the build's dims stage).
     */
   private[graft] val TermsRevSchema: StructType = StructType(Seq(
     StructField("term_rev", StringType), StructField("term_id", LongType)))
@@ -385,7 +385,7 @@ object IndexBuilder {
       spark.read.parquet(s"$outDir/pages")
     }
     val tf = spine.commitTf(0, s"$outDir/tf", termFrequencies(pages), "pages")()
-    val built = spine.run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
+    val built = spine.run(TfInput(tf, "tf"),
       pages.select("doc_id", "url"), blockBits, numBuckets)
     // every stage that reads tf has committed and blocks hold each
     // posting's tf and doc_len: tf is the one table a batch index drops

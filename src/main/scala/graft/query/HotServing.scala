@@ -84,9 +84,11 @@ private[graft] object HotServing {
     * exactly the docs those blocks can name. MEMORY_AND_DISK with the
     * lineage kept: a lost executor re-reads its buckets' files.
     * None, with nothing left cached, when some partition did not fit in
-    * memory: see [[HotTier]]. The materializing job also counts each
-    * partition's block rows: a query job without side input then runs
-    * only the partitions that hold some ([[HotTier.occupied]]).
+    * memory: see [[HotTier]]; a failed materializing job leaves nothing
+    * cached or registered either, and is rethrown. The materializing job
+    * also counts each partition's block rows: a query job without side
+    * input then runs only the partitions that hold some
+    * ([[HotTier.occupied]]).
     */
   def tier(index: BuiltIndex): Option[HotTier] = {
     val spark = index.spark
@@ -101,18 +103,14 @@ private[graft] object HotServing {
     val sc = spark.sparkContext
     val t = new HotTier(rdd)
     sc.addSparkListener(t)
-    val rows = sc.runJob(rdd, Named { (_: TaskContext, it: Iterator[HotPartition]) =>
+    def release(): Unit = { sc.removeSparkListener(t); rdd.unpersist(blocking = false) }
+    val rows = try sc.runJob(rdd, Named { (_: TaskContext, it: Iterator[HotPartition]) =>
       it.map(_.rows.length).sum
-    })
+    }) catch { case e: Throwable => release(); throw e }
     t.occupied = rows.indices.filter(rows(_) > 0)
     val deadline = System.nanoTime() + ReportWaitNs
     while (!t.reported && System.nanoTime() < deadline) Thread.sleep(1)
-    if (t.resident) Some(t)
-    else {
-      sc.removeSparkListener(t)
-      rdd.unpersist(blocking = false)
-      None
-    }
+    if (t.resident) Some(t) else { release(); None }
   }
 
   /** One transient partition per bucket: its rows of `termIds`, no urls. */

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.checkpoint.{BuildSpine, TfInput, TfUnit}
+import graft.checkpoint.{BuildSpine, TfInput}
 import graft.corpus.PagesCorpus
 import graft.index.{Bm25, IndexBuilder, LongDoubleMap}
 import graft.query.Bm25Query
@@ -31,7 +31,7 @@ class BlocksEncodeSpec extends AnyFunSuite {
     // dirA's pages), broadcast ceiling forced to 0 -> id-keyed idf join,
     // the idf shipped through the shuffle with each tf row
     val tf = IndexBuilder.termFrequencies(spark.read.parquet(s"$dirA/pages"))
-    val idxB = new BuildSpine(spark, dirB).run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
+    val idxB = new BuildSpine(spark, dirB).run(TfInput(tf, "tf"),
       spark.read.parquet(s"$dirA/docs").select("doc_id", "url"), blockBits = 6,
       maxBroadcastTerms = 0L)
 

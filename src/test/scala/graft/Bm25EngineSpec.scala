@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.checkpoint.{BuildSpine, TfInput, TfUnit}
+import graft.checkpoint.{BuildSpine, TfInput}
 import graft.corpus.PagesCorpus
 import graft.extract.Extract
 import graft.index.IndexBuilder
@@ -179,7 +179,7 @@ class Bm25EngineSpec extends AnyFunSuite {
     // broadcast build bit-for-bit
     val dirB = java.nio.file.Files.createTempDirectory("graft-bigvocab").toString
     val tf = IndexBuilder.termFrequencies(spark.read.parquet(s"${index.path}/pages"))
-    val idxB = new BuildSpine(spark, dirB).run(TfInput(Seq(TfUnit(0, "tf", tf)), tf, "tf"),
+    val idxB = new BuildSpine(spark, dirB).run(TfInput(tf, "tf"),
       spark.read.parquet(s"${index.path}/docs").select("doc_id", "url"), blockBits = 6,
       maxBroadcastTerms = 0L)
     def canon(df: org.apache.spark.sql.DataFrame, cols: String*): Seq[String] =

@@ -1,22 +1,26 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentHashMap
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.SparkListeners
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.DriverParquet
 import graft.corpus.PagesCorpus
 import graft.index.IndexBuilder
-import graft.query.Bm25Query
+import graft.query.{BucketFiles, Bm25Query, HotTier}
 
 /** Serving reads the blocks through one reader, [[graft.query.BucketFiles]]:
   * bucket i is the blocks files whose names carry Spark's bucket id i. A
   * file it cannot place fails the first serving read, hot and cold, naming
   * the file; a file named for another bucket than its rows' fails the
   * bucket check of `HotPartition`. A hot tier lost from memory is
-  * recomputed from the files.
+  * recomputed from the files. The rows a task reads count as its input.
   */
 class BucketFilesSpec extends AnyFunSuite {
 
@@ -58,12 +62,21 @@ class BucketFilesSpec extends AnyFunSuite {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
 
   /** Opening `dir` hot, and a query on it cold, each fail with a message
-    * that contains every one of `wants`.
+    * that contains every one of `wants`; the failed hot open leaves no
+    * tier listener registered and no tier persisted.
     */
   private def failsHotAndCold(dir: String, wants: String*): Unit = {
     def check(mode: String, e: Throwable): Unit = assert(
       messages(e).exists(m => wants.forall(m.contains)), s"$mode: ${messages(e).mkString(" | ")}")
+    val sc = spark.sparkContext
+    def listeners = SparkListeners.ofClass[HotTier](sc).size
+    def tiers = sc.getPersistentRDDs.collect {
+      case (id, r) if r.toDebugString.contains("BucketFiles") => id
+    }.toSet
+    val (listenersBefore, tiersBefore) = (listeners, tiers)
     check("hot", intercept[Exception](IndexBuilder.load(spark, dir).cacheHot()))
+    assert(listeners == listenersBefore, "a failed cacheHot() left its HotTier listener registered")
+    assert(tiers == tiersBefore, "a failed cacheHot() left its tier persisted")
     check("cold", intercept[Exception](Bm25Query.searchBlocks(
       IndexBuilder.load(spark, dir).cacheDictionary(), headOr, 10, conjunctive = false).collect()))
   }
@@ -106,5 +119,27 @@ class BucketFilesSpec extends AnyFunSuite {
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
     assert(contents == before)
     assert(Bm25Query.searchBlocks(hot, headOr, 10, conjunctive = false).collect().toSeq == want)
+  }
+
+  test("a cold query's scoring job counts the bucket rows it read as its input") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val ix = IndexBuilder.load(spark, built.toString).cacheDictionary()
+    val recordsRead = new ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        recordsRead.put(e.stageInfo.stageId, e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(listener)
+    val (_, jobs) = try SparkJobs.jobs(spark)(
+      Bm25Query.searchBlocks(ix, headOr, 10, conjunctive = false).collect())
+    finally sc.removeSparkListener(listener)
+    val wand = jobs.filter(_.properties.getProperty("spark.job.description") == "graft.query.wand")
+    assert(wand.size == 1)
+    val ids = ix.terms.where(col("term").isin(headOr.split(" "): _*))
+      .select("term_id").as[Long].collect().toSeq
+    val rows = new BucketFiles(ix, Some(ids)).count()
+    assert(rows > 0)
+    assert(wand.head.stageIds.map(recordsRead.get).sum == rows)
   }
 }

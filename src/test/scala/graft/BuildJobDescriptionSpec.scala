@@ -30,7 +30,7 @@ class BuildJobDescriptionSpec extends AnyFunSuite {
     val raw = PagesCorpus.pages(spark, 300, parts = 4).toDF()
     val (_, batch) = SparkJobs.descriptions(spark)(
       IndexBuilder.build(spark, IndexBuilder.extractPages(raw), tmp("batch")))
-    val dict = Set("docs", "terms_part", "terms", "blocks")
+    val dict = Set("docs", "terms", "dims", "blocks")
     assert(stages("a batch build", batch) == Set("extract", "tf") ++ dict)
 
     // new content for doc 123, in slice 1 of [0, 300) x 4

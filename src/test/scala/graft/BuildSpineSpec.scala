@@ -13,7 +13,7 @@ import org.apache.spark.DriverBroadcasts
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.checkpoint.{CheckpointedBuild, DriverParquet}
+import graft.checkpoint.{BuildSpine, CheckpointedBuild, DriverParquet, TfInput}
 import graft.corpus.PagesCorpus
 import graft.index.{BuiltIndex, IndexBuilder, IndexStats, LongDoubleMap}
 import graft.query.{BatchQuery, Bm25Query}
@@ -92,16 +92,29 @@ class BuildSpineSpec extends AnyFunSuite {
     }
 
     // one manifest row per stage unit
-    val spine = Set("docs", "terms_part", "terms", "blocks", "stats").map(_ -> 0)
+    val spine = Set("docs", "terms", "dims", "blocks", "stats").map(_ -> 0)
     assert(units(batchDir) == spine + ("tf" -> 0))
-    // a compaction is a checkpointed build of the default 8 slices
-    assert(units(compacted) == spine + ("config" -> 0) ++
-      Seq("tf", "terms_part").flatMap(s => (0 until 8).map(s -> _)))
+    // a compaction is a checkpointed build of the default 8 slices; tf is
+    // the one per-unit stage
+    assert(units(compacted) == spine + ("config" -> 0) ++ (0 until 8).map("tf" -> _))
     assert(units(ck1) == spine ++ Set("tf", "config").map(_ -> 0))
-    assert(units(ck3) == spine + ("config" -> 0) ++
-      Seq("tf", "terms_part").flatMap(s => (0 until 3).map(s -> _)))
+    assert(units(ck3) == spine + ("config" -> 0) ++ (0 until 3).map("tf" -> _))
     // blocks are the one posting layout
     Seq(batchDir, compacted, ck1, ck3).foreach(d => assert(!Files.exists(Paths.get(d, "postings")), d))
+  }
+
+  test("a term_id shared by two terms fails the collision guard and commits no terms") {
+    import spark.implicits._
+    val dir = tmp("collision")
+    // tf rows as the tokenizer writes them (each term's string at its
+    // first row), but "alpha" and "beta" both carry term_id 7
+    val tf = Seq[(String, Long, Long, Int, Int)](("alpha", 7L, 0L, 1, 2), ("gamma", 9L, 0L, 1, 2),
+      ("beta", 7L, 1L, 2, 2)).toDF("term", "term_id", "doc_id", "tf", "doc_len")
+    val docs = Seq((0L, "https://a.example/0"), (1L, "https://a.example/1")).toDF("doc_id", "url")
+    val e = intercept[IllegalArgumentException](
+      new BuildSpine(spark, dir).run(TfInput(tf, "tf"), docs))
+    assert(e.getMessage.contains("term_id (xxhash64) collision in dictionary"), e.getMessage)
+    assert(!CheckpointedBuild.isCommitted(s"$dir/terms"))
   }
 
   test("an empty input builds the same empty index in every front end") {
@@ -133,8 +146,9 @@ class BuildSpineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$batchDir/stats").columns.toSeq ==
       Seq("num_docs", "total_tokens", "avgdl", "num_terms", "num_postings"))
     assert(ix.tfRows.columns.toSeq == Seq("term_id", "doc_id", "tf", "doc_len"))
-    // tf is read back from the blocks: the build deletes its tf table
-    Seq("tf", "terms_part", "blocks_enc").foreach(t =>
+    // tf is read back from the blocks: the build deletes its tf table; no
+    // build keeps dictionary partials, and dims commits into terms_rev
+    Seq("tf", "terms_part", "dims", "blocks_enc").foreach(t =>
       assert(!Files.exists(Paths.get(batchDir, t)), t))
   }
 

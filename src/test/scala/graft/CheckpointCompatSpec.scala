@@ -123,9 +123,8 @@ class CheckpointCompatSpec extends AnyFunSuite {
       ("config", 0, 0L, "tok=1;extract=6;bm25=1.2,0.75;blockBits=13;codec=tfdl;tfSchema=3", ""),
       ("docs", 0, 100L, "tf/slice=*", ""),
       ("stats", 0, 1L, "docs+terms+blocks", ""),
-      ("terms", 0, 1993L, "terms_part/slice=*", ""),
-      ("terms_part", 0, 1844L, "tf/slice=0", ""),
-      ("terms_part", 1, 1845L, "tf/slice=1", ""),
+      ("dims", 0, 9527L, "terms", ""),
+      ("terms", 0, 1993L, "tf/slice=*", ""),
       ("tf", 0, 11227L, "doc_id:[0,50)", "d2c2ac7ee7e617c2"),
       ("tf", 1, 11269L, "doc_id:[50,100)", "8ae3ab0856fb646"))
     assert(got == want)

@@ -23,6 +23,11 @@ class CheckpointSpec extends AnyFunSuite {
 
   private case class Boom() extends RuntimeException("injected kill")
 
+  /** Each manifest unit's commit time. */
+  private def commits(dir: String): Map[(String, Int), Long] =
+    CheckpointedBuild.manifest(spark, dir).collect().map(r =>
+      (r.getAs[String]("stage"), r.getAs[Int]("part")) -> r.getAs[Long]("committed_at")).toMap
+
   /** The index's postings, decoded from its blocks, in a canonical order. */
   private def postingsOf(ix: BuiltIndex): Seq[String] =
     ix.postings.collect().map(_.toString).sorted.toSeq
@@ -208,28 +213,15 @@ class CheckpointSpec extends AnyFunSuite {
     assert(payloads(dirA) == payloads(dirC))
   }
 
-  test("bm25-config change after a mid-terms kill keeps committed " +
-      "terms_part units AND their manifest rows (ADVICE r6: invalidation " +
-      "matches exact unit names, not the terms_ prefix)") {
+  test("a bm25-only change keeps the tf and docs units and their manifest rows") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-ckpt-bm25").toString
     val raw = PagesCorpus.pages(spark, n, parts = 4).toDF()
-    // die after the 2nd committed terms_part slice — partials 0/1 are on
-    // disk (the GC only runs after terms commits)
-    intercept[Boom] {
-      CheckpointedBuild.build(spark, raw, dir, slices = 4,
-        onUnitCommitted = (stage, p) =>
-          if (stage == "terms_part" && p == 1) throw Boom())
-    }
-    val before = CheckpointedBuild.manifest(spark, dir)
-      .where(col("stage") === "terms_part")
-      .collect().map(r => r.getAs[Int]("part") -> r.getAs[Long]("committed_at"))
-      .toMap
-    assert(before.keySet == Set(0, 1))
+    CheckpointedBuild.build(spark, raw, dir, slices = 4)
+    val before = commits(dir)
     // simulate a bm25 parameter change: rewrite the persisted PRIOR
     // fingerprint (K1/B are compile-time constants) — the reconcile then
-    // invalidates terms/blocks/stats but must keep the partials, data
-    // AND lineage rows
+    // invalidates terms and every stage below it
     val cfg = spark.read.parquet(s"$dir/manifest/config_0")
       .as[graft.checkpoint.ManifestRow].head()
     val mutated = cfg.copy(lineage = cfg.lineage.replaceAll(
@@ -237,20 +229,19 @@ class CheckpointSpec extends AnyFunSuite {
     Seq(mutated).toDS().write.mode("overwrite")
       .parquet(s"$dir/manifest/config_0")
     CheckpointedBuild.build(spark, raw, dir, slices = 4)
-    val afterRows = CheckpointedBuild.manifest(spark, dir)
-      .where(col("stage") === "terms_part")
-      .collect().map(r => r.getAs[Int]("part") -> r.getAs[Long]("committed_at"))
-      .toMap
-    // pre-fix, rmManifestPrefix("terms") deleted terms_part_0/1's rows
-    // (prefix collision); the data-dir markers skipped the recompute, so
-    // the loss was SILENT — exactly what this asserts against
-    assert(afterRows.keySet == Set(0, 1, 2, 3))
-    assert(afterRows(0) == before(0) && afterRows(1) == before(1),
-      "committed partials' manifest rows must survive a bm25-only change")
+    val after = commits(dir)
+    // invalidation matches exact unit names (ADVICE r6), so the units it
+    // keeps keep their manifest rows too: a lost row would be SILENT,
+    // since the data-dir markers skip the recompute
+    ((0 until 4).map("tf" -> _) :+ ("docs" -> 0)).foreach(u =>
+      assert(after(u) == before(u), s"$u must survive a bm25-only change"))
+    Seq("terms", "dims", "blocks", "stats").foreach(st =>
+      assert(after(st -> 0) != before(st -> 0), s"$st must be rebuilt"))
     // the reconcile recorded the bm25 invalidation
     val cr = CheckpointedBuild.manifest(spark, dir)
       .where(col("stage") === "config_reconcile").collect()
-    assert(cr.length == 1 && cr.head.getAs[String]("lineage").contains("bm25"))
+    assert(cr.map(_.getAs[String]("lineage")).toSeq ==
+      Seq("changed=bm25 invalidated=terms,dims,blocks,stats"))
   }
 
   test("kill after blocks commits: docs, terms and blocks are not recomputed") {
@@ -296,54 +287,41 @@ class CheckpointSpec extends AnyFunSuite {
       Bm25Query.searchBlocks(idxB, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq)
   }
 
-  test("kill mid-terms: committed terms_part slices are not recomputed") {
+  test("kill after terms commits: tf, docs and terms are not recomputed") {
     val dirA = Files.createTempDirectory("graft-ckpt-trm-a").toString
     val dirB = Files.createTempDirectory("graft-ckpt-trm-b").toString
     val raw = PagesCorpus.pages(spark, n, parts = 4).toDF()
     val idxB = CheckpointedBuild.build(spark, raw, dirB, slices = 6)
 
-    // die after the 2nd committed terms_part slice
-    var committed = 0
+    // die once terms has committed, before dims and blocks run
     intercept[Boom] {
       CheckpointedBuild.build(spark, raw, dirA, slices = 6,
-        onUnitCommitted = (stage, _) => {
-          if (stage == "terms_part") {
-            committed += 1; if (committed == 2) throw Boom()
-          }
-        })
+        onUnitCommitted = (stage, _) => if (stage == "terms") throw Boom())
     }
-    assert((0 until 2).forall(p =>
-      CheckpointedBuild.isCommitted(s"$dirA/terms_part/slice=$p")))
-    assert(!CheckpointedBuild.isCommitted(s"$dirA/terms_part/slice=2"))
-    assert(!CheckpointedBuild.isCommitted(s"$dirA/terms"))
-    val before = CheckpointedBuild.manifest(spark, dirA)
-      .where(col("stage") === "terms_part")
-      .collect().map(r => r.getAs[Int]("part") -> r.getAs[Long]("committed_at")).toMap
-    assert(before.keySet == Set(0, 1))
+    assert(CheckpointedBuild.isCommitted(s"$dirA/terms"))
+    Seq("terms_rev", "blocks", "stats").foreach(t =>
+      assert(!CheckpointedBuild.isCommitted(s"$dirA/$t"), t))
+    val kept = (0 until 6).map("tf" -> _) ++ Seq("docs" -> 0, "terms" -> 0)
+    val rebuilt = Seq("dims", "blocks", "stats").map(_ -> 0)
+    val before = commits(dirA)
+    assert(kept.forall(before.contains) && !rebuilt.exists(before.contains))
 
     val idxA = CheckpointedBuild.build(spark, raw, dirA, slices = 6)
-    val after = CheckpointedBuild.manifest(spark, dirA)
-      .where(col("stage") === "terms_part")
-      .collect().map(r => r.getAs[Int]("part") -> r.getAs[Long]("committed_at")).toMap
-    assert(after.size == 6)
-    (0 until 2).foreach(p =>
-      assert(after(p) == before(p), s"terms_part slice $p recomputed"))
-    // partials GC'd once terms committed
-    assert(!Files.exists(Paths.get(s"$dirA/terms_part")))
+    val after = commits(dirA)
+    kept.foreach(u => assert(after(u) == before(u), s"$u recomputed"))
+    rebuilt.foreach(u => assert(after.contains(u), s"$u must be rebuilt"))
 
-    // dictionary content identity vs the uninterrupted build (and vs the
-    // BATCH writer's dictionary semantics: same rows, same idf bits)
+    // dictionary, dims, stats and top-k identical to the uninterrupted
+    // build (same rows, same idf bits)
     def dict(path: String): Set[(String, Long, Long, Double)] =
       spark.read.parquet(s"$path/terms").collect().map(r =>
         (r.getAs[String]("term"), r.getAs[Long]("df"),
           r.getAs[Long]("term_id"), r.getAs[Double]("idf"))).toSet
     assert(dict(dirA) == dict(dirB))
     assert(dict(dirA).nonEmpty)
-    // derived dims exist and match in content
-    def rev(path: String): Set[(String, Long)] =
-      spark.read.parquet(s"$path/terms_rev").collect().map(r =>
-        (r.getAs[String]("term_rev"), r.getAs[Long]("term_id"))).toSet
-    assert(rev(dirA) == rev(dirB))
+    def dim(path: String, table: String): Set[(String, Long)] =
+      spark.read.parquet(s"$path/$table").collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    Seq("terms_rev", "terms_ngrams").foreach(t => assert(dim(dirA, t) == dim(dirB, t), t))
     assert(idxA.stats == idxB.stats)
     val q = PagesCorpus.vocab(3)
     assert(Bm25Query.searchBlocks(idxA, q, 10).collect().map(h => (h.doc_id, h.score)).toSeq ==
@@ -387,8 +365,7 @@ class CheckpointSpec extends AnyFunSuite {
       dir, slices = 2)
     val m = CheckpointedBuild.manifest(spark, dir).collect()
     val stages = m.map(_.getAs[String]("stage")).toSet
-    assert(stages == Set("config", "tf", "docs", "terms_part", "terms",
-      "blocks", "stats"))
+    assert(stages == Set("config", "tf", "docs", "terms", "dims", "blocks", "stats"))
     m.foreach { r =>
       assert(r.getAs[Long]("rows") >= 0)
       assert(r.getAs[String]("lineage").nonEmpty)
